@@ -144,21 +144,6 @@ _REWRITTEN = {
     # join (O(log diameter) rounds) — identical min-label fixpoint
     # (sf0.01/sf0.1 hash-green, path-graph convergence test), new plan.
     # "q_dedup_clusters": 8,  (superseded by the r14 entry below)
-    # round-11 scale pass: the compacted W2 state table is now BUCKETED
-    # by span-hashed doc_id (streaming/proactive: bucket subdirs with
-    # per-bucket atomic swap; a micro-batch reads/rewrites only the
-    # buckets its keys touch instead of the whole table — the r10
-    # verdict's remaining trade). Values identical (mode-equivalence,
-    # restart + bucket-crash-window tests, byte-level untouched-bucket
-    # pin); the PLANS changed again, so the driver should re-derive both
-    # rows on the bucketed runner. (Supersedes the r10 compaction pins.)
-    # round-12 scale pass: the W2 state table gained the delta-log
-    # (LSM) path for SCATTERED-sparse micro-batches — reads resolve
-    # buckets ∪ _log dirs by last-batch-wins, compaction folds logs
-    # back (streaming/proactive). Values identical (mode-equivalence,
-    # log crash-window + compaction tests, 1M-key probe zero-mismatch);
-    # the runner's read plan changed, so the driver should re-derive
-    # both rows. (Superseded by the r13 entries below.)
     # round-12 perf pass: q_flagship's scoring now normalizes each side
     # ONCE via scoring.pair_scores (layered projections pin single
     # evaluation of the 3-regex chain) instead of re-deriving it per
@@ -169,16 +154,14 @@ _REWRITTEN = {
     # "q_metrics_avg": 12,  (superseded by the r14 entry below)
     # "q_best_of_answers": 12,  (superseded by the r14 entry below)
     # "q_union_outputs": 12,  (superseded by the r14 entry below)
-    # round-13 scale pass: the W2 runner's LSM compaction became an
-    # incremental bucket-range sweep (durable cursor, bounded per-batch
-    # step), the row-count sidecar replaced the per-batch bucket count,
-    # and the table AUTO-RESCALES its bucket count (power-of-2,
-    # upscale-only) when un-pinned state outgrows the layout — values
-    # identical (mode-equivalence, sweep/rescale crash-window tests,
-    # 1M-key scattered soak zero-mismatch), but the runner changed, so
-    # the driver should re-derive both rows. (Supersedes the r12 pins.)
-    "q_stateful_accumulate": 13,
-    "q_stream_refeed_chain": 13,
+    # round-15 simplicity pass: both W2 operators run on one streaming
+    # groupBy(doc_id) aggregation over Spark's RocksDB state store
+    # (per-doc chunk history, update mode, foreachBatch parquet sink)
+    # instead of the hand-built parquet state table. Values identical
+    # (oracle gate at three scales, restart/kill-before-commit tests);
+    # the runner changed, so both rows are due for re-verification.
+    "q_stateful_accumulate": 15,
+    "q_stream_refeed_chain": 15,
     # round-13/14 optimization passes (r13 verdict item: the r13 batch
     # rewrites got no pins, so the driver was never told to re-derive
     # them; r14 adds its own). Values identical throughout (oracle

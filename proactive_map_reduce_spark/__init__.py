@@ -15,8 +15,8 @@ Layout:
   operators  — chunking, map-stage, reduce, top-k, dedup, similarity,
                text-stats, sketches (KMV/quantiles), multimodal plumbing
   plans      — composed pipelines, tiered cache (K1-K5), incremental views
-  streaming  — Structured Streaming proactive mode (W1/W2), keyed upsert
-               sink, rate-source soak harness
+  streaming  — Structured Streaming proactive mode: W1 staged map, W2
+               per-doc state on Spark's RocksDB state store, watermarks
   pipeline   — the user-facing ProactivePipeline API
                (examples/run_proactive.py, examples/run_curation.py)
 """

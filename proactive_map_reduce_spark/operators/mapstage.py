@@ -69,7 +69,9 @@ def standin_model(batch: pd.DataFrame) -> pd.DataFrame:
     column (including the pointer array of the large ``chunk_text``
     column, which ``llm_map`` immediately drops) and re-indexed the
     frame, pure per-batch overhead at the Python boundary (guide §4).
-    The id columns are reused zero-copy from the input batch.
+    The id columns are taken positionally (``.to_numpy()``) so the
+    output pairs each id with its own row's output whatever index the
+    input batch carries; the output has a fresh RangeIndex.
     """
     texts = batch["chunk_text"].tolist()
     rev, n_toks = [], []
@@ -83,8 +85,8 @@ def standin_model(batch: pd.DataFrame) -> pd.DataFrame:
             n_toks.append(0)
     return pd.DataFrame(
         {
-            "doc_id": batch["doc_id"],
-            "chunk_id": batch["chunk_id"],
+            "doc_id": batch["doc_id"].to_numpy(),
+            "chunk_id": batch["chunk_id"].to_numpy(),
             "out_text": rev,
             "n_out_tokens": n_toks,
         }

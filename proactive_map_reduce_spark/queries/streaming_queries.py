@@ -18,14 +18,8 @@ def q_stage_pipeline(spark, sf_dir):
     at a time through a Structured Streaming file source and run the same
     black-box map stage. Value-identical to batch q_llm_map (same oracle),
     executed by the real streaming engine (test_proactive.py:227-368).
-
-    r14: drains through the parquet sink (``_run_to_parquet``, the
-    documented production mode — executor-side writes, lazy distributed
-    read-back) instead of the memory sink, whose driver funnel +
-    collect/createDataFrame round-trip paid O(result rows) of
-    driver-side Python serialization for the corpus-sized map output.
-    Rows identical — the sink modes are pinned equal by
-    tests/test_streaming.py::test_stage_pipeline_sink_modes."""
+    Drains through the executor-side parquet sink (``_run_to_parquet``),
+    so the corpus-sized map output never funnels through the driver."""
     return stream_ops.stage_pipeline(
         spark, _chunks(spark, sf_dir), sink="parquet"
     ).select("doc_id", "chunk_id", "out_text", "n_out_tokens")
@@ -33,12 +27,9 @@ def q_stage_pipeline(spark, sf_dir):
 
 def q_stateful_accumulate(spark, sf_dir):
     """W2: cross-stage accumulator over staged micro-batch arrival (the
-    total_res_toks analog, test_proactive.py:327-328). The final update
-    per doc equals batch incremental_concat (same oracle). Default mode
-    is the batched relational foreachBatch accumulator (r9 — per-BATCH
-    Python constant; the per-key applyInPandasWithState reference path
-    measured 207.6 s vs 4.0 s DuckDB at sf1); both modes emit identical
-    rows (tests/test_streaming.py::test_stateful_accumulate_mode_equivalence)."""
+    total_res_toks analog, test_proactive.py:327-328). Each doc's chunk
+    history is kept in Spark's state store by a streaming groupBy; the
+    final update per doc equals batch incremental_concat (same oracle)."""
     updates = stream_ops.stateful_accumulate(spark, _chunks(spark, sf_dir))
     return stream_ops.final_accumulation(updates).select(
         "doc_id", "final_text", "n_chunks"
@@ -86,15 +77,12 @@ def q_stream_static_enrich(spark, sf_dir):
 def q_stream_refeed_chain(spark, sf_dir):
     """W2 v2 (test_proactive_2.py:228-233): the SEQUENTIAL re-feed loop —
     stage n's computation consumes the accumulated outputs of stages
-    0..n-1 — run as keyed streaming state over staged arrival. Emits the
-    accumulated-output word count each stage saw plus a rolling md5
-    chain over the stage outputs (order-sensitive: any reorder, replay
-    or loss changes every later value). Fully hash-checked against a
-    DuckDB recursive-CTE fold — the batch-equivalent of the recursion.
-    Default mode is the batched relational runner with the fold as one
-    JVM higher-order expression (r9 — the per-key applyInPandasWithState
-    reference path measured 196.4 s vs DuckDB 25.0 s at sf1); both modes
-    emit identical rows (test_refeed_chain_mode_equivalence)."""
+    0..n-1 — run over staged arrival on the same state-store runner as
+    q_stateful_accumulate. Emits the accumulated-output word count each
+    stage saw plus a rolling md5 chain over the stage outputs
+    (order-sensitive: any reorder, replay or loss changes every later
+    value). Fully hash-checked against a DuckDB recursive-CTE fold — the
+    batch-equivalent of the recursion."""
     return stream_ops.refeed_chain(spark, _chunks(spark, sf_dir)).select(
         "doc_id", "chunk_id", "acc_words_before", "chain"
     )

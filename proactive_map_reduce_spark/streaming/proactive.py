@@ -12,30 +12,30 @@ under a streaming source:
   micro-batch from a file source (`maxFilesPerTrigger=1`); each batch runs
   the same black-box map stage (`operators.mapstage.llm_map`). Semantics
   are identical to the batch plan, so the result stays oracle-checkable.
-- **W2 `stateful_accumulate` / `refeed_chain`**: cross-stage keyed state
+- **W2 `stateful_accumulate` / `refeed_chain`**: cross-stage per-doc state
   (the `total_res_toks` analog, `test_proactive.py:327-328`; the v2
-  re-feed recursion, `test_proactive_2.py:228-233`); every update emits
-  the running prefix and the final per-doc row equals the batch
-  `incremental_concat`. Two interchangeable state implementations: the
-  per-key `applyInPandasWithState` reference, and the default batched
-  relational `foreachBatch` runner (`_batched_state_runner`) whose
-  Python cost is per-BATCH, not per-key — the r8/r9 sf1 measurements
-  put the per-key constant at 200-210 s for 50k keys × 4 stages.
+  re-feed recursion, `test_proactive_2.py:228-233`). Both run on one
+  runner: a streaming `groupBy(doc_id)` aggregation that keeps each doc's
+  chunk history in Spark's RocksDB state store, in update mode, drained
+  by the durable `foreachBatch` parquet sink. Each operator is a
+  projection of that history: every update emits the running value for
+  the docs the micro-batch touched, and the final per-doc row equals the
+  batch operator.
 - **Watermarked windows** (engine capability beyond the reference): event
   rows carry event-time; a `withWatermark` + tumbling window aggregation
   drops data later than the lateness bound — deterministic here because
   arrival order is one ts-bucket file per micro-batch.
 
 Scale notes: in production the file source becomes Kafka/object-store
-listing; state lives in the HDFS/RocksDB state store keyed by doc_id, so
-the accumulator shards across executors. The per-stage map is stateless
-and embarrassingly parallel; only W2's state shuffle is keyed — by doc_id,
-the natural partition key.
+listing and the checkpoint moves to durable storage; the state store is
+keyed by doc_id, so W2 state shards across executors. The per-stage map
+is stateless and embarrassingly parallel; only W2's state shuffle is
+keyed — by doc_id, the natural partition key.
 """
 
 from __future__ import annotations
 
-import json
+import contextlib
 import os
 import re
 import shutil
@@ -44,13 +44,11 @@ import time
 import uuid
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators import mapstage
-from . import upsert as up
 
 CHUNK_SCHEMA = T.StructType(
     [
@@ -152,6 +150,23 @@ def _ckpt_dir() -> str:
     return tempfile.mkdtemp(prefix="pmr_ckpt_", dir=base)
 
 
+@contextlib.contextmanager
+def _session_confs(spark: SparkSession, confs: dict):
+    """Set session confs for the enclosed query start, then restore the
+    caller's values (unset ones are unset again)."""
+    old = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def _run_to_memory(stream_df: DataFrame, transform, shuffle_partitions: int = 2) -> DataFrame:
     """Drive a bounded stream (availableNow) through `transform` per
     micro-batch into an in-memory table; return the collected result.
@@ -166,21 +181,21 @@ def _run_to_memory(stream_df: DataFrame, transform, shuffle_partitions: int = 2)
     spark = stream_df.sparkSession
     name = "pmr_sink_" + uuid.uuid4().hex[:8]
     ckpt = _ckpt_dir()
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     try:
-        q = (
-            transform(stream_df)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with _session_confs(
+            spark, {"spark.sql.shuffle.partitions": str(shuffle_partitions)}
+        ):
+            q = (
+                transform(stream_df)
+                .writeStream.format("memory")
+                .queryName(name)
+                .outputMode("append")
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
         shutil.rmtree(ckpt, ignore_errors=True)
     # Drain the memory sink into a plain local-relation DataFrame and
     # DROP the sink view: memory-sink tables live in driver memory for
@@ -250,20 +265,22 @@ def _batch_dirs(root: str) -> list[tuple[int, str]]:
     return sorted(out)
 
 
-def _guard_stale_batches(out_dir: str, last_committed: int) -> None:
-    """Shed batch dirs the checkpoint never committed (ADVICE r8).
+def _guard_stale_batches(out_dir: str, last_done: int, last_planned: int) -> None:
+    """Shed batch dirs the checkpoint will replay or never ran (ADVICE r8).
 
-    A FRESH checkpoint restarts batch ids at 0, so any pre-existing
-    batch dir is foreign data that the per-batch overwrite would
-    silently merge into the read-back — refuse it. A RESUMED checkpoint
-    may legitimately sit next to one uncommitted (torn) batch dir above
-    its high-water mark; the replay rewrites it, so deleting is safe."""
+    A FRESH checkpoint (one that has planned no batch, ``last_planned <
+    0``) restarts batch ids at 0, so any pre-existing batch dir is
+    foreign data that the per-batch overwrite would silently merge into
+    the read-back — refuse it. A RESUMED checkpoint may legitimately sit
+    next to one uncommitted (torn) batch dir above its last done batch,
+    also when it was killed before its first commit; the replay rewrites
+    it, so deleting is safe."""
     stale = [
         os.path.basename(p)
         for i, p in _batch_dirs(out_dir)
-        if i > last_committed
+        if i > last_done
     ]
-    if stale and last_committed < 0:
+    if stale and last_planned < 0:
         raise ValueError(
             f"out_dir {out_dir!r} already holds batch dirs "
             f"{sorted(stale)[:3]}... but the checkpoint is fresh (batch "
@@ -302,10 +319,13 @@ def _run_to_parquet(
     out_dir: str | None = None,
     shuffle_partitions: int = 2,
     checkpoint_dir: str | None = None,
+    output_mode: str = "append",
 ) -> DataFrame:
     """Durable production sink for the same bounded-stream runner (r7
     verdict item): each micro-batch lands under ``out_dir/batch-<id>``
-    via ``foreachBatch`` with per-batch OVERWRITE.
+    via ``foreachBatch`` with per-batch OVERWRITE. ``output_mode`` is the
+    streaming output mode of ``transform``'s result ("update" for the W2
+    aggregation).
 
     Why this shape and not a plain append sink:
 
@@ -329,19 +349,6 @@ def _run_to_parquet(
     out_dir = out_dir or tempfile.mkdtemp(prefix="pmr_stream_out_")
     os.makedirs(out_dir, exist_ok=True)  # an empty stream commits no batch
     ckpt = checkpoint_dir or _ckpt_dir()
-    # Reusing an out_dir with a FRESH checkpoint restarts batch ids at 0:
-    # stale higher-numbered batch dirs from an earlier run would survive
-    # the per-batch overwrite and be silently folded into the read-back
-    # (duplicate/foreign rows — ADVICE r8). The converse (ADVICE r9):
-    # RESUMING a checkpoint against a fresh/wrong out_dir would skip the
-    # committed batches' replay and silently lose their output.
-    last = _last_committed_batch(ckpt)
-    _guard_stale_batches(out_dir, last)
-    _guard_resume_outputs(out_dir, last)
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    out = transform(stream_df)
-    schema = out.schema
 
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(
@@ -349,16 +356,33 @@ def _run_to_parquet(
         )
 
     try:
-        q = (
-            out.writeStream.foreachBatch(_write_batch)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        # Reusing an out_dir with a FRESH checkpoint restarts batch ids at
+        # 0: stale higher-numbered batch dirs from an earlier run would
+        # survive the per-batch overwrite and be silently folded into the
+        # read-back (duplicate/foreign rows — ADVICE r8). The converse
+        # (ADVICE r9): RESUMING a checkpoint against a fresh/wrong out_dir
+        # would skip the committed batches' replay and silently lose their
+        # output. On restart Spark replays only the latest planned batch,
+        # so every batch below it is done even if its commit file is
+        # missing. Inside the try, so a refusal removes a temp checkpoint.
+        planned = _last_offset_batch(ckpt)
+        done = max(_last_committed_batch(ckpt), planned - 1)
+        _guard_stale_batches(out_dir, done, planned)
+        _guard_resume_outputs(out_dir, done)
+        with _session_confs(
+            spark, {"spark.sql.shuffle.partitions": str(shuffle_partitions)}
+        ):
+            out = transform(stream_df)
+            schema = out.schema
+            q = (
+                out.writeStream.foreachBatch(_write_batch)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
         if checkpoint_dir is None:  # caller-provided checkpoints persist
             shutil.rmtree(ckpt, ignore_errors=True)
     batches = [p for _, p in _batch_dirs(out_dir)]
@@ -397,1206 +421,86 @@ def stage_pipeline(
         shutil.rmtree(root, ignore_errors=True)
 
 
-_ACC_OUT = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("n_chunks_seen", T.IntegerType()),
-        T.StructField("acc_text", T.StringType()),
-    ]
-)
-
-
-def _accumulate(key, pdfs, state: GroupState):
-    """W2 state function: cross-stage accumulator per doc (the
-    `total_res_toks` analog). State keeps (chunk_id, out_text) pairs so the
-    emitted accumulation is in chunk order regardless of micro-batch
-    arrival interleaving — same guarantee the reference gets from its
-    strictly ordered stage loop."""
-    rows = pd.concat(list(pdfs), ignore_index=True)
-    ids, texts = ([], []) if not state.exists else [list(v) for v in state.get]
-    ids.extend(int(c) for c in rows["chunk_id"])
-    texts.extend(rows["out_text"])
-    state.update((ids, texts))
-    ordered = [t for _, t in sorted(zip(ids, texts))]
-    yield pd.DataFrame(
-        {
-            "doc_id": [key[0]],
-            "n_chunks_seen": [len(ids)],
-            "acc_text": [" ".join(ordered)],
-        }
-    )
-
-
-def _read_mark_raw(table: str) -> dict | None:
-    """The state table's mark file content, or None when absent/corrupt."""
-    try:
-        with open(up._mark_path(table)) as f:
-            return json.load(f)
-    except Exception:
-        return None
-
-
-# --- bucketed state layout (r11) -------------------------------------
-#
-# The compacted state table is a directory of BUCKET subdirs:
-#
-#     <state_dir>/state/            the table
-#         _meta.json                {"n_buckets": N, "span": S} — pinned
-#                                   at creation; resumes reuse it (a
-#                                   changed N/S would mis-place keys)
-#         b00000/ ... bNNNNN/       parquet dirs, one per non-empty bucket
-#         _log/log-<batch>/         delta log (r12): one small parquet
-#                                   dir per SCATTERED-SPARSE batch — the
-#                                   batch's fully-folded state rows,
-#                                   appended instead of rewriting the
-#                                   near-all buckets its keys graze
-#     <state_dir>/state.batchmark   single high-water mark (batch id +
-#                                   stream generation), as before
-#
-# bucket(doc_id) = xxhash64(floor(doc_id / S)) mod N: contiguous S-wide
-# doc_id ranges co-locate in one bucket (a clustered sparse batch — a
-# backfilled shard, a late partition of docs — prunes to few buckets),
-# and the span index is hashed so arbitrary/skewed id ranges still
-# balance across the N buckets. A batch reads and rewrites ONLY the
-# buckets its keys touch; untouched buckets are never opened — the r10
-# verdict's remaining trade (the whole-table rewrite per micro-batch)
-# becomes cost ∝ touched buckets. A batch of uniformly RANDOM keys
-# still touches ~min(keys, N) buckets — that bound is the honest limit
-# of bucket pruning on any partitioned store and is recorded by
-# tools/scale_probe.py's sparse-touch matrix.
-#
-# Swap protocol per touched bucket k (batch b):
-#     write <table>.tmp_<b>/__bucket=<k>/   (one partitionBy job)
-#     rename b<k>    -> b<k>.old_<b>        (if the bucket existed)
-#     rename tmp/__bucket=<k> -> b<k>
-# then write the mark and delete the tmp root + old dirs. Recovery is
-# ROLLBACK-ONLY (:func:`_recover_state`): restore any missing bucket
-# from its .old, delete strays, never advance the mark — the
-# interrupted batch replays and converges via the per-row
-# ``last_batch_id`` guard, and its emission is rewritten (overwrite)
-# or re-derived from state.
-#
-# Delta log (r12 — the r11 verdict's last storage limit): a uniformly
-# SCATTERED sparse batch defeats bucket pruning on any partitioned
-# store (1% of 1M keys lands in 648/1024 buckets and pays near-dense
-# rewrite). When the touch probe sees that shape — many buckets, few
-# keys per bucket (:func:`_use_log_path`) — the batch takes the LSM
-# path instead: read old state for exactly the batch's keys (touched
-# buckets ∪ existing logs, broadcast semi-join), fold, and append the
-# delta — the batch keys' FULL new state rows — as one small parquet
-# dir ``_log/log-<b>`` (write to ``_log/.tmp_<b>``, atomic rename).
-# Reads everywhere become buckets ∪ logs with LAST-BATCH-WINS per key
-# (:func:`_last_wins` — sound because every delta row is a complete
-# folded state row, and equal-batch duplicates from replay/compaction
-# crash windows are byte-identical). Logs fold back into buckets when
-# they outgrow the table (:func:`_compact_logs`, the LSM compaction),
-# using the same per-bucket swap + rollback-only recovery; log dirs
-# are deleted only after every swap lands, and a crash mid-delete
-# merely leaves shadow-identical rows that last-wins absorbs. Dense
-# and clustered batches never enter this path, and with no logs on
-# disk every read degenerates to the plain bucket scan — zero cost.
-
-# {:05d} is a MINIMUM width: n_buckets >= 100000 yields 6+ digit names,
-# so the patterns accept \d{5,} — a fixed {5} would silently hide those
-# buckets from full-table listings and .old healing (ADVICE r11).
-_BUCKET_NAME_RE = re.compile(r"b(\d{5,})")
-_BUCKET_OLD_RE = re.compile(r"(b\d{5,})\.old_(\d+)")
-_DEFAULT_BUCKETS = int(os.environ.get("PMR_STATE_BUCKETS", "16"))
-_DEFAULT_SPAN = int(os.environ.get("PMR_STATE_BUCKET_SPAN", "1024"))
-
-
-def _meta_path(table: str) -> str:
-    return os.path.join(table, "_meta.json")
-
-
-def _table_meta(table: str) -> dict | None:
-    try:
-        with open(_meta_path(table)) as f:
-            return json.load(f)
-    except Exception:
-        return None
-
-
-def _init_table(
-    table: str, n_buckets: int, span: int, gen: str | None = None
-) -> tuple[int, int]:
-    """Create the table dir + meta on first touch; on resume return the
-    PINNED bucketing params (caller args are a first-creation default
-    only — honoring a different N/S mid-stream would mis-place keys).
-
-    On first creation, also stamp the batch mark with ``{batch_id: -1,
-    stream: gen}`` (ADVICE r11): table ownership must be provable across
-    ALL of batch 0 — a kill after creation but before the first real
-    mark write (which spans the whole batch-0 merge) would otherwise
-    leave a markless table that :func:`_guard_runner_dirs` mistakes for
-    foreign state, falsely refusing a legitimate same-checkpoint resume.
-
-    The param validation runs AFTER the existing-meta early return
-    (ADVICE r12): on resume the caller args are ignored in favor of the
-    pinned meta values, so an invalid first-creation default (e.g.
-    ``PMR_STATE_BUCKETS=0`` left in the environment) must not fail a
-    legitimate resume whose real params are already pinned."""
-    meta = _table_meta(table)
-    if meta is not None:
-        return int(meta["n_buckets"]), int(meta["span"])
-    if int(n_buckets) < 1 or int(span) < 1:
-        raise ValueError(f"invalid bucketing params n_buckets={n_buckets} span={span}")
-    if os.path.isdir(table):
-        raise ValueError(
-            f"state table {table!r} exists without _meta.json — either a "
-            "pre-bucketing (r10) layout or a foreign directory. Stream "
-            "state is not auto-migrated: re-run the stream from a fresh "
-            "checkpoint + empty state_dir."
-        )
-    os.makedirs(table, exist_ok=True)
-    tmp = _meta_path(table) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"n_buckets": int(n_buckets), "span": int(span)}, f)
-    os.replace(tmp, _meta_path(table))
-    if gen is not None and not os.path.exists(up._mark_path(table)):
-        with open(up._mark_path(table), "w") as f:
-            json.dump({"batch_id": -1, "stream": gen}, f)
-    _write_rows(table, 0, 0)  # sidecar maintained from birth (r13)
-    return int(n_buckets), int(span)
-
-
-def _bucket_expr(n_buckets: int, span: int):
-    return F.coalesce(
-        F.pmod(
-            F.xxhash64(F.floor(F.col("doc_id") / F.lit(int(span)))),
-            F.lit(int(n_buckets)),
-        ),
-        F.lit(0),  # null doc_id (a null batch group) pins to bucket 0
-    ).cast("int")
-
-
-def _bucket_path(table: str, k: int) -> str:
-    return os.path.join(table, f"b{int(k):05d}")
-
-
-def _bucket_dirs(table: str, bucket_ids=None) -> list[str]:
-    """Existing bucket dirs — all of them, or just the given ids."""
-    if bucket_ids is not None:
-        out = []
-        for k in bucket_ids:
-            p = _bucket_path(table, k)
-            if os.path.isdir(p):
-                out.append(p)
-        return out
-    try:
-        names = os.listdir(table)
-    except OSError:
-        return []
-    return sorted(
-        os.path.join(table, nm) for nm in names if _BUCKET_NAME_RE.fullmatch(nm)
-    )
-
-
-_LOG_NAME_RE = re.compile(r"log-(\d+)")
-
-
-def _log_root(table: str) -> str:
-    return os.path.join(table, "_log")
-
-
-def _log_path(table: str, batch_id: int) -> str:
-    return os.path.join(_log_root(table), f"log-{int(batch_id):09d}")
-
-
-def _log_dirs(table: str) -> list[str]:
-    """Existing delta-log dirs under the table, oldest first."""
-    root = _log_root(table)
-    try:
-        names = os.listdir(root)
-    except OSError:
-        return []
-    return sorted(
-        os.path.join(root, nm) for nm in names if _LOG_NAME_RE.fullmatch(nm)
-    )
-
-
-def _log_id(path: str) -> int:
-    return int(_LOG_NAME_RE.fullmatch(os.path.basename(path)).group(1))
-
-
-def _dir_rows(dirs) -> int:
-    """Exact row count of parquet dirs from file FOOTERS, driver-side —
-    no Spark job. Used by the sidecar/trigger/rescale accounting where a
-    count is needed over a handful of just-written or about-to-swap
-    dirs; on a remote filesystem this is the same footer fetch a Spark
-    metadata-only count performs, minus the job-scheduling overhead."""
-    import pyarrow.parquet as pq
-
-    n = 0
-    for d in dirs:
-        try:
-            names = os.listdir(d)
-        except OSError:
-            continue
-        for f in names:
-            if f.endswith(".parquet"):
-                n += pq.ParquetFile(os.path.join(d, f)).metadata.num_rows
-    return n
-
-
-def _rows_path(table: str) -> str:
-    return os.path.join(table, "_rows.json")
-
-
-def _read_rows(table: str) -> dict | None:
-    """Cached table row counts — ADVICE r12: the compaction trigger used
-    to ``count()`` every bucket file per batch once logs existed; the
-    counts only change on bucket-path merges / log appends / compaction,
-    so those sites maintain this sidecar instead. Advisory only: a crash
-    between a swap and the sidecar write leaves it slightly stale, which
-    merely shifts WHEN the (heuristic) trigger fires — a full reseed
-    happens at every sweep completion."""
-    try:
-        with open(_rows_path(table)) as f:
-            d = json.load(f)
-        return {"bucket_rows": int(d["bucket_rows"]), "log_rows": int(d["log_rows"])}
-    except Exception:
-        return None
-
-
-def _write_rows(table: str, bucket_rows: int, log_rows: int) -> None:
-    tmp = _rows_path(table) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "bucket_rows": int(max(bucket_rows, 0)),
-                "log_rows": int(max(log_rows, 0)),
-            },
-            f,
-        )
-    os.replace(tmp, _rows_path(table))
-
-
-def _sweep_path(table: str) -> str:
-    return os.path.join(table, "_compact.json")
-
-
-def _read_sweep(table: str) -> dict | None:
-    try:
-        with open(_sweep_path(table)) as f:
-            d = json.load(f)
-        return {"cursor": int(d["cursor"]), "high": int(d["high"])}
-    except Exception:
-        return None
-
-
-def _write_sweep(table: str, cursor: int, high: int) -> None:
-    tmp = _sweep_path(table) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"cursor": int(cursor), "high": int(high)}, f)
-    os.replace(tmp, _sweep_path(table))
-
-
-def _last_wins(df: DataFrame) -> DataFrame:
-    """Newest state row per key: max ``last_batch_id`` wins. Sound for
-    buckets ∪ logs because a delta-log row is the key's COMPLETE folded
-    state (not an increment), and rows tied on (doc_id, last_batch_id)
-    — a replayed log rewrite, or a compaction crash that left a log
-    shadowing its folded bucket — are byte-identical by construction,
-    so the arbitrary tie-break cannot change values.
-
-    NULL-key rows pass through UNDEDUPED (ADVICE r12): the bucket path's
-    full_outer merge legitimately accumulates one state row per null-key
-    batch (null join keys never match), and null-key batches are gated
-    off the log path — so a null doc_id can never have a newer log row
-    to win against, and collapsing the distinct null rows to one would
-    silently change the established bucket-path semantics."""
-    nn = df.filter(F.col("doc_id").isNotNull())
-    w = Window.partitionBy("doc_id").orderBy(F.col("last_batch_id").desc())
-    deduped = (
-        nn.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    return deduped.unionByName(df.filter(F.col("doc_id").isNull()))
-
-
-def _read_state(
-    spark: SparkSession, table: str, schema: T.StructType, bucket_ids=None
-) -> DataFrame:
-    dirs = _bucket_dirs(table, bucket_ids)
-    logs = _log_dirs(table)
-    base = (
-        spark.read.schema(schema).parquet(*dirs)
-        if dirs
-        else spark.createDataFrame([], schema)
-    )
-    if not logs:  # the common case: plain bucket scan, no dedup shuffle
-        return base
-    logdf = spark.read.schema(schema).parquet(*logs)
-    if bucket_ids is not None:
-        meta = _table_meta(table)
-        if meta is None:
-            # Logs cannot legitimately exist without _meta.json (the log
-            # path only engages on an initialized table); guessing (1,1)
-            # here would silently DROP the pruned read's log rows — stale
-            # state — instead of failing loudly (ADVICE r12).
-            raise ValueError(
-                f"state table {table!r} has _log dirs but no _meta.json — "
-                "corrupted table: the pruned log filter needs the pinned "
-                "bucketing params"
-            )
-        logdf = logdf.filter(
-            _bucket_expr(int(meta["n_buckets"]), int(meta["span"])).isin(
-                [int(k) for k in bucket_ids]
-            )
-        )
-    return _last_wins(base.unionByName(logdf))
-
-
-def read_state_table(spark: SparkSession, table: str) -> DataFrame:
-    """Read a bucketed state table with inferred schema (tools/tests —
-    the bucket subdirs + _meta.json mean a plain ``read.parquet(table)``
-    no longer works). Unions the delta log with last-batch-wins when
-    one exists."""
-    dirs = _bucket_dirs(table)
-    logs = _log_dirs(table)
-    if not dirs and not logs:
-        raise FileNotFoundError(f"no bucket dirs under state table {table!r}")
-    df = spark.read.parquet(*(dirs + logs))
-    return _last_wins(df) if logs else df
-
-
-def _recover_state(table: str) -> None:
-    """Heal an interrupted bucket swap — rollback-only.
-
-    Restore every MISSING bucket from its stranded ``.old_<id>`` (a
-    crash between that bucket's two renames), then delete stranded tmp
-    roots and leftover olds. The mark is NEVER advanced here: the
-    interrupted batch replays and converges via the per-row
-    ``last_batch_id`` guard (already-swapped buckets pass through
-    byte-identical; rolled-back buckets re-fold), and the replay
-    rewrites the emission dir. A bucket first touched by the
-    interrupted batch legitimately has no dir and no old — the replay
-    recreates it. Stranded delta-log temp dirs (``_log/.tmp_<b>`` — a
-    crash before the log's atomic rename) are deleted the same way;
-    committed ``log-<b>`` dirs are never touched here (they are state,
-    removed only by compaction after their rows are folded into
-    buckets).
-
-    An interrupted table-level RESCALE swap (r13, :func:`_maybe_rescale`)
-    heals first, rollback-only: a missing table with its ``.rs_old_``
-    sibling is restored from it; stranded ``.rs_new_`` stages and
-    leftover ``.rs_old_`` dirs (swap completed) are deleted. The rescale
-    is a physical no-op -- rolling it back merely re-triggers it."""
-    parent = os.path.dirname(table) or "."
-    base = os.path.basename(table)
-    try:
-        sibs = os.listdir(parent)
-    except OSError:
-        sibs = []
-    rs_old = sorted(nm for nm in sibs if nm.startswith(base + ".rs_old_"))
-    rs_new = sorted(nm for nm in sibs if nm.startswith(base + ".rs_new_"))
-    rs_old_dirs = [
-        nm for nm in rs_old if os.path.isdir(os.path.join(parent, nm))
-    ]
-    if not os.path.isdir(table) and rs_old_dirs:
-        os.rename(os.path.join(parent, rs_old_dirs[-1]), table)
-        rs_old.remove(rs_old_dirs[-1])
-    for nm in rs_new + rs_old:
-        p = os.path.join(parent, nm)
-        if os.path.isdir(p):
-            shutil.rmtree(p, ignore_errors=True)
-        else:
-            try:
-                os.remove(p)
-            except OSError:
-                pass
-    if os.path.isdir(table):
-        for nm in sorted(os.listdir(table)):
-            m = _BUCKET_OLD_RE.fullmatch(nm)
-            if not m:
-                continue
-            src = os.path.join(table, nm)
-            dst = os.path.join(table, m.group(1))
-            if os.path.isdir(dst):
-                shutil.rmtree(src, ignore_errors=True)  # swap completed
-            else:
-                os.rename(src, dst)  # mid-swap: roll back to pre-batch
-    for _, p in up._stranded(table, ".tmp_"):
-        shutil.rmtree(p, ignore_errors=True)
-    lroot = _log_root(table)
-    if os.path.isdir(lroot):
-        for nm in os.listdir(lroot):
-            if not _LOG_NAME_RE.fullmatch(nm):
-                shutil.rmtree(os.path.join(lroot, nm), ignore_errors=True)
-
-
-def _env_num(name: str, default, cast=int):
-    """Call-time env knob (unlike the import-frozen _DEFAULT_* pair):
-    tests and probes flip these per-scenario without re-importing."""
-    try:
-        return cast(os.environ.get(name, default))
-    except (TypeError, ValueError):
-        return cast(default)
-
-
-def _use_log_path(touched: int, n_keys: int, n_buckets: int) -> bool:
-    """Route a batch to the delta log iff its touch pattern is
-    SCATTERED-SPARSE — the one shape bucket pruning cannot help:
-
-    - it grazes most buckets: ``touched > frac × n_buckets`` (default
-      0.25 — clustered sparse batches stay on the pruned bucket path,
-      where they are already O(touched)), AND
-    - it is thin inside them: ``keys/touched ≤ kpb`` (default 64 —
-      a dense batch's keys-per-bucket is the full bucket population,
-      orders of magnitude above this at any real scale, so dense
-      rewrites keep the optimal one-pass bucket path).
-
-    An absolute floor (PMR_STATE_LOG_MIN_BUCKETS, default 8) keeps
-    tiny-fixture batches — where "most of a 4-bucket table" is two
-    dirs and the rewrite is already trivial — on the bucket path, so
-    the log layer only engages at the scale it exists for.
-
-    All knobs are env-tunable (PMR_STATE_LOG_BUCKET_FRAC /
-    PMR_STATE_LOG_KEYS_PER_BUCKET / PMR_STATE_LOG_MIN_BUCKETS); frac
-    ≥ 1 disables the log path outright (touched can never exceed
-    n_buckets)."""
-    if touched <= 0:
-        return False
-    frac = _env_num("PMR_STATE_LOG_BUCKET_FRAC", "0.25", float)
-    kpb = _env_num("PMR_STATE_LOG_KEYS_PER_BUCKET", "64", int)
-    floor = _env_num("PMR_STATE_LOG_MIN_BUCKETS", "8", int)
-    return (
-        touched > max(frac * n_buckets, float(floor - 1))
-        and n_keys <= kpb * touched
-    )
-
-
-def _compact_should_start(table: str, logs: list[str]) -> bool:
-    """The LSM compaction trigger: start a sweep when the log has
-    outgrown the table (``log_rows > frac × bucket_rows``, default 1.0,
-    evaluated only once ≥ PMR_STATE_LOG_COMPACT_MIN_LOGS dirs exist) or
-    the dir count alone exceeds PMR_STATE_LOG_MAX_LOGS (read-fanout
-    bound). Row counts come from the ``_rows.json`` sidecar (ADVICE
-    r12 — the old per-batch ``count()`` over every bucket file was an
-    O(table files) recurring cost on the hot merge path); the sidecar is
-    seeded with one footer-metadata count the first time it is needed
-    and maintained incrementally by the merge/compaction sites."""
-    min_logs = _env_num("PMR_STATE_LOG_COMPACT_MIN_LOGS", "4", int)
-    max_logs = _env_num("PMR_STATE_LOG_MAX_LOGS", "64", int)
-    if len(logs) < min(min_logs, max_logs):
-        return False
-    if len(logs) >= max_logs:
-        return True
-    frac = _env_num("PMR_STATE_LOG_COMPACT_FRAC", "1.0", float)
-    rows = _read_rows(table)
-    if rows is None:  # pre-r13 table: seed once from footers
-        rows = {
-            "bucket_rows": _dir_rows(_bucket_dirs(table)),
-            "log_rows": _dir_rows(logs),
-        }
-        _write_rows(table, rows["bucket_rows"], rows["log_rows"])
-    return rows["log_rows"] > frac * max(rows["bucket_rows"], 1)
-
-
-def _compact_logs(
-    spark: SparkSession,
-    table: str,
-    schema: T.StructType,
-    nb: int,
-    span: int,
-    batch_id: int,
-    max_buckets: int | None = None,
-) -> float | None:
-    """LSM compaction: fold delta-log rows into their home buckets, then
-    drop the folded logs. INCREMENTAL (r13 — the r12 full fold ran
-    serially inside one unlucky micro-batch, an O(state) stall the soak
-    measured at 11.3 s for 200k keys): a sweep walks the bucket space in
-    ranges of ``max_buckets`` buckets per call, folding only the swept
-    logs' rows whose home bucket falls in the range; the durable cursor
-    (``_compact.json``, atomic-replace) makes each step resumable and
-    idempotent. Log dirs are deleted only when the cursor completes the
-    full circle — until then their already-folded rows are byte-identical
-    shadows of the buckets, invisible under last-wins. Logs appended
-    AFTER the sweep started (dir id > the sweep's pinned ``high``) are
-    never folded or deleted by it — they are the next sweep's input.
-
-    ``max_buckets=None`` (tools/tests calling directly) runs the whole
-    sweep — fold everything + delete — in this one call, the r12
-    semantics. The merge path passes a bounded step so the worst batch
-    pays one range-fold instead of the full O(state) fold.
-
-    Crash-safe by the same contract as a batch merge: per-bucket swap
-    with ``.old_<batch_id>`` + rollback-only :func:`_recover_state`; the
-    mark is untouched (compaction is a physical no-op). A crash at any
-    point leaves buckets ∪ logs last-wins-identical: unfolded log rows
-    are still authoritative, folded ones are byte-identical shadows, and
-    a lost cursor write merely re-folds a range idempotently. A crash
-    mid-delete leaves shadowed logs; the completion step re-runs on the
-    next call (the cursor file survives until the deletes land)."""
-    logs = _log_dirs(table)
-    sweep = _read_sweep(table)
-    if sweep is None:
-        if not logs or not _compact_should_start(table, logs):
-            return None
-        sweep = {"cursor": 0, "high": _log_id(logs[-1])}
-        _write_sweep(table, 0, sweep["high"])
-    t0 = time.time()
-    cursor, high = sweep["cursor"], sweep["high"]
-    sweep_logs = [p for p in logs if _log_id(p) <= high]
-    step = int(max_buckets) if max_buckets else nb
-    while cursor < nb and sweep_logs:
-        hi = min(cursor + step, nb)
-        bexpr = _bucket_expr(nb, span)
-        logdf = (
-            spark.read.schema(schema)
-            .parquet(*sweep_logs)
-            .filter((bexpr >= cursor) & (bexpr < hi))
-        )
-        touched = sorted(
-            logdf.agg(F.collect_set(bexpr).alias("bs")).collect()[0]["bs"]
-        )
-        if touched:
-            dirs = _bucket_dirs(table, touched)
-            old = (
-                spark.read.schema(schema).parquet(*dirs)
-                if dirs
-                else spark.createDataFrame([], schema)
-            )
-            merged = (
-                _last_wins(old.unionByName(logdf))
-                .withColumn("__bucket", bexpr)
-                .repartition(F.col("__bucket"))
-            )
-            tmp = table + f".tmp_{batch_id}"
-            merged.write.mode("overwrite").partitionBy("__bucket").parquet(tmp)
-            olds = []
-            for k in touched:
-                src = os.path.join(tmp, f"__bucket={k}")
-                if not os.path.isdir(src):
-                    continue
-                dst = _bucket_path(table, k)
-                if os.path.isdir(dst):
-                    os.rename(dst, dst + f".old_{batch_id}")
-                    olds.append(dst + f".old_{batch_id}")
-                os.rename(src, dst)
-            shutil.rmtree(tmp, ignore_errors=True)
-            for p in olds:
-                shutil.rmtree(p, ignore_errors=True)
-        cursor = hi
-        _write_sweep(table, cursor, high)
-        if max_buckets:
-            break
-    if cursor >= nb or not sweep_logs:
-        # completion: every swept log is fully shadowed — delete them,
-        # reseed the row-count sidecar (footer metadata only, amortized
-        # into sweep completion), drop the cursor
-        for p in sweep_logs:
-            shutil.rmtree(p, ignore_errors=True)
-        _write_rows(
-            table, _dir_rows(_bucket_dirs(table)), _dir_rows(_log_dirs(table))
-        )
-        try:
-            os.remove(_sweep_path(table))
-        except OSError:
-            pass
-    return round(time.time() - t0, 3)
-
-
-def _maybe_rescale(
-    spark: SparkSession,
-    table: str,
-    schema: T.StructType,
-    nb: int,
-    span: int,
-    batch_id: int,
-) -> tuple[int, float | None]:
-    """Auto-grow the bucket count when the table has outgrown its layout
-    (r13, verdict item 4): the shipped default N=16 is right for small
-    state but measurably wrong at 1M keys (SCALING.md matrix — sparse
-    pruning degrades to near-dense cost), and a fixed N=1024 pays dense
-    write fanout at small state. When mean bucket rows push the POWER-OF-2
-    ideal for PMR_STATE_TARGET_BUCKET_ROWS (default 1024) to ≥4× the
-    current N, rewrite the table once under the new bucket expression —
-    UPSCALE-ONLY with 4× hysteresis, so a lifetime of growth pays at
-    most log₄(N_max) rescales and a noisy row count near a boundary
-    cannot flip-flop the layout.
-
-    The rewrite folds buckets ∪ logs (one full pass — the same cost a
-    full compaction pays, which is why rescale subsumes it: the new
-    table starts log-free) into a COMPLETE staged sibling
-    ``<table>.rs_new_<batch>`` (buckets under the new expr, new pinned
-    meta, copied mark, fresh row sidecar), then swaps at the TABLE level:
-    rename table → ``.rs_old_<batch>``, staged → table, delete old.
-    Rollback-only recovery (:func:`_recover_state`): a crash before the
-    first rename deletes the stage; between the renames restores the
-    old table and deletes the stage; after the second rename deletes
-    the leftover old. The mark is untouched — rescale is a physical
-    no-op, so an interrupted one simply re-triggers.
-
-    Skipped while a compaction sweep is mid-flight (the sweep's cursor
-    is meaningless under a different N; rescale catches the next
-    sweep-free batch and folds the logs itself)."""
-    if _read_sweep(table) is not None:
-        return nb, None
-    target = _env_num("PMR_STATE_TARGET_BUCKET_ROWS", "1024", int)
-    maxb = _env_num("PMR_STATE_MAX_BUCKETS", "65536", int)
-    floor_rows = _env_num("PMR_STATE_RESCALE_MIN_ROWS", "262144", int)
-    rows = _read_rows(table)
-    if rows is None:
-        rows = {
-            "bucket_rows": _dir_rows(_bucket_dirs(table)),
-            "log_rows": _dir_rows(_log_dirs(table)),
-        }
-        _write_rows(table, rows["bucket_rows"], rows["log_rows"])
-    total = rows["bucket_rows"] + rows["log_rows"]
-    if total < max(floor_rows, 1):
-        # Small-state tables NEVER upscale (measured r13: a 50k-row
-        # all-dense W2 table rescaled to N=64 ran 2x slower at sf1 —
-        # 64 buckets sits in the unclustered dynamic-partition write
-        # fanout gap, and pruning buys nothing when every batch is
-        # dense and the full rewrite is cheap anyway). Above the floor
-        # the table is big enough that bucket pruning and the log path
-        # carry real weight, which is what N exists for.
-        return nb, None
-    import math
-
-    desired = 2 ** round(math.log2(max(total / max(target, 1), 1.0)))
-    desired = max(1, min(int(desired), maxb))
-    if desired < 4 * nb:
-        return nb, None
-    t0 = time.time()
-    cur = _read_state(spark, table, schema)
-    new = table + f".rs_new_{batch_id}"
-    shutil.rmtree(new, ignore_errors=True)
-    (
-        cur.withColumn("__bucket", _bucket_expr(desired, span))
-        .repartition(F.col("__bucket"))
-        .write.mode("overwrite")
-        .partitionBy("__bucket")
-        .parquet(new)
-    )
-    for nm in os.listdir(new):
-        if nm.startswith("__bucket="):
-            k = int(nm.split("=", 1)[1])
-            os.rename(os.path.join(new, nm), os.path.join(new, f"b{k:05d}"))
-    with open(os.path.join(new, "_meta.json"), "w") as f:
-        json.dump({"n_buckets": int(desired), "span": int(span)}, f)
-    # the batch mark is a SIBLING file (<table>.batchmark) — the
-    # table-level renames never touch it, so it stays authoritative
-    # through the swap with no copy needed
-    with open(os.path.join(new, "_rows.json"), "w") as f:
-        json.dump(
-            {"bucket_rows": _dir_rows(_bucket_dirs(new)), "log_rows": 0}, f
-        )
-    old = table + f".rs_old_{batch_id}"
-    os.rename(table, old)
-    os.rename(new, table)
-    shutil.rmtree(old, ignore_errors=True)
-    return int(desired), round(time.time() - t0, 3)
-
-
-def _guard_runner_dirs(ckpt: str, out_dir: str, table: str) -> None:
-    """Both directions of the dir/checkpoint consistency contract:
-
-    - FRESH checkpoint (no committed batch): foreign batch dirs in
-      ``out_dir`` (ADVICE r8) or a pre-existing state table/mark would be
-      silently folded into the new stream's results — refuse both.
-      EXCEPTION (ADVICE r10): a run killed in the FIRST-batch window
-      (state table + mark written, streaming commit for batch 0 not yet)
-      also presents last<0 — but its mark carries THIS checkpoint's
-      stream generation, proving the state was written by this
-      checkpoint lifetime. That is a legitimate resume: shed the
-      uncommitted emission dirs and let the replay converge (idempotent
-      via the per-row last_batch_id guard). Only a generation
-      mismatch/absence is foreign state and refuses.
-    - RESUMED checkpoint (ADVICE r9, the converse hole): the committed
-      batches' emissions AND a state table at least as new as the commit
-      high-water mark must exist — the mkdtemp defaults when a caller
-      passes only ``checkpoint_dir`` would otherwise compute emissions
-      from EMPTY state and lose the committed batches' output silently.
-    """
-    last = _last_committed_batch(ckpt)
-    # heal an interrupted bucket swap FIRST: a crash between a bucket's
-    # two renames leaves it missing with its .old beside it — a
-    # legitimate resume state the checks below must not mistake for
-    # lost state
-    _recover_state(table)
-    if last < 0:
-        if os.path.isdir(table) or os.path.exists(up._mark_path(table)):
-            mark = _read_mark_raw(table)
-            floor = _last_offset_batch(ckpt)
-            if (
-                mark is None
-                and _table_meta(table) is not None
-                and not _bucket_dirs(table)
-                and not _log_dirs(table)
-            ):
-                # meta-only table (ADVICE r11): _init_table crashed in
-                # the instant between the meta write and the initial
-                # mark stamp, or a pre-r12 run died inside batch 0
-                # before its end-of-batch mark. Either way the table
-                # holds ZERO state rows — nothing foreign to fold in;
-                # treat as empty state and let the stream start clean.
-                if 0 <= floor:
-                    # this checkpoint already planned batch `floor`:
-                    # its uncommitted emission dirs get recommitted —
-                    # shed them; earlier dirs must exist (same
-                    # contract as the marked first-batch window below)
-                    _guard_resume_outputs(out_dir, floor - 1)
-                    for i, p in _batch_dirs(out_dir):
-                        if i >= floor:
-                            shutil.rmtree(p, ignore_errors=True)
-                else:
-                    _guard_stale_batches(out_dir, -1)
-                return
-            if (
-                mark is not None
-                and mark.get("stream") == up._stream_generation(ckpt)
-                and 0 <= floor
-                and mark.get("batch_id", -1) <= floor
-            ):
-                # first-batch-window resume of THIS checkpoint: the
-                # stream replays exactly the latest offsets entry —
-                # shed only the batch dirs it will recommit (earlier
-                # dirs are already-final emissions it never re-runs),
-                # and REQUIRE the earlier dirs to exist (ADVICE r11:
-                # resuming this window against a wrong/fresh out_dir
-                # would silently drop the below-floor emissions —
-                # the same hole _guard_resume_outputs closes on the
-                # committed path).
-                _guard_resume_outputs(out_dir, floor - 1)
-                for i, p in _batch_dirs(out_dir):
-                    if i >= floor:
-                        shutil.rmtree(p, ignore_errors=True)
-                return
-            raise ValueError(
-                f"state dir {os.path.dirname(table)!r} already holds a "
-                "state table but the checkpoint is fresh (batch ids "
-                "restart at 0): the old state would be silently folded "
-                "into the new stream. Use an empty state_dir, or resume "
-                "with the original checkpoint_dir."
-            )
-        _guard_stale_batches(out_dir, last)
-        return
-    _guard_stale_batches(out_dir, last)
-    _guard_resume_outputs(out_dir, last)
-    mark = _read_mark_raw(table)
-    if not os.path.isdir(table) or mark is None or mark.get("batch_id", -1) < last:
-        raise ValueError(
-            f"checkpoint has committed batches 0..{last} but the state "
-            f"table {table!r} is missing or behind (mark={mark}): resuming "
-            "would compute emissions from partial state. Resume with the "
-            "original state_dir, or start a fresh checkpoint."
-        )
-    gen = up._stream_generation(ckpt)
-    if mark.get("stream") not in (gen, "__recovered__"):
-        raise ValueError(
-            f"state table {table!r} belongs to stream generation "
-            f"{mark.get('stream')!r}, not this checkpoint's {gen!r}: "
-            "refusing to fold foreign state into a resumed stream."
-        )
-
-
-def _batched_state_runner(
-    stream_df: DataFrame,
-    op: dict,
-    out_schema: T.StructType,
-    model_fn=None,
-    out_dir: str | None = None,
-    state_dir: str | None = None,
-    checkpoint_dir: str | None = None,
-    timings: list | None = None,
-    n_buckets: int | None = None,
-    bucket_span: int | None = None,
-) -> DataFrame:
-    """Batched (relational) keyed-state runner: ``foreachBatch`` against
-    a COMPACTED one-row-per-doc parquet state table instead of per-KEY
-    Python state.
-
-    Why this exists (r8/r9 verdicts, the last scale-killer-shaped cost):
-    ``applyInPandasWithState`` pays a pandas-group round-trip PER KEY PER
-    MICRO-BATCH — measured at sf1: 207.6 s for the W2 accumulator and
-    196.4 s for the refeed chain vs single-digit DuckDB (50k docs × 4
-    stages = 200k Python state calls each), a cost in O(keys × batches)
-    that no data-volume term amortizes. And why the state is COMPACTED
-    (r9 verdict item 1): the first batched design appended raw rows
-    under ``state_dir/batch-<id>`` and re-scanned ALL of them every
-    micro-batch — O(batches²) lifetime I/O, a week-long stream killer.
-    This runner folds each batch into a keyed state table instead:
-
-    - ``op["merge"](old_state, mapped_batch, batch_id)`` produces the
-      new state — ONE row per doc (the folded accumulator, not raw
-      history), entirely JVM-side (groupBy + array/higher-order
-      expressions), zero per-key Python. Rows whose ``last_batch_id``
-      is already ≥ the batch id pass through unchanged, so a replayed
-      or half-applied batch converges instead of double-folding;
-    - the new state swaps in atomically via the keyed-upsert machinery
-      (``streaming/upsert``: tmp → rename → mark, ``_recover`` heals
-      every crash window, the mark is scoped to the checkpoint's stream
-      generation);
-    - ``op["emit"](new_state, batch_id)`` derives the batch's emissions
-      from the just-staged state (rows with ``last_batch_id == id``
-      carry everything the emission needs), written to
-      ``out_dir/batch-<id>`` with per-batch OVERWRITE *before* the swap
-      — so every crash point either replays the merge (identical by
-      the per-row guard) or finds the emission already durable.
-
-    Cost per batch is O(touched buckets) state rows read + rewritten —
-    CONSTANT in stream depth (the refeed state is O(1) per doc; the
-    accumulator's payload grows only as its own output must), and
-    SUB-LINEAR in total keys for sparse-touch batches (r11): the state
-    table is bucketed by span-hashed doc_id (see the bucketed-layout
-    notes above) and a batch opens only the buckets its keys land in —
-    the plain-parquet analog of a partition-pruned Delta/Iceberg
-    ``MERGE INTO``, same contract, no code change above this seam.
-    SCATTERED-sparse batches — the shape pruning can't help, where few
-    keys graze most buckets — take the delta-log path instead (r12):
-    the batch's folded state rows append as ONE small parquet dir under
-    ``<table>/_log`` and reads resolve buckets ∪ logs by
-    last-batch-wins, with LSM compaction folding logs back into buckets
-    when they outgrow the table (see the layout notes / ``_use_log_path``
-    / ``_compact_logs``) — O(batch) write cost instead of O(grazed
-    buckets) rewrite.
-    Restart-safe: same checkpoint + same dirs resumes from the
-    committed high-water mark (tests/test_stream_recovery.py),
-    including a kill inside the FIRST-batch window (ADVICE r10);
-    fresh-vs-resumed dir mismatches are refused loudly
-    (:func:`_guard_runner_dirs`). Default temp dirs are
-    retention-swept by ``sources/retention`` (the ``pmr_*`` TTL family);
-    the returned DataFrame reads ``out_dir`` lazily, so nothing deletes
-    eagerly here.
-
-    ``timings`` (optional list) receives one dict per live batch with
-    the per-phase seconds (merge/emit/swap, plus the touched-bucket
-    probe inside merge) — the soak tools' evidence that per-batch
-    latency stays flat as history deepens and tracks the touched
-    fraction when batches are sparse.
-    """
-    spark = stream_df.sparkSession
-    out_dir = out_dir or tempfile.mkdtemp(prefix="pmr_stream_out_")
-    state_dir = state_dir or tempfile.mkdtemp(prefix="pmr_stream_state_")
-    os.makedirs(out_dir, exist_ok=True)
-    os.makedirs(state_dir, exist_ok=True)
-    ckpt = checkpoint_dir or _ckpt_dir()
-    table = os.path.join(state_dir, "state")
-    _guard_runner_dirs(ckpt, out_dir, table)
-    state_schema = op["state"]
-    nb0 = n_buckets or _DEFAULT_BUCKETS
-    span0 = bucket_span or _DEFAULT_SPAN
-    # auto-rescale only when the CALLER did not pin a layout: an explicit
-    # n_buckets is a measurement/config contract (probes, soaks) the
-    # runner must not silently rewrite
-    autoscale = n_buckets is None and _env_num("PMR_STATE_AUTOSCALE", "1", int) >= 1
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        t0 = time.time()
-        _recover_state(table)
-        gen = up._stream_generation(ckpt)
-        edir = os.path.join(out_dir, f"batch-{batch_id:09d}")
-        if batch_id <= up._last_batch(table, gen):
-            # Replayed batch already folded into state (swap + mark
-            # completed, crash before the stream commit). Its emission
-            # dir normally predates the swap, but the stale-batch guard
-            # legitimately sheds UNCOMMITTED emission dirs on restart —
-            # re-derive it from the state itself: rows with
-            # last_batch_id == batch_id carry the batch's emissions
-            # (that is what last_ems/ps exist for).
-            if not os.path.isdir(edir):
-                cur = _read_state(spark, table, state_schema)
-                op["emit"](cur, batch_id).write.mode("overwrite").parquet(edir)
-            return
-        nb, span = _init_table(table, nb0, span0, gen=gen)
-        rescale_s = None
-        if autoscale:
-            nb, rescale_s = _maybe_rescale(
-                spark, table, state_schema, nb, span, batch_id
-            )
-        bexpr = _bucket_expr(nb, span)
-        # bounded compaction step (r13): the merge path never pays the
-        # full O(state) fold in one batch — each batch advances the
-        # sweep by at most `step` buckets, so the worst batch wall is
-        # merge + one range-fold instead of merge + full compaction
-        step = _env_num(
-            "PMR_STATE_LOG_COMPACT_STEP_BUCKETS", str(max(64, nb // 8)), int
-        )
-        compact_s = _compact_logs(
-            spark, table, state_schema, nb, span, batch_id, max_buckets=step
-        )
-        # compaction/rescale are their own reported phases: shift the
-        # merge clock so merge_s/touch_s stay comparable across batches
-        # that did and didn't pay them (the soaks' flatness stats read
-        # merge_s)
-        t0 += (compact_s or 0.0) + (rescale_s or 0.0)
-        # The touched-bucket probe runs on the RAW batch (doc_id only —
-        # the model map is applied below, inside the merge-write job,
-        # so the probe never pays the pandas-UDF cost) as a collect_set
-        # aggregate: map-side partials into ONE reduce task (a distinct
-        # would shuffle into shuffle.partitions result tasks for a
-        # ≤n_buckets-element answer). Each job scans the batch's source
-        # file once; the map UDF runs exactly once (merge-write job).
-        # The same job counts distinct keys (the log-path density
-        # signal) and flags null doc_ids (null join keys never match in
-        # the full_outer merge; the log path's semi-join filter would
-        # shift that corner's semantics, so null-key batches pin to the
-        # bucket path, whose behavior is the established contract).
-        probe = batch_df.agg(
-            F.collect_set(bexpr).alias("bs"),
-            F.countDistinct("doc_id").alias("nk"),
-            F.max(F.col("doc_id").isNull().cast("int")).alias("hasnull"),
-        ).collect()[0]
-        touched = sorted(probe["bs"])
-        t1 = time.time()
-        if not bool(probe["hasnull"] or 0) and _use_log_path(
-            len(touched), int(probe["nk"] or 0), nb
-        ):
-            # ---- delta-log path (scattered-sparse batch) ----
-            # Old state for EXACTLY the batch's keys: the touched-bucket
-            # scan is read-only (no rewrite fan-out), the key filter is
-            # a broadcast semi-join (keys ≤ kpb × n_buckets by the path
-            # condition). The delta holds the keys' complete new state
-            # rows, so reads resolve by last-batch-wins.
-            old = _read_state(spark, table, state_schema, touched).join(
-                F.broadcast(batch_df.select("doc_id").distinct()),
-                "doc_id",
-                "left_semi",
-            )
-            delta = op["merge"](
-                old, mapstage.llm_map(batch_df, model_fn=model_fn), batch_id
-            )
-            lroot = _log_root(table)
-            os.makedirs(lroot, exist_ok=True)
-            ltmp = os.path.join(lroot, f".tmp_{batch_id}")
-            delta.write.mode("overwrite").parquet(ltmp)
-            t2 = time.time()
-            staged = spark.read.schema(state_schema).parquet(ltmp)
-            op["emit"](staged, batch_id).write.mode("overwrite").parquet(edir)
-            t3 = time.time()
-            dst = _log_path(table, batch_id)
-            if os.path.isdir(dst):  # replay rewrite: recomputable from
-                shutil.rmtree(dst)  # buckets ∪ earlier logs + source
-            os.rename(ltmp, dst)
-            with open(up._mark_path(table), "w") as f:
-                json.dump({"batch_id": batch_id, "stream": gen}, f)
-            rows = _read_rows(table)
-            if rows is not None:
-                # the delta holds one complete row per batch key, so its
-                # size is the probe's countDistinct — no extra job
-                _write_rows(
-                    table,
-                    rows["bucket_rows"],
-                    rows["log_rows"] + int(probe["nk"] or 0),
-                )
-            else:  # pre-r13 table: seed from footers
-                _write_rows(
-                    table, _dir_rows(_bucket_dirs(table)), _dir_rows(_log_dirs(table))
-                )
-            if timings is not None:
-                timings.append(
-                    {
-                        "batch_id": batch_id,
-                        "path": "log",
-                        "merge_s": round(t2 - t0, 3),
-                        "touch_s": round(t1 - t0, 3),
-                        "emit_s": round(t3 - t2, 3),
-                        "swap_s": round(time.time() - t3, 3),
-                        "compact_s": compact_s,
-                        "rescale_s": rescale_s,
-                        "buckets_touched": len(touched),
-                        "n_buckets": nb,
-                    }
-                )
-            return
-        old = _read_state(spark, table, state_schema, touched)
-        tmp = table + f".tmp_{batch_id}"
-        merged = op["merge"](
-            old, mapstage.llm_map(batch_df, model_fn=model_fn), batch_id
-        ).withColumn("__bucket", bexpr)
-        # Clustering before the partitionBy write is a PER-OPERATOR
-        # trade, measured both ways at 1M keys / depth 16-96 (r11):
-        # - without repartition(__bucket) the dynamic-partition writer
-        #   fans out to ~tasks × touched files: a dense 648-bucket batch
-        #   wrote ~10k small files (42-65 s vs ~6 s clustered), and even
-        #   at N=16 the refeed depth soak DOUBLED per batch (1.0→2.1 s)
-        #   from file open/close + next-batch read overhead;
-        # - with it, the payload crosses one extra shuffle: free for the
-        #   refeed's O(1)-per-doc state, but ~2× the ACCUMULATOR's
-        #   per-batch slope (its payload grows with depth, so the extra
-        #   movement grows with it).
-        # op["cluster_write"]: "always" for small-payload state (one
-        # file per bucket, cheap shuffle); "auto" for growing-payload
-        # state — skip the shuffle unless the file fanout would explode
-        # (touched > 4 × write tasks).
-        tasks = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        cw = op.get("cluster_write", "auto")
-        if cw == "always" or len(touched) > 4 * tasks:
-            merged = merged.repartition(F.col("__bucket"))
-        merged.write.mode("overwrite").partitionBy("__bucket").parquet(tmp)
-        t2 = time.time()
-        staged_dirs = []
-        for k in touched:
-            p = os.path.join(tmp, f"__bucket={k}")
-            if os.path.isdir(p):
-                staged_dirs.append((k, p))
-        staged = (
-            spark.read.schema(state_schema).parquet(*[p for _, p in staged_dirs])
-            if staged_dirs
-            else spark.createDataFrame([], state_schema)
-        )
-        op["emit"](staged, batch_id).write.mode("overwrite").parquet(edir)
-        # row-cache maintenance: driver-side footer counts over ONLY the
-        # batch's pre-swap buckets and just-written staged dirs — no
-        # Spark job, O(touched files)
-        rows_cache = _read_rows(table)
-        if rows_cache is not None:
-            pre_cnt = _dir_rows(_bucket_dirs(table, touched))
-            new_cnt = _dir_rows([p for _, p in staged_dirs])
-        t3 = time.time()
-        olds = []
-        for k, src in staged_dirs:
-            dst = _bucket_path(table, k)
-            if os.path.isdir(dst):
-                os.rename(dst, dst + f".old_{batch_id}")
-                olds.append(dst + f".old_{batch_id}")
-            os.rename(src, dst)
-        with open(up._mark_path(table), "w") as f:
-            json.dump({"batch_id": batch_id, "stream": gen}, f)
-        if rows_cache is not None:
-            _write_rows(
-                table,
-                rows_cache["bucket_rows"] + new_cnt - pre_cnt,
-                rows_cache["log_rows"],
-            )
-        else:  # pre-r13 table: seed from footers after the swap
-            _write_rows(
-                table, _dir_rows(_bucket_dirs(table)), _dir_rows(_log_dirs(table))
-            )
-        shutil.rmtree(tmp, ignore_errors=True)
-        for p in olds:
-            shutil.rmtree(p, ignore_errors=True)
-        if timings is not None:
-            timings.append(
-                {
-                    "batch_id": batch_id,
-                    "path": "bucket",
-                    "merge_s": round(t2 - t0, 3),
-                    "touch_s": round(t1 - t0, 3),
-                    "emit_s": round(t3 - t2, 3),
-                    "swap_s": round(time.time() - t3, 3),
-                    "compact_s": compact_s,
-                    "rescale_s": rescale_s,
-                    "buckets_touched": len(staged_dirs),
-                    "n_buckets": nb,
-                }
-            )
-
-    try:
-        q = (
-            stream_df.writeStream.foreachBatch(_merge)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if checkpoint_dir is None:
-            shutil.rmtree(ckpt, ignore_errors=True)
-    batches = [p for _, p in _batch_dirs(out_dir)]
-    if not batches:
-        return spark.createDataFrame([], out_schema)
-    return spark.read.schema(out_schema).parquet(*batches)
-
-
-#: Compacted accumulator state: ONE row per doc — the chunk-ordered
-#: (chunk_id, out_text) pairs folded so far, plus the replay guard.
-_ACC_STATE = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("last_batch_id", T.IntegerType()),
-        T.StructField(
-            "ps",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("chunk_id", T.IntegerType()),
-                        T.StructField("out_text", T.StringType()),
-                    ]
-                )
-            ),
-        ),
-    ]
-)
-
-_EMPTY_PS = "cast(array() as array<struct<chunk_id:int,out_text:string>>)"
-
-
-def _acc_merge(old: DataFrame, batch: DataFrame, batch_id: int) -> DataFrame:
-    """Fold one mapped micro-batch into the accumulator state:
-    ``array_sort(old ∪ batch)`` per touched doc — identical to sorting
-    the full history (array_sort of a union of sorted arrays), which is
-    what the emission contract orders by. Untouched docs and docs whose
-    ``last_batch_id`` already covers this batch (a half-applied crash
-    window) pass through unchanged — the idempotence guard."""
-    agg = batch.groupBy("doc_id").agg(
-        F.array_sort(F.collect_list(F.struct("chunk_id", "out_text"))).alias("bx")
-    )
-    j = old.join(agg, "doc_id", "full_outer")
-    fresh = F.col("bx").isNotNull() & (
-        F.coalesce(F.col("last_batch_id"), F.lit(-1)) < batch_id
-    )
-    return j.select(
-        "doc_id",
-        F.when(fresh, F.lit(batch_id))
-        .otherwise(F.col("last_batch_id"))
-        .cast("int")
-        .alias("last_batch_id"),
-        F.when(
-            fresh,
-            F.array_sort(
-                F.concat(F.coalesce(F.col("ps"), F.expr(_EMPTY_PS)), F.col("bx"))
-            ),
-        )
-        .otherwise(F.col("ps"))
-        .alias("ps"),
-    )
-
-
-def _acc_emit(state: DataFrame, batch_id: int) -> DataFrame:
-    return state.filter(F.col("last_batch_id") == batch_id).select(
-        "doc_id",
-        F.size("ps").cast("int").alias("n_chunks_seen"),
-        F.array_join(F.col("ps").getField("out_text"), " ").alias("acc_text"),
-    )
-
-
-#: cluster_write="auto": the accumulator's per-doc payload GROWS with
-#: depth, so the bucket-clustering shuffle is skipped unless the file
-#: fanout would explode (see _merge).
-_ACC_OP = {
-    "state": _ACC_STATE,
-    "merge": _acc_merge,
-    "emit": _acc_emit,
-    "cluster_write": "auto",
+# --- W2: cross-stage per-doc state on Spark's state store --------------------
+
+#: Confs the W2 aggregation starts under: Spark's bundled RocksDB state
+#: store with changelog checkpointing, so a micro-batch commits only the
+#: per-doc rows it changed instead of a snapshot of every doc's history.
+#: The provider is recorded in the checkpoint's offset log, so a resumed
+#: query keeps the store it was created with.
+_W2_STATE_STORE = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    ),
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
 }
 
 
-def _accumulate_batched_runner(
+def _w2_history(stream_df: DataFrame, model_fn=None) -> DataFrame:
+    """Map each arriving chunk, then keep every doc's chunk history in the
+    state store: ``(doc_id, ps)`` with ``ps`` the list of
+    ``(arrival, chunk_id, out_text)`` seen so far. In update mode each
+    micro-batch yields exactly the docs it touched.
+
+    ``arrival`` is the micro-batch timestamp in microseconds. It is a
+    column BEFORE the aggregate because Spark rejects non-deterministic
+    aggregate arguments; Spark records the batch timestamp in the offset
+    log, so a replayed batch gets the same value. Batches are ordered by
+    it, which assumes consecutive micro-batches start in different
+    milliseconds, the timestamp's resolution (each one first commits a
+    state-store version and writes its emission)."""
+    return (
+        mapstage.llm_map(stream_df, model_fn=model_fn)
+        .withColumn("arrival", F.unix_micros(F.current_timestamp()))
+        .groupBy("doc_id")
+        .agg(
+            F.collect_list(F.struct("arrival", "chunk_id", "out_text")).alias("ps")
+        )
+    )
+
+
+def _w2_run(
     stream_df: DataFrame,
+    emit,
     model_fn=None,
     out_dir: str | None = None,
     state_dir: str | None = None,
     checkpoint_dir: str | None = None,
-    timings: list | None = None,
-    n_buckets: int | None = None,
-    bucket_span: int | None = None,
 ) -> DataFrame:
-    """Batched W2 accumulator: one compacted state row per doc holding
-    the chunk-ordered (chunk_id, out_text) pairs; each batch's emission
-    is ``size(ps)`` + ``array_join(ps.out_text)`` over the rows the
-    batch touched — value-identical to ``_accumulate``
-    (tests/test_streaming.py::test_stateful_accumulate_mode_equivalence)."""
-    return _batched_state_runner(
-        stream_df, _ACC_OP, _ACC_OUT,
-        model_fn=model_fn, out_dir=out_dir, state_dir=state_dir,
-        checkpoint_dir=checkpoint_dir, timings=timings,
-        n_buckets=n_buckets, bucket_span=bucket_span,
+    """Run ``emit(_w2_history(stream))`` through the durable parquet sink
+    (``_run_to_parquet``: ``out_dir/batch-<id>`` with per-batch overwrite
+    and the stale/resume guards) on the RocksDB state store.
+
+    The state store lives in the checkpoint. Without a ``checkpoint_dir``
+    it goes under ``state_dir/checkpoint`` when a ``state_dir`` is given
+    (kept, like a caller's checkpoint), else in a temp dir removed after
+    the run."""
+    spark = stream_df.sparkSession
+    if checkpoint_dir is None and state_dir is not None:
+        checkpoint_dir = os.path.join(state_dir, "checkpoint")
+    with _session_confs(spark, _W2_STATE_STORE):
+        return _run_to_parquet(
+            stream_df,
+            lambda s: emit(_w2_history(s, model_fn)),
+            out_dir=out_dir,
+            checkpoint_dir=checkpoint_dir,
+            output_mode="update",
+        )
+
+
+def _acc_emit(hist: DataFrame) -> DataFrame:
+    """Accumulator emission: the doc's chunk count and its outputs joined
+    in chunk order, whatever order the chunks arrived in."""
+    return hist.select(
+        "doc_id",
+        F.size("ps").alias("n_chunks_seen"),
+        F.array_join(
+            F.expr(
+                "array_sort(transform(ps, p -> named_struct("
+                "'chunk_id', p.chunk_id, 'out_text', p.out_text)))"
+            ).getField("out_text"),
+            " ",
+        ).alias("acc_text"),
     )
 
 
@@ -1604,125 +508,41 @@ def stateful_accumulate(
     spark: SparkSession,
     chunks_df: DataFrame,
     model_fn=None,
-    mode: str = "batched",
     out_dir: str | None = None,
     state_dir: str | None = None,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
-    """W2: cross-stage accumulator over staged micro-batch arrival.
+    """W2: cross-stage accumulator over staged micro-batch arrival (the
+    ``total_res_toks`` analog, ``test_proactive.py:327-328``).
 
-    Each micro-batch emits the running per-doc accumulation; the final
-    update (n_chunks_seen == total chunks) equals batch incremental_concat.
-    ``model_fn`` is the same black-box map seam as the batch path — the
-    pipeline's streaming mode MUST run the caller's model, not silently
-    fall back to the stand-in.
-
-    ``mode`` selects the state implementation; both emit identical rows
-    (pinned by tests/test_streaming.py::test_stateful_accumulate_mode_equivalence):
-
-    - ``"batched"`` (default): relational accumulation in ``foreachBatch``
-      against a COMPACTED one-row-per-doc parquet state table (r10 — the
-      r9 design kept raw per-batch dirs and re-scanned all of them every
-      batch, O(batches²) lifetime I/O) — per-BATCH constant cost, the
-      scale path (see ``_accumulate_batched_runner``; cut the sf1
-      gate row from ~208 s to single-digit seconds).
-    - ``"state"``: ``applyInPandasWithState`` keyed by doc_id — the
-      semantic reference for the per-key state-store contract (restart
-      recovery via the state store itself,
-      tests/test_stream_recovery.py::test_stateful_accumulate_restart_restores_state);
-      per-KEY Python cost, O(keys × batches) — keep off hot paths.
-    """
+    Each micro-batch emits ``(doc_id, n_chunks_seen, acc_text)`` for the
+    docs it touched: the running accumulation in chunk order. The final
+    update per doc (n_chunks_seen == its chunk count) equals batch
+    ``incremental_concat``. ``model_fn`` is the same black-box map seam
+    as the batch path. The per-doc chunk history lives in Spark's state
+    store (see ``_w2_run`` for where); emissions land under ``out_dir``
+    and the result is a lazy read of them."""
     root = write_stage_files(chunks_df)
     try:
-        if mode == "batched":
-            return _accumulate_batched_runner(
-                _chunk_stream(spark, root),
-                model_fn=model_fn,
-                out_dir=out_dir,
-                state_dir=state_dir,
-                checkpoint_dir=checkpoint_dir,
-            )
-        state_schema = T.StructType(
-            [
-                T.StructField("chunk_ids", T.ArrayType(T.IntegerType())),
-                T.StructField("texts", T.ArrayType(T.StringType())),
-            ]
+        return _w2_run(
+            _chunk_stream(spark, root), _acc_emit, model_fn,
+            out_dir=out_dir, state_dir=state_dir, checkpoint_dir=checkpoint_dir,
         )
-
-        def transform(stream_df: DataFrame) -> DataFrame:
-            mapped = mapstage.llm_map(stream_df, model_fn=model_fn)
-            return mapped.groupBy("doc_id").applyInPandasWithState(
-                _accumulate,
-                outputStructType=_ACC_OUT,
-                stateStructType=state_schema,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-
-        return _run_to_memory(_chunk_stream(spark, root), transform)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
 
-_REFEED_OUT = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("chunk_id", T.IntegerType()),
-        T.StructField("acc_words_before", T.LongType()),
-        T.StructField("chain", T.StringType()),
-    ]
-)
-
-
-def _refeed(key, pdfs, state: GroupState):
-    """v2 re-feed state function (test_proactive_2.py:228-233): each
-    stage's computation consumes the ACCUMULATED prior outputs, so the
-    result is genuinely sequential — stage n cannot be computed without
-    stage n-1's. State carries (next expected info): the accumulated
-    output word count and a rolling md5 CHAIN over the per-stage outputs
-    (chain_n = md5(chain_{n-1} + out_n)[:8]); the chain is
-    order-sensitive, so any replay, reorder, or lost stage changes every
-    later emitted value — the strongest cheap witness that the stateful
-    path ran the stages in arrival order. Rows within one micro-batch
-    are folded in chunk_id order (normally one stage per batch; recovery
-    can coalesce several)."""
-    import hashlib as _hl
-
-    rows = pd.concat(list(pdfs), ignore_index=True).sort_values("chunk_id")
-    acc_words, chain = (0, "") if not state.exists else state.get
-    out_ids, out_acc, out_chain = [], [], []
-    for _, r in rows.iterrows():
-        toks = [w for w in (r["out_text"] or "").split(" ") if w]
-        out_ids.append(int(r["chunk_id"]))
-        out_acc.append(int(acc_words))
-        chain = _hl.md5((chain + (r["out_text"] or "")).encode("utf-8")).hexdigest()[:8]
-        out_chain.append(chain)
-        acc_words += len(toks)
-    state.update((acc_words, chain))
-    yield pd.DataFrame(
-        {
-            "doc_id": [key[0]] * len(out_ids),
-            "chunk_id": out_ids,
-            "acc_words_before": out_acc,
-            "chain": out_chain,
-        }
-    )
-
-
 def _refeed_fold(chain0: str, acc0: str, finish: str = "s -> s.ems") -> str:
-    """The refeed fold as ONE higher-order ``aggregate()`` expression
-    (r9): replay the ``xs`` rows in arrival order — (batch_id, chunk_id),
-    exactly ``_refeed``'s fold order (per-batch sort_values("chunk_id")
-    across sequential batches) — threading (chain, acc_words) from the
-    ``(chain0, acc0)`` seed and collecting one emission per row.
-    md5/split/filter/substring are all JVM expressions, so the fold costs
-    zero Python; coalesce(out_text,'') mirrors ``_refeed``'s ``(r or "")``.
+    """The refeed recursion as ONE higher-order ``aggregate()`` over the
+    ``xs`` array: thread ``(chain, acc_words)`` from the ``(chain0, acc0)``
+    seed through the rows in array order and collect one emission per
+    row: ``chain_n = md5(chain_{n-1} || out_n)[:8]`` and the word count
+    accumulated before the row. md5/split/filter/substring are JVM
+    expressions, so the fold costs no Python; a NULL ``out_text`` counts
+    as ''. Each row's ``batch_id`` field is carried into its emission.
 
-    Seedable (r10): the compacted state runner folds each micro-batch on
-    top of the PERSISTED per-doc (chain, acc_words) instead of re-folding
-    full history — sequential-fold composition makes the two identical
-    (pinned by tests/test_property_ops.py's split-composition property).
-    """
+    Seeding from a fold's final state and folding the rest emits exactly
+    the rest of the whole fold (pinned by tests/test_property_ops.py)."""
     return f"""
     aggregate(
       xs,
@@ -1744,121 +564,34 @@ def _refeed_fold(chain0: str, acc0: str, finish: str = "s -> s.ems") -> str:
     )"""
 
 
-#: The zero-seed full-history fold (the r9 expression, byte-for-byte
-#: semantics) — kept as the reference form the property tests pin the
-#: seeded incremental fold against.
+#: The zero-seed fold over a doc's whole history.
 _REFEED_FOLD = _refeed_fold("''", "0")
 
-#: Compacted refeed state: ONE row per doc — the folded (chain,
-#: acc_words) scalars, the replay guard, and the batch's own emissions
-#: (``last_ems``) so a crash between the state swap and the stream
-#: commit can rebuild the emission without pre-batch state.
-_REFEED_STATE = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("last_batch_id", T.IntegerType()),
-        T.StructField("chain", T.StringType()),
-        T.StructField("acc_words", T.LongType()),
-        T.StructField(
-            "last_ems",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("chunk_id", T.IntegerType()),
-                        T.StructField("acc_words_before", T.LongType()),
-                        T.StructField("chain", T.StringType()),
-                        T.StructField("batch_id", T.IntegerType()),
-                    ]
-                )
-            ),
-        ),
-    ]
-)
 
-
-def _refeed_merge(old: DataFrame, batch: DataFrame, batch_id: int) -> DataFrame:
-    """Fold one mapped micro-batch onto the persisted per-doc refeed
-    state: within the batch rows sort by chunk_id (``_refeed``'s
-    per-batch ``sort_values``; batch_id rides along constant for the
-    emission shape), seed the fold with the doc's stored
-    (chain, acc_words), and store the fold's final scalars plus its
-    emissions. Untouched / already-covered docs pass through."""
-    agg = batch.groupBy("doc_id").agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    F.col("chunk_id"),
-                    F.col("out_text"),
-                    F.lit(batch_id).cast("int").alias("batch_id"),
-                )
-            )
-        ).alias("xs")
-    )
-    j = old.join(agg, "doc_id", "full_outer")
-    fresh = F.col("xs").isNotNull() & (
-        F.coalesce(F.col("last_batch_id"), F.lit(-1)) < batch_id
-    )
-    folded = F.expr(
-        _refeed_fold("coalesce(chain, '')", "coalesce(acc_words, 0)", "s -> s")
-    )
-    j = j.withColumn("__f", F.when(fresh, folded))
-    keep = lambda new, cur: F.when(F.col("__f").isNotNull(), new).otherwise(cur)
-    return j.select(
-        "doc_id",
-        keep(F.lit(batch_id), F.col("last_batch_id")).cast("int").alias(
-            "last_batch_id"
-        ),
-        keep(F.col("__f.chain"), F.col("chain")).alias("chain"),
-        keep(F.col("__f.acc"), F.col("acc_words")).cast("long").alias("acc_words"),
-        keep(F.col("__f.ems"), F.col("last_ems")).alias("last_ems"),
-    )
-
-
-def _refeed_emit(state: DataFrame, batch_id: int) -> DataFrame:
+def _refeed_emit(hist: DataFrame) -> DataFrame:
+    """Refeed emission: fold the doc's history in arrival order (arrival,
+    then chunk_id within a micro-batch) and keep the emissions of the
+    chunks that arrived in this micro-batch, i.e. whose ``arrival`` is
+    the doc's latest. The fold's ``batch_id`` field is unused here (0)."""
     return (
-        state.filter(F.col("last_batch_id") == batch_id)
-        .select("doc_id", F.explode("last_ems").alias("e"))
+        hist.select("doc_id", F.array_sort("ps").alias("h"))
+        .withColumn(
+            "xs",
+            F.expr(
+                "transform(h, p -> named_struct('chunk_id', p.chunk_id, "
+                "'out_text', p.out_text, 'batch_id', 0))"
+            ),
+        )
         .select(
             "doc_id",
-            F.col("e.chunk_id").alias("chunk_id"),
-            F.col("e.acc_words_before").alias("acc_words_before"),
-            F.col("e.chain").alias("chain"),
+            F.explode(
+                F.expr(
+                    f"filter({_REFEED_FOLD}, "
+                    "(e, i) -> h[i].arrival = h[size(h) - 1].arrival)"
+                )
+            ).alias("e"),
         )
-    )
-
-
-#: cluster_write="always": refeed state is O(1) per doc, so one cheap
-#: shuffle per batch buys ~one file per bucket (see _merge).
-_REFEED_OP = {
-    "state": _REFEED_STATE,
-    "merge": _refeed_merge,
-    "emit": _refeed_emit,
-    "cluster_write": "always",
-}
-
-
-def _refeed_batched_runner(
-    stream_df: DataFrame,
-    model_fn=None,
-    out_dir: str | None = None,
-    state_dir: str | None = None,
-    checkpoint_dir: str | None = None,
-    timings: list | None = None,
-    n_buckets: int | None = None,
-    bucket_span: int | None = None,
-) -> DataFrame:
-    """Batched refeed: fold each micro-batch onto the compacted per-doc
-    (chain, acc_words) state with the seeded ``_refeed_fold`` expression
-    — value-identical to the per-key ``_refeed`` state function
-    (tests/test_streaming.py::test_refeed_chain_mode_equivalence),
-    including under multi-stage recovery batches (arrival order is
-    (batch_id, chunk_id): sequential batch merges × within-batch
-    chunk_id sort)."""
-    return _batched_state_runner(
-        stream_df, _REFEED_OP, _REFEED_OUT,
-        model_fn=model_fn, out_dir=out_dir, state_dir=state_dir,
-        checkpoint_dir=checkpoint_dir, timings=timings,
-        n_buckets=n_buckets, bucket_span=bucket_span,
+        .select("doc_id", "e.chunk_id", "e.acc_words_before", "e.chain")
     )
 
 
@@ -1866,205 +599,29 @@ def refeed_chain(
     spark: SparkSession,
     chunks_df: DataFrame,
     model_fn=None,
-    sink: str = "memory",
     out_dir: str | None = None,
     checkpoint_dir: str | None = None,
-    mode: str = "batched",
     state_dir: str | None = None,
 ) -> DataFrame:
-    """W2 v2: the sequential re-feed loop as keyed streaming state.
+    """W2 v2: the sequential re-feed loop (``test_proactive_2.py:228-233``)
+    as keyed streaming state.
 
-    Stages arrive one micro-batch at a time; the per-doc state threads
-    the accumulated output word count and the rolling output chain hash
-    through every stage. Batch-equivalent oracle: a recursive fold over
-    the mapped chunks in chunk order (DuckDB recursive CTE) — fully
-    hash-checked, unlike typical custom stateful ops.
-
-    ``mode`` selects the state implementation (both emit identical rows,
-    tests/test_streaming.py::test_refeed_chain_mode_equivalence):
-
-    - ``"batched"`` (default): the relational foreachBatch runner with
-      the fold as one JVM higher-order expression seeded from a
-      COMPACTED per-doc state row (r10: O(keys) per batch, constant in
-      stream depth) — durable by construction (atomic state swap +
-      per-batch emission overwrite). The per-key path measured 196.4 s
-      vs DuckDB 25.0 s at sf1 (the same O(keys × batches) Python
-      constant as the W2 accumulator).
-    - ``"state"``: ``applyInPandasWithState`` keyed by doc_id — the
-      per-key state-store reference. ``sink`` then selects the memory
-      drain or the durable ``foreachBatch``→parquet mode
-      (``_run_to_parquet``); both sinks are value-identical on the
-      order-sensitive chain fixture
-      (tests/test_streaming.py::test_refeed_chain_sink_modes)."""
+    Stages arrive one micro-batch at a time; each emitted row
+    ``(doc_id, chunk_id, acc_words_before, chain)`` carries the output
+    word count accumulated before the chunk and a rolling md5 chain over
+    the outputs in arrival order. The chain is order-sensitive, so any
+    replayed, reordered or lost stage changes every later value. The
+    batch-equivalent oracle is a recursive fold over the mapped chunks in
+    chunk order (DuckDB recursive CTE). State is the per-doc chunk
+    history, as for ``stateful_accumulate``, on the same runner."""
     root = write_stage_files(chunks_df)
     try:
-        if mode == "batched":
-            return _refeed_batched_runner(
-                _chunk_stream(spark, root),
-                model_fn=model_fn,
-                out_dir=out_dir,
-                state_dir=state_dir,
-                checkpoint_dir=checkpoint_dir,
-            )
-        runner = {
-            "memory": lambda s, t: _run_to_memory(s, t),
-            "parquet": lambda s, t: _run_to_parquet(
-                s, t, out_dir=out_dir, checkpoint_dir=checkpoint_dir
-            ),
-        }[sink]
-
-        def transform(stream_df: DataFrame) -> DataFrame:
-            mapped = mapstage.llm_map(stream_df, model_fn=model_fn)
-            return mapped.groupBy("doc_id").applyInPandasWithState(
-                _refeed,
-                outputStructType=_REFEED_OUT,
-                stateStructType="acc_words long, chain string",
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-
-        return runner(_chunk_stream(spark, root), transform)
+        return _w2_run(
+            _chunk_stream(spark, root), _refeed_emit, model_fn,
+            out_dir=out_dir, state_dir=state_dir, checkpoint_dir=checkpoint_dir,
+        )
     finally:
         shutil.rmtree(root, ignore_errors=True)
-
-
-def rate_source_soak(
-    spark: SparkSession,
-    duration_s: int = 30,
-    rows_per_second: int = 20000,
-    n_keys: int = 200,
-) -> dict:
-    """Unbounded-source soak: drive the two stateful shapes (watermarked
-    window aggregation; applyInPandasWithState accumulator) from a `rate`
-    source for `duration_s` wall seconds, concurrently, and report
-    throughput + state-store growth from StreamingQueryProgress.
-
-    What fixture replay cannot evidence and this does:
-    - state EVICTION: the watermark (2 s on 1 s windows) must hold window
-      state near `n_keys × horizon` rows indefinitely — unbounded input,
-      bounded state;
-    - keyed state PLATEAU: the accumulator's state rows equal the
-      distinct-key count, independent of rows processed;
-    - sustained rate: numInputRows over wall time with the Python state
-      worker in the loop.
-
-    Both queries sink to `noop` so the measurement excludes sink cost.
-    Returns {"window": {...}, "stateful": {...}} with rows/sec and the
-    max/final state-store row counts.
-    """
-    ckpts = [_ckpt_dir(), _ckpt_dir()]
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-
-    def src():
-        s = (
-            spark.readStream.format("rate")
-            .option("rowsPerSecond", str(rows_per_second))
-            .load()
-        )
-        return s.select(
-            (F.col("value") % n_keys).alias("user_id"),
-            F.col("timestamp").alias("ts"),
-            (F.col("value") % 97).cast("double").alias("value"),
-        )
-
-    win = (
-        src()
-        .withWatermark("ts", "2 seconds")
-        .groupBy(F.window("ts", "1 second"), "user_id")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 6).alias("s"))
-    )
-
-    def _acc_count(key, pdfs, state: GroupState):
-        n = state.get[0] if state.exists else 0
-        for pdf in pdfs:
-            n += len(pdf)
-        state.update((n,))
-        yield pd.DataFrame({"user_id": [key[0]], "n": [n]})
-
-    acc = (
-        src()
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _acc_count,
-            outputStructType="user_id long, n long",
-            stateStructType="n long",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-    queries = []
-    labels = ("window", "stateful")
-    # recentProgress is CAPPED (spark.sql.streaming.numRecentProgressUpdates,
-    # default 100 updates): one read at the end silently under-counts any
-    # soak longer than ~100 micro-batches. Poll during the soak and fold
-    # progress events into a per-batchId map instead.
-    seen: dict[tuple[str, int], dict] = {}
-
-    def _drain():
-        for label, q in zip(labels, queries):
-            for p in q.recentProgress:
-                if p is not None:
-                    seen[(label, p["batchId"])] = p
-
-    try:
-        for df, ckpt in ((win, ckpts[0]), (acc, ckpts[1])):
-            queries.append(
-                df.writeStream.outputMode("update")
-                .format("noop")
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-        t_end = time.time() + duration_s
-        while time.time() < t_end:
-            time.sleep(min(2.0, max(0.1, t_end - time.time())))
-            _drain()
-        out = {}
-        for label in labels:
-            progresses = [
-                seen[k] for k in sorted(seen) if k[0] == label
-            ]
-            rows_in = sum(p["numInputRows"] for p in progresses)
-            state_rows = [
-                p["stateOperators"][0]["numRowsTotal"]
-                for p in progresses
-                if p.get("stateOperators")
-            ]
-            out[label] = {
-                "batches": len(progresses),
-                "rows_in": int(rows_in),
-                "rows_per_sec": round(rows_in / duration_s, 1),
-                "state_rows_max": int(max(state_rows)) if state_rows else 0,
-                "state_rows_final": int(state_rows[-1]) if state_rows else 0,
-            }
-        return out
-    finally:
-        # stopping an unbounded query mid-batch races its in-flight
-        # broadcast cleanup — the JVM logs a benign TorrentBroadcast
-        # ERROR; mute below ERROR for just the stop window, then restore
-        # the caller's prior root level (not a hardcoded one)
-        prev_level = "ERROR"
-        try:
-            prev_level = (
-                spark.sparkContext._jvm.org.apache.logging.log4j.LogManager
-                .getRootLogger().getLevel().toString()
-            )
-        except Exception:
-            pass
-        spark.sparkContext.setLogLevel("FATAL")
-        for q in queries:
-            try:
-                q.stop()
-            except Exception:
-                pass
-        try:
-            spark.sparkContext.setLogLevel(prev_level)
-        except Exception:
-            spark.sparkContext.setLogLevel("ERROR")
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-        for c in ckpts:
-            shutil.rmtree(c, ignore_errors=True)
 
 
 def final_accumulation(updates: DataFrame) -> DataFrame:

@@ -55,6 +55,31 @@ def test_null_text_in_map_stage(spark):
     assert out[0] is None  # nulls pass through, not crash
 
 
+def test_standin_model_keeps_ids_aligned_on_reindexed_batch():
+    """A pandas batch with a foreign, shuffled and duplicated index: each
+    output row keeps its own row's ids, and the frame gets a fresh index
+    instead of carrying the input's."""
+    import pandas as pd
+
+    batch = pd.DataFrame(
+        {
+            "doc_id": [10, 20, 30, 40],
+            "chunk_id": [3, 1, 2, 0],
+            "chunk_text": ["a b", "c d e", None, "f"],
+        },
+        index=[7, 3, 7, 0],
+    )
+    out = mapstage.standin_model(batch)
+    assert list(out.index) == [0, 1, 2, 3]
+    assert list(zip(out["doc_id"], out["chunk_id"], out["out_text"])) == [
+        (10, 3, "b a"),
+        (20, 1, "e d c"),
+        (30, 2, None),
+        (40, 0, "f"),
+    ]
+    assert list(out["n_out_tokens"]) == [2, 3, 0, 1]
+
+
 def test_dedup_on_empty_dataframe(spark):
     empty = spark.createDataFrame([], "doc_id long, text string")
     assert dedup.exact_dedup(empty).count() == 0

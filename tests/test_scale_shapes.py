@@ -70,82 +70,6 @@ def test_lsh_band_pairs_bounded_by_closed_form(spark):
     assert actual <= pred
 
 
-def test_w2_state_bucket_pruning_bound(spark, tmp_path):
-    """The r11 bucketed-state pruning bound, promoted from the 1M-key
-    scale probe into pytest (r11 verdict item 3) so a layout regression
-    — a broken ``_bucket_expr``, a touched-set probe that stops pruning
-    — fails CI instead of a soak re-read:
-
-    - a clustered sparse batch touches ≤ min(span-groups-touched, N)
-      buckets (here: 1024 contiguous keys at span 1024 = ONE group →
-      exactly one bucket), and
-    - its merge is cheaper than the dense batch's at fixture scale
-      (64k keys / 64 buckets — enough data that the ~0.2 s scheduling
-      floor can't invert the comparison), while
-    - a SCATTERED sparse batch (one key per span group, grazing ~all
-      buckets) must route to the r12 delta-log path under the shipped
-      default knobs and append one log dir instead of rewriting.
-    """
-    import os
-
-    from proactive_map_reduce_spark.streaming import proactive as sp
-
-    n_keys, nb, span = 65536, 64, 1024
-
-    def chunk(df_range, cid):
-        return df_range.select(
-            F.col("id").alias("doc_id"),
-            F.lit(cid).cast("int").alias("chunk_id"),
-            F.lit("w x y").alias("chunk_text"),
-        )
-
-    stages = [
-        chunk(spark.range(n_keys), 0),  # dense build
-        chunk(spark.range(1024), 1),  # clustered sparse: 1 span group
-        chunk(spark.range(0, n_keys, span), 2),  # scattered: 64 groups
-    ]
-    live = str(tmp_path / "live")
-    os.makedirs(live)
-    import glob as _glob
-    import shutil as _shutil
-    import time as _time
-
-    base = _time.time() - 3600
-    for k, df in enumerate(stages):
-        tmp = str(tmp_path / f".s{k}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dst = os.path.join(live, f"stage-{k:04d}.parquet")
-        _shutil.move(part, dst)
-        os.utime(dst, (base + k, base + k))
-
-    timings: list[dict] = []
-    sp._refeed_batched_runner(
-        sp._chunk_stream(spark, live),
-        out_dir=str(tmp_path / "out"),
-        state_dir=str(tmp_path / "state"),
-        timings=timings,
-        n_buckets=nb,
-        bucket_span=span,
-    ).count()
-    dense, clustered, scattered = timings[0], timings[1], timings[2]
-
-    # structural pruning bound: touched ≤ min(span groups touched, N)
-    assert dense["path"] == "bucket"
-    assert clustered["path"] == "bucket"
-    assert clustered["buckets_touched"] <= 1  # one span group → one bucket
-    assert dense["buckets_touched"] <= nb
-    # cost bound: the pruned merge beats the dense rewrite
-    assert clustered["merge_s"] < dense["merge_s"]
-
-    # scattered-sparse routes to the delta log under default knobs
-    assert scattered["path"] == "log"
-    table = str(tmp_path / "state" / "state")
-    assert len(sp._log_dirs(table)) == 1
-    # and the full read still resolves to one row per key
-    assert sp.read_state_table(spark, table).count() == n_keys
-
-
 def test_star_cap_engages_on_over_cap_block(spark):
     """A single block of 3K members must emit C(K,2) + 2K pairs — the
     star links for the over-cap tail — not C(3K,2): the cap itself,

@@ -1,12 +1,12 @@
 """Crash-recovery tests: the exactly-once claims under forced restarts.
 
-The soak test proves bounded state; these prove the RECOVERY half:
-- the upsert sink's atomic-swap heals every crash window (including the
-  between-renames window where prior state is stranded in `.old_<id>`),
-- a streaming query killed mid-stream and restarted from its checkpoint
+- a streaming query stopped mid-stream and restarted from its checkpoint
   replays to the same final state with no duplicate or lost rows,
-- applyInPandasWithState restores accumulator state from the state store
-  on restart, so post-crash accumulations still contain pre-crash chunks.
+- the W2 runner restores each doc's chunk history from Spark's state
+  store on restart, so post-restart emissions still contain pre-restart
+  chunks, also when the kill fell between a batch's emission and its
+  streaming commit,
+- the durable sink's out_dir/checkpoint guards refuse mismatched dirs.
 """
 
 from __future__ import annotations
@@ -14,14 +14,12 @@ from __future__ import annotations
 import datetime
 import os
 import shutil
-import tempfile
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from proactive_map_reduce_spark.operators import chunking, mapstage
+from proactive_map_reduce_spark.operators import reduce as red
 from proactive_map_reduce_spark.streaming import proactive as stream_ops
-from proactive_map_reduce_spark.streaming import upsert as up
 
 BASE_TS = datetime.datetime(2024, 1, 1)
 
@@ -30,166 +28,41 @@ def _ev_rows(spark, rows):
     return spark.createDataFrame(rows, stream_ops.EVENT_SCHEMA)
 
 
-def _state_dirs(tmp_root):
-    state = os.path.join(tmp_root, "state")
-    return state
-
-
-def _read_state(spark, state):
-    return {
-        r["user_id"]: (r["event_id"], r["value"])
-        for r in spark.read.parquet(state).collect()
-    }
-
-
-def test_upsert_recovers_crash_between_renames(spark, tmp_path):
-    """Crash after rename(state→old) but before rename(tmp→state): the
-    completed tmp is promoted, the mark advances to its batch id, and
-    the replayed batch is skipped — no prior state lost, no double-merge."""
-    state = str(tmp_path / "state")
-    keys, order = ["user_id"], ["ts", "event_id"]
-    b0 = _ev_rows(spark, [(1, 0, "set", BASE_TS, 1.0), (2, 1, "set", BASE_TS, 2.0)])
-    up.upsert_batch(spark, b0, 0, state, keys, order)
-
-    b1 = _ev_rows(
-        spark, [(3, 0, "set", BASE_TS + datetime.timedelta(minutes=1), 3.0)]
+def _w2(spark, live, emit, **kw):
+    """The W2 runner over a live stage dir (one file per micro-batch)."""
+    stream = (
+        spark.readStream.schema(stream_ops.CHUNK_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(live)
     )
-    # reproduce upsert_batch's work for batch 1 up to the crash point:
-    merged = spark.read.parquet(state).unionByName(b1)
-    latest = (
-        merged.withColumn(
-            "__rn",
-            F.row_number().over(
-                Window.partitionBy("user_id").orderBy(
-                    F.col("ts").desc(), F.col("event_id").desc()
-                )
-            ),
-        )
-        .filter("__rn = 1")
-        .drop("__rn")
-    )
-    latest.write.mode("overwrite").parquet(state + ".tmp_1")
-    os.rename(state, state + ".old_1")  # ← crash here: no state dir, no mark
-
-    # restart: foreachBatch replays batch 1
-    up.upsert_batch(spark, b1, 1, state, keys, order)
-    got = _read_state(spark, state)
-    assert got == {0: (3, 3.0), 1: (2, 2.0)}  # user 1's row NOT lost
-    assert up._last_batch(state) == 1
-    assert not os.path.isdir(state + ".old_1")
-    assert not os.path.isdir(state + ".tmp_1")
+    return stream_ops._w2_run(stream, emit, **kw)
 
 
-def test_upsert_recovers_incomplete_tmp(spark, tmp_path):
-    """Crash with state renamed away but tmp write unfinished (no
-    _SUCCESS): the old dir is restored and the batch replays on top."""
-    state = str(tmp_path / "state")
-    keys, order = ["user_id"], ["ts", "event_id"]
-    b0 = _ev_rows(spark, [(1, 0, "set", BASE_TS, 1.0), (2, 1, "set", BASE_TS, 2.0)])
-    up.upsert_batch(spark, b0, 0, state, keys, order)
-
-    os.makedirs(state + ".tmp_1")  # partial write, no _SUCCESS marker
-    with open(state + ".tmp_1/part-x.parquet", "wb") as f:
-        f.write(b"garbage")
-    os.rename(state, state + ".old_1")  # ← crash
-
-    b1 = _ev_rows(
-        spark, [(3, 0, "set", BASE_TS + datetime.timedelta(minutes=1), 3.0)]
-    )
-    up.upsert_batch(spark, b1, 1, state, keys, order)
-    got = _read_state(spark, state)
-    assert got == {0: (3, 3.0), 1: (2, 2.0)}
-    assert up._last_batch(state) == 1
-    assert not os.path.isdir(state + ".tmp_1")
-    assert not os.path.isdir(state + ".old_1")
+def _copy_stages(src_root, live, names):
+    # copy2, NOT copy: stage arrival order rides on the backdated mtimes
+    # write_stage_files stamps (the file source orders pending files by
+    # modification time) — plain copy resets them to "now" and the
+    # stages arrive in arbitrary order
+    for f in names:
+        shutil.copy2(os.path.join(src_root, f), os.path.join(live, f))
 
 
-def test_upsert_cleans_stale_leftovers(spark, tmp_path):
-    """Stale tmp/old dirs next to a LIVE state dir are swept, and the
-    live state is untouched."""
-    state = str(tmp_path / "state")
-    keys, order = ["user_id"], ["ts", "event_id"]
-    b0 = _ev_rows(spark, [(1, 0, "set", BASE_TS, 1.0)])
-    up.upsert_batch(spark, b0, 0, state, keys, order)
-    os.makedirs(state + ".tmp_0")
-    os.makedirs(state + ".old_0")
-
-    b1 = _ev_rows(
-        spark, [(2, 1, "set", BASE_TS + datetime.timedelta(minutes=1), 2.0)]
-    )
-    up.upsert_batch(spark, b1, 1, state, keys, order)
-    assert _read_state(spark, state) == {0: (1, 1.0), 1: (2, 2.0)}
-    assert not os.path.isdir(state + ".tmp_0")
-    assert not os.path.isdir(state + ".old_0")
-
-
-def test_stream_upsert_restart_from_checkpoint_exactly_once(
-    spark, tmp_path, monkeypatch
-):
-    """End-to-end: kill the streaming upsert INSIDE the dangerous rename
-    window mid-stream, restart from the same checkpoint, and the final
-    state equals the latest-row-per-key answer over the whole input —
-    nothing lost to the stranded .old dir, nothing double-applied."""
-    rows = [
-        (i, i % 4, "set", BASE_TS + datetime.timedelta(minutes=i), float(i))
-        for i in range(24)
-    ]
-    ev = _ev_rows(spark, rows)
-    root = stream_ops.write_event_files(ev, n_buckets=6)
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-    keys, order = ["user_id"], ["ts", "event_id"]
-
-    real_rename = os.rename
-    armed = {"on": True}
-
-    def crashing_rename(src, dst):
-        real_rename(src, dst)
-        # crash exactly once, in the window AFTER state→old succeeded
-        if armed["on"] and src == state:
-            armed["on"] = False
-            raise RuntimeError("injected crash between renames")
-
-    def stream():
-        return (
-            spark.readStream.schema(stream_ops.EVENT_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(root)
-        )
-
-    try:
-        monkeypatch.setattr(up.os, "rename", crashing_rename)
-        try:
-            up.stream_upsert(spark, stream(), state, keys, order, ckpt)
-            raise AssertionError("injected crash did not fire")
-        except Exception as e:
-            assert "injected crash" in str(e)
-        monkeypatch.setattr(up.os, "rename", real_rename)
-        assert not os.path.isdir(state)  # the crash really stranded state
-
-        up.stream_upsert(spark, stream(), state, keys, order, ckpt)
-        got = _read_state(spark, state)
-        want = {u: (20 + u, float(20 + u)) for u in range(4)}
-        assert got == want
-        # exactly one row per key — replay did not duplicate
-        cnt = spark.read.parquet(state).groupBy("user_id").count().collect()
-        assert all(r["count"] == 1 for r in cnt)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+def _batch_rows(out_dir, spark, ids=None):
+    """Rows of the emitted batch dirs (all, or those with an id in ids)."""
+    dirs = [p for i, p in stream_ops._batch_dirs(out_dir) if ids is None or i in ids]
+    return spark.read.parquet(*dirs).collect() if dirs else []
 
 
 def test_stateful_accumulate_restart_restores_state(spark, tmp_path):
-    """applyInPandasWithState survives a stop/restart from checkpoint: the
-    restarted query's accumulations contain chunks seen only BEFORE the
-    stop (possible only if the state store restored them), and the final
-    per-doc accumulation equals the batch answer.
+    """The W2 accumulator survives a stop/restart from a persistent
+    checkpoint: the restarted query's accumulations contain chunks seen
+    only BEFORE the stop (possible only if the state store restored
+    them), each (doc, stage) is emitted once across both runs, and the
+    final per-doc accumulation equals the batch answer.
 
     Deterministic restart: run 1 drains (availableNow) with only the
     first two stage files present; the remaining stages are added and
-    run 2 resumes from the SAME checkpoint."""
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
+    run 2 resumes from the SAME checkpoint and out_dir."""
     docs = spark.createDataFrame(
         [(1, "a b c d e f g h"), (2, "one two three four five six seven eight")],
         "doc_id long, text string",
@@ -198,78 +71,36 @@ def test_stateful_accumulate_restart_restores_state(spark, tmp_path):
     src_root = stream_ops.write_stage_files(chunks)  # stage-0000k-*.parquet
     live = str(tmp_path / "live")
     os.makedirs(live)
-    ckpt = str(tmp_path / "ckpt")
+    out_dir = str(tmp_path / "out")
+    kw = dict(out_dir=out_dir, checkpoint_dir=str(tmp_path / "ckpt"))
     files = sorted(f for f in os.listdir(src_root) if f.endswith(".parquet"))
     assert len(files) == 4  # 4 chunk stages, one file each
 
-    state_schema = T.StructType(
-        [
-            T.StructField("chunk_ids", T.ArrayType(T.IntegerType())),
-            T.StructField("texts", T.ArrayType(T.StringType())),
-        ]
-    )
-
-    def run():
-        # foreachBatch sink (memory sink refuses checkpoint recovery)
-        got: list = []
-        stream = (
-            spark.readStream.schema(stream_ops.CHUNK_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(live)
-        )
-        out = mapstage.llm_map(stream).groupBy("doc_id").applyInPandasWithState(
-            stream_ops._accumulate,
-            outputStructType=stream_ops._ACC_OUT,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        q = (
-            out.writeStream.foreachBatch(lambda b, i: got.extend(b.collect()))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return got
-
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
     try:
-        for f in files[:2]:
-            shutil.copy(os.path.join(src_root, f), os.path.join(live, f))
-        r1 = run()
+        _copy_stages(src_root, live, files[:2])
+        r1 = _w2(spark, live, stream_ops._acc_emit, **kw).collect()
         assert r1 and max(x["n_chunks_seen"] for x in r1) == 2  # stopped mid-doc
+        seen = {i for i, _ in stream_ops._batch_dirs(out_dir)}
 
-        for f in files[2:]:
-            shutil.copy(os.path.join(src_root, f), os.path.join(live, f))
-        r2 = run()
-
+        _copy_stages(src_root, live, files[2:])
+        r2 = _w2(spark, live, stream_ops._acc_emit, **kw).collect()
         # every post-restart emission already carries the pre-restart
         # chunks — only a restored state store can supply them
-        assert r2 and min(x["n_chunks_seen"] for x in r2) >= 3
-        final = {
-            x["doc_id"]: x["acc_text"]
-            for x in r2
-            if x["n_chunks_seen"] == 4
-        }
-        batch = mapstage.llm_map(chunks)
+        new = {i for i, _ in stream_ops._batch_dirs(out_dir)} - seen
+        post = _batch_rows(out_dir, spark, new)
+        assert post and min(x["n_chunks_seen"] for x in post) >= 3
+        # the read-back unions both runs: one emission per (doc, stage)
+        per_doc: dict = {}
+        for x in r2:
+            per_doc.setdefault(x["doc_id"], []).append(x["n_chunks_seen"])
+        assert all(sorted(v) == [1, 2, 3, 4] for v in per_doc.values())
+        final = {x["doc_id"]: x["acc_text"] for x in r2 if x["n_chunks_seen"] == 4}
         want = {
-            r["doc_id"]: r["acc"]
-            for r in batch.groupBy("doc_id")
-            .agg(
-                F.array_join(
-                    F.array_sort(
-                        F.collect_list(F.struct("chunk_id", "out_text"))
-                    ).getField("out_text"),
-                    " ",
-                ).alias("acc")
-            )
-            .collect()
+            r["doc_id"]: r["final_text"]
+            for r in red.incremental_concat(mapstage.llm_map(chunks)).collect()
         }
         assert final == want  # exactly-once: equals the batch answer
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
         shutil.rmtree(src_root, ignore_errors=True)
 
 
@@ -372,97 +203,6 @@ def test_windowed_watermark_restart_no_dup_no_loss(spark, tmp_path):
         shutil.rmtree(src, ignore_errors=True)
 
 
-def test_upsert_new_stream_generation_is_not_suppressed(spark, tmp_path):
-    """A fresh checkpoint restarts foreachBatch epoch ids at 0; batches
-    of the NEW generation must merge into the existing state instead of
-    being skipped by the old generation's high-water mark (the re-ingest
-    pattern: same state table, new/cleaned checkpoint)."""
-    state = str(tmp_path / "state")
-    keys, order = ["user_id"], ["ts", "event_id"]
-    b0 = _ev_rows(spark, [(1, 0, "set", BASE_TS, 1.0)])
-    b1 = _ev_rows(
-        spark, [(2, 1, "set", BASE_TS + datetime.timedelta(minutes=1), 2.0)]
-    )
-    up.upsert_batch(spark, b0, 0, state, keys, order, stream_id="gen-a")
-    up.upsert_batch(spark, b1, 1, state, keys, order, stream_id="gen-a")
-    # same generation, replayed id: skipped
-    replay = _ev_rows(
-        spark, [(9, 0, "set", BASE_TS + datetime.timedelta(hours=1), 9.0)]
-    )
-    up.upsert_batch(spark, replay, 1, state, keys, order, stream_id="gen-a")
-    assert _read_state(spark, state)[0] == (1, 1.0)
-    # NEW generation, epoch restarts at 0: must be applied
-    b_new = _ev_rows(
-        spark, [(3, 0, "set", BASE_TS + datetime.timedelta(hours=2), 3.0)]
-    )
-    up.upsert_batch(spark, b_new, 0, state, keys, order, stream_id="gen-b")
-    got = _read_state(spark, state)
-    assert got == {0: (3, 3.0), 1: (2, 2.0)}
-    assert up._last_batch(state, "gen-b") == 0
-    assert up._last_batch(state, "gen-a") == -1  # old mark superseded
-
-
-def test_recover_promoted_tmp_keeps_writer_generation(spark, tmp_path):
-    """ADVICE r4 (upsert.py:115): a tmp stranded by generation A, then
-    recovered while generation B is running, must NOT get stamped with
-    B's stream id — that would mark B's restarted epochs 0..b as replays
-    and silently drop them. The promoted mark keeps the generation the
-    pre-crash mark recorded, so B sees a mismatch, resets to -1, and its
-    batch 0 merges."""
-    state = str(tmp_path / "state")
-    keys, order = ["user_id"], ["ts", "event_id"]
-    b0 = _ev_rows(spark, [(1, 0, "set", BASE_TS, 1.0)])
-    up.upsert_batch(spark, b0, 0, state, keys, order, stream_id="gen-a")
-
-    # generation A crashes between the two renames of batch 1: completed
-    # tmp_1 (merge of state + b1), state renamed away, mark still at
-    # {batch_id: 0, stream: gen-a}
-    b1 = _ev_rows(
-        spark, [(2, 1, "set", BASE_TS + datetime.timedelta(minutes=1), 2.0)]
-    )
-    merged = spark.read.parquet(state).unionByName(b1)
-    latest = (
-        merged.withColumn(
-            "__rn",
-            F.row_number().over(
-                Window.partitionBy("user_id").orderBy(
-                    F.col("ts").desc(), F.col("event_id").desc()
-                )
-            ),
-        )
-        .filter("__rn = 1")
-        .drop("__rn")
-    )
-    latest.write.mode("overwrite").parquet(state + ".tmp_1")
-    os.rename(state, state + ".old_1")  # ← crash; checkpoint then cleaned
-
-    # generation B starts fresh: epoch ids restart at 0 with NEW data
-    b_new = _ev_rows(
-        spark, [(3, 2, "set", BASE_TS + datetime.timedelta(hours=1), 3.0)]
-    )
-    up.upsert_batch(spark, b_new, 0, state, keys, order, stream_id="gen-b")
-    got = _read_state(spark, state)
-    # A's stranded merge recovered AND B's batch 0 applied — not skipped
-    assert got == {0: (1, 1.0), 1: (2, 2.0), 2: (3, 3.0)}
-    assert up._last_batch(state, "gen-b") == 0
-    assert not os.path.isdir(state + ".tmp_1")
-    assert not os.path.isdir(state + ".old_1")
-
-
-def test_recover_promoted_tmp_without_mark_uses_sentinel(spark, tmp_path):
-    """No readable mark next to the stranded tmp → the writer generation
-    is unknown; the promoted mark must match NO generation so the next
-    batch re-merges (idempotent) instead of being suppressed."""
-    state = str(tmp_path / "state")
-    keys, order = ["user_id"], ["ts", "event_id"]
-    b0 = _ev_rows(spark, [(1, 0, "set", BASE_TS, 1.0)])
-    b0.write.mode("overwrite").parquet(state + ".tmp_0")  # crashed before rename
-    up.upsert_batch(spark, b0, 0, state, keys, order, stream_id="gen-b")
-    assert _read_state(spark, state) == {0: (1, 1.0)}
-    # the re-merge advanced the mark under gen-b; the sentinel never won
-    assert up._last_batch(state, "gen-b") == 0
-
-
 def test_write_ordered_tolerates_null_order_values(spark):
     """Rows with a NULL arrival key (nulled chunk_id from upstream
     quarantining) must not crash the stage writer — they arrive last,
@@ -489,16 +229,12 @@ def test_refeed_chain_restart_preserves_chain_at_depth(spark, tmp_path):
     """The W2 v2 re-feed chain survives a stop/restart from checkpoint at
     stage depth 12: the rolling md5 chain is ORDER-SENSITIVE (any replay,
     reorder, or lost stage changes every later value), so post-restart
-    emissions equal to the uninterrupted batch fold are the strongest
+    emissions equal to the uninterrupted driver fold are the strongest
     cheap witness of exactly-once state recovery mid-chain.
 
     Deterministic restart: run 1 drains (availableNow) with the first 5
     stage files; the remaining 7 are added and run 2 resumes from the
-    SAME checkpoint."""
-    import hashlib
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
+    SAME checkpoint and out_dir."""
     docs = spark.createDataFrame(
         [
             (1, " ".join(f"alpha{i}" for i in range(24))),
@@ -512,88 +248,43 @@ def test_refeed_chain_restart_preserves_chain_at_depth(spark, tmp_path):
     src_root = stream_ops.write_stage_files(chunks)
     live = str(tmp_path / "live")
     os.makedirs(live)
-    ckpt = str(tmp_path / "ckpt")
+    out_dir = str(tmp_path / "out")
+    kw = dict(out_dir=out_dir, checkpoint_dir=str(tmp_path / "ckpt"))
     files = sorted(f for f in os.listdir(src_root) if f.endswith(".parquet"))
     assert len(files) == depth  # one stage file per chunk_id
+    expect = _refeed_reference_fold(chunks)
 
-    # independent expectation: driver fold over the batch-mapped outputs
-    mapped = sorted(
-        mapstage.llm_map(chunks).select("doc_id", "chunk_id", "out_text").collect(),
-        key=lambda r: (r.doc_id, r.chunk_id),
-    )
-    expect, acc_state = {}, {}
-    for r in mapped:
-        acc, chain = acc_state.get(r.doc_id, (0, ""))
-        chain = hashlib.md5((chain + (r.out_text or "")).encode()).hexdigest()[:8]
-        expect[(r.doc_id, r.chunk_id)] = (acc, chain)
-        acc_state[r.doc_id] = (
-            acc + len([w for w in (r.out_text or "").split(" ") if w]),
-            chain,
-        )
-
-    def run():
-        got: list = []
-        stream = (
-            spark.readStream.schema(stream_ops.CHUNK_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(live)
-        )
-        out = mapstage.llm_map(stream).groupBy("doc_id").applyInPandasWithState(
-            stream_ops._refeed,
-            outputStructType=stream_ops._REFEED_OUT,
-            stateStructType="acc_words long, chain string",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        q = (
-            out.writeStream.foreachBatch(lambda b, i: got.extend(b.collect()))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return got
-
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
     try:
-        # copy2, NOT copy: stage arrival order rides on the backdated
-        # mtimes write_stage_files stamps (the file source orders pending
-        # files by modification time) — plain copy resets them to "now"
-        # and the stages arrive in arbitrary order, which the
-        # order-SENSITIVE chain is built to expose
-        for f in files[:5]:
-            shutil.copy2(os.path.join(src_root, f), os.path.join(live, f))
-        r1 = run()
+        _copy_stages(src_root, live, files[:5])
+        r1 = _w2(spark, live, stream_ops._refeed_emit, **kw).collect()
         assert r1 and max(x["chunk_id"] for x in r1) == 4  # stopped mid-chain
+        seen = {i for i, _ in stream_ops._batch_dirs(out_dir)}
 
-        for f in files[5:]:
-            shutil.copy2(os.path.join(src_root, f), os.path.join(live, f))
-        r2 = run()
+        _copy_stages(src_root, live, files[5:])
+        _w2(spark, live, stream_ops._refeed_emit, **kw)
+        new = {i for i, _ in stream_ops._batch_dirs(out_dir)} - seen
+        r2 = _batch_rows(out_dir, spark, new)
 
         # run 2 must emit ONLY the unseen stages (no replay of 0..4) ...
         assert r2 and min(x["chunk_id"] for x in r2) == 5
         # ... and every emission continues the pre-restart chain exactly:
-        # a chain computable only from restored (acc_words, chain) state
+        # a chain computable only from the restored chunk history
         for x in r1 + r2:
             assert (x["acc_words_before"], x["chain"]) == expect[
                 (x["doc_id"], x["chunk_id"])
             ]
-        assert len(r1) + len(r2) == len(mapped)  # no loss, no duplication
+        assert len(r1) + len(r2) == len(expect)  # no loss, no duplication
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
         shutil.rmtree(src_root, ignore_errors=True)
 
 
 def test_durable_sink_restart_idempotent_no_dup_no_loss(spark, tmp_path):
-    """r8 durable-sink mode (_run_to_parquet): a staged refeed pipeline
-    killed after 5 of 12 stages and restarted from the SAME persistent
-    checkpoint + out_dir resumes without replaying committed batches; a
-    torn write of the next uncommitted batch (garbage pre-seeded in its
-    batch dir) is healed by the per-batch OVERWRITE. Final parquet state
-    equals the uninterrupted driver fold exactly — no dup, no loss."""
-    import hashlib
-
+    """The durable W2 sink: a staged refeed pipeline stopped after 5 of
+    12 stages and restarted from the SAME persistent checkpoint + out_dir
+    resumes without replaying committed batches; a torn write of the
+    next uncommitted batch (garbage pre-seeded in its batch dir) is
+    healed by the per-batch OVERWRITE. The final read-back equals the
+    uninterrupted driver fold exactly — no dup, no loss."""
     docs = spark.createDataFrame(
         [
             (1, " ".join(f"alpha{i}" for i in range(24))),
@@ -606,50 +297,13 @@ def test_durable_sink_restart_idempotent_no_dup_no_loss(spark, tmp_path):
     src_root = stream_ops.write_stage_files(chunks)
     live = str(tmp_path / "live")
     os.makedirs(live)
-    ckpt = str(tmp_path / "ckpt")
     out_dir = str(tmp_path / "out")
+    kw = dict(out_dir=out_dir, checkpoint_dir=str(tmp_path / "ckpt"))
     files = sorted(f for f in os.listdir(src_root) if f.endswith(".parquet"))
 
-    mapped = sorted(
-        mapstage.llm_map(chunks).select("doc_id", "chunk_id", "out_text").collect(),
-        key=lambda r: (r.doc_id, r.chunk_id),
-    )
-    expect, acc_state = {}, {}
-    for r in mapped:
-        acc, chain = acc_state.get(r.doc_id, (0, ""))
-        chain = hashlib.md5((chain + (r.out_text or "")).encode()).hexdigest()[:8]
-        expect[(r.doc_id, r.chunk_id)] = (acc, chain)
-        acc_state[r.doc_id] = (
-            acc + len([w for w in (r.out_text or "").split(" ") if w]),
-            chain,
-        )
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def transform(stream_df):
-        mapped_s = mapstage.llm_map(stream_df)
-        return mapped_s.groupBy("doc_id").applyInPandasWithState(
-            stream_ops._refeed,
-            outputStructType=stream_ops._REFEED_OUT,
-            stateStructType="acc_words long, chain string",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-
-    def run():
-        stream = (
-            spark.readStream.schema(stream_ops.CHUNK_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(live)
-        )
-        return stream_ops._run_to_parquet(
-            stream, transform, out_dir=out_dir, checkpoint_dir=ckpt
-        )
-
     try:
-        for f in files[:5]:  # copy2 preserves the arrival-order mtimes
-            shutil.copy2(os.path.join(src_root, f), os.path.join(live, f))
-        r1 = run().collect()
+        _copy_stages(src_root, live, files[:5])
+        r1 = _w2(spark, live, stream_ops._refeed_emit, **kw).collect()
         assert r1 and max(x["chunk_id"] for x in r1) == 4
         committed = sorted(
             d for d in os.listdir(out_dir) if d.startswith("batch-")
@@ -662,98 +316,15 @@ def test_durable_sink_restart_idempotent_no_dup_no_loss(spark, tmp_path):
         with open(os.path.join(torn, "part-garbage.parquet"), "wb") as f:
             f.write(b"torn write")
 
-        for f2 in files[5:]:
-            shutil.copy2(os.path.join(src_root, f2), os.path.join(live, f2))
-        final = run().collect()
+        _copy_stages(src_root, live, files[5:])
+        final = _w2(spark, live, stream_ops._refeed_emit, **kw).collect()
         got = {
             (x["doc_id"], x["chunk_id"]): (x["acc_words_before"], x["chain"])
             for x in final
         }
-        assert got == expect  # exactly-once: every stage once, chain intact
+        assert got == _refeed_reference_fold(chunks)  # every stage once
+        assert len(final) == len(got)
         assert not os.path.exists(os.path.join(torn, "part-garbage.parquet"))
-    finally:
-        shutil.rmtree(src_root, ignore_errors=True)
-
-
-import pytest as _pytest
-
-
-@_pytest.mark.parametrize(
-    "runner_buckets",
-    [{}, {"n_buckets": 1024, "bucket_span": 97}],
-    ids=["default-buckets", "probe-1024x97"],
-)
-def test_stateful_accumulate_batched_restart_restores_state(
-    spark, tmp_path, runner_buckets
-):
-    """The batched relational accumulator (r9 default) survives a
-    stop/restart from its checkpoint + state/out dirs: post-restart
-    emissions carry chunks seen only BEFORE the stop (possible only if
-    the parquet state table supplied them), and the final per-doc
-    accumulation equals the batch answer — the same recovery contract
-    the per-key state-store path proves above. Parameterized over the
-    shipped default bucketing and the scale-probe configuration
-    (N=1024, non-default span — r11 verdict item 5)."""
-    docs = spark.createDataFrame(
-        [(1, "a b c d e f g h"), (2, "one two three four five six seven eight")],
-        "doc_id long, text string",
-    )
-    chunks = chunking.partition_equal(chunking.split_words(docs), 4)
-    src_root = stream_ops.write_stage_files(chunks)
-    live = str(tmp_path / "live")
-    os.makedirs(live)
-    ckpt = str(tmp_path / "ckpt")
-    out_dir = str(tmp_path / "out")
-    state_dir = str(tmp_path / "state")
-    files = sorted(f for f in os.listdir(src_root) if f.endswith(".parquet"))
-    assert len(files) == 4
-
-    def run():
-        stream = (
-            spark.readStream.schema(stream_ops.CHUNK_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(live)
-        )
-        return stream_ops._accumulate_batched_runner(
-            stream, out_dir=out_dir, state_dir=state_dir, checkpoint_dir=ckpt,
-            **runner_buckets,
-        )
-
-    try:
-        for f in files[:2]:  # copy2 preserves the arrival-order mtimes
-            shutil.copy2(os.path.join(src_root, f), os.path.join(live, f))
-        r1 = run().collect()
-        assert r1 and max(x["n_chunks_seen"] for x in r1) == 2
-
-        for f in files[2:]:
-            shutil.copy2(os.path.join(src_root, f), os.path.join(live, f))
-        r2 = run().collect()
-        # the read-back unions ALL batches (pre- and post-restart);
-        # post-restart emissions are the n_chunks_seen >= 3 rows and
-        # must already contain the pre-restart chunks
-        final = {
-            x["doc_id"]: x["acc_text"] for x in r2 if x["n_chunks_seen"] == 4
-        }
-        batch = {
-            r["doc_id"]: r["acc"]
-            for r in mapstage.llm_map(chunks)
-            .groupBy("doc_id")
-            .agg(
-                F.array_join(
-                    F.array_sort(
-                        F.collect_list(F.struct("chunk_id", "out_text"))
-                    ).getField("out_text"),
-                    " ",
-                ).alias("acc")
-            )
-            .collect()
-        }
-        assert final == batch
-        # exactly-once across the restart: one emission per (doc, stage)
-        per_doc = {}
-        for x in r2:
-            per_doc.setdefault(x["doc_id"], []).append(x["n_chunks_seen"])
-        assert all(sorted(v) == [1, 2, 3, 4] for v in per_doc.values())
     finally:
         shutil.rmtree(src_root, ignore_errors=True)
 
@@ -787,11 +358,12 @@ def test_durable_sink_fresh_checkpoint_refuses_stale_out_dir(spark, tmp_path):
 def test_batched_runner_resume_refuses_fresh_state_or_out_dirs(
     spark, tmp_path
 ):
-    """ADVICE r9 (the converse of the fresh-checkpoint guard): resuming
-    an existing checkpoint against a fresh/missing state_dir or out_dir
-    (the mkdtemp defaults when a caller passes only checkpoint_dir) must
-    raise, not silently compute emissions from empty state / drop the
-    committed batches' output."""
+    """ADVICE r9 (the converse of the fresh-checkpoint guard) for the W2
+    runner, whose checkpoint lives under ``state_dir``: resuming the
+    state dir against a fresh out_dir must raise instead of dropping the
+    committed batches' output, and a fresh state_dir (a new checkpoint,
+    empty state) next to the old out_dir must raise instead of merging
+    the old emissions into the new stream's read-back."""
     import pytest
 
     docs = spark.createDataFrame(
@@ -799,31 +371,25 @@ def test_batched_runner_resume_refuses_fresh_state_or_out_dirs(
     )
     chunks = chunking.partition_equal(chunking.split_words(docs), 2)
     src_root = stream_ops.write_stage_files(chunks)
-    ckpt = str(tmp_path / "ckpt")
     out_dir = str(tmp_path / "out")
     state_dir = str(tmp_path / "state")
 
-    def run(**kw):
-        stream = (
-            spark.readStream.schema(stream_ops.CHUNK_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_root)
-        )
-        return stream_ops._accumulate_batched_runner(
-            stream, checkpoint_dir=ckpt, **kw
+    def run(out, state):
+        return _w2(
+            spark, src_root, stream_ops._acc_emit, out_dir=out, state_dir=state
         )
 
     try:
-        r1 = run(out_dir=out_dir, state_dir=state_dir).collect()
+        r1 = run(out_dir, state_dir).collect()
         assert r1 and max(x["n_chunks_seen"] for x in r1) == 2
-        # resumed checkpoint + a FRESH state_dir: committed state is gone
-        with pytest.raises(ValueError, match="state table"):
-            run(out_dir=out_dir, state_dir=str(tmp_path / "fresh_state"))
-        # resumed checkpoint + a FRESH out_dir: committed emissions gone
+        # resumed state dir + a FRESH out_dir: committed emissions gone
         with pytest.raises(ValueError, match="missing batch dirs"):
-            run(out_dir=str(tmp_path / "fresh_out"), state_dir=state_dir)
+            run(str(tmp_path / "fresh_out"), state_dir)
+        # FRESH state dir (new checkpoint) + the old out_dir: foreign rows
+        with pytest.raises(ValueError, match="fresh"):
+            run(out_dir, str(tmp_path / "fresh_state"))
         # the original dirs still resume cleanly (no new data: same rows)
-        r2 = run(out_dir=out_dir, state_dir=state_dir).collect()
+        r2 = run(out_dir, state_dir).collect()
         assert sorted(map(tuple, r2)) == sorted(map(tuple, r1))
     finally:
         shutil.rmtree(src_root, ignore_errors=True)
@@ -868,11 +434,11 @@ def test_batch_dir_guards_ignore_non_numeric_entries(tmp_path):
     d = str(tmp_path / "out")
     os.makedirs(os.path.join(d, "batch-old"))
     os.makedirs(os.path.join(d, "batch-1x2"))
-    stream_ops._guard_stale_batches(d, -1)  # junk ignored: no raise
+    stream_ops._guard_stale_batches(d, -1, -1)  # junk ignored: no raise
     assert stream_ops._batch_dirs(d) == []
     os.makedirs(os.path.join(d, "batch-000000003"))
     with pytest.raises(ValueError, match="fresh"):
-        stream_ops._guard_stale_batches(d, -1)
+        stream_ops._guard_stale_batches(d, -1, -1)
     assert stream_ops._batch_dirs(d) == [
         (3, os.path.join(d, "batch-000000003"))
     ]
@@ -901,390 +467,119 @@ def _refeed_reference_fold(chunks):
     return expect
 
 
-@_pytest.mark.parametrize(
-    "nb, span",
-    [(4, 1), (1024, 97)],
-    ids=["small-4x1", "probe-1024x97"],
-)
-def test_batched_runner_recovers_crash_between_bucket_renames(
-    spark, tmp_path, monkeypatch, nb, span
-):
-    """Kill the bucketed batched runner in the dangerous window — after
-    rename(bucket→bucket.old) but before rename(tmp bucket→bucket), with
-    OTHER buckets of the same batch already fully swapped — and restart
-    from the same checkpoint + dirs: recovery must ROLL the stranded
-    bucket BACK to its pre-batch state (the mark never advanced, so the
-    batch replays; already-swapped buckets pass through the per-row
-    guard byte-identical, the rolled-back bucket re-folds), and the
-    final values must equal the uninterrupted fold. Parameterized over
-    the small fixture config and the scale-probe configuration (N=1024,
-    non-default span — r11 verdict item 5); doc ids sit one per span
-    group so the batch genuinely walks several buckets either way."""
-    docs = spark.createDataFrame(
-        [(i * span, "a b c d e f") for i in range(8)],
-        "doc_id long, text string",
-    )
-    chunks = chunking.partition_equal(chunking.split_words(docs), 3)
-    src_root = stream_ops.write_stage_files(chunks)
-    live = str(tmp_path / "live")
-    os.makedirs(live)
-    ckpt = str(tmp_path / "ckpt")
-    out_dir = str(tmp_path / "out")
-    state_dir = str(tmp_path / "state")
-    table = os.path.join(state_dir, "state")
-    files = sorted(f for f in os.listdir(src_root) if f.endswith(".parquet"))
-
-    def run():
-        stream = (
-            spark.readStream.schema(stream_ops.CHUNK_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(live)
-        )
-        # one doc per span group, so the 8 docs hash across several
-        # buckets — the batch swap walks multiple buckets
-        return stream_ops._refeed_batched_runner(
-            stream, out_dir=out_dir, state_dir=state_dir,
-            checkpoint_dir=ckpt, n_buckets=nb, bucket_span=span,
-        )
-
-    real_rename = os.rename
-    armed = {"rename_aways": 0}
-
-    def crashing_rename(src, dst):
-        real_rename(src, dst)
-        # a bucket's rename-away (dst is its .old_<id>): crash on the
-        # SECOND one, so bucket 1 of the batch is already fully swapped
-        # and bucket 2 is stranded mid-swap
-        if armed["rename_aways"] and ".old_" in dst and src.startswith(table):
-            armed["rename_aways"] += 1
-            if armed["rename_aways"] == 3:
-                armed["rename_aways"] = 0
-                raise RuntimeError("injected crash between bucket renames")
-
-    import proactive_map_reduce_spark.streaming.proactive as sp_mod
-
-    try:
-        for f in files[:1]:
-            shutil.copy2(os.path.join(src_root, f), os.path.join(live, f))
-        r0 = run()
-        assert r0.count() == 8  # batch 0 commits cleanly
-        n_buckets0 = len(stream_ops._bucket_dirs(table))
-        assert n_buckets0 >= 2  # the fixture really spans buckets
-
-        for f in files[1:2]:
-            shutil.copy2(os.path.join(src_root, f), os.path.join(live, f))
-        armed["rename_aways"] = 1
-        monkeypatch.setattr(sp_mod.os, "rename", crashing_rename)
-        try:
-            run()
-            raise AssertionError("crash injection never fired")
-        except Exception as e:  # surfaced through the streaming query
-            assert "injected crash" in str(e)
-        monkeypatch.setattr(sp_mod.os, "rename", real_rename)
-        # genuinely stranded mid-swap: the first bucket fully swapped
-        # (its .old pends the end-of-batch cleanup that never ran), the
-        # second renamed away but not yet replaced — bucket dir missing
-        olds = [
-            nm for nm in os.listdir(table)
-            if stream_ops._BUCKET_OLD_RE.fullmatch(nm)
-        ]
-        assert len(olds) >= 2
-        stranded = [
-            nm for nm in olds
-            if not os.path.isdir(os.path.join(table, nm.split(".old_")[0]))
-        ]
-        assert len(stranded) == 1
-
-        for f in files[2:]:
-            shutil.copy2(os.path.join(src_root, f), os.path.join(live, f))
-        final = run().collect()
-
-        expect = _refeed_reference_fold(chunks)
-        got = {
-            (x["doc_id"], x["chunk_id"]): (x["acc_words_before"], x["chain"])
-            for x in final
-        }
-        assert got == expect
-        assert len(final) == len(expect)  # no dup, no loss across the crash
-        # recovery cleaned the stranded swap artifacts
-        assert not [
-            nm for nm in os.listdir(table)
-            if stream_ops._BUCKET_OLD_RE.fullmatch(nm)
-        ]
-    finally:
-        shutil.rmtree(src_root, ignore_errors=True)
-
-
 def test_batched_runner_fresh_checkpoint_refuses_existing_state(
     spark, tmp_path
 ):
-    """The other direction of the dir/checkpoint contract: a FRESH
-    checkpoint (batch ids restart at 0) next to a state_dir that
-    already holds a state table must raise — the old state would be
-    silently folded into the new stream's accumulations."""
+    """The other direction of the dir/checkpoint contract for the W2
+    runner: a FRESH checkpoint (batch ids restart at 0, empty state
+    store) next to an out_dir that already holds an earlier stream's
+    emissions must raise — the old rows would be silently folded into
+    the new stream's read-back — and must leave them in place."""
     import pytest
 
     docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
     chunks = chunking.partition_equal(chunking.split_words(docs), 2)
     src_root = stream_ops.write_stage_files(chunks)
-    state_dir = str(tmp_path / "state")
     out_dir = str(tmp_path / "out")
 
     def run(ckpt):
-        stream = (
-            spark.readStream.schema(stream_ops.CHUNK_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_root)
-        )
-        return stream_ops._accumulate_batched_runner(
-            stream, out_dir=out_dir, state_dir=state_dir, checkpoint_dir=ckpt
+        return _w2(
+            spark, src_root, stream_ops._acc_emit, out_dir=out_dir,
+            checkpoint_dir=ckpt,
         )
 
     try:
         assert run(str(tmp_path / "ckpt_a")).count() == 2
-        # same state_dir + out_dir, NEW checkpoint: refuse, don't fold.
-        # (the out_dir batch guard fires first — both are the same
-        # foreign-data refusal; an empty out_dir with old state must
-        # then trip the state-table guard)
+        before = stream_ops._batch_dirs(out_dir)
         with pytest.raises(ValueError, match="fresh"):
             run(str(tmp_path / "ckpt_b"))
-        shutil.rmtree(out_dir)
-        os.makedirs(out_dir)
-        with pytest.raises(ValueError, match="state table"):
-            run(str(tmp_path / "ckpt_c"))
+        assert stream_ops._batch_dirs(out_dir) == before
     finally:
         shutil.rmtree(src_root, ignore_errors=True)
 
 
 def test_batched_runner_resumes_first_batch_window_kill(spark, tmp_path):
-    """ADVICE r10: a durable run killed in the FIRST-batch window — state
-    table and mark written, but the streaming commit log for batch 0 not
-    yet — presents last_committed == -1 on restart, which used to take
-    the fresh-checkpoint branch and refuse a legitimate same-checkpoint
-    resume. The mark's stream generation equals this checkpoint's, which
-    proves the state was written by this checkpoint lifetime: the guard
-    must allow the resume, the replayed batch must converge via the
-    per-row guard, and the final values must equal the uninterrupted
-    fold. A FOREIGN state table (different generation) must still
-    refuse."""
-    import pytest
-
+    """ADVICE r10: a durable run killed before ANY streaming commit —
+    emissions written, commit log empty — presents no committed batch on
+    restart. The checkpoint has planned batches, so it is a resume, not
+    a fresh start: the guard must allow it (Spark replays only the
+    latest planned batch and keeps the earlier ones), and the read-back
+    must equal the uninterrupted run."""
     docs = spark.createDataFrame(
         [(1, "a b c d"), (2, "p q r s")], "doc_id long, text string"
     )
     chunks = chunking.partition_equal(chunking.split_words(docs), 2)
     src_root = stream_ops.write_stage_files(chunks)
     ckpt = str(tmp_path / "ckpt")
-    out_dir = str(tmp_path / "out")
-    state_dir = str(tmp_path / "state")
-    table = os.path.join(state_dir, "state")
-
-    def run(**kw):
-        stream = (
-            spark.readStream.schema(stream_ops.CHUNK_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_root)
-        )
-        return stream_ops._refeed_batched_runner(
-            stream, out_dir=out_dir, state_dir=state_dir,
-            checkpoint_dir=ckpt, **kw
-        )
+    kw = dict(out_dir=str(tmp_path / "out"), checkpoint_dir=ckpt)
 
     try:
-        r1 = sorted(map(tuple, run().collect()))
-        # simulate the kill window: every batch's state swap + mark
-        # landed, but the streaming commit log never did — on disk this
-        # is exactly a crash between the last mark write and the commit
+        r1 = sorted(map(tuple, _w2(spark, src_root, stream_ops._refeed_emit, **kw).collect()))
         commits = os.path.join(ckpt, "commits")
         for nm in os.listdir(commits):
             os.remove(os.path.join(commits, nm))
         assert stream_ops._last_committed_batch(ckpt) == -1
-        mark = stream_ops._read_mark_raw(table)
-        assert mark is not None and mark["stream"] == up._stream_generation(ckpt)
+        assert stream_ops._last_offset_batch(ckpt) == 1
 
-        r2 = sorted(map(tuple, run().collect()))  # resumes, no refusal
+        r2 = sorted(map(tuple, _w2(spark, src_root, stream_ops._refeed_emit, **kw).collect()))
         assert r2 == r1
-
-        # foreign state (generation mismatch) still refuses on a fresh
-        # checkpoint — the resume exception is generation-scoped
-        with open(up._mark_path(table), "w") as f:
-            import json as _json
-
-            _json.dump({"batch_id": mark["batch_id"], "stream": "other"}, f)
-        shutil.rmtree(ckpt)
-        for _, p in stream_ops._batch_dirs(out_dir):
-            shutil.rmtree(p)
-        with pytest.raises(ValueError, match="state table"):
-            run()
+        assert dict(((d, c), (a, h)) for d, c, a, h in r2) == _refeed_reference_fold(chunks)
     finally:
         shutil.rmtree(src_root, ignore_errors=True)
 
 
-def test_batched_runner_sparse_batch_rewrites_only_touched_buckets(
-    spark, tmp_path
-):
-    """The r11 bucketing contract: a micro-batch touching a subset of
-    keys opens and rewrites ONLY the buckets those keys land in.
-    Byte-level proof: after a sparse second batch, every untouched
-    bucket's parquet files are the SAME inodes (never rewritten), the
-    touched bucket's are new — and the emitted values still equal the
-    reference fold."""
+def test_w2_kill_between_emission_and_commit_replays_same_rows(spark, tmp_path):
+    """A kill after a micro-batch's emission is written but before its
+    streaming commit (simulated by deleting ``commits/<n>``). On resume
+    Spark replays batch n from its offset-log entry, including the batch
+    timestamp the runner's ``arrival`` column comes from, rewrites
+    batch n's emission and carries on. For both W2 operators the
+    read-back must equal an uninterrupted run: the refeed chain (and the
+    md5 fold) and every accumulator row."""
     docs = spark.createDataFrame(
-        [(i, "a b c d") for i in range(8)], "doc_id long, text string"
+        [
+            (1, " ".join(f"alpha{i}" for i in range(20))),
+            (2, " ".join(f"beta{i}" for i in range(13))),
+        ],
+        "doc_id long, text string",
     )
-    chunks = chunking.partition_equal(chunking.split_words(docs), 2)
-    live = str(tmp_path / "live")
-    os.makedirs(live)
-    ckpt = str(tmp_path / "ckpt")
-    out_dir = str(tmp_path / "out")
-    state_dir = str(tmp_path / "state")
-    table = os.path.join(state_dir, "state")
-
-    def stage_file(df, name):
-        tmp = str(tmp_path / ("stage_" + name))
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        shutil.copy(os.path.join(tmp, part), os.path.join(live, name))
-
-    def run():
-        stream = (
-            spark.readStream.schema(stream_ops.CHUNK_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(live)
-        )
-        return stream_ops._refeed_batched_runner(
-            stream, out_dir=out_dir, state_dir=state_dir,
-            checkpoint_dir=ckpt, n_buckets=4, bucket_span=1,
-        )
-
-    def bucket_inodes():
-        out = {}
-        for d in stream_ops._bucket_dirs(table):
-            out[os.path.basename(d)] = sorted(
-                (f, os.stat(os.path.join(d, f)).st_ino)
-                for f in os.listdir(d)
-                if f.endswith(".parquet")
+    depth = 6
+    chunks = chunking.partition_equal_arrays(docs, depth)
+    src_root = stream_ops.write_stage_files(chunks)
+    files = sorted(f for f in os.listdir(src_root) if f.endswith(".parquet"))
+    try:
+        for name, emit in (
+            ("refeed", stream_ops._refeed_emit),
+            ("acc", stream_ops._acc_emit),
+        ):
+            base = tmp_path / name
+            whole = sorted(
+                map(tuple, _w2(spark, src_root, emit,
+                               out_dir=str(base / "whole_out")).collect())
             )
-        return out
 
-    # batch 0: chunk 0 of ALL docs; batch 1: chunk 1 of doc 0 ONLY
-    stage_file(chunks.filter("chunk_id = 0"), "s0.parquet")
-    r1 = run()
-    assert r1.count() == 8
-    before = bucket_inodes()
-    assert len(before) >= 2
+            live = str(base / "live")
+            os.makedirs(live)
+            out_dir, ckpt = str(base / "out"), str(base / "ckpt")
+            kw = dict(out_dir=out_dir, checkpoint_dir=ckpt)
+            _copy_stages(src_root, live, files[:3])
+            _w2(spark, live, emit, **kw)
+            n = stream_ops._last_committed_batch(ckpt)
+            assert n == 2
+            killed = sorted(map(tuple, _batch_rows(out_dir, spark, {n})))
+            # the commit file and its checksum: a kill before the commit
+            # leaves neither
+            for nm in (str(n), f".{n}.crc"):
+                os.remove(os.path.join(ckpt, "commits", nm))
 
-    doc0_bucket = f"b{_doc_bucket(0, 4, 1):05d}"
-    stage_file(chunks.filter("chunk_id = 1 and doc_id = 0"), "s1.parquet")
-    final = {
-        (x["doc_id"], x["chunk_id"]): (x["acc_words_before"], x["chain"])
-        for x in run().collect()
-    }
-    after = bucket_inodes()
-    for name, inodes in before.items():
-        if name == doc0_bucket:
-            assert after[name] != inodes  # touched: rewritten
-        else:
-            assert after[name] == inodes  # untouched: same files, same inodes
-
-    # values: doc 0 folded through both chunks, docs 1..7 only chunk 0
-    sparse = chunks.filter("chunk_id = 0 or doc_id = 0")
-    assert final == _refeed_reference_fold(sparse)
-
-
-def _doc_bucket(doc_id: int, n_buckets: int, span: int) -> int:
-    """Python mirror of streaming.proactive._bucket_expr (xxhash64 of the
-    span index, mod n_buckets) — resolved via a tiny Spark job so the
-    test never re-implements the hash."""
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    row = (
-        spark.range(1)
-        .select(F.lit(doc_id).cast("long").alias("doc_id"))
-        .select(stream_ops._bucket_expr(n_buckets, span).alias("b"))
-        .collect()
-    )
-    return row[0]["b"]
-
-
-def test_bucketed_table_refuses_legacy_layout(spark, tmp_path):
-    """A state table directory without _meta.json (the pre-r11 flat
-    layout, or a foreign dir) must raise at first merge rather than be
-    silently treated as empty bucketed state (which would drop every
-    previously folded row)."""
-    import pytest
-
-    table = str(tmp_path / "state")
-    spark.range(3).write.parquet(table)  # a flat r10-style table
-    with pytest.raises(ValueError, match="without _meta.json"):
-        stream_ops._init_table(table, 4, 1024)
-    # and an already-bucketed table returns its PINNED params, not the
-    # caller's
-    t2 = str(tmp_path / "state2")
-    assert stream_ops._init_table(t2, 8, 256) == (8, 256)
-    assert stream_ops._init_table(t2, 64, 4096) == (8, 256)
-
-
-def test_rescale_crash_windows_roll_back(spark, tmp_path, monkeypatch):
-    """r13 auto-rescale crash safety: the table-level swap is rollback-
-    only. (i) a stranded ``.rs_new_`` stage (crash before the first
-    rename) is deleted with the table untouched; (ii) a crash BETWEEN
-    the two renames (table gone, .rs_old + .rs_new both present)
-    restores the table from .rs_old and deletes the stage; (iii) a
-    leftover .rs_old beside an intact table (crash before the final
-    delete) is swept. Values identical after every healing."""
-    docs = spark.createDataFrame(
-        [(i, "a b c d") for i in range(12)], "doc_id long, text string"
-    )
-    chunks = chunking.partition_equal(chunking.split_words(docs), 2)
-    live = str(tmp_path / "live")
-    os.makedirs(live, exist_ok=True)
-    tmp = str(tmp_path / "stage0")
-    chunks.filter("chunk_id = 0").coalesce(1).write.mode("overwrite").parquet(tmp)
-    part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-    shutil.copy(os.path.join(tmp, part), os.path.join(live, "s0.parquet"))
-
-    stream = (
-        spark.readStream.schema(stream_ops.CHUNK_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(live)
-    )
-    stream_ops._refeed_batched_runner(
-        stream,
-        out_dir=str(tmp_path / "out"),
-        state_dir=str(tmp_path / "state"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        n_buckets=8,
-        bucket_span=1,
-    ).count()
-    table = str(tmp_path / "state" / "state")
-
-    def snap():
-        return {
-            (r["doc_id"],): (r["last_batch_id"], r["chain"], r["acc_words"])
-            for r in stream_ops.read_state_table(spark, table).collect()
-        }
-
-    pre = snap()
-
-    # (i) stranded stage, table intact
-    shutil.copytree(table, table + ".rs_new_5")
-    stream_ops._recover_state(table)
-    assert not os.path.isdir(table + ".rs_new_5")
-    assert snap() == pre
-
-    # (ii) between the renames: table gone, old + complete new present
-    shutil.copytree(table, table + ".rs_new_6")
-    os.rename(table, table + ".rs_old_6")
-    stream_ops._recover_state(table)
-    assert os.path.isdir(table)
-    assert not os.path.isdir(table + ".rs_old_6")
-    assert not os.path.isdir(table + ".rs_new_6")
-    assert snap() == pre
-
-    # (iii) swap completed, old left behind
-    shutil.copytree(table, table + ".rs_old_7")
-    stream_ops._recover_state(table)
-    assert not os.path.isdir(table + ".rs_old_7")
-    assert snap() == pre
+            _copy_stages(src_root, live, files[3:])
+            got = sorted(map(tuple, _w2(spark, live, emit, **kw).collect()))
+            assert stream_ops._last_committed_batch(ckpt) == depth - 1
+            assert sorted(map(tuple, _batch_rows(out_dir, spark, {n}))) == killed
+            assert got == whole
+            if name == "refeed":
+                assert dict(
+                    ((d, c), (a, h)) for d, c, a, h in got
+                ) == _refeed_reference_fold(chunks)
+    finally:
+        shutil.rmtree(src_root, ignore_errors=True)

@@ -57,13 +57,12 @@ def test_stateful_accumulate_emits_running_updates(spark):
 
 
 def test_stateful_accumulate_mode_equivalence(spark):
-    """The batched relational accumulator (default since r9 — per-BATCH
-    constant) and the per-key applyInPandasWithState reference path emit
-    IDENTICAL update streams: same rows, same running prefixes, same
-    chunk ordering. Docs have differing chunk counts so short docs stop
-    appearing in later micro-batches — the batched path's semi-join on
-    the batch's keys must reproduce exactly the per-key path's
-    "only keys present in the batch emit" contract."""
+    """The state-store accumulator's whole update stream equals the
+    running prefixes of batch ``incremental_concat``: one row per (doc,
+    stage the doc has a chunk in), carrying the chunk count and the
+    chunk-ordered concatenation so far. Docs have differing chunk counts
+    so short docs stop appearing in later micro-batches, which must not
+    emit them again."""
     docs = spark.createDataFrame(
         [
             (1, "a b c d e f g h"),            # 4 stages of 2
@@ -73,11 +72,21 @@ def test_stateful_accumulate_mode_equivalence(spark):
         "doc_id long, text string",
     )
     chunks = chunking.partition_equal(chunking.split_words(docs), 4)
-    batched = stream_ops.stateful_accumulate(spark, chunks, mode="batched")
-    state = stream_ops.stateful_accumulate(spark, chunks, mode="state")
-    b = sorted(map(tuple, batched.collect()))
-    s = sorted(map(tuple, state.collect()))
-    assert b == s and b
+    got = sorted(map(tuple, stream_ops.stateful_accumulate(spark, chunks).collect()))
+    outs: dict = {}
+    for r in sorted(
+        mapstage.llm_map(chunks).collect(), key=lambda r: (r.doc_id, r.chunk_id)
+    ):
+        outs.setdefault(r.doc_id, []).append(r.out_text)
+    want = sorted(
+        (d, k, " ".join(o[:k])) for d, o in outs.items() for k in range(1, len(o) + 1)
+    )
+    final = {
+        r["doc_id"]: (r["n_chunks"], r["final_text"])
+        for r in red.incremental_concat(mapstage.llm_map(chunks)).collect()
+    }
+    assert got == want and got
+    assert {d: (len(o), " ".join(o)) for d, o in outs.items()} == final
 
 
 def test_watermark_drops_late_event(spark):
@@ -132,14 +141,11 @@ def test_watermark_drops_late_event(spark):
 
 def test_stateful_accumulate_robust_to_reversed_arrival(spark):
     """Stages arriving in REVERSE order still produce the chunk-ordered
-    accumulation — the state keeps (chunk_id, text) pairs and sorts on
-    emit, so arrival interleaving can't corrupt the result."""
+    accumulation — the state keeps (arrival, chunk_id, text) and the
+    emission sorts by chunk_id, so arrival interleaving can't corrupt the
+    result."""
     import shutil
     import tempfile
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql import types as T
 
     chunks = _chunks(spark)
     root = tempfile.mkdtemp(prefix="pmr_rev_")
@@ -152,23 +158,9 @@ def test_stateful_accumulate_robust_to_reversed_arrival(spark):
                 .write.mode("append")
                 .parquet(root)
             )
-        state_schema = T.StructType(
-            [
-                T.StructField("chunk_ids", T.ArrayType(T.IntegerType())),
-                T.StructField("texts", T.ArrayType(T.StringType())),
-            ]
+        updates = stream_ops._w2_run(
+            stream_ops._chunk_stream(spark, root), stream_ops._acc_emit
         )
-
-        def transform(s):
-            return mapstage.llm_map(s).groupBy("doc_id").applyInPandasWithState(
-                stream_ops._accumulate,
-                outputStructType=stream_ops._ACC_OUT,
-                stateStructType=state_schema,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-
-        updates = stream_ops._run_to_memory(stream_ops._chunk_stream(spark, root), transform)
         final = {
             r["doc_id"]: r["final_text"]
             for r in stream_ops.final_accumulation(updates).collect()
@@ -270,96 +262,12 @@ def test_checkpoint_recovery_exactly_once(spark):
     assert got == want
 
 
-def test_rate_source_soak_bounded_state(spark):
-    """Unbounded-source soak (short CI variant of tools/soak_stream.py):
-    state must stay bounded while input keeps flowing — window state by
-    watermark eviction (≈ n_keys × live-window horizon), accumulator
-    state by the distinct-key count exactly."""
-    from proactive_map_reduce_spark.streaming.proactive import rate_source_soak
-
-    n_keys = 50
-    out = rate_source_soak(spark, duration_s=12, rows_per_second=5000, n_keys=n_keys)
-    # both shapes processed real volume
-    assert out["window"]["rows_in"] >= 20000, out
-    assert out["stateful"]["rows_in"] >= 20000, out
-    # watermark eviction: window state never exceeds a small multiple of
-    # the live horizon (2 s watermark + in-flight windows ≪ 12 s of
-    # windows had eviction not run)
-    assert 0 < out["window"]["state_rows_max"] <= n_keys * 8, out
-    # keyed accumulator: state == distinct keys, independent of volume
-    assert out["stateful"]["state_rows_max"] == n_keys, out
-    assert out["stateful"]["state_rows_final"] == n_keys, out
-
-
-def test_stream_upsert_latest_per_key(spark):
-    """The foreachBatch upsert sink converges to exactly the batch
-    latest-row-per-key answer, across multi-batch replay, and replayed
-    batch ids are idempotent."""
-    import datetime
-    import shutil as _sh
-    import tempfile as _tf
-
-    from proactive_map_reduce_spark.streaming import upsert as up
-
-    base = datetime.datetime(2024, 1, 1)
-    rows = [
-        (i, i % 5, "set", base + datetime.timedelta(minutes=i), float(i))
-        for i in range(40)
-    ]
-    ev = spark.createDataFrame(rows, stream_ops.EVENT_SCHEMA)
-    root = stream_ops.write_event_files(ev, n_buckets=4)
-    state = _tf.mkdtemp(prefix="pmr_upsert_") + "/state"
-    ckpt = _tf.mkdtemp(prefix="pmr_upsert_ck_")
-    try:
-        stream = (
-            spark.readStream.schema(stream_ops.EVENT_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(root)
-        )
-        up.stream_upsert(
-            spark, stream, state, ["user_id"], ["ts", "event_id"], ckpt
-        )
-        got = {
-            r["user_id"]: (r["event_id"], r["value"])
-            for r in spark.read.parquet(state).collect()
-        }
-        want = {u: (35 + u, float(35 + u)) for u in range(5)}
-        assert got == want
-        # idempotency: re-applying an already-seen batch id is a no-op
-        extra = spark.createDataFrame(
-            [(999, 0, "set", base, 999.0)], stream_ops.EVENT_SCHEMA
-        )
-        up.upsert_batch(spark, extra, 0, state, ["user_id"], ["ts", "event_id"])
-        assert spark.read.parquet(state).filter("event_id = 999").count() == 0
-        # but a NEW batch id applies
-        up.upsert_batch(
-            spark,
-            spark.createDataFrame(
-                [(1000, 0, "set", base + datetime.timedelta(days=1), 7.0)],
-                stream_ops.EVENT_SCHEMA,
-            ),
-            10_000,
-            state,
-            ["user_id"],
-            ["ts", "event_id"],
-        )
-        assert (
-            spark.read.parquet(state).filter("user_id = 0").collect()[0]["event_id"]
-            == 1000
-        )
-    finally:
-        _sh.rmtree(root, ignore_errors=True)
-        _sh.rmtree(ckpt, ignore_errors=True)
-        _sh.rmtree(os.path.dirname(state), ignore_errors=True)
-
-
 def test_refeed_chain_deep_stage_depth_values_and_state(spark):
     """The W2 v2 re-feed at reference-realistic depth (--num_steps 10+,
     test_proactive.py:29-33): 12 stages × 30 docs. Every emitted
     (acc_words_before, chain) must equal an independent driver-side fold
     over the batch-mapped outputs in chunk order — the same recursion
-    the DuckDB oracle pins at depth 4, re-derived at depth 12 (the
-    artifact-scale soak lives in tools/soak_refeed.py)."""
+    the DuckDB oracle pins at depth 4, re-derived at depth 12."""
     import hashlib
 
     from tests.conftest import SF0001
@@ -406,9 +314,14 @@ def test_stage_pipeline_sink_modes(spark, tmp_path):
 
 
 def test_refeed_chain_sink_modes(spark, tmp_path):
-    """r8: durable vs memory sink on the ORDER-SENSITIVE refeed chain —
-    the strongest cheap equivalence witness (any replayed, duplicated, or
-    reordered stage changes every later chain hash)."""
+    """The two ways to run the refeed chain emit the same order-sensitive
+    rows (any replayed, duplicated, or reordered stage changes every
+    later chain hash): temp dirs removed after the run, and a
+    caller-kept ``out_dir`` + ``state_dir`` whose checkpoint (holding
+    the state store) persists under the state dir. Both equal the
+    driver-side md5 fold."""
+    from tests.test_stream_recovery import _refeed_reference_fold
+
     docs = spark.createDataFrame(
         [(1, " ".join(f"w{i}" for i in range(20))),
          (2, " ".join(f"v{i}" for i in range(12)))],
@@ -416,26 +329,29 @@ def test_refeed_chain_sink_modes(spark, tmp_path):
     )
     chunks = chunking.partition_equal_arrays(docs, 5)
     key = lambda r: (r["doc_id"], r["chunk_id"])
-    mem = {
+    tmp = {
         key(r): (r["acc_words_before"], r["chain"])
         for r in stream_ops.refeed_chain(spark, chunks).collect()
     }
-    dur = {
+    state_dir = str(tmp_path / "state")
+    kept = {
         key(r): (r["acc_words_before"], r["chain"])
         for r in stream_ops.refeed_chain(
-            spark, chunks, sink="parquet", out_dir=str(tmp_path / "out"),
-            mode="state",
+            spark, chunks, out_dir=str(tmp_path / "out"), state_dir=state_dir
         ).collect()
     }
-    assert mem == dur and len(dur) == 10
+    assert tmp == kept == _refeed_reference_fold(chunks) and len(kept) == 10
+    assert os.path.isdir(os.path.join(state_dir, "checkpoint", "state"))
 
 
 def test_refeed_chain_mode_equivalence(spark):
-    """The batched relational refeed (default since r9 — the fold is one
-    JVM higher-order expression) and the per-key applyInPandasWithState
-    reference emit IDENTICAL rows on the order-sensitive chain fixture:
-    any divergence in fold order, word counting, or null handling
-    changes every later chain hash."""
+    """The state-store refeed emits exactly the driver-side md5 fold on
+    the order-sensitive chain fixture: any divergence in fold order,
+    word counting, or null handling changes every later chain hash. The
+    short doc is absent from later micro-batches and must not be emitted
+    again."""
+    from tests.test_stream_recovery import _refeed_reference_fold
+
     docs = spark.createDataFrame(
         [
             (1, " ".join(f"w{i}" for i in range(20))),
@@ -445,21 +361,22 @@ def test_refeed_chain_mode_equivalence(spark):
         "doc_id long, text string",
     )
     chunks = chunking.partition_equal_arrays(docs, 5)
-    b = sorted(
-        map(tuple, stream_ops.refeed_chain(spark, chunks, mode="batched").collect())
-    )
-    s = sorted(
-        map(tuple, stream_ops.refeed_chain(spark, chunks, mode="state").collect())
-    )
-    assert b == s and b
+    got = stream_ops.refeed_chain(spark, chunks).collect()
+    want = _refeed_reference_fold(chunks)
+    assert {
+        (r["doc_id"], r["chunk_id"]): (r["acc_words_before"], r["chain"])
+        for r in got
+    } == want
+    assert len(got) == len(want) and got
 
 
 def test_refeed_batched_multi_stage_batch_folds_in_arrival_order(spark, tmp_path):
     """A micro-batch carrying SEVERAL stages of one doc (the recovery
-    coalescing case) must fold in (batch_id, chunk_id) order — per-batch
-    chunk order across sequential batches, exactly _refeed's contract.
-    Feed a layout where file 0 = chunks {0,1} and file 1 = chunk {2} and
-    compare against the driver-side sequential fold."""
+    coalescing case) must fold in (arrival, chunk_id) order — chunk order
+    within a micro-batch, micro-batches in arrival order — and emit both
+    of the batch's stages once. Feed a layout where file 0 = chunks {0,1}
+    and file 1 = chunk {2} and compare against the driver-side sequential
+    fold."""
     import hashlib
 
     docs = spark.createDataFrame(
@@ -487,7 +404,7 @@ def test_refeed_batched_multi_stage_batch_folds_in_arrival_order(spark, tmp_path
     )
     got = {
         (r["doc_id"], r["chunk_id"]): (r["acc_words_before"], r["chain"])
-        for r in stream_ops._refeed_batched_runner(stream).collect()
+        for r in stream_ops._w2_run(stream, stream_ops._refeed_emit).collect()
     }
 
     mapped = sorted(

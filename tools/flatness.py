@@ -7,11 +7,9 @@ up as per-batch seconds GROWING with batch index). The check: skip the
 JIT/warmup head, then compare the mean of the late third of batches
 against the mean of the early third — flat means late ≤ ratio × early.
 
-Extracted from tools/soak_stream.py and tools/scale_probe.py (r10
-verdict polish item: the computation that gates the soak artifacts is
-now a pure function pinned by tests/test_flatness.py against recorded
-batch traces, including the depth-96 soak's real trace and synthetic
-linear/quadratic growth that must FAIL it).
+A pure function pinned by tests/test_flatness.py against recorded
+batch traces, including a depth-96 soak's real trace and synthetic
+linear/quadratic growth that must FAIL it.
 """
 
 from __future__ import annotations

@@ -213,331 +213,6 @@ def probe(spark, sf_dir: str, with_cc: bool = True) -> dict:
     return out
 
 
-def probe_w2(spark, n_docs: int = 100_000, depth: int = 16) -> dict:
-    """Shape probe for the two W2 batched stateful runners (r10 verdict
-    item 5): at ``n_docs`` keys × ``depth`` stages, the compacted state
-    design's claim is per-BATCH cost O(keys) — constant in stream depth
-    — because each micro-batch reads and rewrites exactly one state row
-    per doc. Bound checked: late-third per-batch seconds ≤ 1.5× the
-    post-warmup early third, emission rows exactly ``n_docs × depth``,
-    final state table exactly ``n_docs`` rows, and full distributed
-    value equality against the batch-computed expectation (the
-    zero-seed JVM fold for refeed; prefix-joins for the accumulator)."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from proactive_map_reduce_spark.operators import chunking, mapstage
-    from proactive_map_reduce_spark.streaming import proactive as sp
-
-    docs = spark.range(n_docs).select(
-        F.col("id").alias("doc_id"),
-        F.expr(
-            f"array_join(transform(sequence(1, {2 * depth}), "
-            "i -> concat('w', id % 97, '_', i)), ' ')"
-        ).alias("text"),
-    )
-    chunks = chunking.partition_equal_arrays(docs, depth)
-    out: dict = {"n_docs": n_docs, "depth": depth}
-    runners = {
-        "refeed": sp._refeed_batched_runner,
-        "accumulate": sp._accumulate_batched_runner,
-    }
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        for name, runner in runners.items():
-            root = sp.write_stage_files(chunks)
-            out_dir = tempfile.mkdtemp(prefix="pmr_probe_w2out_")
-            state_dir = tempfile.mkdtemp(prefix="pmr_probe_w2state_")
-            timings: list[dict] = []
-            t0 = time.time()
-            try:
-                got = runner(
-                    sp._chunk_stream(spark, root),
-                    out_dir=out_dir,
-                    state_dir=state_dir,
-                    timings=timings,
-                )
-                rows_out = got.count()
-                wall = round(time.time() - t0, 1)
-                mapped = mapstage.llm_map(
-                    spark.read.schema(sp.CHUNK_SCHEMA).parquet(root)
-                )
-                ps = mapped.groupBy("doc_id").agg(
-                    F.array_sort(
-                        F.collect_list(F.struct("chunk_id", "out_text"))
-                    ).alias("ps")
-                )
-                if name == "refeed":
-                    expect = (
-                        ps.select(
-                            "doc_id",
-                            F.expr(
-                                "transform(ps, p -> struct("
-                                "p.chunk_id as batch_id, p.chunk_id as chunk_id,"
-                                "p.out_text as out_text))"
-                            ).alias("xs"),
-                        )
-                        .select(
-                            "doc_id", F.explode(F.expr(sp._REFEED_FOLD)).alias("e")
-                        )
-                        .select(
-                            "doc_id",
-                            F.col("e.chunk_id").alias("chunk_id"),
-                            F.col("e.acc_words_before").alias("acc_words_before"),
-                            F.col("e.chain").alias("chain"),
-                        )
-                    )
-                else:
-                    expect = ps.select(
-                        "doc_id",
-                        F.explode(
-                            F.expr(
-                                "transform(sequence(1, size(ps)), k -> struct("
-                                "cast(k as int) as n_chunks_seen,"
-                                "array_join(transform(slice(ps, 1, k),"
-                                " p -> p.out_text), ' ') as acc_text))"
-                            )
-                        ).alias("e"),
-                    ).select("doc_id", "e.n_chunks_seen", "e.acc_text")
-                mismatches = (
-                    got.exceptAll(expect).count() + expect.exceptAll(got).count()
-                )
-                state_rows = sp.read_state_table(
-                    spark, os.path.join(state_dir, "state")
-                ).count()
-            finally:
-                shutil.rmtree(root, ignore_errors=True)
-                shutil.rmtree(out_dir, ignore_errors=True)
-                shutil.rmtree(state_dir, ignore_errors=True)
-            try:
-                from flatness import thirds_flatness  # script: tools/ on path
-            except ImportError:  # imported as tools.scale_probe
-                from tools.flatness import thirds_flatness
-
-            batch_s = [
-                round(t["merge_s"] + t["emit_s"] + t["swap_s"], 3)
-                for t in timings
-            ]
-            flat = thirds_flatness(batch_s)
-            out[name] = {
-                "batches": len(timings),
-                "rows_out": int(rows_out),
-                "rows_expected": n_docs * depth,
-                "value_mismatches": int(mismatches),
-                "state_rows_final": int(state_rows),
-                "sec": wall,
-                "rows_per_sec": round(rows_out / wall, 1) if wall else None,
-                "batch_secs": batch_s,
-                **flat,
-            }
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    return out
-
-
-def probe_w2_sparse(spark, n_docs: int = 1_000_000) -> dict:
-    """Sparse-touch probe for the bucketed W2 state table (r11; r10
-    verdict item 4): at ``n_docs`` keys, deliver micro-batches that
-    touch 1% (clustered), 10% (clustered), 1% (scattered), and 100% of
-    the keys, under two state layouts:
-
-    - ``unbucketed`` (n_buckets=1): the r10 design — every batch
-      rewrites the whole state table regardless of touch;
-    - ``bucketed`` (n_buckets=1024, span=1024 → ~one span per bucket):
-      a batch rewrites only the buckets its keys land in.
-
-    Bounds checked (bucketed only): the clustered-1% batch touches
-    ≤3% of buckets and its merge costs ≤35% of the dense batch's (and
-    ≤50% of the UNBUCKETED layout's cost for the identical batch).
-    The scattered-1% batch — 10k uniformly-spread keys covering ~all
-    buckets, where bucket pruning cannot help — was the r11 recorded
-    worst case; since r12 it must take the DELTA-LOG path (append one
-    small folded delta instead of rewriting the grazed buckets) and
-    its merge must cost ≤50% of the dense batch's. Values are fully
-    checked against the zero-seed JVM fold and the final state must
-    hold exactly ``n_docs`` rows, both layouts.
-    """
-    import glob
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from proactive_map_reduce_spark.operators import mapstage
-    from proactive_map_reduce_spark.streaming import proactive as sp
-
-    pct1 = n_docs // 100
-    pct10 = n_docs // 10
-
-    def chunk_df(lo, hi, step, chunk):
-        return spark.range(lo, hi, step).select(
-            F.col("id").alias("doc_id"),
-            F.lit(chunk).cast("int").alias("chunk_id"),
-            F.concat(
-                F.lit("w"), (F.col("id") % 97).cast("string"), F.lit(" x")
-            ).alias("chunk_text"),
-        )
-
-    # stage k arrives as micro-batch k (one single-file stage per batch,
-    # mtime-ordered like write_stage_files)
-    stages = [
-        ("dense_build", chunk_df(0, n_docs, 1, 0)),
-        ("clustered_1pct", chunk_df(0, pct1, 1, 1)),
-        ("clustered_10pct", chunk_df(0, pct10, 1, 2)),
-        ("scattered_1pct", chunk_df(0, n_docs, 100, 3)),
-        ("dense", chunk_df(0, n_docs, 1, 4)),
-    ]
-
-    def build_live() -> str:
-        live = tempfile.mkdtemp(prefix="pmr_probe_w2sparse_")
-        base_ts = time.time() - 3600
-        for k, (_, df) in enumerate(stages):
-            tmp = os.path.join(live, f".stage_{k}")
-            df.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            dst = os.path.join(live, f"stage-{k:04d}.parquet")
-            shutil.move(part, dst)
-            os.utime(dst, (base_ts + k, base_ts + k))
-            shutil.rmtree(tmp, ignore_errors=True)
-        return live
-
-    # distributed expectation: the zero-seed fold over each doc's actual
-    # chunk set (batch_id == chunk_id: one stage per micro-batch)
-    def expectation(live: str):
-        mapped = mapstage.llm_map(
-            spark.read.schema(sp.CHUNK_SCHEMA).parquet(live)
-        )
-        return (
-            mapped.groupBy("doc_id")
-            .agg(
-                F.sort_array(
-                    F.collect_list(F.struct("chunk_id", "out_text"))
-                ).alias("ps")
-            )
-            .select(
-                "doc_id",
-                F.expr(
-                    "transform(ps, p -> struct("
-                    "p.chunk_id as batch_id, p.chunk_id as chunk_id,"
-                    "p.out_text as out_text))"
-                ).alias("xs"),
-            )
-            .select("doc_id", F.explode(F.expr(sp._REFEED_FOLD)).alias("e"))
-            .select(
-                "doc_id",
-                F.col("e.chunk_id").alias("chunk_id"),
-                F.col("e.acc_words_before").alias("acc_words_before"),
-                F.col("e.chain").alias("chain"),
-            )
-        )
-
-    configs = {
-        "unbucketed": {"n_buckets": 1, "bucket_span": 1024},
-        "bucketed": {"n_buckets": 1024, "bucket_span": 1024},
-        # r13: no caller-pinned layout — starts at the shipped default
-        # N=16 (cheap dense admission) and must AUTO-RESCALE to the
-        # measured-best N=1024 once the dense build lands, giving the
-        # same clustered pruning / log routing as the pinned config
-        "autoscale": {"n_buckets": None, "bucket_span": 1024},
-    }
-    out: dict = {"n_docs": n_docs, "stages": [n for n, _ in stages]}
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
-        for cfg_name, kw in configs.items():
-            live = build_live()
-            out_dir = tempfile.mkdtemp(prefix="pmr_probe_w2sout_")
-            state_dir = tempfile.mkdtemp(prefix="pmr_probe_w2sstate_")
-            timings: list[dict] = []
-            t0 = time.time()
-            try:
-                got = sp._refeed_batched_runner(
-                    sp._chunk_stream(spark, live),
-                    out_dir=out_dir,
-                    state_dir=state_dir,
-                    timings=timings,
-                    **kw,
-                )
-                rows_out = got.count()
-                wall = round(time.time() - t0, 1)
-                mismatches = (
-                    got.exceptAll(expectation(live)).count()
-                    + expectation(live).exceptAll(got).count()
-                )
-                state_rows = sp.read_state_table(
-                    spark, os.path.join(state_dir, "state")
-                ).count()
-            finally:
-                shutil.rmtree(live, ignore_errors=True)
-                shutil.rmtree(out_dir, ignore_errors=True)
-                shutil.rmtree(state_dir, ignore_errors=True)
-            per_stage = {
-                stages[t["batch_id"]][0]: {
-                    k: t.get(k)
-                    for k in (
-                        "merge_s", "touch_s", "emit_s", "swap_s",
-                        "buckets_touched", "n_buckets", "path", "compact_s",
-                        "rescale_s",
-                    )
-                }
-                for t in timings
-                if t["batch_id"] < len(stages)
-            }
-            out[cfg_name] = {
-                "batches": len(timings),
-                "rows_out": int(rows_out),
-                "value_mismatches": int(mismatches),
-                "state_rows_final": int(state_rows),
-                "sec": wall,
-                "per_stage": per_stage,
-            }
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-
-    # derived ratios the bound checks (and the verdict table) read
-    b, u = out["bucketed"]["per_stage"], out["unbucketed"]["per_stage"]
-    out["merge_frac_clustered_1pct_vs_dense"] = round(
-        b["clustered_1pct"]["merge_s"] / max(b["dense"]["merge_s"], 1e-9), 3
-    )
-    out["merge_bucketed_over_unbucketed_at_1pct"] = round(
-        b["clustered_1pct"]["merge_s"]
-        / max(u["clustered_1pct"]["merge_s"], 1e-9),
-        3,
-    )
-    out["buckets_frac_clustered_1pct"] = round(
-        b["clustered_1pct"]["buckets_touched"]
-        / b["clustered_1pct"]["n_buckets"],
-        4,
-    )
-    out["buckets_frac_scattered_1pct"] = round(
-        b["scattered_1pct"]["buckets_touched"]
-        / b["scattered_1pct"]["n_buckets"],
-        4,
-    )
-    out["merge_frac_scattered_1pct_vs_dense"] = round(
-        b["scattered_1pct"]["merge_s"] / max(b["dense"]["merge_s"], 1e-9), 3
-    )
-    a = out["autoscale"]["per_stage"]
-    out["autoscale_final_n_buckets"] = a["dense"]["n_buckets"]
-    out["autoscale_rescale_s"] = next(
-        (s["rescale_s"] for s in a.values() if s.get("rescale_s")), None
-    )
-    # admission win: the dense BUILD ran at the small default N before
-    # any rescale; pruning parity: post-rescale clustered 1% within the
-    # pinned-1024 config's fraction-of-dense bound
-    out["autoscale_build_n_buckets"] = a["dense_build"]["n_buckets"]
-    out["autoscale_merge_frac_clustered_1pct_vs_dense"] = round(
-        a["clustered_1pct"]["merge_s"] / max(a["dense"]["merge_s"], 1e-9), 3
-    )
-    out["autoscale_merge_frac_scattered_1pct_vs_dense"] = round(
-        a["scattered_1pct"]["merge_s"] / max(a["dense"]["merge_s"], 1e-9), 3
-    )
-    return out
-
-
 def main() -> int:
     replica_counts = [int(a) for a in sys.argv[1:]] or [30]
 
@@ -556,81 +231,8 @@ def main() -> int:
             print(f"probing {n}x {variant} ({fx})", flush=True)
             rows[f"{n}x_{variant}"] = probe(spark, fx)
 
-    print("probing W2 batched stateful runners (100k keys × depth 16)", flush=True)
-    w2 = probe_w2(spark)
-    print("probing W2 sparse-touch bucketing (1M keys)", flush=True)
-    w2s = probe_w2_sparse(spark)
-
     base = rows["1x"]
     checks: list[str] = []
-    for cfg in ("unbucketed", "bucketed", "autoscale"):
-        r = w2s[cfg]
-        if r["value_mismatches"]:
-            checks.append(f"w2_sparse {cfg}: {r['value_mismatches']} mismatches")
-        if r["state_rows_final"] != w2s["n_docs"]:
-            checks.append(
-                f"w2_sparse {cfg}: state rows {r['state_rows_final']} != keys"
-            )
-    if w2s["buckets_frac_clustered_1pct"] > 0.03:
-        checks.append(
-            "w2_sparse: clustered 1% batch touched "
-            f"{w2s['buckets_frac_clustered_1pct']:.1%} of buckets (>3%)"
-        )
-    if w2s["merge_frac_clustered_1pct_vs_dense"] > 0.35:
-        checks.append(
-            "w2_sparse: clustered 1% merge cost "
-            f"{w2s['merge_frac_clustered_1pct_vs_dense']:.0%} of dense (>35%)"
-        )
-    if w2s["bucketed"]["per_stage"]["scattered_1pct"]["path"] != "log":
-        checks.append(
-            "w2_sparse: scattered 1% batch did not take the delta-log path"
-        )
-    if w2s["merge_frac_scattered_1pct_vs_dense"] > 0.5:
-        checks.append(
-            "w2_sparse: scattered 1% merge cost "
-            f"{w2s['merge_frac_scattered_1pct_vs_dense']:.0%} of dense (>50%)"
-        )
-    # r13 autoscale bounds: the un-pinned layout must converge to the
-    # pinned config's N, have BUILT dense at the small default N, and
-    # match the pinned config's pruning/routing bounds afterwards
-    if w2s["autoscale_final_n_buckets"] != 1024:
-        checks.append(
-            f"w2_sparse autoscale: final N {w2s['autoscale_final_n_buckets']}"
-            " != 1024"
-        )
-    if w2s["autoscale_build_n_buckets"] >= 1024:
-        checks.append(
-            "w2_sparse autoscale: dense build already at large N "
-            f"({w2s['autoscale_build_n_buckets']}) — no admission win"
-        )
-    if w2s["autoscale_merge_frac_clustered_1pct_vs_dense"] > 0.35:
-        checks.append(
-            "w2_sparse autoscale: clustered 1% merge cost "
-            f"{w2s['autoscale_merge_frac_clustered_1pct_vs_dense']:.0%}"
-            " of dense (>35%)"
-        )
-    if w2s["autoscale"]["per_stage"]["scattered_1pct"]["path"] != "log":
-        checks.append(
-            "w2_sparse autoscale: scattered 1% batch did not take the log path"
-        )
-    # merge_bucketed_over_unbucketed_at_1pct is RECORDED but not bounded:
-    # it divides wall seconds from two different JVM sessions, and the
-    # unbucketed baseline alone swung 1.9-3.5 s between otherwise
-    # identical runs — the within-run fraction-of-dense bound above is
-    # the noise-robust form of the same claim.
-    for op in ("refeed", "accumulate"):
-        r = w2[op]
-        if r["rows_out"] != r["rows_expected"]:
-            checks.append(f"w2 {op}: rows {r['rows_out']} != {r['rows_expected']}")
-        if r["value_mismatches"]:
-            checks.append(f"w2 {op}: {r['value_mismatches']} value mismatches")
-        if r["state_rows_final"] != w2["n_docs"]:
-            checks.append(f"w2 {op}: state rows {r['state_rows_final']} != keys")
-        if not r["latency_flat"]:
-            checks.append(
-                f"w2 {op}: per-batch latency grew with depth "
-                f"({r['batch_s_early3rd']}→{r['batch_s_late3rd']} s)"
-            )
     for key, r in rows.items():
         if not r["lsh"]["bound_holds"]:
             checks.append(f"{key}: LSH pairs exceed closed-form bound")
@@ -659,8 +261,6 @@ def main() -> int:
         "started": time.strftime("%F %T"),
         "base": BASE,
         "rows": rows,
-        "w2_batched": w2,
-        "w2_sparse": w2s,
         "violations": checks,
         "ok": not checks,
     }
