@@ -33,20 +33,11 @@ def entry(spark: SparkSession) -> DataFrame:
 # staleness queue until a CORRECTNESS_r*.json from that round (or later)
 # has them green, then fall back to normal staleness ordering.
 _REWRITTEN = {
-    # "q_dedup_minhash_pairs": 4,  (superseded by the r14 entry below)   # LSH mega-bucket cap + doc_a<doc_b contract
-    # (q_dedup_clusters' r4 pin superseded by its r8 entry below)
-    # "q_curation_pipeline": 4,  (superseded by the r14 entry below)     # embeds the capped minhash stage
     "q_corpus_mix": 4,            # oracle moved to TRY_CAST
-    # "q_first_line_answer": 4,  (superseded by the r14 entry below)     # leading-\n strip matches oracle ltrim
-    # "q_decode_detok": 4,  (superseded by the r14 entry below)          # shares the first-line extraction path
-    # "q_bleu": 4,  (superseded by the r14 entry below)                  # empty-token drop + one-row-per-gold-doc
     # reference-parity pass: normalized-answer tokenization for the
     # F1/accuracy family, int() top-k with tail-excluded rank pool
-    # (q_flagship/q_metrics_avg/q_best_of_answers/q_union_outputs moved
-    # to their r12 entries below)
     "q_subset_accuracy": 4,
     "q_token_counter_overlap": 4,
-    # "q_mean_over_files": 4,  (superseded by the r14 entry below)
     "q_topk_importance": 4,
     # oracle determinism fixes (session cumsum order, asof tie-break)
     "q_asof_join": 4,
@@ -60,7 +51,6 @@ _REWRITTEN = {
     "q_quality_topn_per_lang": 4,
     "q_event_interarrival": 4,
     "q_sentence_dedup": 4,
-    # "q_vocab_oov": 4,  (superseded by the r14 entry below)
     "q_salted_join": 4,
     "q_promo_revenue": 4,
     "q_ship_priority": 4,
@@ -91,7 +81,6 @@ _REWRITTEN = {
     # KMV divisor clamp, empty-doc decoding-speed guard — in-domain
     # values unchanged (gate-verified), but the PLANS changed, so the
     # driver should re-derive green rows on the new expressions.
-    # "q_similarity_topk": 5,  (superseded by the r14 entry below)
     "q_similarity_lsh": 5,
     "q_similarity_ivf": 5,
     "q_similarity_ivf_sampled": 5,
@@ -119,7 +108,6 @@ _REWRITTEN = {
     "q_embedding_centroids": 5,
     "q_multimodal_features": 5,
     "q_scan_csv_roundtrip": 5,
-    # "q_rouge": 5,  (superseded by the r14 entry below)
     # round-5 nulls VALUE gate (adversarial_gate.py --nulls): explicit
     # null contracts — quarantine-with-NULLs (lang_id, pii, multimodal,
     # scores) or documented drop (token-domain operators), and the
@@ -127,33 +115,9 @@ _REWRITTEN = {
     "q_lang_id": 5,
     "q_pii_redact": 5,
     "q_any_answer_contained": 5,
-    # "q_minhash_signatures": 5,  (superseded by the r14 entry below)
     "q_multimodal_resize": 5,
     "q_repetition_signals": 5,
     "q_set_f1": 5,
-    # round-8 scale pass: the blocked n-gram Jaccard baseline's candidate
-    # generation moved to the shared star-cap window (capped_block_pairs,
-    # K=64) — sf0.01 values are cap-invariant (max block 54 < 64) but the
-    # PLAN changed, so the driver should re-derive the row. The LSH-path
-    # queries delegate to the same extracted helper with expression-
-    # identical plans (pair-count-verified at sf0.01/sf0.1), so they are
-    # NOT pinned.
-    # "q_dedup_ngram_jaccard": 8,  (superseded by the r14 entry below)
-    # round-8 scale pass: connected_components gained per-round
-    # localCheckpoint lineage truncation + a pointer-doubling shortcut
-    # join (O(log diameter) rounds) — identical min-label fixpoint
-    # (sf0.01/sf0.1 hash-green, path-graph convergence test), new plan.
-    # "q_dedup_clusters": 8,  (superseded by the r14 entry below)
-    # round-12 perf pass: q_flagship's scoring now normalizes each side
-    # ONCE via scoring.pair_scores (layered projections pin single
-    # evaluation of the 3-regex chain) instead of re-deriving it per
-    # metric — values bit-identical (oracle re-verified, equality test),
-    # ~27% less wall at sf0.1. The two consumers of the flagship
-    # fragment re-derive on the new plan too.
-    # "q_flagship": 12,  (superseded by the r14 entry below)
-    # "q_metrics_avg": 12,  (superseded by the r14 entry below)
-    # "q_best_of_answers": 12,  (superseded by the r14 entry below)
-    # "q_union_outputs": 12,  (superseded by the r14 entry below)
     # round-15 simplicity pass: both W2 operators run on one streaming
     # groupBy(doc_id) aggregation over Spark's RocksDB state store
     # (per-doc chunk history, update mode, foreachBatch parquet sink)

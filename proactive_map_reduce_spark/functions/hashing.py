@@ -17,8 +17,6 @@ Reference parallels: sha256 cache keys `kv_store/kv_loading_interface.py:
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -36,18 +34,3 @@ def portable_hash64(col: Column | str, salt: str = "") -> Column:
 def token_id(col: Column | str) -> Column:
     """Deterministic stand-in token id for a word (C3 tokenizer stand-in)."""
     return portable_hash64(col) % VOCAB_SIZE
-
-
-def py_portable_hash64(s: str, salt: str = "") -> int:
-    """Python mirror of portable_hash64 (used by pandas-UDF stand-ins)."""
-    return int(hashlib.md5((s + salt).encode("utf-8")).hexdigest()[:8], 16)
-
-
-def py_token_id(s: str) -> int:
-    return py_portable_hash64(s) % VOCAB_SIZE
-
-
-def duck_hash64_sql(expr: str, salt: str = "") -> str:
-    """DuckDB SQL fragment equivalent to portable_hash64."""
-    inner = f"({expr}) || '{salt}'" if salt else expr
-    return f"CAST(('0x' || substr(md5({inner}), 1, 8)) AS BIGINT)"

@@ -19,8 +19,9 @@ Reference parallels (semantics replicated exactly):
 - rechunk fixed (C2): test_proactive.py:152-165 — fixed windows of
   chunk_len; a tail shorter than 0.3*chunk_len merges into the previous
   chunk (only when there is more than one chunk).
-- ratio schedule (C4): test_proactive.py:141-150 — linear ramp
-  min(low + i*increment, 1.0), or uniform.
+- ratio schedule (C4): test_proactive.py:141-147 — linear ramp
+  min(low + i*increment, 1.0), the increment derived from a target mean
+  ratio (``derived_increment``).
 - middle-drop truncation (P5): pipeline_70b_samsum.py:155-157 — while total
   tokens > budget: delete the middle chunk (index len//2, 0-based).
 - positional shift (W4): pipeline_70b_samsum.py:204-213 —
@@ -125,57 +126,30 @@ def equal_partition_chunk_id(pos: Column, n: Column, num_steps: int) -> Column:
     )
 
 
-def partition_equal(words_df: DataFrame, num_steps: int, id_col: str = "doc_id") -> DataFrame:
-    """C1: group word rows into `num_steps` contiguous chunks per document.
-
-    Returns (doc_id, chunk_id, chunk_text, n_words). Order inside a chunk is
-    by `pos`; the aggregation sorts (pos, word) structs so the result is
-    deterministic under any physical row order.
-    """
-    if "n_words_doc" not in words_df.columns:
-        n = Window.partitionBy(id_col)
-        words_df = words_df.withColumn("n_words_doc", F.count("*").over(n))
-    with_chunk = words_df.withColumn(
-        "chunk_id", equal_partition_chunk_id(F.col("pos"), F.col("n_words_doc"), num_steps)
-    )
-    return (
-        with_chunk.groupBy(id_col, "chunk_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "word"))), lambda s: s["word"]
-                ),
-                " ",
-            ).alias("chunk_text"),
-            F.count("*").cast("bigint").alias("n_words"),
-        )
-    )
-
-
 def partition_equal_arrays(
     df: DataFrame, num_steps: int, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """C1 via per-document array slicing — the shuffle-free form.
+    """C1: split each document into `num_steps` contiguous word chunks.
 
-    `partition_equal` routes through a word explosion + groupBy (useful
-    when the words are needed row-wise anyway); but C1 itself is pure
-    per-document slicing (test_proactive.py:192-199 slices a local list),
-    so this variant computes chunk_text with slice() on the split array:
-    a narrow ×num_steps explode, NO shuffle of word rows at all. At 100 TB
-    that removes the widest exchange of the pipeline. Output rows match
-    `partition_equal` exactly (empty chunks are not emitted).
+    Returns (doc_id, chunk_id, chunk_text, n_words). The chunk of word
+    `pos` out of `n` is ``equal_partition_chunk_id``: partition_size =
+    n // num_steps, the LAST chunk takes the remainder, and when
+    partition_size is 0 every word lands in the last chunk. Empty chunks
+    are not emitted. C1 is pure per-document slicing
+    (test_proactive.py:192-199 slices a local list), so chunk_text comes
+    from slice() on the split array: a narrow ×num_steps explode, no
+    shuffle of word rows at all.
 
-    Shape (r13): the chunks are built as ONE per-document array of
+    Shape: the chunks are built as ONE per-document array of
     (chunk_id, chunk_text, n_words) structs, empty chunks dropped with
     the array ``filter`` higher-order function, and the survivors
-    exploded. The earlier explode-then-filter form let Catalyst push the
+    exploded. An explode-then-filter form lets Catalyst push the
     ``n_words > 0`` filter below the chunk projection, re-inlining the
     whole ``slice(split(text)…)`` expression into a per-chunk-row Filter
     — ``split(text)`` evaluated ~2× per chunk row (~8× per document).
     Here split/size/floor land in their own projection (referenced more
     than once → never re-inlined), each slice is taken once, and the
-    row filter is gone from the relational plan entirely. Measured at
-    sf0.1: chunk build 0.238 → 0.147 s median; values bit-identical.
+    row filter is absent from the relational plan.
     """
     ws = F.split(F.col(text_col), " ")
     last = num_steps - 1
@@ -252,14 +226,6 @@ def rechunk_fixed(
     )
 
 
-def ratio_schedule(num_steps: int, low: float = 0.2, increment: float = 0.1) -> Column:
-    """C4: array of per-chunk ratios min(low + i*increment, 1.0)."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_steps - 1)),
-        lambda i: F.round(F.least(F.lit(low) + i * F.lit(increment), F.lit(1.0)), 6),
-    )
-
-
 def derived_increment(num_steps: int, low: float, target_ratio: float) -> float:
     """C4, the reference's parameterization (test_proactive.py:141-147
     ``split_ratio``): the caller gives a TARGET mean ratio and the
@@ -269,19 +235,6 @@ def derived_increment(num_steps: int, low: float, target_ratio: float) -> float:
     Computed in plain Python floats, exactly the reference expression,
     so schedules built from it are bit-equal to the reference list."""
     return (2.0 * target_ratio - low) / num_steps
-
-
-def ratio_schedule_from_target(
-    num_steps: int, low: float, target_ratio: float
-) -> Column:
-    """C4 with the reference's (low, num_doc, ratio) signature
-    (test_proactive.py:141-147)."""
-    return ratio_schedule(num_steps, low, derived_increment(num_steps, low, target_ratio))
-
-
-def ratio_schedule_uniform(num_steps: int, ratio: float) -> Column:
-    """C4 uniform variant (test_proactive.py:149-150: ``[ratio]*num_doc``)."""
-    return F.array_repeat(F.round(F.lit(ratio), 6), num_steps)
 
 
 @F.udf(returnType=T.ArrayType(T.IntegerType()))

@@ -6,12 +6,14 @@ for 100 TB corpus curation, built shuffle-consciously:
 
 - Exact: one groupBy on a 256-bit content hash — the only full shuffle,
   keyed uniformly (no skew: hash keys are uniform by construction).
-- MinHash: signatures are computed with `n_hashes` min-aggregates in ONE
-  groupBy over the shingle explosion (no per-hash shuffle); LSH banding
+- MinHash: signatures are array higher-order expressions over each
+  document's shingle array (one md5 per shingle, then `n_hashes` affine
+  mins) in one narrow projection — no explode, no shuffle; LSH banding
   turns all-pairs comparison (O(n²), impossible at 100 TB) into an
   equi-join on (band_id, band_hash) — each bucket is tiny, and the join
   key count grows linearly with corpus size.
-- SimHash: one explosion over (word × bit), two partial-agg groupBys.
+- SimHash: `bits` array folds over the hashed word array per document,
+  no shuffle.
 - n-gram Jaccard: blocking key (lang, length bucket) bounds the candidate
   set; exact Jaccard via distinct-shingle join only within blocks.
 
@@ -80,21 +82,22 @@ def shingle_arrays(
 ) -> DataFrame:
     """Distinct word n-gram shingle ARRAY per document (one row per doc).
 
-    Array form keeps shingling a narrow projection (no explode, no
-    shuffle); per-document arrays are bounded by document length, so this
-    holds at any corpus scale.
+    The gram set is every full n-gram of the space-split text, plus one
+    partial gram for documents shorter than n. The array form keeps
+    shingling a narrow projection (no explode, no shuffle); per-document
+    arrays are bounded by document length, so this holds at any corpus
+    scale.
 
-    The split array gets its OWN projection (r13): referenced both by the
+    The split array gets its OWN projection: referenced both by the
     sequence bound and by every slice lambda, an inlined ``split(text)``
     would re-split per shingle position on the interpreted HOF path —
     materializing it pins one split per document (same fix as
     ``chunking.split_words``).
 
-    Null text is filtered HERE (r14, ADVICE): without the filter a null
-    document yields a bogus ``shingles = [null]`` row that every caller
-    had to remember to pre-filter away (the explode shingle paths emit
-    nothing for null text). Callers that still pre-filter are redundant
-    but harmless — Catalyst collapses the duplicate condition.
+    Null text is filtered here, so a null document emits no row rather
+    than a bogus ``shingles = [null]`` row. Callers that also pre-filter
+    are redundant but harmless — Catalyst collapses the duplicate
+    condition.
     """
     base = df.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col), F.split(F.col(text_col), " ").alias("__ws")
@@ -107,104 +110,6 @@ def shingle_arrays(
     return base.select(F.col(id_col), F.array_distinct(grams).alias("shingles"))
 
 
-def shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3) -> DataFrame:
-    """Distinct word n-gram shingles per document (one row per shingle)."""
-    return shingle_arrays(df, text_col, id_col, n).select(
-        F.col(id_col), F.explode("shingles").alias("shingle")
-    )
-
-
-def shingle_rows(words_df: DataFrame, id_col: str = "doc_id", n: int = 3) -> DataFrame:
-    """Word n-gram shingle rows built with window lead() — fully codegen'd
-    (array higher-order functions are interpreted in Spark; measured ~3×
-    slower for this step). The window's doc_id exchange is REUSED by the
-    downstream signature groupBy — net one shuffle for shingle→signature.
-
-    Input: exploded words with (pos, n_words_doc) from chunking.split_words.
-    Keeps the same gram set as shingle_arrays: all full n-grams, plus one
-    partial gram for docs shorter than n (concat_ws skips the null leads).
-    Output is a multiset (dedup via groupBy where needed — min-aggregation
-    for MinHash is insensitive to duplicates).
-    """
-    w = Window.partitionBy(id_col).orderBy("pos")
-    parts = [F.col("word")] + [F.lead("word", k).over(w) for k in range(1, n)]
-    gram = F.concat_ws(" ", *parts)
-    return (
-        words_df.withColumn("shingle", gram)
-        .filter(F.col("pos") <= F.greatest(F.col("n_words_doc") - n, F.lit(0)))
-        .select(F.col(id_col), "shingle")
-    )
-
-
-def shingle_sets(words_df: DataFrame, id_col: str = "doc_id", n: int = 3) -> DataFrame:
-    """Distinct shingle set per doc as an array column (for pair Jaccard)."""
-    return shingle_rows(words_df, id_col, n).groupBy(id_col).agg(
-        F.collect_set("shingle").alias("shingles")
-    )
-
-
-def _h0_rows(shingle_df: DataFrame, id_col: str) -> DataFrame:
-    """(id, h0) — ONE portable md5 per shingle; the single definition the
-    signature builders share (universal-hash base, 2^62 overflow bound
-    documented at MINHASH_PRIME)."""
-    base = (portable_hash64(F.col("shingle")) % MINHASH_PRIME).alias("h0")
-    return shingle_df.select(F.col(id_col), base)
-
-
-def _minhash_min_aggs(n_hashes: int) -> list:
-    """The n_hashes affine min-aggregates h_j = min((a_j·h0 + b_j) mod p)."""
-    return [
-        F.min(
-            (F.lit(MINHASH_A[j]) * F.col("h0") + F.lit(MINHASH_B[j])) % MINHASH_PRIME
-        ).alias(f"mh_{j}")
-        for j in range(n_hashes)
-    ]
-
-
-def minhash_with_sets(
-    shingle_df: DataFrame, n_hashes: int = 16, id_col: str = "doc_id"
-) -> DataFrame:
-    """MinHash signatures AND the distinct shingle set in ONE aggregation.
-
-    The LSH pair pipeline needs both (signatures → banding, sets → exact
-    Jaccard of candidates); computing them in one groupBy(doc_id) halves
-    the heavy path — one word explosion, one shingle window, one md5 per
-    shingle, one shuffle — instead of two full passes. At 100 TB the
-    shingle explosion dominates everything downstream, so never do it
-    twice.
-
-    The collected set holds the HASHED shingles (h0 bigints), not the
-    strings: the exchange then carries one int64 per shingle instead of
-    the string bytes, and candidate Jaccard intersects int arrays. Both
-    engines hash with the same portable function, so a (vanishingly
-    rare, ~|union|²/2³¹) collision is seen identically on both sides —
-    the oracle comparison stays exact.
-    """
-    rows = _h0_rows(shingle_df, id_col)
-    aggs = _minhash_min_aggs(n_hashes) + [F.collect_set("h0").alias("shingles")]
-    return rows.groupBy(id_col).agg(*aggs)
-
-
-def minhash_signatures(
-    shingle_df: DataFrame, n_hashes: int = 16, id_col: str = "doc_id"
-) -> DataFrame:
-    """MinHash signature: for each salt j, min over shingles of h(shingle||j).
-
-    Universal hashing: ONE md5 per shingle (the expensive part), then
-    n_hashes cheap affine functions h_j = (a_j·h + b_j) mod p over it —
-    all inside a single groupBy carrying the n_hashes min-aggregates.
-    Min over a multiset equals min over the set, so the input needs no
-    dedup. One shuffle total, no per-hash row blow-up.
-    """
-    if "shingles" in shingle_df.columns:
-        shingle_df = shingle_df.select(
-            F.col(id_col), F.explode("shingles").alias("shingle")
-        )
-    return _h0_rows(shingle_df, id_col).groupBy(id_col).agg(
-        *_minhash_min_aggs(n_hashes)
-    )
-
-
 def minhash_arrays(
     df: DataFrame,
     n_hashes: int = 16,
@@ -213,30 +118,27 @@ def minhash_arrays(
     n: int = 3,
     with_sets: bool = False,
 ) -> DataFrame:
-    """MinHash signatures straight from per-document shingle ARRAYS — the
-    zero-shuffle signature builder (r13).
+    """MinHash signatures straight from per-document shingle ARRAYS — a
+    zero-shuffle signature builder.
 
-    The window-lead shingle-row path costs one full word-row exchange +
-    sort + window before the signature groupBy. Per-document arrays need
-    NONE of that: h0 per shingle and the 16 affine mins are array
-    higher-order expressions in one narrow projection — no explode, no
-    shuffle, no aggregation at all. Measured at sf0.1: signatures+sets
-    0.38 → 0.19 s median (the interpreted-HOF overhead the r3 A/B
-    rejected was the explode path's, not this one's — and the 100 TB
-    shape is strictly better: the widest exchange of the dedup pipeline
-    is gone). Values are identical: min over the distinct-gram multiset
-    equals min over the set, and ``with_sets`` returns the distinct
-    HASHED shingles exactly like ``minhash_with_sets``'s collect_set
-    (array order differs; every consumer is order-insensitive —
-    array_intersect/size Jaccard and the order-insensitive oracle gate).
+    Universal hashing: ONE portable md5 per shingle (the expensive part)
+    gives h0 = h(shingle) mod p, then ``n_hashes`` cheap affine functions
+    h_j = min((a_j·h0 + b_j) mod p) (2^62 overflow bound documented at
+    MINHASH_PRIME). Both steps are array higher-order expressions in one
+    narrow projection — no explode, no shuffle, no aggregation. Min over
+    the distinct-gram array equals min over the gram set.
 
-    Null-text documents are dropped explicitly — the row-explode path
-    never emits word rows for them (posexplode of a null array), so they
-    have no signature row there either.
+    ``with_sets`` also returns the distinct HASHED shingles (h0 bigints)
+    as ``shingles`` — the exact-Jaccard input of the LSH pair queries.
+    Carrying one int64 per shingle instead of the string keeps the
+    candidate join narrow. Both engines hash with the same portable
+    function, so a (vanishingly rare, ~|union|²/2³¹) collision is seen
+    identically on both sides and the oracle comparison stays exact.
+    Array order is unspecified; every consumer is order-insensitive
+    (array_intersect/size Jaccard and the order-insensitive oracle gate).
 
-    The caller passes the DOCUMENT frame (not word rows); heavy per-doc
-    hashing parallelizes via ensure_parallelism exactly like the word
-    explode did.
+    Null-text documents emit no row. The caller passes the DOCUMENT
+    frame; heavy per-doc hashing parallelizes via ensure_parallelism.
     """
     from ..sources.tables import ensure_parallelism
 
@@ -486,55 +388,31 @@ def jaccard_pairs(
 ) -> DataFrame:
     """Exact shingle-set Jaccard for candidate pairs.
 
-    |A∩B| via pair-first join order: expand candidate pairs with side A's
-    shingles (|pairs| × avg shingles — bounded), then equi-join side B on
-    (doc_b, shingle). Never materializes the full shingle×shingle product,
-    which is what makes this viable when the corpus is huge but the
-    candidate set (post-LSH/blocking) is small. |A∪B| = |A|+|B|-|A∩B|.
+    ``shingle_df`` carries one ``shingles`` array per document (distinct
+    elements — ``shingle_arrays`` or ``minhash_arrays(with_sets=True)``).
+    Each candidate pair joins both sides' arrays by id, so the work is
+    |pairs| × (|A|+|B|) — bounded by the candidate set, never the
+    shingle×shingle product. |A∩B| = size(array_intersect), |A∪B| =
+    |A|+|B|-|A∩B|.
     """
-    if "shingles" in shingle_df.columns:
-        a = shingle_df.select(F.col(id_col).alias("doc_a"), F.col("shingles").alias("sh_a"))
-        b = shingle_df.select(F.col(id_col).alias("doc_b"), F.col("shingles").alias("sh_b"))
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        # extra pair columns (e.g. a signature-agreement count) pass
-        # through, so callers never re-spell the jaccard convention
-        extras = [c for c in pairs.columns if c not in ("doc_a", "doc_b")]
-        return (
-            pairs.join(a, "doc_a")
-            .join(b, "doc_b")
-            .select(
-                "doc_a",
-                "doc_b",
-                *extras,
-                # exact-int half-up round: union size can reduce to a
-                # 2^7·5^t denominator where float round(x, 6) splits
-                # engines (functions/numeric.py)
-                round6_ratio(
-                    inter, F.size("sh_a") + F.size("sh_b") - inter
-                ).alias("jaccard"),
-            )
-        )
-    sizes = shingle_df.groupBy(id_col).agg(F.count("*").alias("sz"))
-    a = shingle_df.select(F.col(id_col).alias("doc_a"), "shingle")
-    b = shingle_df.select(F.col(id_col).alias("doc_b"), "shingle")
-    inter = (
-        pairs.join(a, "doc_a")
-        .join(b, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("sz").alias("sz_b"))
+    a = shingle_df.select(F.col(id_col).alias("doc_a"), F.col("shingles").alias("sh_a"))
+    b = shingle_df.select(F.col(id_col).alias("doc_b"), F.col("shingles").alias("sh_b"))
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    # extra pair columns (e.g. a signature-agreement count) pass
+    # through, so callers never re-spell the jaccard convention
+    extras = [c for c in pairs.columns if c not in ("doc_a", "doc_b")]
     return (
-        pairs.join(inter, ["doc_a", "doc_b"], "left")
-        .join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("n_inter", F.coalesce("n_inter", F.lit(0)))
+        pairs.join(a, "doc_a")
+        .join(b, "doc_b")
         .select(
             "doc_a",
             "doc_b",
+            *extras,
+            # exact-int half-up round: union size can reduce to a
+            # 2^7·5^t denominator where float round(x, 6) splits
+            # engines (functions/numeric.py)
             round6_ratio(
-                F.col("n_inter"), F.col("sz_a") + F.col("sz_b") - F.col("n_inter")
+                inter, F.size("sh_a") + F.size("sh_b") - inter
             ).alias("jaccard"),
         )
     )

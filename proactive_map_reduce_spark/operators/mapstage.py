@@ -1,4 +1,4 @@
-"""The black-box map stage (SURVEY §2.4 M1/M2, C3 tokenizer seam).
+"""The black-box map stage (SURVEY §2.4 M1/M2).
 
 The reference's map stage is an LLM forward pass (prefill + greedy decode,
 `test_proactive.py:291-335`, `pipeline_70b_samsum.py:260-303`). In this
@@ -27,27 +27,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from ..functions.hashing import py_token_id
-
-# --- C3: stand-in tokenizer -------------------------------------------------
-
-
-@F.pandas_udf(T.ArrayType(T.LongType()))
-def tokenize_standin(texts: pd.Series) -> pd.Series:
-    """Deterministic stand-in tokenizer: md5-derived id per whitespace word.
-
-    Mirrors the tokenizer seam at pipeline_70b_samsum.py:150,170 as the
-    Arrow-UDF twin of the relational ``token_id(split(text, ' '))`` path
-    (which the registry queries use) — the two must agree row-for-row,
-    INCLUDING on the empty string, where split(' ') yields one empty
-    token exactly like F.split does (''.split(' ') == ['']). Only NULL
-    text maps to an empty token list.
-    """
-    return texts.map(
-        lambda t: [py_token_id(w) for w in t.split(" ")] if t is not None else []
-    )
-
 
 # --- M1: pluggable model stage ----------------------------------------------
 

@@ -3,10 +3,15 @@
 Image/audio/video payloads are opaque ``binary`` columns with typed
 metadata. The Spark-side plumbing — schema, Arrow batch shape, mapInPandas
 signature, partition inheritance — is real and tested; the actual media
-decode is STUBBED (decode libraries are not in this container): the
-default codec raises ``NotImplementedError`` and tests/queries use the
-deterministic fake codec, which derives pseudo metadata from the payload
-hash so results are value-checkable.
+decode is STUBBED (no media decode library is a dependency): the default
+codec is the deterministic fake codec, which derives pseudo metadata from
+the payload hash so results are value-checkable.
+
+Codec seam (pinned by tests/test_multimodal_codec.py): a codec is any
+``(payload bytes, media_type) -> {width, height, n_frames}`` callable
+passed as ``extract_features(codec=...)``. It runs inside the Arrow batch
+loop, so swapping in a real decoder changes ZERO plan nodes — same single
+narrow mapInPandas stage, same schema, no exchange.
 
 Scale notes: payloads stay in executor memory only for the lifetime of an
 Arrow batch (`maxRecordsPerBatch` bounds it); feature extraction is a
@@ -48,22 +53,6 @@ def attach_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
         .when(F.col("doc_id") % 3 == 1, "audio")
         .otherwise("video")
         .alias("media_type"),
-    )
-
-
-def real_decode(payload: bytes, media_type: str) -> dict:
-    """The real decode seam. Media libs are not available in this container.
-
-    Seam contract (pinned by tests/test_multimodal_codec.py): a codec is
-    any ``(payload bytes, media_type) -> {width, height, n_frames}``
-    callable; it executes inside the Arrow batch loop, so swapping
-    fake_decode for a real decoder (the test drops in a pure-python PPM
-    parser, and Pillow where installed) changes ZERO plan nodes — same
-    single narrow mapInPandas stage, same schema, no exchange.
-    """
-    raise NotImplementedError(
-        "media decode requires PIL/torchaudio/ffmpeg; plug a codec into "
-        "extract_features(codec=...)"
     )
 
 

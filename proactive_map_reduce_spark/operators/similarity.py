@@ -5,8 +5,9 @@ bucketed variant as the 100 TB scale path.
 
 Scale design:
 - Brute force is O(|Q|·|C|): acceptable only because the query set is
-  broadcast (small); candidates stream through one narrow stage — no
-  shuffle of the corpus. Ranking shuffles only (query_id, cos) pairs.
+  small and rides into the plan as literals; candidates stream through
+  one narrow stage — no shuffle of the corpus. Ranking shuffles only
+  (query_id, cos) pairs.
 - The LSH variant buckets vectors by the sign pattern of their leading
   dimensions (a deterministic random-hyperplane sketch with axis-aligned
   planes): candidate generation becomes an equi-join on bucket id, so the
@@ -156,7 +157,6 @@ def unrolled_norm(a, dim: int):
 def brute_force_topk(
     emb: DataFrame, n_queries: int = 8, k: int = 5, id_col: str = "vec_id",
     vec_col: str = "embedding", dim: int | None = None,
-    parameterize_queries: bool = True,
 ) -> DataFrame:
     """Exact cosine top-k of every corpus vector for the first n query vecs.
 
@@ -166,101 +166,74 @@ def brute_force_topk(
     interpreted-eval, the |Q|× norm recomputation, and the per-term py4j
     construction cost.
 
-    With ``parameterize_queries`` (default), the n query vectors are
-    fetched at plan-build time (one pushed-filter job over |Q| rows) and
-    ride into the plan as literals — exactly how a serving system
-    receives query vectors as request parameters, and the same
-    model-state pattern as ``ivf_topk``'s centroids. The pair stage is
-    then a single narrow projection over ONE corpus scan: no broadcast
-    exchange, no second scan. For large query SETS (thousands+, where
-    literal plans bloat), pass False to get the broadcast-join form —
-    that is the right scale shape when the query side is itself a table.
+    The n query vectors are fetched at plan-build time (one pushed-filter
+    job over |Q| rows) and ride into the plan as literals — exactly how a
+    serving system receives query vectors as request parameters, and the
+    same model-state pattern as ``ivf_topk``'s centroids. The pair stage
+    is then a single narrow projection over ONE corpus scan: no
+    broadcast exchange, no second scan.
+
+    A query vector with a NULL component (or a NULL vector) has no
+    literal spelling and no defined cosine; it raises ``ValueError``
+    naming its id. NaN and ±Infinity components are spelled as SQL
+    double casts and flow through the arithmetic like any double.
     """
     dim = _dim_of(emb, vec_col) if dim is None else dim
     base = emb.select(
         F.col(id_col), _as_double(F.col(vec_col)).alias("v")
     ).withColumn("nv", unrolled_norm("v", dim))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
+    qrows = (
+        base.filter(F.col(id_col) < n_queries)
+        .select(id_col, "v", "nv")
+        .collect()
     )
-    if parameterize_queries:
-        qrows = (
-            base.filter(F.col(id_col) < n_queries)
-            .select(id_col, "v", "nv")
-            .collect()
+    if not qrows:
+        # F.array() with zero args is array<null> — explode + struct
+        # field access would fail analysis. An empty query set has a
+        # well-defined answer: no rows, in the output schema.
+        return emb.sparkSession.createDataFrame(
+            [],
+            "query_id bigint, neighbor_id bigint, cos_sim double, rank int",
         )
-        if not qrows:
-            # F.array() with zero args is array<null> — explode + struct
-            # field access would fail analysis. An empty query set has a
-            # well-defined answer: no rows, in the output schema.
-            return emb.sparkSession.createDataFrame(
-                [],
-                "query_id bigint, neighbor_id bigint, cos_sim double, rank int",
-            )
-        # ONE literal in the plan (r14): the queries ride in as
-        # `inline(array(named_struct('query_id', …, 'qv', array(…),
-        # 'nq', …)))` — a single foldable Generate input, so (query_id,
-        # qv, nq) come out as plain GENERATE ATTRIBUTES. The r13 packed
-        # form (three array literals indexed by the explode position)
-        # optimized small, but CollapseProject re-inlined the whole
-        # |Q|×dim vector literal into EVERY one of the `dim` dot-product
-        # terms (`GetArrayItem(literal, qi)` counts as cheap), blowing
-        # the physical plan to ~666 KB — the per-action optimizer walk
-        # and codegen setup over that tree, not the arithmetic, was the
-        # cost. Struct-field extraction over a Generate attribute
-        # carries no literal, so the plan stays ~15 KB with IDENTICAL
-        # arithmetic (same chunked IEEE association, same doubles — the
-        # literals round-trip through repr() exactly like the C4
-        # schedule constants). Measured at sf0.1, interleaved same
-        # session: 0.343 → 0.221 s median; rows verified identical.
-        # Floats ride through repr(); non-finite components (never in a
-        # real norm path, but vectors can carry garbage) spell the SQL
-        # cast form instead.
-        def _d(x: float) -> str:
-            import math as _math
+    # ONE literal in the plan: the queries ride in as
+    # `inline(array(named_struct('query_id', …, 'qv', array(…),
+    # 'nq', …)))` — a single foldable Generate input, so (query_id, qv,
+    # nq) come out as plain GENERATE ATTRIBUTES. A packed form (three
+    # array literals indexed by the explode position) lets
+    # CollapseProject re-inline the whole |Q|×dim vector literal into
+    # EVERY one of the `dim` dot-product terms (`GetArrayItem(literal,
+    # qi)` counts as cheap), blowing the physical plan to ~666 KB — the
+    # per-action optimizer walk and codegen setup over that tree, not
+    # the arithmetic, was the cost. Struct-field extraction over a
+    # Generate attribute carries no literal, so the plan stays ~15 KB
+    # with the same chunked IEEE association. Floats ride through
+    # repr() (exact round-trip, like the C4 schedule constants);
+    # non-finite components spell the SQL cast form instead.
+    def _d(x: float | None, vec_id) -> str:
+        import math as _math
 
-            if _math.isnan(x):
-                return "CAST('NaN' AS DOUBLE)"
-            if _math.isinf(x):
-                return f"CAST('{'-' if x < 0 else ''}Infinity' AS DOUBLE)"
-            return repr(float(x)) + "D"
+        if x is None:
+            raise ValueError(
+                f"brute_force_topk: query {id_col}={vec_id} has a NULL "
+                "vector component or norm; a query vector needs every "
+                "component"
+            )
+        if _math.isnan(x):
+            return "CAST('NaN' AS DOUBLE)"
+        if _math.isinf(x):
+            return f"CAST('{'-' if x < 0 else ''}Infinity' AS DOUBLE)"
+        return repr(float(x)) + "D"
 
-        structs = ", ".join(
-            "named_struct('query_id', {i}L, 'qv', array({vec}), 'nq', {nq})".format(
-                i=int(r[id_col]),
-                vec=", ".join(_d(x) for x in r["v"]),
-                nq=_d(r["nv"]),
-            )
-            for r in qrows
-        )
-        scored = (
-            base.select(
-                id_col, "v", "nv", F.expr(f"inline(array({structs}))")
-            )
-            .filter(F.col(id_col) != F.col("query_id"))
-            .select(
-                "query_id",
-                F.col(id_col).alias("neighbor_id"),
-                F.round(
-                    cos_expr(
-                        unrolled_dot("qv", "v", dim),
-                        F.col("nq") * F.col("nv"),
-                    ),
-                    6,
-                ).alias("cos_sim"),
-            )
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= k)
-        )
-    queries = base.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nv").alias("nq"),
-    )
+    def _struct(r) -> str:
+        qid = int(r[id_col])
+        nq = _d(r["nv"], qid)  # a NULL vector or component has a NULL norm
+        v = r["v"]
+        vec = ", ".join(_d(x, qid) for x in ([None] if v is None else v))
+        return f"named_struct('query_id', {qid}L, 'qv', array({vec}), 'nq', {nq})"
+
+    structs = ", ".join(_struct(r) for r in qrows)
     scored = (
-        base.crossJoin(F.broadcast(queries))
+        base.select(id_col, "v", "nv", F.expr(f"inline(array({structs}))"))
         .filter(F.col(id_col) != F.col("query_id"))
         .select(
             "query_id",
@@ -270,6 +243,9 @@ def brute_force_topk(
                 6,
             ).alias("cos_sim"),
         )
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("int"))

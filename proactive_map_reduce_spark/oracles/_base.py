@@ -201,9 +201,9 @@ ans AS (
 
 
 def _shingles_from(src: str) -> str:
-    # WHERE ws IS NOT NULL mirrors the engine's explode semantics: a
-    # null-text document has NO word rows at all, so it never reaches
-    # the shingle/signature domain (DuckDB's greatest(NULL,0)=0 would
+    # WHERE ws IS NOT NULL mirrors shingle_arrays' null filter: a
+    # null-text document has no shingle array, so it never reaches the
+    # shingle/signature domain (DuckDB's greatest(NULL,0)=0 would
     # otherwise mint one phantom NULL-shingle row per null doc — the
     # nulls value gate caught q_minhash_signatures off by those rows)
     return f"""
@@ -220,7 +220,7 @@ _SHINGLES = _shingles_from("documents")
 
 
 # distinct hashed shingles per doc — both signatures and candidate
-# Jaccard run over these (mirrors minhash_with_sets collecting h0 sets)
+# Jaccard run over these (mirrors minhash_arrays(with_sets=True)'s h0 sets)
 _HS = f"hs AS (SELECT DISTINCT doc_id, {_h('shingle')} % {MINHASH_PRIME} AS h0 FROM sh)"
 
 

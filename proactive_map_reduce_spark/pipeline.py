@@ -23,8 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.scoring import bleu_udf, set_f1
-from .functions.text import exact_match, norm_tokens
+from .functions.scoring import bleu_udf, pair_scores
 from .operators import chunking, mapstage
 from .operators import reduce as red
 
@@ -57,18 +56,18 @@ class ProactivePipeline:
         return red.incremental_concat(mapped_df)
 
     def score(self, final_df: DataFrame, gt_df: DataFrame) -> DataFrame:
-        """Join ground truth and score: set-F1 (A6), exact/substring match
-        (F3/F4) and BLEU (F6) over normalized word sets."""
+        """Join ground truth and score: set-F1 (A6) and exact match (F3)
+        over normalized word sets, each side normalized once
+        (``scoring.pair_scores``), plus BLEU (F6)."""
         j = final_df.join(gt_df.select("doc_id", "gt_text"), "doc_id")
-        # norm_tokens, not a bare split: an empty normalization must yield
-        # ZERO tokens (not ['']) so set_f1's no-answer branch fires
-        p = norm_tokens(F.col("final_text"))
-        g = norm_tokens(F.col("gt_text"))
-        return j.select(
+        scored = pair_scores(
+            j, "final_text", "gt_text", f1_col="f1", em_col="exact_match"
+        )
+        return scored.select(
             "doc_id",
             "n_chunks",
-            set_f1(p, g).alias("f1"),
-            exact_match(F.col("final_text"), F.col("gt_text")).alias("exact_match"),
+            "f1",
+            "exact_match",
             bleu_udf(F.col("final_text"), F.col("gt_text")).alias("bleu"),
         )
 

@@ -24,9 +24,7 @@ def q_dedup_exact(spark, sf_dir):
 
 def q_minhash_signatures(spark, sf_dir):
     """MinHash signatures (16 portable hash functions over 3-gram shingles),
-    computed as a narrow array projection — zero shuffles (r13: the
-    array-HOF builder replaces the word-explode + window + groupBy path;
-    values identical, the word-row exchange is gone)."""
+    computed as a narrow array projection — zero shuffles."""
     return dedup_ops.minhash_arrays(_docs(spark, sf_dir), MINHASH_N)
 
 
@@ -34,10 +32,9 @@ def q_dedup_minhash_pairs(spark, sf_dir):
     """MinHash-LSH candidate pairs (4 bands × 4 rows) with exact Jaccard.
 
     Signatures and shingle sets come from ONE combined pass (persisted):
-    since r13 the zero-shuffle array-HOF builder — one md5 pass, no word
-    explosion, no shingle window — the banding self-join and the
-    candidate Jaccard both reuse it instead of re-deriving the corpus
-    pipeline."""
+    the zero-shuffle array-HOF builder — one md5 pass, no word
+    explosion — and the banding self-join and the candidate Jaccard both
+    reuse it instead of re-deriving the corpus pipeline."""
     combined = dedup_ops.minhash_arrays(
         _docs(spark, sf_dir), MINHASH_N, with_sets=True
     ).persist()
@@ -123,12 +120,9 @@ def q_dedup_ngram_jaccard(spark, sf_dir):
     pairs = dedup_ops.capped_block_pairs(
         blocked, ["lang", "blk_bucket"], max_block=NGRAM_BLOCK_CAP
     )
-    # r13: per-doc shingle arrays straight off the scan — the former
-    # shingle_sets path paid a word explode + window + collect_set
-    # groupBy (one full word-row exchange) to build the same distinct
-    # string sets; array_intersect Jaccard is order-insensitive, so the
-    # set is all that matters. Null-text docs are filtered exactly like
-    # the explode path dropped them (posexplode of a null split).
+    # per-doc shingle arrays straight off the scan: no word-row
+    # exchange, and array_intersect Jaccard is order-insensitive, so the
+    # distinct set is all that matters. Null-text docs emit no row.
     from ..sources.tables import ensure_parallelism
 
     sets = dedup_ops.shingle_arrays(
@@ -540,19 +534,14 @@ def q_decontaminate(spark, sf_dir):
     training document sharing any {DECONTAM_NGRAM}-gram with the held-out
     benchmark set (stand-in: docs with doc_id % 17 == 0).
 
-    Shape (r14, the last window-shingle consumer): 5-gram shingles on
-    BOTH sides as per-document ARRAYS (`dedup.shingle_arrays`, the same
-    zero-shuffle builder the minhash family moved to in r13) — the
-    distinct hashed-gram set is built array-locally, so the former
-    explode → doc_id exchange → sort → 4×lead window pipeline (one full
-    word-row shuffle PER SIDE) is gone; what remains exchanged is the
-    two countDistinct aggregations. Gram strings are identical to the
-    window form (all full n-grams plus one partial gram for docs
-    shorter than n — the documented shingle_arrays/shingle_rows
-    parity), per-doc array_distinct of the hashes equals the former
-    row-level distinct, and null text emits nothing on both forms. The
+    Shape: 5-gram shingles on BOTH sides as per-document ARRAYS
+    (`dedup.shingle_arrays`, the zero-shuffle builder the minhash family
+    uses) — the distinct hashed-gram set is built array-locally, so no
+    word row is exchanged; what is exchanged is the two countDistinct
+    aggregations. The gram set is every full n-gram plus one partial
+    gram for docs shorter than n, and null text emits nothing. The
     explode feeding the join goes through ``chunking.gen_barrier`` (same
-    r14 split_words fix) so the gram transform is not re-inlined into
+    fix as split_words) so the gram transform is not re-inlined into
     an inferred pre-Generate filter. At 100 TB the benchmark side is
     tiny (eval suites), so the join broadcasts; candidate work is
     proportional to true collisions — never a cross product. Output:

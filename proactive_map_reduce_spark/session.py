@@ -182,7 +182,7 @@ def get_spark(app_name: str = "proactive_map_reduce_spark") -> SparkSession:
     # Python WORKERS must be able to import this package: the driver's
     # sys.path (examples/ scripts insert the repo dir) is NOT inherited
     # by executor workers, so a pandas UDF that references a package
-    # function (the stand-in tokenizer's py_token_id) deserializes with
+    # function (e.g. mapstage.standin_model) deserializes with
     # ModuleNotFoundError whenever the driver runs from another cwd.
     # Exporting PYTHONPATH BEFORE the JVM launches fixes every fork of
     # the worker daemon; on a real cluster the packaged equivalent is

@@ -40,35 +40,6 @@ def test_bucketed_join_has_no_exchange_and_matches_plain_join(no_broadcast):
         spark.sql("DROP TABLE IF EXISTS ord_b")
 
 
-def test_compaction_reduces_files_preserves_rows(spark):
-    """32 task-sized fragments compact to the planned file count with
-    identical content (order-insensitive)."""
-    import glob
-    import tempfile
-
-    from proactive_map_reduce_spark.sources.compaction import (
-        compact,
-        plan_compaction,
-    )
-    from tests.conftest import SF0001
-
-    src = tempfile.mkdtemp(prefix="pmr_frag_") + "/docs"
-    dst = tempfile.mkdtemp(prefix="pmr_compact_") + "/docs"
-    docs = spark.read.parquet(SF0001 + "/documents.parquet")
-    docs.repartition(32).write.parquet(src)
-    assert len(glob.glob(src + "/part-*.parquet")) == 32
-
-    # tiny target => plan collapses the fragments to very few files
-    n_planned = plan_compaction(src, target_file_mb=1)
-    out = compact(spark, src, dst, target_file_mb=1)
-    n_files = len(glob.glob(dst + "/part-*.parquet"))
-    assert n_files <= max(n_planned, 1) < 32
-    assert out.count() == docs.count()
-    a = {r["doc_id"] for r in out.select("doc_id").collect()}
-    b = {r["doc_id"] for r in docs.select("doc_id").collect()}
-    assert a == b
-
-
 def test_q_bucketed_join_zero_exchange_smj_under_no_broadcast(no_broadcast):
     """The registry query's scale contract: with broadcast off (the 100 TB
     regime where neither side fits an executor), the join is a

@@ -142,8 +142,7 @@ def test_partition_equal_reassembles_to_original(spark):
         [(1, "a b c d e f g h i j k"), (2, "x y z"), (3, "solo")],
         "doc_id int, text string",
     )
-    words = chunking.split_words(docs)
-    chunks = chunking.partition_equal(words, 4)
+    chunks = chunking.partition_equal_arrays(docs, 4)
     joined = (
         chunks.groupBy("doc_id")
         .agg(
@@ -174,32 +173,40 @@ def test_positional_shift_is_exclusive_prefix_sum(spark):
 
 
 def test_partition_equal_arrays_matches_grouped_form(spark):
+    """C1 rows equal the reference's equal-partition rule
+    (test_proactive.py:192-199) written inline: partition_size =
+    n // num_steps, chunk i is words[i*ps:(i+1)*ps], the LAST chunk takes
+    the remainder, and empty chunks are not emitted."""
+    lengths = [1, 3, 4, 5, 9, 17, 40]
     docs = spark.createDataFrame(
-        [(i, " ".join(f"w{j}" for j in range(n))) for i, n in enumerate([1, 3, 4, 5, 9, 17, 40])],
+        [(i, " ".join(f"w{j}" for j in range(n))) for i, n in enumerate(lengths)],
         "doc_id long, text string",
     )
-    a = {
+    num_steps = 4
+    want = {}
+    for i, n in enumerate(lengths):
+        ws = [f"w{j}" for j in range(n)]
+        ps = n // num_steps
+        for c in range(num_steps):
+            part = ws[c * ps :] if c == num_steps - 1 else ws[c * ps : (c + 1) * ps]
+            if part:
+                want[(i, c)] = (" ".join(part), len(part))
+    got = {
         (r["doc_id"], r["chunk_id"]): (r["chunk_text"], r["n_words"])
-        for r in chunking.partition_equal_arrays(docs, 4).collect()
+        for r in chunking.partition_equal_arrays(docs, num_steps).collect()
     }
-    b = {
-        (r["doc_id"], r["chunk_id"]): (r["chunk_text"], r["n_words"])
-        for r in chunking.partition_equal(chunking.split_words(docs), 4).collect()
-    }
-    assert a == b
+    assert got == want
 
 
 def test_ratio_schedule_from_target_matches_reference_loop(spark):
     """C4 reference parameterization (test_proactive.py:141-147): the
-    increment is derived from (low, num_doc, target ratio). The engine
-    array must be bit-equal (up to the engine-wide 6-dp display round)
-    to the reference loop re-derived here in pure Python."""
+    increment is derived from (low, num_doc, target ratio) by the
+    engine's ``derived_increment``. The ramp the C4 queries build from it
+    must be bit-equal (up to the engine-wide 6-dp display round) to the
+    reference loop re-derived here in pure Python."""
     from pyspark.sql import functions as F
 
-    from proactive_map_reduce_spark.operators.chunking import (
-        ratio_schedule_from_target,
-        ratio_schedule_uniform,
-    )
+    from proactive_map_reduce_spark.operators.chunking import derived_increment
 
     def reference_split_ratio(low, num_doc, ratio):
         out, increment = [], (2 * ratio - low) / num_doc
@@ -208,16 +215,16 @@ def test_ratio_schedule_from_target_matches_reference_loop(spark):
         return out
 
     for low, n, target in ((0.1, 4, 0.45), (0.2, 6, 0.6), (0.0, 3, 0.9), (0.3, 5, 0.8)):
-        got = spark.range(1).select(
-            ratio_schedule_from_target(n, low, target).alias("r")
-        ).collect()[0]["r"]
+        inc = derived_increment(n, low, target)
+        rows = spark.range(n).select(
+            "id",
+            F.round(
+                F.least(F.lit(low) + F.col("id") * F.lit(inc), F.lit(1.0)), 6
+            ).alias("r"),
+        )
+        got = [r["r"] for r in sorted(rows.collect())]
         exp = [round(v, 6) for v in reference_split_ratio(low, n, target)]
         assert got == exp, (low, n, target)
-
-    got = spark.range(1).select(
-        ratio_schedule_uniform(4, 0.35).alias("r")
-    ).collect()[0]["r"]
-    assert got == [0.35] * 4  # test_proactive.py:149-150
 
 
 def test_rechunk_short_doc_is_single_chunk(spark):

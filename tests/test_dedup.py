@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from proactive_map_reduce_spark.operators import chunking, dedup
+from proactive_map_reduce_spark.operators import dedup
 
 
 def _corpus(spark):
@@ -24,8 +24,7 @@ def test_exact_dedup_groups_identical_docs(spark):
 
 
 def test_minhash_signature_deterministic_and_identical_for_dups(spark):
-    words = chunking.split_words(_corpus(spark))
-    sig = dedup.minhash_signatures(dedup.shingle_rows(words)).collect()
+    sig = dedup.minhash_arrays(_corpus(spark)).collect()
     rows = {r["doc_id"]: tuple(r[f"mh_{j}"] for j in range(16)) for r in sig}
     assert rows[0] == rows[1]  # identical docs → identical signatures
     # near-dup shares most minhashes; far doc shares almost none
@@ -36,8 +35,7 @@ def test_minhash_signature_deterministic_and_identical_for_dups(spark):
 
 
 def test_lsh_finds_near_dups_not_far_pairs(spark):
-    words = chunking.split_words(_corpus(spark))
-    sig = dedup.minhash_signatures(dedup.shingle_rows(words))
+    sig = dedup.minhash_arrays(_corpus(spark))
     pairs = {
         (r["doc_a"], r["doc_b"]) for r in dedup.lsh_candidate_pairs(sig).collect()
     }
@@ -46,34 +44,43 @@ def test_lsh_finds_near_dups_not_far_pairs(spark):
 
 
 def test_jaccard_exact_values(spark):
-    df = _corpus(spark)
-    words = chunking.split_words(df)
-    sh = dedup.shingle_sets(words)
-    pairs = spark.createDataFrame([(0, 1), (0, 3)], "doc_a int, doc_b int")
+    sh = dedup.shingle_arrays(_corpus(spark))
+    pairs = spark.createDataFrame(
+        [(0, 1), (0, 2), (0, 3)], "doc_a int, doc_b int"
+    )
     got = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in dedup.jaccard_pairs(sh.select(F.col("doc_id"), "shingles"), pairs).collect()
+        for r in dedup.jaccard_pairs(sh, pairs).collect()
     }
     assert got[(0, 1)] == 1.0
     assert got[(0, 3)] == 0.0
+    # the 1-word edit replaces the last of 12 3-grams: 11 shared, 13 in
+    # the union
+    assert got[(0, 2)] == round(11 / 13, 6)
+
+
+def _py_grams(text: str, n: int) -> set[str]:
+    """The shingle rule in plain Python: every full n-gram of the
+    space-split text, plus one partial gram for texts shorter than n."""
+    ws = text.split(" ")
+    return {" ".join(ws[i : i + n]) for i in range(max(len(ws) - n, 0) + 1)}
 
 
 def test_shingle_rows_matches_shingle_arrays(spark):
-    """The codegen'd window path and the array HOF path produce the same
-    distinct shingle sets."""
-    df = _corpus(spark)
-    words = chunking.split_words(df)
-    a = (
-        dedup.shingle_rows(words)
-        .groupBy("doc_id")
-        .agg(F.sort_array(F.collect_set("shingle")).alias("s"))
-    )
-    b = dedup.shingle_arrays(df).select(
-        "doc_id", F.sort_array(F.col("shingles")).alias("s")
-    )
-    rows_a = {r["doc_id"]: r["s"] for r in a.collect()}
-    rows_b = {r["doc_id"]: r["s"] for r in b.collect()}
-    assert rows_a == rows_b
+    """shingle_arrays yields exactly the distinct n-gram set of the
+    plain-Python shingle rule, on normal, short, empty, unicode and null
+    text."""
+    docs = _mixed_corpus(spark)
+    for n in (3, 5):
+        got = {
+            r["doc_id"]: r["shingles"]
+            for r in dedup.shingle_arrays(docs, n=n).collect()
+        }
+        want = {
+            i: _py_grams(t, n) for i, t in docs.collect() if t is not None
+        }
+        assert {i: set(g) for i, g in got.items()} == want, n
+        assert all(len(g) == len(set(g)) for g in got.values())  # distinct
 
 
 def test_simhash_close_for_near_dups(spark):
@@ -381,19 +388,34 @@ def _mixed_corpus(spark):
 
 
 def test_minhash_arrays_matches_window_form(spark):
-    """minhash_arrays (zero-shuffle HOF builder) must agree row-for-row
-    with the window-lead explode reference — signatures exactly, shingle
-    payloads as SETS (collect_set vs array_distinct order differs; every
-    consumer is order-insensitive)."""
+    """minhash_arrays must agree row-for-row with the q_minhash_signatures
+    DuckDB oracle on the edge corpus — signatures exactly, and the
+    ``with_sets`` payload as the oracle's distinct hashed-shingle SETS
+    (array order is unspecified; every consumer is order-insensitive)."""
+    import duckdb
+    import pandas as pd
+
+    from proactive_map_reduce_spark.oracles import ORACLES
+    from proactive_map_reduce_spark.oracles._base import _HS, _SHINGLES
+
     docs = _mixed_corpus(spark)
-    ref = {
-        r["doc_id"]: (
-            tuple(r[f"mh_{j}"] for j in range(16)),
-            frozenset(r["shingles"]),
-        )
-        for r in dedup.minhash_with_sets(
-            dedup.shingle_rows(chunking.split_words(docs))
-        ).collect()
+    con = duckdb.connect()
+    con.register(
+        "documents", pd.DataFrame(docs.collect(), columns=["doc_id", "text"])
+    )
+    want_sig = {
+        r[0]: tuple(r[1:])
+        for r in con.execute(
+            "SELECT doc_id, "
+            + ", ".join(f"mh_{j}" for j in range(16))
+            + f" FROM ({ORACLES['q_minhash_signatures']})"
+        ).fetchall()
+    }
+    want_sets = {
+        r[0]: frozenset(r[1])
+        for r in con.execute(
+            f"WITH {_SHINGLES}, {_HS} SELECT doc_id, list(h0) FROM hs GROUP BY doc_id"
+        ).fetchall()
     }
     got = {
         r["doc_id"]: (
@@ -402,8 +424,9 @@ def test_minhash_arrays_matches_window_form(spark):
         )
         for r in dedup.minhash_arrays(docs, 16, with_sets=True).collect()
     }
-    assert got == ref
-    assert 6 not in got  # null text emits no signature row on either path
+    assert {i: g[0] for i, g in got.items()} == want_sig
+    assert {i: g[1] for i, g in got.items()} == want_sets
+    assert 6 not in got  # null text emits no signature row
 
 
 def test_simhash_hof_matches_explode_reference(spark):
@@ -454,10 +477,11 @@ def test_shingle_arrays_drops_null_text(spark):
 
 
 def test_decontaminate_arrays_matches_window_form(spark):
-    """The r14 array-HOF decontamination (per-doc distinct hashed-gram
-    arrays) must agree row-for-row with the r13 window-lead shingle-row
-    form it replaced, on the edge corpus (dup docs → shared grams, short
-    docs → partial grams, empty/null text, unicode)."""
+    """The array-HOF decontamination recipe (per-doc distinct hashed-gram
+    arrays, exploded through gen_barrier) must equal a plain-Python
+    rollup over the shingle rule's gram sets on the edge corpus (dup docs
+    → shared grams, short docs → partial grams, empty/null text,
+    unicode)."""
     from proactive_map_reduce_spark.functions.hashing import portable_hash64
     from proactive_map_reduce_spark.operators.chunking import gen_barrier
 
@@ -465,27 +489,7 @@ def test_decontaminate_arrays_matches_window_form(spark):
     n = 3  # 3-grams: the fixture docs are short; same recipe as n=5
     is_bench = F.col("doc_id") % 2 == 0
 
-    def rollup(train, bench):
-        hits = train.join(F.broadcast(bench), "g")
-        return {
-            r["doc_id"]: (r["n_contaminated_grams"], r["n_bench_docs_hit"])
-            for r in hits.groupBy("doc_id")
-            .agg(
-                F.countDistinct("g").cast("bigint").alias("n_contaminated_grams"),
-                F.countDistinct("bench_id").cast("bigint").alias("n_bench_docs_hit"),
-            )
-            .collect()
-        }
-
-    old_grams = dedup.shingle_rows(chunking.split_words(docs), n=n).select(
-        "doc_id", portable_hash64("shingle").alias("g")
-    )
-    ref = rollup(
-        old_grams.filter(~is_bench).distinct(),
-        old_grams.filter(is_bench).select(F.col("doc_id").alias("bench_id"), "g").distinct(),
-    )
-
-    new_grams = (
+    grams = (
         dedup.shingle_arrays(docs, n=n)
         .select(
             "doc_id",
@@ -495,8 +499,24 @@ def test_decontaminate_arrays_matches_window_form(spark):
         )
         .select("doc_id", F.explode(gen_barrier(F.col("__gs"), "bigint")).alias("g"))
     )
-    got = rollup(
-        new_grams.filter(~is_bench),
-        new_grams.filter(is_bench).select(F.col("doc_id").alias("bench_id"), "g"),
-    )
-    assert got == ref and got  # non-empty: dup docs guarantee collisions
+    train = grams.filter(~is_bench)
+    bench = grams.filter(is_bench).select(F.col("doc_id").alias("bench_id"), "g")
+    got = {
+        r["doc_id"]: (r["n_contaminated_grams"], r["n_bench_docs_hit"])
+        for r in train.join(F.broadcast(bench), "g")
+        .groupBy("doc_id")
+        .agg(
+            F.countDistinct("g").cast("bigint").alias("n_contaminated_grams"),
+            F.countDistinct("bench_id").cast("bigint").alias("n_bench_docs_hit"),
+        )
+        .collect()
+    }
+
+    py = {i: _py_grams(t, n) for i, t in docs.collect() if t is not None}
+    bench_sets = [g for i, g in py.items() if i % 2 == 0]
+    want = {}
+    for i, g in py.items():
+        hit = {x for x in g if any(x in b for b in bench_sets)}
+        if i % 2 and hit:
+            want[i] = (len(hit), sum(1 for b in bench_sets if g & b))
+    assert got == want and got  # non-empty: dup docs guarantee collisions

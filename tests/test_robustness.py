@@ -28,9 +28,8 @@ def test_empty_documents_flow_through(spark):
     docs = spark.createDataFrame(
         [(1, ""), (2, "one"), (3, "a b c d")], "doc_id long, text string"
     )
-    words = chunking.split_words(docs)
-    # empty text splits to [''] → 1 word row; nothing crashes downstream
-    chunks = chunking.partition_equal(words, 4)
+    # empty text splits to [''] → one 1-word chunk; nothing crashes downstream
+    chunks = chunking.partition_equal_arrays(docs, 4)
     assert chunks.count() >= 3
     mapped = mapstage.llm_map(chunks)
     final = red.incremental_concat(mapped)
@@ -39,7 +38,7 @@ def test_empty_documents_flow_through(spark):
 
 def test_single_word_document_chunking(spark):
     docs = spark.createDataFrame([(1, "solo")], "doc_id long, text string")
-    chunks = chunking.partition_equal(chunking.split_words(docs), 4)
+    chunks = chunking.partition_equal_arrays(docs, 4)
     rows = chunks.collect()
     assert len(rows) == 1
     # ps = 0 → everything in the last chunk (reference loop semantics)
@@ -88,7 +87,7 @@ def test_dedup_on_empty_dataframe(spark):
 
 def test_minhash_single_doc_no_pairs(spark):
     docs = spark.createDataFrame([(1, "a b c d e")], "doc_id long, text string")
-    sig = dedup.minhash_with_sets(dedup.shingle_rows(chunking.split_words(docs)))
+    sig = dedup.minhash_arrays(docs, with_sets=True)
     pairs = dedup.lsh_candidate_pairs(sig)
     assert pairs.count() == 0
 

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from proactive_map_reduce_spark.operators import chunking, dedup
+from proactive_map_reduce_spark.operators import dedup
 from proactive_map_reduce_spark.queries._base import (
     MINHASH_BANDS,
     MINHASH_N,
@@ -59,9 +59,7 @@ def test_ngram_block_pairs_match_closed_form_exactly(spark):
 
 def test_lsh_band_pairs_bounded_by_closed_form(spark):
     docs = spark.read.parquet(f"{SF0001}/documents.parquet")
-    sigs = dedup.minhash_signatures(
-        dedup.shingle_rows(chunking.split_words(docs)), MINHASH_N
-    )
+    sigs = dedup.minhash_arrays(docs, MINHASH_N)
     banded = dedup.band_rows(sigs, MINHASH_N, MINHASH_BANDS)
     pred, _ = _closed_form(
         banded, ["band_id", "band_hash"], dedup.LSH_MAX_BUCKET

@@ -154,19 +154,88 @@ def test_sketch_stats_accuracy(spark):
         assert s["p25"] <= e["median_chars"] <= s["p75"]
 
 
+def _canon_rows(cols, rows):
+    """tools/compare_oracle.py's comparison form: name-sorted columns,
+    canon()-stringified values (floats at 6 decimals, NaN as 'nan'),
+    sorted rows."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    from compare_oracle import canon
+
+    order = sorted(range(len(cols)), key=lambda i: cols[i])
+    return [cols[i] for i in order], sorted(
+        tuple(canon(r[i]) for i in order) for r in rows
+    )
+
+
+def _duck_similarity_topk(emb_path):
+    import duckdb
+
+    from proactive_map_reduce_spark.oracles import ORACLES
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{emb_path}'")
+    res = con.execute(ORACLES["q_similarity_topk"])
+    return _canon_rows([d[0] for d in res.description], res.fetchall())
+
+
 def test_brute_force_param_equals_broadcast(spark):
-    """The parameterized-literal query plan and the broadcast-join plan
-    are two physical strategies for the same logical query — result sets
-    must be bit-identical (same rounding, same tie-breaks)."""
-    emb = spark.read.parquet(f"{SF0001}/embeddings.parquet")
-    a = {tuple(r) for r in sim.brute_force_topk(emb, dim=64).collect()}
-    b = {
-        tuple(r)
-        for r in sim.brute_force_topk(
-            emb, dim=64, parameterize_queries=False
-        ).collect()
-    }
-    assert a == b and len(a) == 40
+    """The literal-query brute-force top-k equals the q_similarity_topk
+    DuckDB oracle on the sf0.001 embeddings, compared the way
+    tools/compare_oracle.py compares them (same rounding, same
+    tie-breaks)."""
+    path = f"{SF0001}/embeddings.parquet"
+    emb = spark.read.parquet(path)
+    got = sim.brute_force_topk(emb, dim=sim.EMBED_DIM)
+    spark_side = _canon_rows(got.columns, [tuple(r) for r in got.collect()])
+    assert spark_side == _duck_similarity_topk(path)
+    assert len(spark_side[1]) == 40
+
+
+def test_brute_force_topk_nonfinite_query_components(spark, tmp_path):
+    """NaN and ±Infinity query components ride into the plan as SQL
+    double casts and flow through the query: the rows equal the DuckDB
+    oracle's, and the non-finite queries score NaN cosines."""
+    dim = sim.EMBED_DIM
+    base = [1.0] * dim
+    queries = [
+        base,
+        [float("nan")] + base[1:],
+        [float("inf")] + base[1:],
+        base[:-1] + [float("-inf")],
+        base,
+    ]
+    rows = [(i, 0, v) for i, v in enumerate(queries)]
+    rows += [
+        (i, 0, [float((i * 7 + d) % 11) - 5.0 for d in range(dim)])
+        for i in range(len(queries), 14)
+    ]
+    path = str(tmp_path / "embeddings.parquet")
+    spark.createDataFrame(
+        rows, "vec_id long, label int, embedding array<float>"
+    ).write.parquet(path)
+    got = sim.brute_force_topk(spark.read.parquet(path), dim=dim)
+    out = [tuple(r) for r in got.collect()]
+    assert _canon_rows(got.columns, out) == _duck_similarity_topk(f"{path}/*.parquet")
+    for q in (1, 2, 3):
+        cos = [r[2] for r in out if r[0] == q]
+        assert len(cos) == 5 and all(c != c for c in cos), (q, cos)  # NaN
+
+
+def test_brute_force_topk_null_query_component_names_vec_id(spark):
+    """A NULL component in a query vector has no literal spelling and no
+    cosine: the operator raises ValueError naming the query's vec_id."""
+    import pytest
+
+    dim = 4
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0, 0.0]), (1, [1.0, None, 0.0, 0.0]), (9, [0.0, 1.0, 0.0, 0.0])],
+        "vec_id long, embedding array<double>",
+    )
+    with pytest.raises(ValueError, match=r"vec_id=1\b"):
+        sim.brute_force_topk(emb, n_queries=2, k=1, dim=dim)
 
 
 def test_kmv_distinct_operator_branches(spark):

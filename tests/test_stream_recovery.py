@@ -67,7 +67,7 @@ def test_stateful_accumulate_restart_restores_state(spark, tmp_path):
         [(1, "a b c d e f g h"), (2, "one two three four five six seven eight")],
         "doc_id long, text string",
     )
-    chunks = chunking.partition_equal(chunking.split_words(docs), 4)
+    chunks = chunking.partition_equal_arrays(docs, 4)
     src_root = stream_ops.write_stage_files(chunks)  # stage-0000k-*.parquet
     live = str(tmp_path / "live")
     os.makedirs(live)
@@ -340,7 +340,7 @@ def test_durable_sink_fresh_checkpoint_refuses_stale_out_dir(spark, tmp_path):
     stale = os.path.join(out_dir, "batch-000000007")
     os.makedirs(stale)
     docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
-    chunks = chunking.partition_equal(chunking.split_words(docs), 2)
+    chunks = chunking.partition_equal_arrays(docs, 2)
     src_root = stream_ops.write_stage_files(chunks)
     try:
         stream = (
@@ -369,7 +369,7 @@ def test_batched_runner_resume_refuses_fresh_state_or_out_dirs(
     docs = spark.createDataFrame(
         [(1, "a b c d"), (2, "p q r s")], "doc_id long, text string"
     )
-    chunks = chunking.partition_equal(chunking.split_words(docs), 2)
+    chunks = chunking.partition_equal_arrays(docs, 2)
     src_root = stream_ops.write_stage_files(chunks)
     out_dir = str(tmp_path / "out")
     state_dir = str(tmp_path / "state")
@@ -401,7 +401,7 @@ def test_run_to_parquet_resume_refuses_fresh_out_dir(spark, tmp_path):
     import pytest
 
     docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
-    chunks = chunking.partition_equal(chunking.split_words(docs), 2)
+    chunks = chunking.partition_equal_arrays(docs, 2)
     src_root = stream_ops.write_stage_files(chunks)
     ckpt = str(tmp_path / "ckpt")
     out_dir = str(tmp_path / "out")
@@ -478,7 +478,7 @@ def test_batched_runner_fresh_checkpoint_refuses_existing_state(
     import pytest
 
     docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
-    chunks = chunking.partition_equal(chunking.split_words(docs), 2)
+    chunks = chunking.partition_equal_arrays(docs, 2)
     src_root = stream_ops.write_stage_files(chunks)
     out_dir = str(tmp_path / "out")
 
@@ -508,7 +508,7 @@ def test_batched_runner_resumes_first_batch_window_kill(spark, tmp_path):
     docs = spark.createDataFrame(
         [(1, "a b c d"), (2, "p q r s")], "doc_id long, text string"
     )
-    chunks = chunking.partition_equal(chunking.split_words(docs), 2)
+    chunks = chunking.partition_equal_arrays(docs, 2)
     src_root = stream_ops.write_stage_files(chunks)
     ckpt = str(tmp_path / "ckpt")
     kw = dict(out_dir=str(tmp_path / "out"), checkpoint_dir=ckpt)

@@ -17,7 +17,7 @@ def _chunks(spark):
         [(1, "a b c d e f g h"), (2, "one two three four five six")],
         "doc_id long, text string",
     )
-    return chunking.partition_equal(chunking.split_words(docs), 4)
+    return chunking.partition_equal_arrays(docs, 4)
 
 
 def test_stage_pipeline_equals_batch(spark):
@@ -71,7 +71,7 @@ def test_stateful_accumulate_mode_equivalence(spark):
         ],
         "doc_id long, text string",
     )
-    chunks = chunking.partition_equal(chunking.split_words(docs), 4)
+    chunks = chunking.partition_equal_arrays(docs, 4)
     got = sorted(map(tuple, stream_ops.stateful_accumulate(spark, chunks).collect()))
     outs: dict = {}
     for r in sorted(
@@ -382,7 +382,7 @@ def test_refeed_batched_multi_stage_batch_folds_in_arrival_order(spark, tmp_path
     docs = spark.createDataFrame(
         [(1, "a b c d e f"), (2, "x y z w u v")], "doc_id long, text string"
     )
-    chunks = chunking.partition_equal(chunking.split_words(docs), 3)
+    chunks = chunking.partition_equal_arrays(docs, 3)
     live = str(tmp_path / "live")
     os.makedirs(live)
     base = 1_700_000_000

@@ -86,9 +86,8 @@ def main() -> int:
     def intermediate():
         """The staged-pipeline intermediate: chunked docs through the
         black-box map stage — rebuilt fresh so each persist owns its
-        lineage (a shared DataFrame would reuse shuffle files across
-        tiers and fake the recompute numbers)."""
-        chunks = chunking.partition_equal(chunking.split_words(docs), 4)
+        lineage and no tier reuses another tier's state."""
+        chunks = chunking.partition_equal_arrays(docs, 4)
         return mapstage.llm_map(chunks)
 
     def consume(df) -> float:

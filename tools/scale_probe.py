@@ -133,7 +133,7 @@ def star_cap_closed_form(blocked, block_cols, k):
 def probe(spark, sf_dir: str, with_cc: bool = True) -> dict:
     from pyspark.sql import functions as F
 
-    from proactive_map_reduce_spark.operators import chunking, dedup
+    from proactive_map_reduce_spark.operators import dedup
     from proactive_map_reduce_spark.queries._base import (
         MINHASH_BANDS,
         MINHASH_N,
@@ -147,9 +147,7 @@ def probe(spark, sf_dir: str, with_cc: bool = True) -> dict:
 
     # --- LSH band-bucket path (K=256, 4 bands: the minhash/clusters path)
     t0 = time.time()
-    sigs = dedup.minhash_signatures(
-        dedup.shingle_rows(chunking.split_words(docs)), MINHASH_N
-    ).persist()
+    sigs = dedup.minhash_arrays(docs, MINHASH_N).persist()
     banded = dedup.band_rows(sigs, MINHASH_N, MINHASH_BANDS)
     pred, n_blocks, max_blk, uncapped = star_cap_closed_form(
         banded, ["band_id", "band_hash"], dedup.LSH_MAX_BUCKET
