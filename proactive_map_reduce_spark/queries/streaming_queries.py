@@ -20,9 +20,9 @@ def q_stage_pipeline(spark, sf_dir):
     executed by the real streaming engine (test_proactive.py:227-368).
     Drains through the executor-side parquet sink (``_run_to_parquet``),
     so the corpus-sized map output never funnels through the driver."""
-    return stream_ops.stage_pipeline(
-        spark, _chunks(spark, sf_dir), sink="parquet"
-    ).select("doc_id", "chunk_id", "out_text", "n_out_tokens")
+    return stream_ops.stage_pipeline(spark, _chunks(spark, sf_dir)).select(
+        "doc_id", "chunk_id", "out_text", "n_out_tokens"
+    )
 
 
 def q_stateful_accumulate(spark, sf_dir):

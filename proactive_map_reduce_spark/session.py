@@ -79,6 +79,21 @@ def _java_options() -> str:
     return (base + " " + LOCALE_PIN).strip()
 
 
+def _driver_memory() -> str:
+    """``spark.driver.memory``: ``SPARK_GRAFT_DRIVER_MEM`` when set, else
+    16g capped at half of physical RAM, so an oversized job spills instead
+    of the host OOM-killing the JVM (the other half is for the Python
+    workers, DuckDB and the OS)."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        half_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**21
+    except (ValueError, OSError):
+        return "16g"
+    return f"{max(1024, min(16 * 1024, half_mb))}m"
+
+
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply engine confs to an externally-created session (the driver's)."""
     for k, v in _RUNTIME_CONFS.items():
@@ -198,7 +213,7 @@ def get_spark(app_name: str = "proactive_map_reduce_spark") -> SparkSession:
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Pin the JVM default locale: Spark's non-ASCII lower()/upper()

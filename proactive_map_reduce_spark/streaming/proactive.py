@@ -16,15 +16,18 @@ under a streaming source:
   (the `total_res_toks` analog, `test_proactive.py:327-328`; the v2
   re-feed recursion, `test_proactive_2.py:228-233`). Both run on one
   runner: a streaming `groupBy(doc_id)` aggregation that keeps each doc's
-  chunk history in Spark's RocksDB state store, in update mode, drained
-  by the durable `foreachBatch` parquet sink. Each operator is a
-  projection of that history: every update emits the running value for
-  the docs the micro-batch touched, and the final per-doc row equals the
-  batch operator.
-- **Watermarked windows** (engine capability beyond the reference): event
-  rows carry event-time; a `withWatermark` + tumbling window aggregation
-  drops data later than the lateness bound — deterministic here because
-  arrival order is one ts-bucket file per micro-batch.
+  chunk history in Spark's RocksDB state store, in update mode. Each
+  operator is a projection of that history: every update emits the
+  running value for the docs the micro-batch touched, and the final
+  per-doc row equals the batch operator.
+- **Watermarked event streams** (engine capability beyond the reference):
+  window counts, dedup and a stream-stream join over event rows that
+  arrive one ts-ordered bucket file per micro-batch, so the watermark
+  path is deterministic; a far-future sentinel flushes trailing state.
+
+Every operator drains its bounded stream through one sink,
+``_run_to_parquet``: ``foreachBatch`` parquet under ``out_dir/batch-<id>``
+with per-batch overwrite, returning a lazy scan of those dirs.
 
 Scale notes: in production the file source becomes Kafka/object-store
 listing and the checkpoint moves to durable storage; the state store is
@@ -35,13 +38,13 @@ keyed — by doc_id, the natural partition key.
 
 from __future__ import annotations
 
+import atexit
 import contextlib
 import os
 import re
 import shutil
 import tempfile
 import time
-import uuid
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -140,6 +143,18 @@ def _chunk_stream(spark: SparkSession, root: str) -> DataFrame:
     )
 
 
+@contextlib.contextmanager
+def _stage_stream(spark: SparkSession, chunks_df: DataFrame):
+    """Yield ``chunks_df`` as a staged stream: ``write_stage_files``
+    arrival, one stage file per micro-batch. The files are removed on
+    exit; the operators' results read ``out_dir``, not these."""
+    root = write_stage_files(chunks_df)
+    try:
+        yield _chunk_stream(spark, root)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
 def _ckpt_dir() -> str:
     """Checkpoint + state-store dir: tmpfs when available. The HDFS-backed
     state store fsyncs a delta file per partition per commit — on
@@ -167,80 +182,28 @@ def _session_confs(spark: SparkSession, confs: dict):
                 spark.conf.set(k, v)
 
 
-def _run_to_memory(stream_df: DataFrame, transform, shuffle_partitions: int = 2) -> DataFrame:
-    """Drive a bounded stream (availableNow) through `transform` per
-    micro-batch into an in-memory table; return the collected result.
+#: Shuffle (and so state-store) partition count of every stream here.
+#: A streaming query fixes it from spark.sql.shuffle.partitions at start
+#: (AQE never applies) and records it in its checkpoint's offset log, so a
+#: resumed query keeps it; every micro-batch pays one task and one
+#: state-store commit per partition. Sized for fixture volume, not the
+#: batch default; W2 checkpoints (and perfbench's doc_staged) carry 2.
+_STREAM_PARTITIONS = 2
 
-    Streaming queries fix their state-store partition count from
-    spark.sql.shuffle.partitions at start (AQE never applies) — every
-    micro-batch then pays one task per partition plus one state-store
-    commit per partition. Size it for stream volume, not the batch
-    default: at production throughput this knob scales up; the fixtures
-    want it small.
-    """
-    spark = stream_df.sparkSession
-    name = "pmr_sink_" + uuid.uuid4().hex[:8]
-    ckpt = _ckpt_dir()
+
+def _last_batch(ckpt: str, log: str) -> int:
+    """Highest batch id in the checkpoint's ``log`` subdir (-1 when none).
+
+    Structured Streaming writes one file per batch, named by its id:
+    ``offsets`` gains it when the batch is PLANNED, before processing
+    starts; ``commits`` when the batch COMPLETES. On restart Spark replays
+    exactly the latest offsets entry whose commit is missing, so batches
+    below it are never re-emitted."""
     try:
-        with _session_confs(
-            spark, {"spark.sql.shuffle.partitions": str(shuffle_partitions)}
-        ):
-            q = (
-                transform(stream_df)
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    # Drain the memory sink into a plain local-relation DataFrame and
-    # DROP the sink view: memory-sink tables live in driver memory for
-    # the life of the session, so leaving one registered per call leaks
-    # monotonically across repeated runs (tests, bench loops). The
-    # collect is not an added cost — the memory sink already holds the
-    # full result on the driver.
-    sink = spark.table(name)
-    rows, schema = sink.collect(), sink.schema
-    spark.catalog.dropTempView(name)
-    return spark.createDataFrame(rows, schema)
-
-
-def _last_committed_batch(ckpt: str) -> int:
-    """Highest batch id the checkpoint has COMMITTED (-1 when fresh).
-    Structured Streaming's commit log is one file per completed batch,
-    named by the batch id, under ``<checkpoint>/commits``."""
-    ids = []
-    try:
-        for nm in os.listdir(os.path.join(ckpt, "commits")):
-            try:
-                ids.append(int(nm))
-            except ValueError:
-                pass  # .crc / temp files
+        names = os.listdir(os.path.join(ckpt, log))
     except OSError:
-        pass
-    return max(ids, default=-1)
-
-
-def _last_offset_batch(ckpt: str) -> int:
-    """Highest batch id the checkpoint has PLANNED (-1 when none): the
-    offsets log gains one file per batch BEFORE processing starts, so on
-    restart Structured Streaming replays exactly the latest offsets
-    entry when its commit is missing — batches below it are never
-    re-emitted."""
-    ids = []
-    try:
-        for nm in os.listdir(os.path.join(ckpt, "offsets")):
-            try:
-                ids.append(int(nm))
-            except ValueError:
-                pass
-    except OSError:
-        pass
-    return max(ids, default=-1)
+        return -1
+    return max((int(nm) for nm in names if nm.isdigit()), default=-1)  # skip .crc/temp
 
 
 #: Strict batch-dir name (ADVICE r9): a foreign entry like ``batch-old``
@@ -317,22 +280,19 @@ def _run_to_parquet(
     stream_df: DataFrame,
     transform,
     out_dir: str | None = None,
-    shuffle_partitions: int = 2,
     checkpoint_dir: str | None = None,
     output_mode: str = "append",
 ) -> DataFrame:
-    """Durable production sink for the same bounded-stream runner (r7
-    verdict item): each micro-batch lands under ``out_dir/batch-<id>``
-    via ``foreachBatch`` with per-batch OVERWRITE. ``output_mode`` is the
+    """Drain a bounded stream (``availableNow``) through ``transform``:
+    each micro-batch lands under ``out_dir/batch-<id>`` via
+    ``foreachBatch`` with per-batch OVERWRITE. ``output_mode`` is the
     streaming output mode of ``transform``'s result ("update" for the W2
-    aggregation).
+    aggregation). Every operator in this module drains through it.
 
     Why this shape and not a plain append sink:
 
-    - **Executor-side writes, nothing on the driver** — the memory sink
-      collects every result row into driver memory, which is the right
-      tool for tests and a ceiling in production; here rows flow from
-      state-store tasks straight to parquet.
+    - **Executor-side writes, nothing on the driver**: rows flow from the
+      micro-batch tasks straight to parquet.
     - **Idempotent replay**: after a crash, Structured Streaming re-runs
       the last uncommitted batch with the SAME batch_id; a blind append
       would duplicate the rows of a partially-written batch, while
@@ -342,11 +302,14 @@ def _run_to_parquet(
       same ``out_dir``) and a killed pipeline resumes from the state
       store without loss — pinned by tests/test_stream_recovery.py.
 
-    Returns the read-back DataFrame over all batch directories (a real
-    distributed scan, not a local relation).
+    Returns a lazy parquet scan over all batch directories. Without an
+    ``out_dir`` the emissions go to a temp dir that outlives the call
+    (the scan reads it) and is removed at interpreter exit.
     """
     spark = stream_df.sparkSession
-    out_dir = out_dir or tempfile.mkdtemp(prefix="pmr_stream_out_")
+    if out_dir is None:
+        out_dir = tempfile.mkdtemp(prefix="pmr_stream_out_")
+        atexit.register(shutil.rmtree, out_dir, True)  # True: already gone is fine
     os.makedirs(out_dir, exist_ok=True)  # an empty stream commits no batch
     ckpt = checkpoint_dir or _ckpt_dir()
 
@@ -365,12 +328,12 @@ def _run_to_parquet(
         # output. On restart Spark replays only the latest planned batch,
         # so every batch below it is done even if its commit file is
         # missing. Inside the try, so a refusal removes a temp checkpoint.
-        planned = _last_offset_batch(ckpt)
-        done = max(_last_committed_batch(ckpt), planned - 1)
+        planned = _last_batch(ckpt, "offsets")
+        done = max(_last_batch(ckpt, "commits"), planned - 1)
         _guard_stale_batches(out_dir, done, planned)
         _guard_resume_outputs(out_dir, done)
         with _session_confs(
-            spark, {"spark.sql.shuffle.partitions": str(shuffle_partitions)}
+            spark, {"spark.sql.shuffle.partitions": str(_STREAM_PARTITIONS)}
         ):
             out = transform(stream_df)
             schema = out.schema
@@ -394,31 +357,20 @@ def _run_to_parquet(
 def stage_pipeline(
     spark: SparkSession,
     chunks_df: DataFrame,
-    sink: str = "memory",
     out_dir: str | None = None,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """W1: run the black-box map stage over a staged chunk stream.
 
     Returns (doc_id, chunk_id, out_text, n_out_tokens) — value-identical to
-    the batch `llm_map` plan, produced by genuine micro-batch execution.
-
-    ``sink="memory"`` (default) drains via the in-memory table — right
-    for tests and oracle checks; ``sink="parquet"`` is the durable
-    production mode (see ``_run_to_parquet``) — same values, pinned
-    equal by tests/test_streaming.py::test_stage_pipeline_sink_modes.
+    the batch `llm_map` plan, produced by genuine micro-batch execution
+    and drained through ``_run_to_parquet`` into ``out_dir`` (a temp dir
+    when not given).
     """
-    runner = {
-        "memory": lambda s, t: _run_to_memory(s, t),
-        "parquet": lambda s, t: _run_to_parquet(
-            s, t, out_dir=out_dir, checkpoint_dir=checkpoint_dir
-        ),
-    }[sink]
-    root = write_stage_files(chunks_df)
-    try:
-        return runner(_chunk_stream(spark, root), lambda s: mapstage.llm_map(s))
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    with _stage_stream(spark, chunks_df) as stream:
+        return _run_to_parquet(
+            stream, mapstage.llm_map, out_dir=out_dir, checkpoint_dir=checkpoint_dir
+        )
 
 
 # --- W2: cross-stage per-doc state on Spark's state store --------------------
@@ -522,14 +474,11 @@ def stateful_accumulate(
     as the batch path. The per-doc chunk history lives in Spark's state
     store (see ``_w2_run`` for where); emissions land under ``out_dir``
     and the result is a lazy read of them."""
-    root = write_stage_files(chunks_df)
-    try:
+    with _stage_stream(spark, chunks_df) as stream:
         return _w2_run(
-            _chunk_stream(spark, root), _acc_emit, model_fn,
+            stream, _acc_emit, model_fn,
             out_dir=out_dir, state_dir=state_dir, checkpoint_dir=checkpoint_dir,
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _refeed_fold(chain0: str, acc0: str, finish: str = "s -> s.ems") -> str:
@@ -614,21 +563,19 @@ def refeed_chain(
     batch-equivalent oracle is a recursive fold over the mapped chunks in
     chunk order (DuckDB recursive CTE). State is the per-doc chunk
     history, as for ``stateful_accumulate``, on the same runner."""
-    root = write_stage_files(chunks_df)
-    try:
+    with _stage_stream(spark, chunks_df) as stream:
         return _w2_run(
-            _chunk_stream(spark, root), _refeed_emit, model_fn,
+            stream, _refeed_emit, model_fn,
             out_dir=out_dir, state_dir=state_dir, checkpoint_dir=checkpoint_dir,
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def final_accumulation(updates: DataFrame) -> DataFrame:
     """Reduce W2's running updates to the final row per doc (max stage).
 
-    Window row_number (not a self-join — memory-sink views can't alias
-    both sides of a join of themselves)."""
+    A row_number window reads the emissions once and shuffles them once by
+    doc_id; a self-join against each doc's max ``n_chunks_seen`` would
+    scan them twice."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("doc_id").orderBy(F.col("n_chunks_seen").desc())
@@ -656,14 +603,24 @@ EVENT_SCHEMA = T.StructType(
 )
 
 
-def write_event_files(
-    events_df: DataFrame, n_buckets: int = 4, with_hi: bool = False
-):
+#: Arrival buckets (micro-batches) of the watermarked operators' events.
+_EVENT_BUCKETS = 2
+#: Watermark lateness of ``windowed_counts_with_watermark``.
+_WINDOW_LATENESS = "1 hour"
+#: Watermark lateness of ``stream_dedup``: how long a key's first
+#: sighting is kept to drop its re-deliveries.
+_DEDUP_LATENESS = "2 hours"
+#: ``stream_stream_join`` pairs each click with every view of the same
+#: user within ±30 minutes (the oracle hard-codes the same values).
+_JOIN_LEFT, _JOIN_RIGHT, _JOIN_WITHIN = "click", "view", "30 minutes"
+
+
+def write_event_files(events_df: DataFrame, n_buckets: int = 4):
     """Split events into ts-ordered bucket files (bucket k arrives k-th).
     One distributed write job via _write_ordered.
 
-    ``with_hi=True`` additionally returns max(ts) as ``(root, hi)`` — it
-    is already computed for the bucket spans, so callers that need the
+    Returns ``(root, hi)`` with ``hi`` = max(ts) (None for empty input):
+    it is already computed for the bucket spans, so callers that need the
     sentinel bound reuse it instead of re-scanning the input."""
     root = tempfile.mkdtemp(prefix="pmr_events_")
     bounds = events_df.select(
@@ -678,7 +635,7 @@ def write_event_files(
             "bucket",
             root,
         )
-        return (root, hi) if with_hi else root
+        return root, hi
     span = max((hi - lo).total_seconds(), 1.0)
     bucketed = events_df.withColumn(
         "bucket",
@@ -688,34 +645,52 @@ def write_event_files(
         ).cast("int"),
     ).select("event_id", "user_id", "event_type", "ts", "value", "bucket")
     _write_ordered(bucketed, "bucket", root)
-    return (root, hi) if with_hi else root
+    return root, hi
 
 
-def windowed_counts_with_watermark(
-    spark: SparkSession,
-    events_df: DataFrame,
-    lateness: str = "1 hour",
-    n_buckets: int = 2,
-) -> DataFrame:
+@contextlib.contextmanager
+def _event_stream(spark: SparkSession, events_df: DataFrame, sentinel_types, dups=None):
+    """Yield the watermarked operators' event stream, one file per
+    micro-batch: the ``_EVENT_BUCKETS`` ts-ordered bucket files, then
+    ``dups`` (re-delivered copies) as one later file when given, then one
+    flush-sentinel row per entry of ``sentinel_types`` (``event_id`` -1,
+    ts ``_sentinel_ts(max ts)``). Append mode emits a window or a join
+    pair only once the watermark passes it, so the sentinels arriving
+    last flush the trailing state; callers filter them from the result.
+    The files are removed on exit."""
+    root, hi = write_event_files(events_df, n_buckets=_EVENT_BUCKETS)
+    try:
+        tail = [] if dups is None else [dups.select(*EVENT_SCHEMA.fieldNames())]
+        tail.append(
+            spark.createDataFrame(
+                [(-1, -1, t, _sentinel_ts(hi), 0.0) for t in sentinel_types],
+                EVENT_SCHEMA,
+            )
+        )
+        for df in tail:
+            df.coalesce(1).write.mode("append").parquet(root)
+        yield (
+            spark.readStream.schema(EVENT_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(root)
+        )
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def windowed_counts_with_watermark(spark: SparkSession, events_df: DataFrame) -> DataFrame:
     """Tumbling 1h window counts under a watermark.
 
     Buckets arrive in ts order, so no on-time data is dropped and the
     result equals the batch aggregation (oracle-checkable) while running
-    the real watermark/append path. Append mode only emits a window once
-    the watermark passes it, so a sentinel event far in the future arrives
-    last to flush the trailing windows; its own window is filtered out of
-    the result (and never appears in the oracle, which aggregates only the
-    real events).
+    the real watermark/append path. The sentinel aggregates into its own
+    ``(window, '__sentinel__')`` row, which the result filters out (the
+    oracle aggregates only the real events).
     """
-    root, hi = write_event_files(events_df, n_buckets=n_buckets, with_hi=True)
-    sentinel_ts = _sentinel_ts(hi)
-    spark.createDataFrame(
-        [(-1, -1, "__sentinel__", sentinel_ts, 0.0)], EVENT_SCHEMA
-    ).coalesce(1).write.mode("append").parquet(root)
 
     def transform(s: DataFrame) -> DataFrame:
         return (
-            s.withWatermark("ts", lateness)
+            s.withWatermark("ts", _WINDOW_LATENESS)
             .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
             .agg(
                 F.count("*").cast("bigint").alias("n_events"),
@@ -735,33 +710,21 @@ def windowed_counts_with_watermark(
             )
         )
 
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(root)
-    )
-    try:
-        # The sentinel aggregates into its own (window, '__sentinel__')
-        # row, so filtering on event_type removes exactly it — immune to
-        # the driver-local-vs-session timezone skew a recomputed epoch
-        # bucket would carry on non-UTC hosts (createDataFrame interprets
-        # naive timestamps in local time; pd.Timestamp.timestamp() in UTC).
-        return _run_to_memory(stream, transform).filter(
+    with _event_stream(spark, events_df, ["__sentinel__"]) as stream:
+        # Filtering on event_type removes exactly the sentinel's row —
+        # immune to the driver-local-vs-session timezone skew a recomputed
+        # epoch bucket would carry on non-UTC hosts (createDataFrame
+        # interprets naive timestamps in local time;
+        # pd.Timestamp.timestamp() in UTC).
+        return _run_to_parquet(stream, transform).filter(
             # null-SAFE inequality: a plain != drops NULL event_type
             # rows (NULL != x is NULL), silently diverging from the
             # batch form, which groups them — nulls value gate find
             ~F.col("event_type").eqNullSafe("__sentinel__")
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
-def stream_dedup(
-    spark: SparkSession,
-    events_df: DataFrame,
-    lateness: str = "2 hours",
-    n_buckets: int = 2,
-) -> DataFrame:
+def stream_dedup(spark: SparkSession, events_df: DataFrame) -> DataFrame:
     """Watermarked streaming deduplication (`dropDuplicatesWithinWatermark`)
     over an event stream carrying injected duplicates.
 
@@ -778,21 +741,10 @@ def stream_dedup(
     store; the watermark bound is what makes this viable on an unbounded
     100 TB/day stream where an unbounded-state distinct would OOM.
     """
-    dups = events_df.filter(F.col("event_id") % 10 == 0)
-    root, hi = write_event_files(events_df, n_buckets=n_buckets, with_hi=True)
-    # duplicate copies arrive after the originals (a later file), then a
-    # far-future sentinel flushes the final watermark advance.
-    dups.select("event_id", "user_id", "event_type", "ts", "value").coalesce(
-        1
-    ).write.mode("append").parquet(root)
-    sentinel_ts = _sentinel_ts(hi)
-    spark.createDataFrame(
-        [(-1, -1, "__sentinel__", sentinel_ts, 0.0)], EVENT_SCHEMA
-    ).coalesce(1).write.mode("append").parquet(root)
 
     def transform(s: DataFrame) -> DataFrame:
         return (
-            s.withWatermark("ts", lateness)
+            s.withWatermark("ts", _DEDUP_LATENESS)
             .dropDuplicatesWithinWatermark(["event_id"])
             .select(
                 "event_id",
@@ -803,33 +755,14 @@ def stream_dedup(
             )
         )
 
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(root)
-    )
-    try:
-        # r14: the duplicated event stream re-emits ~the whole corpus —
-        # the memory sink funneled every result row through the driver
-        # AND a JVM→Python→JVM round-trip (collect + createDataFrame);
-        # the executor-side parquet sink returns a distributed scan
-        # instead (guide §5 "the driver should do almost no data work").
-        # Values identical; only the sink changes.
+    dups = events_df.filter(F.col("event_id") % 10 == 0)
+    with _event_stream(spark, events_df, ["__sentinel__"], dups) as stream:
         return _run_to_parquet(stream, transform).filter(F.col("event_id") >= 0)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
-def stream_stream_join(
-    spark: SparkSession,
-    events_df: DataFrame,
-    left_type: str = "click",
-    right_type: str = "view",
-    within: str = "30 minutes",
-    n_buckets: int = 2,
-) -> DataFrame:
-    """Watermarked stream-stream inner join: per user, pair each
-    `left_type` event with every `right_type` event within ±`within`.
+def stream_stream_join(spark: SparkSession, events_df: DataFrame) -> DataFrame:
+    """Watermarked stream-stream inner join: per user, pair each click
+    event with every view event within ±30 minutes.
 
     The hardest streaming feature the reference lacks entirely: both
     sides buffer state bounded by their watermarks; the range condition
@@ -839,43 +772,28 @@ def stream_stream_join(
     oracle checks exactly that.
 
     Scale: state is keyed by user_id → shards across executors; watermark
-    bounds buffered rows to the `within` interval per side regardless of
+    bounds buffered rows to the join interval per side regardless of
     total stream length.
     """
-    root, hi = write_event_files(events_df, n_buckets=n_buckets, with_hi=True)
-    sentinel_ts = _sentinel_ts(hi)
-    # sentinels must carry the REAL side types (they advance each side's
-    # watermark downstream of the type filter); event_id=-1 marks them
-    # for removal from the result.
-    spark.createDataFrame(
-        [(-1, -1, left_type, sentinel_ts, 0.0), (-1, -1, right_type, sentinel_ts, 0.0)],
-        EVENT_SCHEMA,
-    ).coalesce(1).write.mode("append").parquet(root)
+
+    def side(s: DataFrame, event_type: str, p: str) -> DataFrame:
+        return (
+            s.filter(F.col("event_type") == event_type)
+            .select(
+                F.col("user_id").alias(f"{p}_user"),
+                F.col("event_id").alias(f"{p}_id"),
+                F.col("ts").alias(f"{p}_ts"),
+            )
+            .withWatermark(f"{p}_ts", _JOIN_WITHIN)
+        )
 
     def transform(s: DataFrame) -> DataFrame:
-        left = (
-            s.filter(F.col("event_type") == left_type)
-            .select(
-                F.col("user_id").alias("l_user"),
-                F.col("event_id").alias("l_id"),
-                F.col("ts").alias("l_ts"),
-            )
-            .withWatermark("l_ts", within)
-        )
-        right = (
-            s.filter(F.col("event_type") == right_type)
-            .select(
-                F.col("user_id").alias("r_user"),
-                F.col("event_id").alias("r_id"),
-                F.col("ts").alias("r_ts"),
-            )
-            .withWatermark("r_ts", within)
-        )
-        joined = left.join(
-            right,
+        within = F.expr(f"INTERVAL {_JOIN_WITHIN}")
+        joined = side(s, _JOIN_LEFT, "l").join(
+            side(s, _JOIN_RIGHT, "r"),
             (F.col("l_user") == F.col("r_user"))
-            & (F.col("r_ts") >= F.col("l_ts") - F.expr(f"INTERVAL {within}"))
-            & (F.col("r_ts") <= F.col("l_ts") + F.expr(f"INTERVAL {within}")),
+            & (F.col("r_ts") >= F.col("l_ts") - within)
+            & (F.col("r_ts") <= F.col("l_ts") + within),
         )
         return joined.select(
             F.col("l_user").alias("user_id"),
@@ -884,19 +802,12 @@ def stream_stream_join(
             (F.unix_micros("r_ts") - F.unix_micros("l_ts")).cast("bigint").alias("gap_us"),
         )
 
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(root)
-    )
-    try:
-        # r14: executor-side sink — the join's pair fan-out is the
-        # largest streaming result; see stream_dedup's sink note.
+    # the sentinels carry the REAL side types: they advance each side's
+    # watermark downstream of the type filter
+    with _event_stream(spark, events_df, [_JOIN_LEFT, _JOIN_RIGHT]) as stream:
         return _run_to_parquet(stream, transform).filter(
             (F.col("l_id") >= 0) & (F.col("r_id") >= 0)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def stream_static_enrich(
@@ -917,7 +828,7 @@ def stream_static_enrich(
     flips to pre-bucketed storage joined by key — same code, different
     join strategy under AQE.
     """
-    root = write_event_files(events_df)
+    root, _ = write_event_files(events_df)
     dim = F.broadcast(dim_df)
 
     def transform(s: DataFrame) -> DataFrame:
@@ -931,8 +842,6 @@ def stream_static_enrich(
 
     stream = spark.readStream.schema(EVENT_SCHEMA).parquet(root)
     try:
-        # r14: executor-side sink — the enrichment emits one row per
-        # matched event (~the stream itself); see stream_dedup's note.
         return _run_to_parquet(stream, transform)
     finally:
         shutil.rmtree(root, ignore_errors=True)

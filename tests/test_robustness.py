@@ -459,6 +459,26 @@ def test_java_options_append_env_base():
             os.environ["SPARK_GRAFT_JAVA_OPTS"] = saved
 
 
+def test_driver_memory_capped_at_half_of_ram(monkeypatch):
+    """The default driver heap is min(16g, half of physical RAM), from
+    os.sysconf; SPARK_GRAFT_DRIVER_MEM overrides it."""
+    from proactive_map_reduce_spark import session as S
+
+    def ram(gib):
+        pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": gib * 2**30 // 4096}
+        monkeypatch.setattr(S.os, "sysconf", pages.__getitem__)
+
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    ram(15)
+    assert S._driver_memory() == "7680m"
+    ram(64)
+    assert S._driver_memory() == "16384m"
+    ram(1)
+    assert S._driver_memory() == "1024m"
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert S._driver_memory() == "3g"
+
+
 @given(
     st.lists(
         st.tuples(

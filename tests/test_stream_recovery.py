@@ -126,7 +126,7 @@ def test_windowed_watermark_restart_no_dup_no_loss(spark, tmp_path):
             )
             eid += 1
     ev = _ev_rows(spark, rows)
-    src = stream_ops.write_event_files(ev, n_buckets=4)  # one file per hour
+    src, _ = stream_ops.write_event_files(ev, n_buckets=4)  # one file per hour
     live = str(tmp_path / "live")
     os.makedirs(live)
     ckpt = str(tmp_path / "ckpt")
@@ -518,8 +518,8 @@ def test_batched_runner_resumes_first_batch_window_kill(spark, tmp_path):
         commits = os.path.join(ckpt, "commits")
         for nm in os.listdir(commits):
             os.remove(os.path.join(commits, nm))
-        assert stream_ops._last_committed_batch(ckpt) == -1
-        assert stream_ops._last_offset_batch(ckpt) == 1
+        assert stream_ops._last_batch(ckpt, "commits") == -1
+        assert stream_ops._last_batch(ckpt, "offsets") == 1
 
         r2 = sorted(map(tuple, _w2(spark, src_root, stream_ops._refeed_emit, **kw).collect()))
         assert r2 == r1
@@ -564,7 +564,7 @@ def test_w2_kill_between_emission_and_commit_replays_same_rows(spark, tmp_path):
             kw = dict(out_dir=out_dir, checkpoint_dir=ckpt)
             _copy_stages(src_root, live, files[:3])
             _w2(spark, live, emit, **kw)
-            n = stream_ops._last_committed_batch(ckpt)
+            n = stream_ops._last_batch(ckpt, "commits")
             assert n == 2
             killed = sorted(map(tuple, _batch_rows(out_dir, spark, {n})))
             # the commit file and its checksum: a kill before the commit
@@ -574,7 +574,7 @@ def test_w2_kill_between_emission_and_commit_replays_same_rows(spark, tmp_path):
 
             _copy_stages(src_root, live, files[3:])
             got = sorted(map(tuple, _w2(spark, live, emit, **kw).collect()))
-            assert stream_ops._last_committed_batch(ckpt) == depth - 1
+            assert stream_ops._last_batch(ckpt, "commits") == depth - 1
             assert sorted(map(tuple, _batch_rows(out_dir, spark, {n}))) == killed
             assert got == whole
             if name == "refeed":

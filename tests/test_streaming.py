@@ -99,7 +99,7 @@ def test_watermark_drops_late_event(spark):
     ]
     ev = spark.createDataFrame(rows, stream_ops.EVENT_SCHEMA)
     # In-order arrival: all rows counted.
-    on_time = stream_ops.windowed_counts_with_watermark(spark, ev, "1 hour")
+    on_time = stream_ops.windowed_counts_with_watermark(spark, ev)
     total = on_time.agg(F.sum("n_events")).collect()[0][0]
     assert total == len(hours)
 
@@ -107,7 +107,7 @@ def test_watermark_drops_late_event(spark):
     # the watermark (max_ts - 1h ≫ hour 0) has passed → dropped.
     import shutil
 
-    root = stream_ops.write_event_files(ev, n_buckets=4)
+    root, _ = stream_ops.write_event_files(ev, n_buckets=4)
     late = spark.createDataFrame(
         [(99, 1, "click", base, 1.0)], stream_ops.EVENT_SCHEMA
     )
@@ -131,7 +131,7 @@ def test_watermark_drops_late_event(spark):
         .parquet(root)
     )
     try:
-        out = stream_ops._run_to_memory(stream, transform).filter(
+        out = stream_ops._run_to_parquet(stream, transform).filter(
             F.col("event_type") == "click"
         )
         assert out.agg(F.sum("n_events")).collect()[0][0] == len(hours)  # late row NOT counted
@@ -215,7 +215,7 @@ def test_checkpoint_recovery_exactly_once(spark):
     from tests.conftest import SF0001
 
     ev = load_table(spark, SF0001, "events")
-    root = write_event_files(ev, n_buckets=4)
+    root, _ = write_event_files(ev, n_buckets=4)
     import glob as _glob
     import os as _os
 
@@ -298,17 +298,17 @@ def test_refeed_chain_deep_stage_depth_values_and_state(spark):
 
 
 def test_stage_pipeline_sink_modes(spark, tmp_path):
-    """r8: the durable foreachBatch→parquet sink is value-identical to the
-    memory drain for W1, and its batch layout is per-batch directories
-    (the overwrite-idempotence unit)."""
+    """W1 through the foreachBatch→parquet sink: a caller-kept ``out_dir``
+    and the temp default emit the same rows, and the batch layout is
+    per-batch directories (the overwrite-idempotence unit)."""
     chunks = _chunks(spark)
-    mem = stream_ops.stage_pipeline(spark, chunks, sink="memory")
+    tmp = stream_ops.stage_pipeline(spark, chunks)
     out_dir = str(tmp_path / "out")
-    dur = stream_ops.stage_pipeline(spark, chunks, sink="parquet", out_dir=out_dir)
+    kept = stream_ops.stage_pipeline(spark, chunks, out_dir=out_dir)
     key = lambda r: (r["doc_id"], r["chunk_id"])
-    m = {key(r): (r["out_text"], r["n_out_tokens"]) for r in mem.collect()}
-    d = {key(r): (r["out_text"], r["n_out_tokens"]) for r in dur.collect()}
-    assert m == d and len(d) == 8
+    t = {key(r): (r["out_text"], r["n_out_tokens"]) for r in tmp.collect()}
+    k = {key(r): (r["out_text"], r["n_out_tokens"]) for r in kept.collect()}
+    assert t == k and len(k) == 8
     batches = [b for b in os.listdir(out_dir) if b.startswith("batch-")]
     assert len(batches) >= 2  # one per micro-batch (maxFilesPerTrigger=1)
 
@@ -427,8 +427,27 @@ def test_run_to_parquet_empty_stream_returns_schema(spark, tmp_path):
     """Empty input: no committed batch dirs, but the returned DataFrame
     still carries the transform's schema (0 rows, no read error)."""
     empty = spark.createDataFrame([], "doc_id long, chunk_id int, chunk_text string")
-    out = stream_ops.stage_pipeline(
-        spark, empty, sink="parquet", out_dir=str(tmp_path / "out")
-    )
+    out = stream_ops.stage_pipeline(spark, empty, out_dir=str(tmp_path / "out"))
     assert out.count() == 0
     assert set(out.columns) >= {"doc_id", "chunk_id", "out_text"}
+
+
+def test_run_to_parquet_default_out_dir_removed_at_exit(spark, monkeypatch):
+    """A temp default ``out_dir`` outlives the call (the result reads it
+    lazily) and is registered for removal at interpreter exit; the hook
+    tolerates a dir that something else already deleted."""
+    import shutil
+
+    hooks = []
+    monkeypatch.setattr(
+        stream_ops.atexit, "register", lambda fn, *a: hooks.append((fn, a))
+    )
+    out = stream_ops.stage_pipeline(spark, _chunks(spark))
+    assert out.count() == 8
+    [(fn, args)] = [(fn, a) for fn, a in hooks if fn is shutil.rmtree]
+    out_dir = args[0]
+    assert os.path.basename(out_dir).startswith("pmr_stream_out_")
+    assert os.path.isdir(out_dir)
+    fn(*args)
+    assert not os.path.exists(out_dir)
+    fn(*args)  # already gone: no error

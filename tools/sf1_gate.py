@@ -11,10 +11,10 @@ zero gate-specific tolerance.
 Fixture (``/tmp/pmr_scale_sf1_<tag>`` — the retention-exempt pmr_scale_
 family; tag = hash of base-data signature + this file's source bytes):
 
-- big tables replicated 10× with per-replica id offsets (the
-  tools/scale_smoke.py scheme — join/dedup semantics stay
-  non-degenerate); documents text is perturbed per replica (and n_chars
-  kept consistent) so the dedup surfaces see near- not all-duplicates;
+- big tables replicated 10× with per-replica id offsets (so
+  join/dedup semantics stay non-degenerate); documents text is
+  perturbed per replica (and n_chars kept consistent) so the dedup
+  surfaces see near- not all-duplicates;
 - events.ts is written as TIMESTAMP_NTZ: the driver fixture stores
   INT64(TIMESTAMP(NANOS)) which DuckDB reads as plain TIMESTAMP and
   Spark converts via the nanosAsLong DIV-1000 path (sources/tables.py) —
