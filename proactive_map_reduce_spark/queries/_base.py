@@ -32,8 +32,6 @@ from ..operators import dedup as dedup_ops            # noqa: E402
 from ..operators import multimodal as mm_ops          # noqa: E402
 from ..operators import similarity as sim_ops         # noqa: E402
 from ..operators import textstats as ts_ops           # noqa: E402
-import shutil as _shutil                              # noqa: E402
-import tempfile as _tempfile                          # noqa: E402
 from ..streaming import proactive as stream_ops        # noqa: E402
 from ..operators import skew as skew_ops               # noqa: E402
 from ..sources import text_corpus as txt_src           # noqa: E402

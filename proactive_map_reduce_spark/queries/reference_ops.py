@@ -8,11 +8,10 @@ from ._base import (  # noqa: F401
     _docs,
     _events_with_pos,
     _hashlib_sha256,
-    _shutil,
     _standin_embed,
-    _tempfile,
     _words,
 )
+from ..sources.scratch import materialize_once, scratch_dir
 
 
 def q_scan_documents(spark, sf_dir):
@@ -686,7 +685,7 @@ def q_sink_jsonl_append(spark, sf_dir):
             F.length("text").cast("bigint").alias("output_len"),
         )
     )
-    path = _tempfile.mkdtemp(prefix="pmr_jsonl_") + "/metrics"
+    path = scratch_dir("pmr_jsonl_") + "/metrics"
     metrics.write.mode("append").json(path)
     back = spark.read.json(path, schema="doc_id bigint, dataset string, output_len bigint")
     return back.select("doc_id", "dataset", "output_len")
@@ -731,35 +730,24 @@ def q_scan_text_corpus(spark, sf_dir):
     """S1 production path: ingest a directory of {doc_id}.txt files via
     spark.read.text(wholetext) + input_file_name parsing. The corpus is
     materialized from the documents fixture (same layout the reference
-    reads), then round-tripped; values must match the parquet table."""
-    import hashlib as _hashlib
+    reads), then round-tripped; values must match the parquet table.
+
+    The corpus is written once per process per (path, content
+    fingerprint) key (``sources/tables.stat_signature``): repeat calls
+    read the same files, and a fixture regenerated in place gets a fresh
+    corpus instead of stale files."""
     import os as _os
 
-    d = _docs(spark, sf_dir)
-
-    # Deterministic cache dir keyed on PATH + CONTENT FINGERPRINT
-    # (sources/tables.stat_signature), populated once via
-    # write-to-staging + atomic rename: a reader can never observe a
-    # half-written corpus, repeat invocations skip the write, and a
-    # regenerated fixture at the same path gets a fresh corpus instead
-    # of being served stale files.
     from ..sources.tables import stat_signature
 
+    d = _docs(spark, sf_dir)
     src = _os.path.join(sf_dir, "documents.parquet")
     sig = stat_signature(src) if _os.path.exists(src) else ""
-    tag = _hashlib.md5(f"{sf_dir}\x1f{sig}".encode()).hexdigest()[:12]
-    root = _os.path.join(_tempfile.gettempdir(), f"pmr_corpus_{tag}")
-    if not _os.path.isdir(root):
-        staging = _tempfile.mkdtemp(prefix=f"pmr_corpus_{tag}_stage_")
-        txt_src.write_text_corpus(d, staging)
-        try:
-            _os.rename(staging, root)
-        except OSError:  # lost the rename race: another writer finished first
-            _shutil.rmtree(staging, ignore_errors=True)
-    try:  # liveness beacon: reuse refreshes mtime so the retention sweep
-        _os.utime(root)  # (sources/retention.py) only ages out dead tags
-    except OSError:
-        pass
+    root = materialize_once(
+        ("corpus", sf_dir, sig),
+        "pmr_corpus_",
+        lambda path: txt_src.write_text_corpus(d, path),
+    )
     back = txt_src.read_text_corpus(spark, root)
     return back.select(
         "doc_id",
@@ -845,7 +833,7 @@ def q_sink_partitioned(spark, sf_dir):
     files are scanned; at 100 TB, partition layout IS the primary
     pruning lever). Values must round-trip exactly."""
     d = _docs(spark, sf_dir)
-    path = _tempfile.mkdtemp(prefix="pmr_part_") + "/docs"
+    path = scratch_dir("pmr_part_") + "/docs"
     out = d.select("doc_id", "n_chars", "lang")
     out.write.partitionBy("lang").mode("overwrite").parquet(path)
     # explicit schema on read-back: schema-on-read is the production
@@ -872,7 +860,7 @@ def q_scan_csv_roundtrip(spark, sf_dir):
     parquet/JSONL sinks are the right format, this query pins the CSV
     interchange path."""
     d = _docs(spark, sf_dir).select("doc_id", "lang", "text")
-    path = _tempfile.mkdtemp(prefix="pmr_csv_") + "/docs"
+    path = scratch_dir("pmr_csv_") + "/docs"
     (
         d.write.mode("overwrite")
         .option("header", True)
@@ -899,7 +887,7 @@ def q_orc_roundtrip(spark, sf_dir):
     values must round-trip exactly (columnar format breadth beyond
     parquet/JSON/CSV/text; same parallel executor-side write path)."""
     d = _docs(spark, sf_dir).select("doc_id", "lang", "n_chars")
-    path = _tempfile.mkdtemp(prefix="pmr_orc_") + "/docs"
+    path = scratch_dir("pmr_orc_") + "/docs"
     d.write.mode("overwrite").orc(path)
     return spark.read.schema("doc_id bigint, lang string, n_chars bigint").orc(path)
 

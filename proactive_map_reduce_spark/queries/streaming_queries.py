@@ -6,9 +6,7 @@ from ._base import (  # noqa: F401
     _docs,
     _events_with_pos,
     _hashlib_sha256,
-    _shutil,
     _standin_embed,
-    _tempfile,
     _words,
 )
 

@@ -21,6 +21,14 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def default_parallelism() -> int:
+    """Cores to run on: ``SPARK_GRAFT_CPUS`` when set, else the CPUs this
+    process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
 # Settable at runtime; required because the driver fixtures write
 # INT64(TIMESTAMP(NANOS)) which Spark only reads as long via this flag.
 _RUNTIME_CONFS = {
@@ -28,7 +36,7 @@ _RUNTIME_CONFS = {
     # runtime-settable: externally-created sessions (the driver's) default
     # to 200 shuffle partitions — size to the machine instead; AQE
     # coalesces further when data is small.
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+    "spark.sql.shuffle.partitions": str(default_parallelism()),
     # SPARK_GRAFT_AQE=false is the config-invariance probe hook: AQE
     # rewrites plan shapes at runtime (partition coalescing, skew-join
     # splitting, join demotion), so proving the full gate passes with it
@@ -65,10 +73,6 @@ _RUNTIME_CONFS = {
 }
 
 
-def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-
 #: The locale pin appended to driver/executor JVM options (see get_spark).
 LOCALE_PIN = "-Duser.language=en -Duser.country=US"
 
@@ -101,16 +105,6 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
             spark.conf.set(k, v)
         except Exception:
             pass  # static conf on this build — builder path sets it instead
-    # Tempdir retention (once per process): ephemeral pmr_* artifacts
-    # whose lifetime must outlast their query call age out here instead
-    # of accumulating forever (sources/retention.py). Cross-process TTL
-    # hazard: another session's artifact idle past the TTL (no mtime
-    # anywhere in its tree within PMR_TMP_TTL_SEC, default 6h) is swept
-    # even if that session still holds a lazy DataFrame over it — raise
-    # PMR_TMP_TTL_SEC in environments running sessions longer than that.
-    from .sources.retention import sweep_once
-
-    sweep_once()
     return spark
 
 

@@ -9,22 +9,13 @@ the cost is paid once at write time.
 
 Bucketing requires the table catalog (`saveAsTable`); the bucket count
 should match or divide the cluster's target parallelism so every bucket
-pair is one task.
+pair is one task. The registry's ``q_bucketed_join`` writes its copies
+once per process into a scratch dir (``sources/scratch.py``).
 """
 
 from __future__ import annotations
 
-import os
-import re
-import shutil
-import time
-
 from pyspark.sql import DataFrame, SparkSession
-
-# One materialization dir per (sf_dir, source content): pmr_bucketed_<tag>
-# under the system tempdir, plus catalog tables pmr_{li,ord}_b_<tag>.
-_MAT_RE = re.compile(r"^pmr_bucketed_([0-9a-f]{12})(?:_stage_.*)?$")
-_TABLE_SHORTS = ("li", "ord")
 
 
 def write_bucketed(
@@ -39,7 +30,7 @@ def write_bucketed(
 
     ``path`` makes it an EXTERNAL table at that location — callers that
     run outside a configured warehouse (the query registry) point the
-    data at a temp dir instead of littering ./spark-warehouse."""
+    data at a scratch dir instead of littering ./spark-warehouse."""
     df.sparkSession.sql(f"DROP TABLE IF EXISTS {table}")
     w = df.write.bucketBy(buckets, key)
     if sort:
@@ -47,74 +38,6 @@ def write_bucketed(
     if path is not None:
         w = w.option("path", path)
     w.mode("overwrite").saveAsTable(table)
-
-
-def gc_stale_materializations(
-    spark: SparkSession,
-    parent: str,
-    live_tag: str,
-    max_age_sec: float = 3600.0,
-) -> list[str]:
-    """Warehouse-retention sweep for content-addressed bucketed copies.
-
-    Every fixture regeneration re-keys the content tag, so without GC the
-    tempdir accumulates one ``pmr_bucketed_<tag>`` dir (and two metastore
-    entries) per dead fingerprint forever. The set of LIVE fingerprints
-    can't be enumerated from here (any sf_dir may be in use by another
-    session), so liveness is approximated by recency: every ensure —
-    create *or* reuse — touches the dir mtime, hence a dir idle for
-    ``max_age_sec`` belongs to a regenerated fixture and is removed,
-    along with any ``pmr_*_b_<tag>`` catalog tables over it. Orphaned
-    ``_stage_`` dirs from crashed writers age out the same way. Catalog
-    entries whose backing dir is already gone are dropped regardless of
-    age (the metastore outlives /tmp). ``live_tag``'s dir is never
-    touched. Returns the removed paths (for tests/observability)."""
-    now = time.time()
-    removed: list[str] = []
-    try:
-        names = os.listdir(parent)
-    except OSError:
-        names = []
-    live_dirs: set[str] = set()
-    for nm in names:
-        m = _MAT_RE.match(nm)
-        if not m:
-            continue
-        tag = m.group(1)
-        path = os.path.join(parent, nm)
-        try:
-            age = now - os.stat(path).st_mtime
-        except OSError:
-            # Transient stat failure on a LISTED dir: treat it as live.
-            # Falling through without registering the tag would let the
-            # catalog-cleanup pass below drop pmr_*_b_<tag> tables whose
-            # backing dir still exists, failing any concurrently bound
-            # plan (ADVICE r5). Worst case of the conservative choice is
-            # one extra GC cycle of retention.
-            if "_stage_" not in nm:
-                live_dirs.add(tag)
-            continue
-        if tag == live_tag or age <= max_age_sec:
-            if "_stage_" not in nm:
-                live_dirs.add(tag)
-            continue
-        shutil.rmtree(path, ignore_errors=True)
-        removed.append(path)
-        for short in _TABLE_SHORTS:
-            spark.sql(f"DROP TABLE IF EXISTS pmr_{short}_b_{tag}")
-    # Metastore entries can outlive their /tmp backing (reboot, tmpwatch):
-    # drop any pmr_*_b_<tag> table whose materialization dir is gone.
-    for short in _TABLE_SHORTS:
-        pat = re.compile(rf"^pmr_{short}_b_([0-9a-f]{{12}})$")
-        try:
-            tables = [t.name for t in spark.catalog.listTables()]
-        except Exception:
-            tables = []
-        for t in tables:
-            m = pat.match(t)
-            if m and m.group(1) != live_tag and m.group(1) not in live_dirs:
-                spark.sql(f"DROP TABLE IF EXISTS {t}")
-    return removed
 
 
 def co_located_join(

@@ -38,7 +38,6 @@ keyed — by doc_id, the natural partition key.
 
 from __future__ import annotations
 
-import atexit
 import contextlib
 import os
 import re
@@ -52,6 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators import mapstage
+from ..sources.scratch import scratch_dir
 
 CHUNK_SCHEMA = T.StructType(
     [
@@ -129,7 +129,7 @@ def write_stage_files(chunks_df: DataFrame, root: str | None = None) -> str:
     these — must preserve timestamps (``shutil.copy2``, not ``copy``),
     or stages arrive in arbitrary order and every order-sensitive
     consumer (the re-feed chain) sees a different recursion."""
-    root = root or tempfile.mkdtemp(prefix="pmr_stream_")
+    root = root or scratch_dir("pmr_stream_")
     return _write_ordered(
         chunks_df.select("doc_id", "chunk_id", "chunk_text"), "chunk_id", root
     )
@@ -303,13 +303,12 @@ def _run_to_parquet(
       store without loss — pinned by tests/test_stream_recovery.py.
 
     Returns a lazy parquet scan over all batch directories. Without an
-    ``out_dir`` the emissions go to a temp dir that outlives the call
-    (the scan reads it) and is removed at interpreter exit.
+    ``out_dir`` the emissions go to a ``scratch_dir``: it outlives the call
+    (the scan reads it) and goes when the process exits.
     """
     spark = stream_df.sparkSession
     if out_dir is None:
-        out_dir = tempfile.mkdtemp(prefix="pmr_stream_out_")
-        atexit.register(shutil.rmtree, out_dir, True)  # True: already gone is fine
+        out_dir = scratch_dir("pmr_stream_out_")
     os.makedirs(out_dir, exist_ok=True)  # an empty stream commits no batch
     ckpt = checkpoint_dir or _ckpt_dir()
 
@@ -622,7 +621,7 @@ def write_event_files(events_df: DataFrame, n_buckets: int = 4):
     Returns ``(root, hi)`` with ``hi`` = max(ts) (None for empty input):
     it is already computed for the bucket spans, so callers that need the
     sentinel bound reuse it instead of re-scanning the input."""
-    root = tempfile.mkdtemp(prefix="pmr_events_")
+    root = scratch_dir("pmr_events_")
     bounds = events_df.select(
         F.min("ts").alias("lo"), F.max("ts").alias("hi")
     ).collect()[0]

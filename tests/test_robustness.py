@@ -479,6 +479,18 @@ def test_driver_memory_capped_at_half_of_ram(monkeypatch):
     assert S._driver_memory() == "3g"
 
 
+def test_default_parallelism_follows_cpu_affinity(monkeypatch):
+    """Without SPARK_GRAFT_CPUS the core count is the CPUs this process
+    may run on, from os.sched_getaffinity; the variable overrides it."""
+    from proactive_map_reduce_spark import session as S
+
+    monkeypatch.setattr(S.os, "sched_getaffinity", lambda pid: {0, 1, 2})
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert S.default_parallelism() == 3
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "7")
+    assert S.default_parallelism() == 7
+
+
 @given(
     st.lists(
         st.tuples(

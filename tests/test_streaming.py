@@ -432,22 +432,26 @@ def test_run_to_parquet_empty_stream_returns_schema(spark, tmp_path):
     assert set(out.columns) >= {"doc_id", "chunk_id", "out_text"}
 
 
-def test_run_to_parquet_default_out_dir_removed_at_exit(spark, monkeypatch):
+def test_run_to_parquet_default_out_dir_removed_at_exit(spark, tmp_path, monkeypatch):
     """A temp default ``out_dir`` outlives the call (the result reads it
-    lazily) and is registered for removal at interpreter exit; the hook
-    tolerates a dir that something else already deleted."""
-    import shutil
+    lazily): it lives under the process's scratch root, which the exit
+    hook removes; the hook tolerates a root something else deleted."""
+    import tempfile
+    from urllib.parse import urlparse
 
-    hooks = []
-    monkeypatch.setattr(
-        stream_ops.atexit, "register", lambda fn, *a: hooks.append((fn, a))
-    )
+    from proactive_map_reduce_spark.sources import scratch
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(scratch, "_roots", set())
     out = stream_ops.stage_pipeline(spark, _chunks(spark))
     assert out.count() == 8
-    [(fn, args)] = [(fn, a) for fn, a in hooks if fn is shutil.rmtree]
-    out_dir = args[0]
+    root = str(tmp_path / f"pmr_proc_{os.getpid()}")
+    assert scratch._roots == {root} and scratch._owner == os.getpid()
+    [out_dir] = {
+        os.path.dirname(os.path.dirname(urlparse(p).path)) for p in out.inputFiles()
+    }
+    assert os.path.dirname(out_dir) == root
     assert os.path.basename(out_dir).startswith("pmr_stream_out_")
-    assert os.path.isdir(out_dir)
-    fn(*args)
-    assert not os.path.exists(out_dir)
-    fn(*args)  # already gone: no error
+    scratch._remove_roots(os.getpid())  # the exit hook
+    assert not os.path.exists(root)
+    scratch._remove_roots(os.getpid())  # already gone: no error

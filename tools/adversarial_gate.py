@@ -60,9 +60,9 @@ dirs), then run ``tools/compare_oracle.py`` over it — same comparator,
 same canonicalization, zero gate-specific tolerance.
 
 Fixtures are content-addressed on the source dir's stat signature and
-cached under ``pmr_advfix_*`` / ``pmr_nullfix_*`` (reuse refreshes the
-mtime liveness beacon; ``sources/retention.py`` ages out dead
-fingerprints).
+cached under ``pmr_advfix_*`` / ``pmr_nullfix_*`` / … through
+``tools/_fixture.py``, which removes a mode's superseded fingerprints
+after each build.
 
 Usage: python tools/adversarial_gate.py
        [--nulls|--empty|--unicode|--skew|--gauntlet] [query ...]
@@ -89,10 +89,9 @@ SF_SRC = "/root/testdata/sf0.001"
 def build_fixture(mode: str) -> str:
     """Materialize (or reuse) the patched fixture as one parquet FILE per
     table; returns the fixture dir."""
-    from empty_sweep import NULLABLE_CONTENT, _patch_extreme, _patch_skew, _patch_unicode
+    from _fixture import cached_fixture
 
-    from proactive_map_reduce_spark.session import get_spark
-    from proactive_map_reduce_spark.sources.tables import TABLES, stat_signature
+    from proactive_map_reduce_spark.sources.tables import stat_signature
 
     # The tag covers BOTH the source data (stat signature) and the
     # patcher CODE (source bytes of this file + empty_sweep.py, where
@@ -117,16 +116,17 @@ def build_fixture(mode: str) -> str:
         "gauntlet": "pmr_gauntfix",
     }[mode]
     out = os.path.join(tempfile.gettempdir(), f"{prefix}_{tag}")
-    done = os.path.join(out, "_FIXTURE_COMPLETE")
-    if os.path.exists(done):
-        os.utime(out)  # liveness beacon: a reused cache never ages out
-        print(f"reusing fixture {out}", flush=True)
-        return out
+    return cached_fixture(out, lambda stage: _write_fixture(stage, mode))
 
+
+def _write_fixture(stage: str, mode: str) -> None:
+    from empty_sweep import NULLABLE_CONTENT, _patch_extreme, _patch_skew, _patch_unicode
     from pyspark.sql import functions as F
 
+    from proactive_map_reduce_spark.session import get_spark
+    from proactive_map_reduce_spark.sources.tables import TABLES
+
     spark = get_spark("adversarial-gate-fixture")
-    stage = tempfile.mkdtemp(prefix=f"{prefix}_stage_")
     for t in TABLES:
         df = spark.read.parquet(f"{SF_SRC}/{t}.parquet")
         if mode == "nulls":
@@ -160,14 +160,6 @@ def build_fixture(mode: str) -> str:
         shutil.move(part, os.path.join(stage, f"{t}.parquet"))
         shutil.rmtree(part_dir)
     spark.stop()
-    open(os.path.join(stage, "_FIXTURE_COMPLETE"), "w").close()
-    # atomic publish: a concurrent builder loses the rename race cleanly
-    try:
-        os.rename(stage, out)
-    except OSError:
-        shutil.rmtree(stage, ignore_errors=True)
-    print(f"built fixture {out}", flush=True)
-    return out
 
 
 def main() -> int:

@@ -9,7 +9,7 @@ was ~390 s of three DuckDB oracles re-deriving identical answers every
 round): when enabled, a DuckDB result that took longer than
 ``PMR_ORACLE_CACHE_MIN_SEC`` (default 20 s) is stored CANONICALIZED
 (name-sorted columns, canon()-stringified sorted rows) under the
-retention-exempt ``/tmp/pmr_scale_oraclecache`` dir, content-addressed
+persistent ``/tmp/pmr_scale_oraclecache`` dir, content-addressed
 by (sf-dir stat signature, oracle SQL text, DuckDB version) — any data
 or SQL change invalidates. A hit serves the cached canonical rows; the
 Spark side ALWAYS re-runs and the full comparison still happens, so the
@@ -57,7 +57,6 @@ def _cache_get(path: str):
     try:
         with gzip.open(path, "rt") as f:
             doc = json.load(f)
-        os.utime(_CACHE_DIR)  # liveness beacon for the TTL sweep family
         # entries carry the ORIGINAL derivation seconds (ADVICE r10:
         # reporting the cache-read time instead silently dropped the
         # oracle-dominated queries from the long-pole ranking); a

@@ -69,7 +69,11 @@ def main() -> None:
 
     from proactive_map_reduce_spark.oracles import ORACLES
     from proactive_map_reduce_spark.queries import REGISTRY
-    from proactive_map_reduce_spark.session import get_spark, tune_for_input
+    from proactive_map_reduce_spark.session import (
+        default_parallelism,
+        get_spark,
+        tune_for_input,
+    )
 
     spark = get_spark("profile-floor")
     spark.sparkContext.setLogLevel("ERROR")
@@ -80,7 +84,7 @@ def main() -> None:
     # bench never pays, inflating "compute" (r8 fix; hash-invariance of
     # the regime is probed in CONFIG_INVARIANCE.json).
     tune_for_input(spark, sf_dir)
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_parallelism()
 
     con = duckdb.connect()
     from proactive_map_reduce_spark.sources.tables import duck_tune, duck_views

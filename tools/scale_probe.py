@@ -26,8 +26,8 @@ direct measurement further out:
    so rounds must stay ~flat as data scales.
 
 Fixtures: documents-only replicas of sf0.1 (id offsets; text perturbed
-per the variant — see ``build_docs``), content-addressed under the
-retention-exempt ``pmr_scale_`` family.
+per the variant — see ``build_docs``), content-addressed under
+``/tmp/pmr_scale_probe_*`` and reused across runs.
 
 Usage: python tools/scale_probe.py [replicas ...]   # default: 30
 Merges one row per replica count into SCALE_PROBE.json (the 1× baseline
@@ -78,7 +78,6 @@ def build_docs(spark, replicas: int, variant: str) -> str:
     ).hexdigest()[:12]
     out = f"/tmp/pmr_scale_probe_{replicas}x_{variant}_{tag}"
     if os.path.exists(os.path.join(out, "_DONE")):
-        os.utime(out)
         return out
     df = spark.read.parquet(f"{BASE}/documents.parquet")
     df = df.withColumn(

@@ -8,8 +8,9 @@ events fixture (sf0.1 replicated 10×, the driver generator's own sf1 row
 counts) pushed through the FULL cross-engine gate — same comparator,
 zero gate-specific tolerance.
 
-Fixture (``/tmp/pmr_scale_sf1_<tag>`` — the retention-exempt pmr_scale_
-family; tag = hash of base-data signature + this file's source bytes):
+Fixture (``/tmp/pmr_scale_sf1_<tag>``, built once through
+``tools/_fixture.py``; tag = hash of base-data signature + this file's
+source bytes):
 
 - big tables replicated 10× with per-replica id offsets (so
   join/dedup semantics stay non-degenerate); documents text is
@@ -61,8 +62,7 @@ def fixture_path() -> str:
     REPLICAS / OFFSETS / the perturbation logic (or the base data
     changing between rounds) forces a rebuild instead of silently
     attesting a pass against stale fixture semantics — the same
-    invalidation rule adversarial_gate.py and split_invariance.py apply.
-    The pmr_scale_ prefix keeps it retention-exempt."""
+    invalidation rule adversarial_gate.py and split_invariance.py apply."""
     import hashlib
 
     from proactive_map_reduce_spark.sources.tables import stat_signature
@@ -76,31 +76,18 @@ def fixture_path() -> str:
 
 
 def build() -> str:
-    import tempfile
+    from _fixture import cached_fixture
 
-    out = fixture_path()
-    if os.path.exists(os.path.join(out, "_FIXTURE_COMPLETE")):
-        os.utime(out)
-        print(f"reusing fixture {out}", flush=True)
-        return out
+    return cached_fixture(fixture_path(), _write_fixture)
 
+
+def _write_fixture(stage: str) -> None:
     from pyspark.sql import functions as F
 
     from proactive_map_reduce_spark.session import get_spark
     from proactive_map_reduce_spark.sources.tables import load_table
 
     spark = get_spark("sf1-gate-fixture")
-    # mkdtemp, not OUT+'.stage' (ADVICE r7): concurrent builders each
-    # get a private stage instead of rmtree-ing each other's; the loser
-    # of the final rename race discards its copy. pmr_sf1stage_ is NOT
-    # retention-exempt, so an abandoned stage ages out on TTL. The stage
-    # lives on the SAME filesystem as the target (ADVICE r8): a default
-    # mkdtemp honors TMPDIR, and a cross-device stage makes the final
-    # os.rename raise EXDEV on every build — which the race-loser branch
-    # would misread as a lost race, discarding the fresh fixture.
-    stage = tempfile.mkdtemp(
-        prefix="pmr_sf1stage_", dir=os.path.dirname(out)
-    )
     for t in SMALL:
         # byte-identical copy: preserves the generator's exact parquet
         # typing for both engines
@@ -124,19 +111,6 @@ def build() -> str:
             f"{stage}/{t}.parquet"
         )
     spark.stop()
-    open(os.path.join(stage, "_FIXTURE_COMPLETE"), "w").close()
-    try:
-        os.rename(stage, out)
-    except OSError:
-        # only a lost concurrent-builder race is swallowable — and only
-        # when the winner's COMPLETE fixture actually exists. Anything
-        # else (EXDEV, permissions) must surface, not silently return a
-        # path that does not exist (ADVICE r8).
-        if not os.path.exists(os.path.join(out, "_FIXTURE_COMPLETE")):
-            raise
-        shutil.rmtree(stage, ignore_errors=True)
-    print(f"built fixture {out}", flush=True)
-    return out
 
 
 # Queries excluded from the sf1 run, each with its measured reason.

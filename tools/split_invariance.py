@@ -19,8 +19,8 @@ it does on the single-file fixture.
 
 Fixture cache: content-addressed on the source data signature AND this
 file's source bytes (the adversarial_gate r7 rule: patcher edits must
-invalidate), under ``pmr_splitfix_*`` with the standard mtime liveness
-beacon (sources/retention.py).
+invalidate), under ``pmr_splitfix_*``, built once through
+``tools/_fixture.py``.
 
 Usage: python tools/split_invariance.py [--files=N] [query ...]
 Writes SPLIT_INVARIANCE.json at the repo root; exit non-zero on any
@@ -33,7 +33,6 @@ import glob
 import hashlib
 import json
 import os
-import shutil
 import sys
 import tempfile
 import time
@@ -48,8 +47,9 @@ PROBE_ENV = {"SPARK_GRAFT_MAX_PARTITION_BYTES": "65536"}
 
 
 def build_fixture(n_files: int) -> str:
-    from proactive_map_reduce_spark.session import get_spark
-    from proactive_map_reduce_spark.sources.tables import TABLES, stat_signature
+    from _fixture import cached_fixture
+
+    from proactive_map_reduce_spark.sources.tables import stat_signature
 
     with open(os.path.abspath(__file__), "rb") as f:
         code = f.read()
@@ -59,14 +59,14 @@ def build_fixture(n_files: int) -> str:
         + str(n_files).encode()
     ).hexdigest()[:12]
     out = os.path.join(tempfile.gettempdir(), f"pmr_splitfix_{tag}")
-    done = os.path.join(out, "_FIXTURE_COMPLETE")
-    if os.path.exists(done):
-        os.utime(out)  # liveness beacon
-        print(f"reusing fixture {out}", flush=True)
-        return out
+    return cached_fixture(out, lambda stage: _write_fixture(stage, n_files))
+
+
+def _write_fixture(stage: str, n_files: int) -> None:
+    from proactive_map_reduce_spark.session import get_spark
+    from proactive_map_reduce_spark.sources.tables import TABLES
 
     spark = get_spark("split-invariance-fixture")
-    stage = tempfile.mkdtemp(prefix="pmr_splitfix_stage_")
     for t in TABLES:
         df = spark.read.parquet(f"{SF_SRC}/{t}.parquet")
         (
@@ -76,13 +76,6 @@ def build_fixture(n_files: int) -> str:
             .parquet(os.path.join(stage, f"{t}.parquet"))
         )
     spark.stop()
-    open(os.path.join(stage, "_FIXTURE_COMPLETE"), "w").close()
-    try:
-        os.rename(stage, out)
-    except OSError:  # lost a concurrent-builder race; the winner's is valid
-        shutil.rmtree(stage, ignore_errors=True)
-    print(f"built fixture {out}", flush=True)
-    return out
 
 
 def layout_stats(fixture: str) -> dict:
