@@ -5,8 +5,7 @@
 the beyond-reference capabilities (inventory in COVERAGE.md);
 ``oracle_sql()`` gives the DuckDB-equivalent SQL for EVERY registered
 query — the former rows-only ops are now hash-checked too (BLEU/ROUGE
-via integer n-gram/LCS counts, IVF via deterministic fixed-point
-Lloyd's, sketches via KMV + histogram bins).
+via integer n-gram/LCS counts, sketches via KMV + histogram bins).
 """
 
 from __future__ import annotations
@@ -77,13 +76,11 @@ _REWRITTEN = {
     # relational/reference review pass: null-text corpus round-trip mirror
     "q_scan_text_corpus": 4,
     # round-5 ANSI-robustness pass (the --extreme sweep): zero-norm
-    # cosine guard, clamped IVF fixed-point, winsorized z-score cents,
+    # cosine guard, winsorized z-score cents,
     # KMV divisor clamp, empty-doc decoding-speed guard — in-domain
     # values unchanged (gate-verified), but the PLANS changed, so the
     # driver should re-derive green rows on the new expressions.
     "q_similarity_lsh": 5,
-    "q_similarity_ivf": 5,
-    "q_similarity_ivf_sampled": 5,
     "q_dedup_embedding": 5,
     "q_event_anomaly": 5,
     "q_sketch_stats": 5,

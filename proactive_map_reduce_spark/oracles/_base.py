@@ -335,108 +335,6 @@ def _cos_sql(a: str, b: str) -> str:
     return f"({dot} / ({na} * {nb}))"
 
 
-# IVF top-k: deterministic fixed-point Lloyd's, unrolled one CTE pair per
-# iteration — mirror of operators/similarity.py ivf_topk (integer L2,
-# md5-ranked seeds, floor(s/n + 0.5) centroid quantization).
-def _ivf_sql(n_queries=8, k=5, n_clusters=8, nprobe=3, iters=5, scale=1_000_000, train_fraction=None):
-    dist = (
-        "list_sum(list_transform(generate_series(1, len(x.xi)), "
-        "d -> (x.xi[d] - c.ci[d]) * (x.xi[d] - c.ci[d])))"
-    )
-    if train_fraction is None:
-        gate_cte, train_src = "", "xint"
-    else:
-        th = int(train_fraction * 2**32)
-        # mirror the Spark operator's degenerate-sample fallback
-        # (similarity.py ivf_topk): when the hash gate selects ZERO
-        # vectors, train on the full input rather than emit nothing
-        gate_cte = (
-            ",\nxgated AS (SELECT * FROM xint WHERE "
-            f"CAST(('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 8)) AS BIGINT) < {th}),"
-            "\nxtrain AS (SELECT * FROM xgated UNION ALL "
-            "SELECT * FROM xint WHERE NOT EXISTS (SELECT 1 FROM xgated))"
-        )
-        train_src = "xtrain"
-    parts = [
-        f"""
-xint AS (
-  -- clamp + NaN→0 mirror similarity.py _fixed_point (IVF_CLAMP): the
-  -- clamp applies in DOUBLE before the BIGINT cast, so garbage
-  -- components can neither overflow the cast nor the squared distance
-  SELECT vec_id,
-         list_transform(embedding,
-           x -> CAST(greatest(least(floor(
-                  (CASE WHEN isnan(CAST(x AS DOUBLE)) THEN 0.0
-                        ELSE CAST(x AS DOUBLE) END) * {scale} + 0.5),
-                  150000000.0), -150000000.0) AS BIGINT)) AS xi,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-){gate_cte},
-c0 AS (
-  SELECT CAST(rn - 1 AS INT) AS cluster, xi AS ci FROM (
-    SELECT xi, row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR))) AS rn
-    FROM {train_src}
-  ) WHERE rn <= {n_clusters}
-)"""
-    ]
-    for i in range(1, iters + 1):
-        parts.append(
-            f"""
-a{i} AS (
-  SELECT vec_id, xi, cluster FROM (
-    SELECT x.vec_id, x.xi, c.cluster,
-           row_number() OVER (PARTITION BY x.vec_id ORDER BY {dist}, c.cluster) AS rn
-    FROM {train_src} x, c{i - 1} c
-  ) WHERE rn = 1
-),
-c{i} AS (
-  SELECT cluster, list(CAST(floor(s / n + 0.5) AS BIGINT) ORDER BY d) AS ci FROM (
-    SELECT a.cluster, t.d, sum(a.xi[t.d]) AS s, count(*) AS n
-    FROM a{i} a, UNNEST(generate_series(1, len(a.xi))) t(d)
-    GROUP BY a.cluster, t.d
-  ) GROUP BY cluster
-)"""
-        )
-    parts.append(
-        f"""
-af AS (
-  SELECT vec_id, xi, cluster FROM (
-    SELECT x.vec_id, x.xi, c.cluster,
-           row_number() OVER (PARTITION BY x.vec_id ORDER BY {dist}, c.cluster) AS rn
-    FROM xint x, c{iters} c
-  ) WHERE rn = 1
-),
-q AS (
-  SELECT a.vec_id AS query_id, a.xi AS qxi, x.v AS qv
-  FROM af a JOIN xint x USING (vec_id) WHERE a.vec_id < {n_queries}
-),
-qp AS (
-  SELECT query_id, qv, cluster FROM (
-    SELECT x.query_id, x.qv, c.cluster,
-           row_number() OVER (PARTITION BY x.query_id ORDER BY
-             list_sum(list_transform(generate_series(1, len(x.qxi)),
-               d -> (x.qxi[d] - c.ci[d]) * (x.qxi[d] - c.ci[d]))), c.cluster) AS crank
-    FROM q x, c{iters} c
-  ) WHERE crank <= {nprobe}
-),
-scored AS (
-  SELECT p.query_id, a.vec_id AS neighbor_id,
-         round({_cos_sql('p.qv', 'x.v')}, 6) AS cos_sim
-  FROM af a JOIN qp p USING (cluster) JOIN xint x ON x.vec_id = a.vec_id
-  WHERE a.vec_id != p.query_id
-),
-ranked AS (
-  SELECT *, CAST(row_number() OVER (
-    PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS INT) AS rank
-  FROM scored
-)"""
-    )
-    return (
-        "WITH " + ",".join(parts)
-        + f"\nSELECT query_id, neighbor_id, cos_sim, rank FROM ranked WHERE rank <= {k}"
-    )
-
-
 # F6 BLEU, relational form: clipped n-gram matches / totals per order
 # (exact integers) + closed-form smoothed BLEU from those integers —
 # mirror of functions/scoring.py bleu_table.

@@ -32,7 +32,6 @@ from ._base import (  # noqa: F401
     _chunked_sum_sql,
     _cos_sql,
     _h,
-    _ivf_sql,
     _jaccard_select,
     _norm,
     _set_f1_sql,

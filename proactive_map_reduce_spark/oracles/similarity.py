@@ -27,7 +27,6 @@ from ._base import (  # noqa: F401
     _chunked_sum_sql,
     _cos_sql,
     _h,
-    _ivf_sql,
     _jaccard_select,
     _norm,
     _set_f1_sql,
@@ -84,14 +83,6 @@ ranked AS (
 )
 SELECT query_id, neighbor_id, cos_sim, rank FROM ranked WHERE rank <= 5
 """
-
-
-ORACLES["q_similarity_ivf"] = _ivf_sql()
-
-
-# the 100 TB training path: quantizer trained on the deterministic
-# md5-gated half of the corpus, assignment/probing over everything
-ORACLES["q_similarity_ivf_sampled"] = _ivf_sql(train_fraction=0.5)
 
 
 ORACLES["q_multimodal_features"] = f"""

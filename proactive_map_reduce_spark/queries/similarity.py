@@ -1,5 +1,6 @@
-"""Embedding similarity and multimodal queries: brute-force/LSH/IVF top-k,
-centroids, quantization, and the binary-column multimodal stages."""
+"""Embedding similarity and multimodal queries: exact brute-force and
+sign-bucket LSH top-k, centroids, quantization, and the binary-column
+multimodal stages."""
 
 from ._base import *  # noqa: F401,F403
 from ._base import (  # noqa: F401
@@ -56,15 +57,6 @@ def q_multimodal_frames(spark, sf_dir):
     )
 
 
-def q_similarity_ivf(spark, sf_dir):
-    """IVF approximate top-k (deterministic fixed-point Lloyd's coarse
-    quantizer, nprobe=3 of 8 clusters). Integer distance/centroid math
-    makes cluster boundaries bit-stable cross-engine → fully hash-checked
-    in the driver gate; recall vs brute force is pinned by tests."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return sim_ops.ivf_topk(emb, n_queries=8, k=5, n_clusters=8, nprobe=3)
-
-
 def q_embed_documents(spark, sf_dir):
     """Documents → embeddings bridge: deterministic stand-in encoder
     (hash-derived unit-less vector per doc; a real encoder swaps in as a
@@ -100,7 +92,7 @@ def q_quantize_embeddings(spark, sf_dir):
     (EMBED_DIM is schema-known) so the whole pass stays in whole-stage
     codegen rather than interpreted array HOFs, same as the similarity
     hot path. At 100 TB this is the prep pass that shrinks the vector
-    column 4× before the IVF/LSH index build reads it.
+    column 4× before a similarity scan or LSH bucketing reads it.
     """
     emb = load_table(spark, sf_dir, "embeddings")
     dim = sim_ops.EMBED_DIM
@@ -134,24 +126,12 @@ def q_quantize_embeddings(spark, sf_dir):
     )
 
 
-def q_similarity_ivf_sampled(spark, sf_dir):
-    """IVF with the sampled-training path ON (train_fraction=0.5, the
-    deterministic md5 hash gate): the 100 TB configuration, where the
-    coarse quantizer trains on a corpus sample while assignment and
-    probing stay full passes. Fully hash-checked — the sample, and thus
-    the quantizer, is bit-reproducible cross-engine."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return sim_ops.ivf_topk(
-        emb, n_queries=8, k=5, n_clusters=8, nprobe=3, train_fraction=0.5
-    )
-
-
 def q_embedding_centroids(spark, sf_dir):
-    """Per-label embedding centroids (the building block of IVF training
-    and cluster-based curation): posexplode the vectors, average per
-    (label, dim), reassemble in dim order. Two exchanges — (label, dim)
-    partial-agg then label reassembly; vector width is a constant, so
-    exchanged volume is rows x dim regardless of corpus size.
+    """Per-label embedding centroids (the building block of cluster-based
+    curation): posexplode the vectors, average per (label, dim),
+    reassemble in dim order. Two exchanges — (label, dim) partial-agg
+    then label reassembly; vector width is a constant, so exchanged
+    volume is rows x dim regardless of corpus size.
 
     Output is the centroid's checksum + first component (same
     float-array-hash-free convention as q_embed_documents)."""

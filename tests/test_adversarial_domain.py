@@ -309,10 +309,12 @@ def test_unicode_strings_are_distinct_codepoint_sequences():
     """The --unicode fixture's NFC and NFD variants must be different
     byte strings (the no-implicit-normalization contract both engines
     share): same visual text, distinct sha256/group keys."""
+    import os
     import sys
     import unicodedata
 
-    sys.path.insert(0, "/root/repo/tools")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, os.path.join(root, "tools"))
     from empty_sweep import _UNI_STRINGS
 
     nfc, nfd = _UNI_STRINGS[0], _UNI_STRINGS[1]

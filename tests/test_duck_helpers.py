@@ -16,6 +16,8 @@ import duckdb
 
 from proactive_map_reduce_spark.sources.tables import duck_tune, duck_views
 
+TOOLS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+
 
 def _limit_bytes(con) -> int:
     # memory_limit renders like '44.7 GiB'
@@ -91,7 +93,7 @@ def test_oracle_result_cache_roundtrip(tmp_path, monkeypatch):
     import json
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import compare_oracle as co
 
     monkeypatch.setattr(co, "_CACHE_DIR", str(tmp_path / "cache"))
@@ -120,7 +122,7 @@ def test_oracle_cache_key_salted_by_format_version(tmp_path, monkeypatch):
     every key (old entries become unreachable, not served stale)."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import compare_oracle as co
 
     monkeypatch.setattr(co, "_CACHE_DIR", str(tmp_path / "cache"))

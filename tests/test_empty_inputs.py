@@ -29,7 +29,7 @@ QUERIES = [
     "q_sink_partitioned",        # schema-on-read of an empty sink
     "q_cache_fetch_or_compute",  # zero cached stages
     "q_similarity_topk",         # empty parameterized query-vector set
-    "q_similarity_ivf",          # k-means on an empty corpus
+    "q_similarity_lsh",          # empty sign-bucket join
     "q_dedup_minhash_pairs",     # empty LSH bucket index
     "q_flagship",                # full chunk→map→reduce→score chain
 ]

@@ -2,9 +2,6 @@
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from pyspark.sql import functions as F
 
 from proactive_map_reduce_spark.pipeline import ProactivePipeline
@@ -53,17 +50,14 @@ def test_streaming_pipeline_equals_batch(spark):
     assert batch == streamed
 
 
-def test_write_results_jsonl_roundtrip(spark):
+def test_write_results_jsonl_roundtrip(spark, tmp_path):
     docs, gt = _corpus(spark)
     pipe = ProactivePipeline(spark, num_steps=4)
-    out = tempfile.mkdtemp(prefix="pmr_results_") + "/r"
-    try:
-        pipe.write_results(pipe.run_batch(docs, gt), out)
-        back = spark.read.json(out)
-        assert back.count() == 3
-        assert {"doc_id", "f1", "bleu", "exact_match", "n_chunks"} <= set(back.columns)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+    out = str(tmp_path / "r")
+    pipe.write_results(pipe.run_batch(docs, gt), out)
+    back = spark.read.json(out)
+    assert back.count() == 3
+    assert {"doc_id", "f1", "bleu", "exact_match", "n_chunks"} <= set(back.columns)
 
 
 def test_custom_model_fn_plugs_in(spark):

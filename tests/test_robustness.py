@@ -92,14 +92,12 @@ def test_minhash_single_doc_no_pairs(spark):
     assert pairs.count() == 0
 
 
-def test_corrupt_json_lines_quarantined_not_fatal(spark):
+def test_corrupt_json_lines_quarantined_not_fatal(spark, tmp_path):
     """PERMISSIVE JSON reads must quarantine corrupt lines into
     _corrupt_record and keep every valid row — the behavior a 100 TB
     ingest depends on (one bad line in a billion must not kill the job,
     and must be auditable afterwards)."""
-    import tempfile
-
-    path = tempfile.mkdtemp(prefix="pmr_corrupt_") + "/data.jsonl"
+    path = str(tmp_path / "data.jsonl")
     good = ['{"doc_id": %d, "text": "row %d"}' % (i, i) for i in range(10)]
     bad = ['{"doc_id": 100, "text": "unterminated', "not json at all", "{]"]
     with open(path, "w") as f:
@@ -123,14 +121,12 @@ def test_corrupt_json_lines_quarantined_not_fatal(spark):
         ).json(path).collect()
 
 
-def test_parquet_schema_evolution_merge(spark):
+def test_parquet_schema_evolution_merge(spark, tmp_path):
     """A dataset whose later files gained a column must read cleanly with
     mergeSchema: old rows surface NULL for the new column, new rows keep
     it — the append-only evolution contract of a long-lived 100 TB
     dataset (schema-on-read, no rewrite of history)."""
-    import tempfile
-
-    root = tempfile.mkdtemp(prefix="pmr_evolve_") + "/data"
+    root = str(tmp_path / "data")
     spark.createDataFrame(
         [(0, "alpha"), (1, "beta")], "doc_id long, text string"
     ).write.parquet(root)

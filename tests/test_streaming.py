@@ -190,7 +190,7 @@ def test_stream_static_enrich_equals_batch_join(spark):
     assert r["segment"] == b["c_mktsegment"]
 
 
-def test_checkpoint_recovery_exactly_once(spark):
+def test_checkpoint_recovery_exactly_once(spark, tmp_path):
     """Stop a stateful stream mid-input, restart from the SAME checkpoint
     with more input, and verify nothing is reprocessed or lost — the
     state-store recovery contract a long-running 100 TB/day pipeline
@@ -203,8 +203,6 @@ def test_checkpoint_recovery_exactly_once(spark):
     counts would be inflated if restart re-read old files, deflated if
     offsets skipped unread data.
     """
-    import tempfile as _tf
-
     from pyspark.sql import functions as F
 
     from proactive_map_reduce_spark.sources.tables import load_table
@@ -222,11 +220,12 @@ def test_checkpoint_recovery_exactly_once(spark):
     files = sorted(_glob.glob(root + "/*.parquet"), key=_os.path.getmtime)
     # hold back the last half of the input until after the restart
     held = files[len(files) // 2:]
-    stash = _tf.mkdtemp(prefix="pmr_held_")
+    stash = str(tmp_path / "held")
+    _os.mkdir(stash)
     for f in held:
         _os.rename(f, stash + "/" + _os.path.basename(f))
 
-    ckpt = _tf.mkdtemp(prefix="pmr_ckpt_rec_")
+    ckpt = str(tmp_path / "ckpt")
     name = "pmr_recovery_sink"
 
     def start():

@@ -33,7 +33,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 _CACHE_DIR = "/tmp/pmr_scale_oraclecache"
 _CACHE_ON = os.environ.get("PMR_ORACLE_CACHE", "") == "1"

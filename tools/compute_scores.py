@@ -12,9 +12,11 @@ Usage: python tools/compute_scores.py baseline.jsonl proactive.jsonl
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> int:

@@ -102,7 +102,7 @@ def run_probe(
     gate's total hid its distribution — the r8 long pole was only found
     by re-timing a query by hand; per-query seconds belong in the
     committed artifact). Off by default so the 8-probe invariance
-    artifact doesn't carry 8×132 timing rows it doesn't need."""
+    artifact doesn't carry 8×130 timing rows it doesn't need."""
     env = dict(os.environ)
     env.update(env_overlay)
     t0 = time.time()

@@ -40,10 +40,12 @@ Prints one line per query; exits non-zero on any failure.
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_SCHEMA_SRC = "/root/testdata/sf0.001"
 

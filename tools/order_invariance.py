@@ -31,11 +31,13 @@ Usage:
   python tools/order_invariance.py /tmp/<permuted_dir>
 """
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "tools"))
 
 from compare_oracle import canon  # noqa: E402
 

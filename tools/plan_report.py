@@ -13,7 +13,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 QUERIES = [
     "q_pricing_summary",
@@ -148,7 +149,7 @@ def main() -> None:
             "```",
             "",
         ]
-    with open(os.path.join(os.path.dirname(__file__), "..", "PLANS.md"), "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(QUERIES)} queries)")
     spark.stop()
