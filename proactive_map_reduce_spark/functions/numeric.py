@@ -8,9 +8,11 @@ exactly on the half boundary (e.g. 27484/64000 = "0.4294375") rounds UP
 in Spark and DOWN in DuckDB. The sf0.1 deep gate caught two live
 instances (q_quality_score, q_event_interarrival).
 
-``round6_ratio`` sidesteps float round() entirely for non-negative
-integer ratios: the half-up 6-decimal rounding is done in exact int64
-arithmetic — ``floor((2·num·10⁶ + den) / (2·den)) / 10⁶`` — where the
+``round_ratio`` (and its DuckDB mirror ``round_ratio_sql``) sidesteps
+float round() entirely for non-negative integer ratios: the half-up
+6-decimal rounding (``scale`` defaults to 6, the display grain of every
+ratio column) is done in exact int64 arithmetic —
+``floor((2·num·10⁶ + den) / (2·den)) / 10⁶`` — where the
 floor division runs as Spark's integral ``div`` (bigint in, bigint
 out; DuckDB mirror ``//``), so every intermediate stays an exact
 int64. Both engines then convert the SAME integer to double
@@ -47,9 +49,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-_SCALE = 1_000_000  # 6 decimal places
-
-
 def round_ratio(num: Column, den: Column, scale: int = 6) -> Column:
     """Half-up ``round(num/den, scale)`` for non-negative integer
     columns, computed exactly (see module docstring). Returns double;
@@ -70,15 +69,6 @@ def round_ratio_sql(num: str, den: str, scale: int = 6) -> str:
         f"(((2 * {s} * CAST(({num}) AS BIGINT) + CAST(({den}) AS BIGINT)) "
         f"// (2 * CAST(({den}) AS BIGINT))) / {float(s)})"
     )
-
-
-def round6_ratio(num: Column, den: Column) -> Column:
-    """``round(num/den, 6)`` — see :func:`round_ratio`."""
-    return round_ratio(num, den, 6)
-
-
-def round6_ratio_sql(num: str, den: str) -> str:
-    return round_ratio_sql(num, den, 6)
 
 
 def fixed_units(value: Column, scale: int) -> Column:

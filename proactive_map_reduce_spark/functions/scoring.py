@@ -1,14 +1,15 @@
 """Scoring functions (SURVEY §2.6 A5-A7, §2.9 F6-F7).
 
 Set/multiset scores are pure built-in array algebra (oracle-checkable).
-BLEU and ROUGE-L each exist in TWO forms: the hash-checked RELATIONAL
-implementations used by the registry queries (integer n-gram counts via
-explode+window, window-recurrence LCS — every value verified against a
-DuckDB oracle), and Arrow-batched pandas UDF references (the reference
-uses NLTK ``sentence_bleu`` with chencherry smoothing and Google's
-``rouge_scorer`` — re-implemented as small deterministic pure-Python
+BLEU and ROUGE-L each exist in TWO forms: the hash-checked forms used by
+the registry queries (relational integer n-gram counts via
+explode+window for BLEU, the integer ``lcs_udf`` for ROUGE-L — every
+value verified against a DuckDB oracle), and pure-Python references
+(the reference uses NLTK ``sentence_bleu`` with chencherry smoothing and
+Google's ``rouge_scorer`` — re-implemented as small deterministic
 functions, no external deps) that the property tests cross-check the
-relational forms against.
+query forms against. ``bleu_udf`` serves the Python BLEU to
+``ProactivePipeline.score``.
 
 Reference parallels:
 - token-counter multiset F1: pipeline_70b_samsum.py:83-97 (Counter & Counter).
@@ -27,7 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .numeric import round6_ratio
+from .numeric import round_ratio
 
 
 # --- built-in array algebra (SQL-checkable) ---------------------------------
@@ -47,7 +48,7 @@ def set_f1(pred_words: Column, gold_words: Column) -> Column:
     return (
         F.when((F.size(p) == 0) | (F.size(g) == 0), both_empty)
         .when(inter == 0, F.lit(0.0))
-        .otherwise(round6_ratio(2 * inter, F.size(p) + F.size(g)))
+        .otherwise(round_ratio(2 * inter, F.size(p) + F.size(g)))
     )
 
 
@@ -57,10 +58,9 @@ def pair_scores(
     gold_col: str,
     f1_col: str = "set_f1",
     em_col: str = "em",
-    sub_col: str = "subset_acc",
 ):
     """All three answer metrics of a (pred, gold) text pair —
-    ``set_f1`` + exact match + ``subset_accuracy`` — with each side
+    ``set_f1`` + exact match + ``subset_acc`` — with each side
     NORMALIZED ONCE (r12 flagship shave).
 
     Composing ``set_f1(norm_tokens(x), norm_tokens(y))`` + exact_match
@@ -104,7 +104,7 @@ def pair_scores(
     f1 = (
         F.when(either_empty, both_empty.cast("double"))
         .when(inter == 0, F.lit(0.0))
-        .otherwise(round6_ratio(2 * inter, F.size(p) + F.size(g)))
+        .otherwise(round_ratio(2 * inter, F.size(p) + F.size(g)))
     )
     sub = F.when(either_empty, both_empty.cast("int")).otherwise(
         (F.size(F.array_except(g, p)) == 0).cast("int")
@@ -112,7 +112,7 @@ def pair_scores(
     return (
         df.withColumn(f1_col, f1)
         .withColumn(em_col, (F.col(nf) == F.col(ng)).cast("int"))
-        .withColumn(sub_col, sub)
+        .withColumn("subset_acc", sub)
         .drop(nf, ng, tf, tg, ni)
     )
 
@@ -148,7 +148,11 @@ def _tokens(s: str) -> list[str]:
     return [t for t in s.split(" ") if t] if s else []
 
 
-def bleu_score(pred: str, gold: str, max_order: int = 4) -> float:
+#: BLEU's highest n-gram order (the reference's sentence_bleu default).
+BLEU_MAX_ORDER = 4
+
+
+def bleu_score(pred: str, gold: str) -> float:
     """Smoothed sentence BLEU over whitespace tokens (reference:
     nltk sentence_bleu + chencherry method7, test_proactive.py:374-376).
     Here: add-1 smoothing on orders with zero matches (method-1 style),
@@ -157,7 +161,7 @@ def bleu_score(pred: str, gold: str, max_order: int = 4) -> float:
     if not p_toks or not g_toks:
         return 0.0
     # cap order at candidate length so short identical texts score 1.0
-    max_order = min(max_order, len(p_toks))
+    max_order = min(BLEU_MAX_ORDER, len(p_toks))
     log_sum = 0.0
     for n in range(1, max_order + 1):
         p_ng, g_ng = _ngrams(p_toks, n), _ngrams(g_toks, n)
@@ -186,7 +190,6 @@ def bleu_score(pred: str, gold: str, max_order: int = 4) -> float:
 # document (100 tokens, measured tri-scale), so canonical values are
 # untouched, and the worst per-doc cost is bounded at 2048² ≈ 4e6
 # cells regardless of corpus content. Mirrored in the q_rouge oracle.
-# (Defined ahead of rouge_l/lcs_udf, which read it — ADVICE r5.)
 LCS_MAX_TOKENS = 2048
 
 
@@ -224,10 +227,11 @@ def bleu_udf(pred: pd.Series, gold: pd.Series) -> pd.Series:
 # --- relational BLEU (hash-checkable: integer n-gram counts + closed-form) --
 
 
-def _ngram_counts(df: DataFrame, text_col: str, max_n: int = 4) -> DataFrame:
+def _ngram_counts(df: DataFrame, text_col: str) -> DataFrame:
     """(doc_id, n, g, c): per-document n-gram multiset counts for
-    n = 1..max_n, via posexplode + window-lead (whole-stage codegen; one
-    exchange on doc_id serves the window and the count aggregation)."""
+    n = 1..BLEU_MAX_ORDER, via posexplode + window-lead (whole-stage
+    codegen; one exchange on doc_id serves the window and the count
+    aggregation)."""
     toks = df.select(
         "doc_id", F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "w")
     ).filter(F.col("w") != "")  # drop empty tokens (runs of spaces / empty
@@ -237,10 +241,10 @@ def _ngram_counts(df: DataFrame, text_col: str, max_n: int = 4) -> DataFrame:
     leads = toks.select(
         "doc_id",
         "w",
-        *[F.lead("w", i).over(win).alias(f"w{i}") for i in range(1, max_n)],
+        *[F.lead("w", i).over(win).alias(f"w{i}") for i in range(1, BLEU_MAX_ORDER)],
     )
     structs = [F.struct(F.lit(1).alias("n"), F.col("w").alias("g"))]
-    for n in range(2, max_n + 1):
+    for n in range(2, BLEU_MAX_ORDER + 1):
         parts = [F.col("w")] + [F.col(f"w{i}") for i in range(1, n)]
         structs.append(
             F.struct(
@@ -258,14 +262,9 @@ def _ngram_counts(df: DataFrame, text_col: str, max_n: int = 4) -> DataFrame:
     return grams.groupBy("doc_id", "n", "g").agg(F.count("*").alias("c"))
 
 
-def bleu_table(
-    pred_df: DataFrame,
-    gold_df: DataFrame,
-    pred_col: str = "final_text",
-    gold_col: str = "text",
-    max_n: int = 4,
-) -> DataFrame:
-    """Smoothed sentence BLEU as a relational plan: integer clipped-match
+def bleu_table(pred_df: DataFrame, gold_df: DataFrame) -> DataFrame:
+    """Smoothed sentence BLEU of pred_df.final_text against
+    gold_df.text as a relational plan: integer clipped-match
     and total counts per order (exact, hash-checkable cross-engine) plus
     the BLEU float computed from those integers in closed form
     (geo-mean of precisions × brevity penalty — exp/ln built-ins only).
@@ -278,9 +277,9 @@ def bleu_table(
     each keyed by doc_id); the clipped-overlap join keys on
     (doc_id, n, gram) — fully distributed, no per-row quadratic UDF.
     """
-    p = _ngram_counts(pred_df.select("doc_id", pred_col), pred_col, max_n)
+    p = _ngram_counts(pred_df.select("doc_id", "final_text"), "final_text")
     g = (
-        _ngram_counts(gold_df.select("doc_id", gold_col), gold_col, max_n)
+        _ngram_counts(gold_df.select("doc_id", "text"), "text")
         .withColumnRenamed("c", "cg")
     )
     per_n = (
@@ -296,13 +295,13 @@ def bleu_table(
             F.coalesce(F.max(F.when(F.col("n") == n, F.col(src))), F.lit(0))
             .cast("bigint")
             .alias(f"{src}{n}")
-            for n in range(1, max_n + 1)
+            for n in range(1, BLEU_MAX_ORDER + 1)
             for src in ("m", "t")
         ]
     )
     lens = gold_df.select(
         "doc_id",
-        F.size(F.filter(F.split(F.col(gold_col), " "), lambda x: x != ""))
+        F.size(F.filter(F.split(F.col("text"), " "), lambda x: x != ""))
         .cast("bigint")
         .alias("len_g"),
     )
@@ -321,13 +320,13 @@ def bleu_table(
             "len_g",
             *[
                 F.coalesce(F.col(f"{src}{n}"), F.lit(0)).cast("bigint").alias(f"{src}{n}")
-                for n in range(1, max_n + 1)
+                for n in range(1, BLEU_MAX_ORDER + 1)
                 for src in ("m", "t")
             ],
         )
         .withColumn("len_p", F.col("t1"))
     )
-    max_order = F.least(F.lit(max_n), F.col("len_p"))
+    max_order = F.least(F.lit(BLEU_MAX_ORDER), F.col("len_p"))
 
     def log_prec(n: int) -> Column:
         m, t = F.col(f"m{n}"), F.col(f"t{n}")
@@ -336,7 +335,10 @@ def bleu_table(
         )
 
     log_sum = sum(
-        (F.when(max_order >= n, log_prec(n)).otherwise(F.lit(0.0)) for n in range(1, max_n + 1)),
+        (
+            F.when(max_order >= n, log_prec(n)).otherwise(F.lit(0.0))
+            for n in range(1, BLEU_MAX_ORDER + 1)
+        ),
         F.lit(0.0),
     )
     bp = F.when(F.col("len_p") > F.col("len_g"), F.lit(1.0)).otherwise(
@@ -346,7 +348,7 @@ def bleu_table(
         "doc_id",
         "len_p",
         "len_g",
-        *[F.col(f"{src}{n}") for n in range(1, max_n + 1) for src in ("m", "t")],
+        *[F.col(f"{src}{n}") for n in range(1, BLEU_MAX_ORDER + 1) for src in ("m", "t")],
         F.round(
             # empty pred or gold scores 0.0 (bleu_score's guard) — also
             # keeps the bp/log divisions off the len_p = 0 path
@@ -356,11 +358,6 @@ def bleu_table(
             6,
         ).alias("bleu"),
     )
-
-
-@F.pandas_udf(T.DoubleType())
-def rouge_l_udf(pred: pd.Series, gold: pd.Series) -> pd.Series:
-    return pd.Series([round(rouge_l(p or "", g or ""), 6) for p, g in zip(pred, gold)])
 
 
 @F.pandas_udf(T.LongType())

@@ -1,7 +1,7 @@
 """As-of (point-in-time) join — an operator Spark's DataFrame API lacks.
 
 For each left row, attach the most recent right row with
-right_ts <= left_ts, per key. The classic implementations are a
+right.ts <= left.ts, per key. The classic implementations are a
 range-join (quadratic blowup risk) or per-key loops; the scale-correct
 Spark form is union + ordered carry-forward:
 
@@ -23,14 +23,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-) -> DataFrame:
-    """Backward as-of join (latest right at-or-before each left row).
+def asof_join(left: DataFrame, right: DataFrame, on: str) -> DataFrame:
+    """Backward as-of join on ``ts`` (latest right at-or-before each left row).
 
     Output: all left columns, plus every right column (except the key)
     prefixed `r_` — null when no right row precedes the left row.
@@ -40,14 +34,14 @@ def asof_join(
 
     r_tagged = right.select(
         F.col(on),
-        F.col(right_ts).alias("_ts"),
+        F.col("ts").alias("_ts"),
         F.lit(0).alias("_side"),
         F.struct(*[F.col(c) for c in r_cols]).alias("_r"),
     )
     r_type = r_tagged.schema["_r"].dataType
     l_tagged = left.select(
         F.col(on),
-        F.col(left_ts).alias("_ts"),
+        F.col("ts").alias("_ts"),
         F.lit(1).alias("_side"),
         F.struct(*[F.col(c) for c in l_cols]).alias("_l"),
         F.lit(None).cast(r_type).alias("_r"),

@@ -62,15 +62,15 @@ def gen_barrier(arr: Column, elem_type: str) -> Column:
     return F.concat(arr, F.array().cast(f"array<{elem_type}>"))
 
 
-def split_sentences(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def split_sentences(df: DataFrame) -> DataFrame:
     """P1: one row per sentence with its 0-based position (terminators kept)."""
-    marked = F.regexp_replace(F.col(text_col), "([.!?])[ \t\n\r\f]+", "$1" + _SENT_MARK)
+    marked = F.regexp_replace(F.col("text"), "([.!?])[ \t\n\r\f]+", "$1" + _SENT_MARK)
     return df.select(
-        id_col, F.posexplode(F.split(marked, _SENT_MARK)).alias("sent_pos", "sentence")
+        "doc_id", F.posexplode(F.split(marked, _SENT_MARK)).alias("sent_pos", "sentence")
     ).filter(F.length("sentence") > 0)
 
 
-def split_words(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def split_words(df: DataFrame) -> DataFrame:
     """One row per whitespace word with its 0-based position (base unit).
 
     Carries `n_words_doc` computed from the array BEFORE exploding — chunk
@@ -100,12 +100,12 @@ def split_words(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     """
     from ..sources.tables import ensure_parallelism
 
-    ws = F.split(F.col(text_col), " ")
-    base = ensure_parallelism(df.filter(F.col(text_col).isNotNull())).select(
-        id_col, ws.alias("__ws"), F.size(ws).alias("n_words_doc")
+    ws = F.split(F.col("text"), " ")
+    base = ensure_parallelism(df.filter(F.col("text").isNotNull())).select(
+        "doc_id", ws.alias("__ws"), F.size(ws).alias("n_words_doc")
     )
     return base.select(
-        id_col,
+        "doc_id",
         "n_words_doc",
         F.posexplode(gen_barrier(F.col("__ws"), "string")).alias("pos", "word"),
     )
@@ -126,9 +126,7 @@ def equal_partition_chunk_id(pos: Column, n: Column, num_steps: int) -> Column:
     )
 
 
-def partition_equal_arrays(
-    df: DataFrame, num_steps: int, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def partition_equal_arrays(df: DataFrame, num_steps: int) -> DataFrame:
     """C1: split each document into `num_steps` contiguous word chunks.
 
     Returns (doc_id, chunk_id, chunk_text, n_words). The chunk of word
@@ -151,10 +149,10 @@ def partition_equal_arrays(
     than once → never re-inlined), each slice is taken once, and the
     row filter is absent from the relational plan.
     """
-    ws = F.split(F.col(text_col), " ")
+    ws = F.split(F.col("text"), " ")
     last = num_steps - 1
     base = df.select(
-        F.col(id_col), ws.alias("__ws"), F.size(ws).alias("__n"),
+        F.col("doc_id"), ws.alias("__ws"), F.size(ws).alias("__n"),
         F.floor(F.size(ws) / num_steps).alias("__ps"),
     )
     n, ps = F.col("__n"), F.col("__ps")
@@ -181,8 +179,8 @@ def partition_equal_arrays(
         ),
     )
     kept = F.filter(structs, lambda c: c["n_words"] > 0)
-    return base.select(F.col(id_col), F.explode(kept).alias("__c")).select(
-        id_col,
+    return base.select(F.col("doc_id"), F.explode(kept).alias("__c")).select(
+        "doc_id",
         F.col("__c.chunk_id").alias("chunk_id"),
         F.col("__c.chunk_text").alias("chunk_text"),
         F.col("__c.n_words").alias("n_words"),
@@ -210,17 +208,15 @@ def rechunk_chunk_id(pos: Column, n: Column, chunk_len: int, tail_frac: float = 
     return F.least(F.floor(pos / chunk_len), merged_last).cast("int")
 
 
-def rechunk_fixed(
-    words_df: DataFrame, chunk_len: int, id_col: str = "doc_id", tail_frac: float = 0.3
-) -> DataFrame:
+def rechunk_fixed(words_df: DataFrame, chunk_len: int, tail_frac: float = 0.3) -> DataFrame:
     """C2: re-chunk word rows into fixed-size windows with tail-merge."""
     if "n_words_doc" not in words_df.columns:
-        n = Window.partitionBy(id_col)
+        n = Window.partitionBy("doc_id")
         words_df = words_df.withColumn("n_words_doc", F.count("*").over(n))
     with_chunk = words_df.withColumn(
         "chunk_id", rechunk_chunk_id(F.col("pos"), F.col("n_words_doc"), chunk_len, tail_frac)
     )
-    return with_chunk.groupBy(id_col, "chunk_id").agg(
+    return with_chunk.groupBy("doc_id", "chunk_id").agg(
         F.count("*").cast("bigint").alias("n_tokens"),
         F.min("pos").cast("bigint").alias("start_pos"),
     )
@@ -255,18 +251,18 @@ def _middle_drop_surviving(chunk_lens: list, budget: int) -> list:
     return idx
 
 
-def middle_drop(chunks_df: DataFrame, budget: int, id_col: str = "doc_id") -> DataFrame:
+def middle_drop(chunks_df: DataFrame, budget: int) -> DataFrame:
     """P5: drop middle chunks per doc until total n_tokens <= budget.
 
     Input: (doc_id, chunk_id, n_tokens). Output: surviving rows only.
     The per-doc fixpoint runs inside an array UDF over the (ordered) chunk
     length list — one shuffle on doc_id, no driver loop.
     """
-    agg = chunks_df.groupBy(id_col).agg(
+    agg = chunks_df.groupBy("doc_id").agg(
         F.array_sort(F.collect_list(F.struct("chunk_id", "n_tokens"))).alias("cl")
     )
     surviving = agg.select(
-        id_col,
+        "doc_id",
         F.explode(
             _middle_drop_surviving(
                 F.transform("cl", lambda s: s["n_tokens"].cast("int")), F.lit(budget)
@@ -274,15 +270,15 @@ def middle_drop(chunks_df: DataFrame, budget: int, id_col: str = "doc_id") -> Da
         ).alias("surv_idx"),
         F.col("cl"),
     ).select(
-        id_col, F.col("cl")[F.col("surv_idx")]["chunk_id"].alias("chunk_id")
+        "doc_id", F.col("cl")[F.col("surv_idx")]["chunk_id"].alias("chunk_id")
     )
-    return chunks_df.join(surviving, [id_col, "chunk_id"], "inner")
+    return chunks_df.join(surviving, ["doc_id", "chunk_id"], "inner")
 
 
-def positional_shift(chunks_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def positional_shift(chunks_df: DataFrame) -> DataFrame:
     """W4: shift[i] = cumulative sum of chunk token counts 0..i-1."""
     w = (
-        Window.partitionBy(id_col)
+        Window.partitionBy("doc_id")
         .orderBy("chunk_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
@@ -291,9 +287,6 @@ def positional_shift(chunks_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def prompt_assemble(
-    df: DataFrame, text_col: str = "chunk_text", prefix: str = '"', suffix: str = '"'
-) -> DataFrame:
-    """P6: wrap chunk text in quotes / chat-template markers
-    (test_proactive.py:201-204)."""
-    return df.withColumn("prompt", F.concat(F.lit(prefix), F.col(text_col), F.lit(suffix)))
+def prompt_assemble(df: DataFrame) -> DataFrame:
+    """P6: wrap chunk_text in double quotes (test_proactive.py:201-204)."""
+    return df.withColumn("prompt", F.concat(F.lit('"'), F.col("chunk_text"), F.lit('"')))

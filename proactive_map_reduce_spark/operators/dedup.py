@@ -12,7 +12,7 @@ for 100 TB corpus curation, built shuffle-consciously:
   turns all-pairs comparison (O(n²), impossible at 100 TB) into an
   equi-join on (band_id, band_hash) — each bucket is tiny, and the join
   key count grows linearly with corpus size.
-- SimHash: `bits` array folds over the hashed word array per document,
+- SimHash: 32 array folds over the hashed word array per document,
   no shuffle.
 - n-gram Jaccard: blocking key (lang, length bucket) bounds the candidate
   set; exact Jaccard via distinct-shingle join only within blocks.
@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import portable_hash64
-from ..functions.numeric import round6_ratio
+from ..functions.numeric import round_ratio
 from ..functions.text import normalize_text
 
 # Universal-hash family for MinHash: h_j(x) = (a_j·x + b_j) mod p over the
@@ -49,7 +49,7 @@ MINHASH_B = [
 ]
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Exact dedup on normalized content hash.
 
     Returns one row per distinct content: representative id (min), dup
@@ -63,23 +63,21 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     singleton cluster.
     """
     keyed = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.when(
-            F.col(text_col).isNull(),
-            F.concat(F.lit("__null__:"), F.col(id_col).cast("string")),
+            F.col("text").isNull(),
+            F.concat(F.lit("__null__:"), F.col("doc_id").cast("string")),
         )
-        .otherwise(F.sha2(normalize_text(F.col(text_col)), 256))
+        .otherwise(F.sha2(normalize_text(F.col("text")), 256))
         .alias("content_key"),
     )
     return keyed.groupBy("content_key").agg(
-        F.min(id_col).alias("rep_id"),
+        F.min("doc_id").alias("rep_id"),
         F.count("*").cast("bigint").alias("n_dups"),
     )
 
 
-def shingle_arrays(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
-) -> DataFrame:
+def shingle_arrays(df: DataFrame, n: int = 3) -> DataFrame:
     """Distinct word n-gram shingle ARRAY per document (one row per doc).
 
     The gram set is every full n-gram of the space-split text, plus one
@@ -99,27 +97,20 @@ def shingle_arrays(
     are redundant but harmless — Catalyst collapses the duplicate
     condition.
     """
-    base = df.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col), F.split(F.col(text_col), " ").alias("__ws")
+    base = df.filter(F.col("text").isNotNull()).select(
+        F.col("doc_id"), F.split(F.col("text"), " ").alias("__ws")
     )
     ws = F.col("__ws")
     grams = F.transform(
         F.sequence(F.lit(0), F.greatest(F.size(ws) - n, F.lit(0))),
         lambda i: F.array_join(F.slice(ws, i + 1, n), " "),
     )
-    return base.select(F.col(id_col), F.array_distinct(grams).alias("shingles"))
+    return base.select(F.col("doc_id"), F.array_distinct(grams).alias("shingles"))
 
 
-def minhash_arrays(
-    df: DataFrame,
-    n_hashes: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    with_sets: bool = False,
-) -> DataFrame:
-    """MinHash signatures straight from per-document shingle ARRAYS — a
-    zero-shuffle signature builder.
+def minhash_arrays(df: DataFrame, n_hashes: int = 16, with_sets: bool = False) -> DataFrame:
+    """MinHash signatures straight from per-document word-3-gram shingle
+    ARRAYS — a zero-shuffle signature builder.
 
     Universal hashing: ONE portable md5 per shingle (the expensive part)
     gives h0 = h(shingle) mod p, then ``n_hashes`` cheap affine functions
@@ -142,12 +133,12 @@ def minhash_arrays(
     """
     from ..sources.tables import ensure_parallelism
 
-    src = ensure_parallelism(df.filter(F.col(text_col).isNotNull()))
-    sh = shingle_arrays(src, text_col=text_col, id_col=id_col, n=n)
+    src = ensure_parallelism(df.filter(F.col("text").isNotNull()))
+    sh = shingle_arrays(src)
     h0s = F.transform(
         F.col("shingles"), lambda s: portable_hash64(s) % MINHASH_PRIME
     )
-    base = sh.select(F.col(id_col), h0s.alias("__h0s"))
+    base = sh.select(F.col("doc_id"), h0s.alias("__h0s"))
     cols = [
         F.array_min(
             F.transform(
@@ -159,16 +150,14 @@ def minhash_arrays(
         for j in range(n_hashes)
     ]
     extra = [F.array_distinct("__h0s").alias("shingles")] if with_sets else []
-    return base.select(F.col(id_col), *cols, *extra)
+    return base.select(F.col("doc_id"), *cols, *extra)
 
 
 LSH_MAX_BUCKET = 256  # representatives per bucket; >K members star-link to rep
 
 
-def band_rows(
-    sig_df: DataFrame, n_hashes: int = 16, bands: int = 4, id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, band_id, band_hash) — one row per doc per LSH band.
+def band_rows(sig_df: DataFrame, n_hashes: int = 16, bands: int = 4) -> DataFrame:
+    """(doc_id, band_id, band_hash) — one row per doc per LSH band.
 
     band_hash = h(mh_a || '|' || mh_b || ...) over the band's signature
     components; a narrow projection + posexplode, no shuffle. Shared by
@@ -182,7 +171,7 @@ def band_rows(
             portable_hash64(reduce(lambda x, y: F.concat(x, F.lit("|"), y), cols))
         )
     return sig_df.select(
-        F.col(id_col), F.posexplode(F.array(*band_exprs)).alias("band_id", "band_hash")
+        F.col("doc_id"), F.posexplode(F.array(*band_exprs)).alias("band_id", "band_hash")
     )
 
 
@@ -191,9 +180,7 @@ def incremental_lsh_matches(
     catalog_sigs: DataFrame,
     n_hashes: int = 16,
     bands: int = 4,
-    id_col: str = "doc_id",
     min_agreement: int = 8,
-    max_bucket: int = LSH_MAX_BUCKET,
 ) -> DataFrame:
     """Dedup a NEW batch against an EXISTING signature catalog:
     (new_id, dup_of, n_matches) for every new doc with a confirmed match.
@@ -211,25 +198,25 @@ def incremental_lsh_matches(
     ints per side, no shingle-set traffic at all on this path.
 
     Mega-bucket guard: a boilerplate band bucket on the catalog side is
-    capped at its ``max_bucket`` smallest ids (same deterministic rank
+    capped at its ``LSH_MAX_BUCKET`` smallest ids (same deterministic rank
     rule as ``lsh_candidate_pairs``, mirrored by the oracle), so one hot
     bucket contributes O(|batch_in_bucket| · K) candidates instead of
     O(|batch| · |catalog_bucket|). ``n_matches`` counts confirmed
     catalog docs among those representatives.
     """
-    nb = band_rows(new_sigs, n_hashes, bands, id_col).select(
-        F.col(id_col).alias("new_id"), "band_id", "band_hash"
+    nb = band_rows(new_sigs, n_hashes, bands).select(
+        F.col("doc_id").alias("new_id"), "band_id", "band_hash"
     )
-    cb = band_rows(catalog_sigs, n_hashes, bands, id_col)
-    w = Window.partitionBy("band_id", "band_hash").orderBy(id_col)
+    cb = band_rows(catalog_sigs, n_hashes, bands)
+    w = Window.partitionBy("band_id", "band_hash").orderBy("doc_id")
     cbr = (
         cb.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= max_bucket)
-        .select(F.col(id_col).alias("cat_id"), "band_id", "band_hash")
+        .filter(F.col("rk") <= LSH_MAX_BUCKET)
+        .select(F.col("doc_id").alias("cat_id"), "band_id", "band_hash")
     )
     cand = nb.join(cbr, ["band_id", "band_hash"]).select("new_id", "cat_id").distinct()
-    a = _aliased_sigs(new_sigs, "new_id", "_a", n_hashes, id_col)
-    b = _aliased_sigs(catalog_sigs, "cat_id", "_b", n_hashes, id_col)
+    a = _aliased_sigs(new_sigs, "new_id", "_a", n_hashes)
+    b = _aliased_sigs(catalog_sigs, "cat_id", "_b", n_hashes)
     return (
         cand.join(a, "new_id")
         .join(b, "cat_id")
@@ -243,13 +230,7 @@ def incremental_lsh_matches(
     )
 
 
-def lsh_candidate_pairs(
-    sig_df: DataFrame,
-    n_hashes: int = 16,
-    bands: int = 4,
-    id_col: str = "doc_id",
-    max_bucket: int = LSH_MAX_BUCKET,
-) -> DataFrame:
+def lsh_candidate_pairs(sig_df: DataFrame, n_hashes: int = 16, bands: int = 4) -> DataFrame:
     """LSH banding: docs sharing any band's full sub-signature are candidates.
 
     band_hash = h(mh_a || '|' || mh_b || ...) over the band's rows. Docs
@@ -264,29 +245,24 @@ def lsh_candidate_pairs(
     members are ranked by id (row_number over a window — spills to disk,
     never holds a mega-bucket in an agg buffer) and:
 
-    - full i<j expansion runs only among the first `max_bucket` members
+    - full i<j expansion runs only among the first ``LSH_MAX_BUCKET`` members
       (the K smallest ids — deterministic, so the DuckDB oracle mirrors
       it with the same rank-≤-K rule);
     - every member past K emits ONE star pair (bucket min id, member).
 
-    Buckets with ≤ max_bucket members behave exactly as before, so small
+    Buckets with ≤ K members behave exactly as before, so small
     data is unchanged; oversized buckets produce O(K² + B) pairs instead
     of O(B²), and the star links keep the cluster CONNECTED — downstream
     connected_components resolves the same clusters full expansion would.
     Only pairwise Jaccard scores for non-representative × non-representative
     pairs are skipped, which is the intended cap.
     """
-    banded = band_rows(sig_df, n_hashes, bands, id_col)
-    return capped_block_pairs(
-        banded, ["band_id", "band_hash"], id_col=id_col, max_block=max_bucket
-    )
+    banded = band_rows(sig_df, n_hashes, bands)
+    return capped_block_pairs(banded, ["band_id", "band_hash"], max_block=LSH_MAX_BUCKET)
 
 
 def capped_block_pairs(
-    df: DataFrame,
-    block_cols: list[str],
-    id_col: str = "doc_id",
-    max_block: int = LSH_MAX_BUCKET,
+    df: DataFrame, block_cols: list[str], max_block: int = LSH_MAX_BUCKET
 ) -> DataFrame:
     """Star-capped i<j pair expansion within blocks — the shared core of
     every candidate-generation path (LSH buckets, blocked baselines).
@@ -302,16 +278,16 @@ def capped_block_pairs(
     earlier member (full i<j among the K smallest ids); members past K
     emit ONE star link to the block min, keeping the block CONNECTED at
     O(K² + B) pairs instead of O(B²)."""
-    w = Window.partitionBy(*block_cols).orderBy(id_col)
+    w = Window.partitionBy(*block_cols).orderBy("doc_id")
     ranked = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.row_number().over(w).alias("rk"),
-        F.first(id_col).over(w).alias("rep"),
-        F.collect_list(id_col)
+        F.first("doc_id").over(w).alias("rep"),
+        F.collect_list("doc_id")
         .over(w.rowsBetween(-(max_block - 1), -1))
         .alias("preds"),
     )
-    this_doc = F.col(id_col)
+    this_doc = F.col("doc_id")
     pair_arr = F.when(
         F.col("rk") <= max_block,
         F.transform(
@@ -348,19 +324,15 @@ def _agreement_expr(n_hashes: int):
     return agree
 
 
-def _aliased_sigs(
-    sig_df: DataFrame, out_id: str, suffix: str, n_hashes: int, id_col: str
-) -> DataFrame:
+def _aliased_sigs(sig_df: DataFrame, out_id: str, suffix: str, n_hashes: int) -> DataFrame:
     """Signature columns renamed for one side of an agreement join."""
     return sig_df.select(
-        F.col(id_col).alias(out_id),
+        F.col("doc_id").alias(out_id),
         *[F.col(f"mh_{j}").alias(f"mh_{j}{suffix}") for j in range(n_hashes)],
     )
 
 
-def signature_agreement(
-    pairs: DataFrame, sig_df: DataFrame, n_hashes: int = 16, id_col: str = "doc_id"
-) -> DataFrame:
+def signature_agreement(pairs: DataFrame, sig_df: DataFrame, n_hashes: int = 16) -> DataFrame:
     """Annotate candidate pairs with ``n_sig_match`` — how many of the
     n_hashes MinHash components the two docs share. agreement/n_hashes is
     the standard unbiased estimate of Jaccard similarity, computed from
@@ -374,8 +346,8 @@ def signature_agreement(
     CONFIRMED near-dups, not raw candidates. Deterministic given the
     signatures, so the DuckDB oracle mirrors it exactly.
     """
-    a = _aliased_sigs(sig_df, "doc_a", "_a", n_hashes, id_col)
-    b = _aliased_sigs(sig_df, "doc_b", "_b", n_hashes, id_col)
+    a = _aliased_sigs(sig_df, "doc_a", "_a", n_hashes)
+    b = _aliased_sigs(sig_df, "doc_b", "_b", n_hashes)
     return (
         pairs.join(a, "doc_a")
         .join(b, "doc_b")
@@ -383,9 +355,7 @@ def signature_agreement(
     )
 
 
-def jaccard_pairs(
-    shingle_df: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def jaccard_pairs(shingle_df: DataFrame, pairs: DataFrame) -> DataFrame:
     """Exact shingle-set Jaccard for candidate pairs.
 
     ``shingle_df`` carries one ``shingles`` array per document (distinct
@@ -395,8 +365,8 @@ def jaccard_pairs(
     shingle×shingle product. |A∩B| = size(array_intersect), |A∪B| =
     |A|+|B|-|A∩B|.
     """
-    a = shingle_df.select(F.col(id_col).alias("doc_a"), F.col("shingles").alias("sh_a"))
-    b = shingle_df.select(F.col(id_col).alias("doc_b"), F.col("shingles").alias("sh_b"))
+    a = shingle_df.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
+    b = shingle_df.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     # extra pair columns (e.g. a signature-agreement count) pass
     # through, so callers never re-spell the jaccard convention
@@ -411,7 +381,7 @@ def jaccard_pairs(
             # exact-int half-up round: union size can reduce to a
             # 2^7·5^t denominator where float round(x, 6) splits
             # engines (functions/numeric.py)
-            round6_ratio(
+            round_ratio(
                 inter, F.size("sh_a") + F.size("sh_b") - inter
             ).alias("jaccard"),
         )
@@ -422,11 +392,13 @@ def jaccard_pairs(
 #: per-round wall seconds) — read by tools/ profiling, never by queries.
 CC_STATS: dict = {}
 
+#: Label-propagation round cap of connected_components, read at call time.
+CC_MAX_ITER = 50
 
-def connected_components(
-    pairs: DataFrame, a_col: str = "doc_a", b_col: str = "doc_b", max_iter: int = 50
-) -> DataFrame:
-    """Cluster near-dup pairs into components: (doc_id, cluster_rep).
+
+def connected_components(pairs: DataFrame) -> DataFrame:
+    """Cluster near-dup (doc_a, doc_b) pairs into components:
+    (doc_id, cluster_rep).
 
     The step every dedup pipeline needs after pair detection — transitive
     grouping so each duplicate CLUSTER keeps one representative (the min
@@ -464,8 +436,8 @@ def connected_components(
 
     t0 = _time.time()
     edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .unionByName(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
+        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+        .unionByName(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
         .distinct()
         .persist()
     )
@@ -479,6 +451,7 @@ def connected_components(
     CC_STATS.clear()
     CC_STATS.update(rounds=0, setup_sec=round(_time.time() - t0, 2), round_secs=[])
     try:
+        max_iter = CC_MAX_ITER
         for _ in range(max_iter):
             t_round = _time.time()
             neighbor_min = (
@@ -526,7 +499,7 @@ def connected_components(
             if changed == 0:
                 break
         else:
-            # label propagation still moving after max_iter rounds: the
+            # label propagation still moving after CC_MAX_ITER rounds: the
             # graph's diameter exceeds the budget and some clusters would
             # be returned SPLIT (multiple cluster_reps for one true
             # component) with no other signal — surface it loudly
@@ -535,7 +508,7 @@ def connected_components(
             warnings.warn(
                 f"connected_components did not converge in {max_iter} "
                 f"iterations ({changed} labels still changing) — returned "
-                "clusters may be split; raise max_iter",
+                "clusters may be split; raise CC_MAX_ITER",
                 RuntimeWarning,
                 stacklevel=2,
             )
@@ -544,16 +517,14 @@ def connected_components(
         edges.unpersist()
 
 
-def simhash(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 32
-) -> DataFrame:
-    """SimHash document fingerprint over word multiset (bits ≤ 32).
+def simhash(df: DataFrame) -> DataFrame:
+    """32-bit SimHash document fingerprint over the word multiset.
 
     bit_b(word) = (h(word) >> b) & 1; per-doc bit b of the fingerprint is
     the sign of Σ_words (2·bit_b − 1) = 2·Σ bit_b − n.
 
     ZERO shuffles (r13): the per-doc bit counts are array higher-order
-    folds over the hashed word array — one md5 transform, then `bits`
+    folds over the hashed word array — one md5 transform, then 32
     aggregate() folds per document — all inside one narrow projection.
     The former explode + groupBy form paid a word-row explode plus a
     per-doc exchange (small after partial agg, but a full stage
@@ -569,11 +540,11 @@ def simhash(
     """
     from ..sources.tables import ensure_parallelism
 
-    src = ensure_parallelism(df.filter(F.col(text_col).isNotNull()))
-    base = src.select(F.col(id_col), F.split(F.col(text_col), " ").alias("__ws"))
+    src = ensure_parallelism(df.filter(F.col("text").isNotNull()))
+    base = src.select(F.col("doc_id"), F.split(F.col("text"), " ").alias("__ws"))
     hs = F.transform("__ws", lambda w: portable_hash64(w))
     hashed = base.select(
-        F.col(id_col), hs.alias("__hs"), F.size("__ws").cast("bigint").alias("n")
+        F.col("doc_id"), hs.alias("__hs"), F.size("__ws").cast("bigint").alias("n")
     )
     ones = [
         F.aggregate(
@@ -581,20 +552,18 @@ def simhash(
             F.lit(0).cast("bigint"),
             lambda acc, h: acc + F.shiftright(h, b) % 2,
         ).alias(f"ones_{b}")
-        for b in range(bits)
+        for b in range(32)
     ]
-    per_doc = hashed.select(id_col, F.col("n"), *ones)
+    per_doc = hashed.select("doc_id", F.col("n"), *ones)
     sim = None
-    for b in range(bits):
+    for b in range(32):
         bal = 2 * F.col(f"ones_{b}") - F.col("n")
         term = F.when(bal >= 0, F.lit(2 ** b).cast("bigint")).otherwise(F.lit(0).cast("bigint"))
         sim = term if sim is None else sim + term
-    return per_doc.select(F.col(id_col), sim.cast("bigint").alias("simhash"))
+    return per_doc.select(F.col("doc_id"), sim.cast("bigint").alias("simhash"))
 
 
-def sentence_dedup(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def sentence_dedup(df: DataFrame) -> DataFrame:
     """Within-corpus exact sentence dedup (C4-style line dedup).
 
     A sentence survives only at its FIRST occurrence in corpus order
@@ -613,19 +582,19 @@ def sentence_dedup(
     """
     from .chunking import split_sentences
 
-    sents = split_sentences(df, text_col=text_col, id_col=id_col)
+    sents = split_sentences(df)
     keyed = sents.select(
-        id_col,
+        "doc_id",
         "sent_pos",
         F.md5(normalize_text(F.col("sentence"))).alias("sent_key"),
     )
-    w = Window.partitionBy("sent_key").orderBy(id_col, "sent_pos")
+    w = Window.partitionBy("sent_key").orderBy("doc_id", "sent_pos")
     flagged = keyed.withColumn(
         "is_first", (F.row_number().over(w) == 1).cast("int")
     )
-    return flagged.groupBy(id_col).agg(
+    return flagged.groupBy("doc_id").agg(
         F.count("*").cast("bigint").alias("n_sents"),
         F.sum("is_first").cast("bigint").alias("n_kept"),
         # exact-int half-up round (functions/numeric.py)
-        round6_ratio(F.sum("is_first"), F.count("*")).alias("keep_frac"),
+        round_ratio(F.sum("is_first"), F.count("*")).alias("keep_frac"),
     )

@@ -114,9 +114,10 @@ def llm_map(
 # --- M2/M3: detok + first-line answer extraction ----------------------------
 
 
-def decode_first_line(df: DataFrame, out_col: str = "out_text") -> DataFrame:
+def decode_first_line(df: DataFrame) -> DataFrame:
     """M2/M3: `lstrip('\\n').split('\\n')[0]` — first-line answer extraction
-    (pipeline_70b_samsum.py:302-303, test_proactive.py:85-87).
+    (pipeline_70b_samsum.py:302-303, test_proactive.py:85-87) of out_text
+    into ``answer``.
 
     Delegates to ``functions.text.first_line``: Spark's ltrim strips only
     SPACES, so an out_text starting with '\\n' (the reference's decode
@@ -124,4 +125,4 @@ def decode_first_line(df: DataFrame, out_col: str = "out_text") -> DataFrame:
     reference's lstrip('\\n') and the DuckDB oracle's ltrim(…, chr(10))."""
     from ..functions.text import first_line
 
-    return df.withColumn("answer", first_line(F.col(out_col)))
+    return df.withColumn("answer", first_line(F.col("out_text")))

@@ -43,12 +43,12 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
-def attach_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
+def attach_payload(df: DataFrame) -> DataFrame:
     """Synthesize a binary payload column from text (fixture stand-in for a
     real media column) plus a media_type tag."""
     return df.select(
         "doc_id",
-        F.encode(F.col(text_col), "utf-8").alias("payload"),
+        F.encode(F.col("text"), "utf-8").alias("payload"),
         F.when(F.col("doc_id") % 3 == 0, "image")
         .when(F.col("doc_id") % 3 == 1, "audio")
         .otherwise("video")

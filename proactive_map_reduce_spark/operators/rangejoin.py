@@ -27,17 +27,16 @@ def interval_join(
     right: DataFrame,
     on: str,
     within_us: int,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
 ) -> DataFrame:
-    """Inner join of rows within ±within_us microseconds, per key.
+    """Inner join of rows whose ``ts`` lie within ±within_us microseconds,
+    per key.
 
     Left columns keep their names; right columns (except the key) get an
     `r_` prefix.
     """
     w = int(within_us)
-    l_bucket = F.floor(F.unix_micros(F.col(left_ts)) / w)
-    r_bucket = F.floor(F.unix_micros(F.col(right_ts)) / w)
+    l_bucket = F.floor(F.unix_micros(F.col("ts")) / w)
+    r_bucket = F.floor(F.unix_micros(F.col("ts")) / w)
 
     l_cols = [c for c in left.columns if c != on]
     r_cols = [c for c in right.columns if c != on]
@@ -54,7 +53,7 @@ def interval_join(
     )
     joined = l_exp.join(r_b, [on, "_bucket"])
     exact = (
-        F.abs(F.unix_micros(F.col(left_ts)) - F.unix_micros(F.col(f"r_{right_ts}")))
+        F.abs(F.unix_micros(F.col("ts")) - F.unix_micros(F.col("r_ts")))
         <= F.lit(w)
     )
     return joined.filter(exact).drop("_bucket")

@@ -31,22 +31,23 @@ K1 = 1.2
 B = 0.75
 
 
-def term_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, term, tf) — one row per distinct term per document.
+def term_counts(docs: DataFrame) -> DataFrame:
+    """(doc_id, term, tf) — one row per distinct space-split term of
+    ``text`` per document.
 
     Empty tokens (runs of spaces, empty documents) are dropped — the
     engine-wide retrieval/scoring token convention (functions/scoring
     does the same): '' is not a term, must never earn an idf, and must
     not skew document length."""
-    ws = F.split(F.col(text_col), " ")
+    ws = F.split(F.col("text"), " ")
     words = docs.select("doc_id", F.explode(ws).alias("term")).filter(
         F.col("term") != ""
     )
     return words.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
 
 
-def tfidf_top_terms(docs: DataFrame, top_n: int = 3) -> DataFrame:
-    """Top-N terms per document by smoothed TF-IDF.
+def tfidf_top_terms(docs: DataFrame) -> DataFrame:
+    """Top-3 terms per document by smoothed TF-IDF.
 
     idf = ln((N + 1) / (df + 1)) + 1 (sklearn-style smoothing: never
     negative, never divides by zero). Deterministic tie-break on the
@@ -79,7 +80,7 @@ def tfidf_top_terms(docs: DataFrame, top_n: int = 3) -> DataFrame:
     w = Window.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), F.col("term"))
     return (
         scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= top_n)
+        .filter(F.col("rnk") <= 3)
         .select(
             "doc_id",
             "term",

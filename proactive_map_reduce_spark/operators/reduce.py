@@ -16,66 +16,57 @@ exchange when composed.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 
-def incremental_concat(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    order_col: str = "chunk_id",
-    text_col: str = "out_text",
-    sep: str = " ",
-) -> DataFrame:
-    """R1: concatenate per-chunk outputs in chunk order → one row per doc.
+def incremental_concat(df: DataFrame) -> DataFrame:
+    """R1: concatenate per-chunk out_text in chunk_id order, space-joined
+    → one row per doc_id.
 
-    collect_list order is made deterministic by sorting (order, text)
-    structs inside the aggregate — physical row order never leaks through.
+    collect_list order is made deterministic by sorting (chunk_id,
+    out_text) structs inside the aggregate — physical row order never
+    leaks through.
     """
-    return df.groupBy(id_col).agg(
+    return df.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
-                F.array_sort(F.collect_list(F.struct(order_col, text_col))),
-                lambda s: s[text_col],
+                F.array_sort(F.collect_list(F.struct("chunk_id", "out_text"))),
+                lambda s: s["out_text"],
             ),
-            sep,
+            " ",
         ).alias("final_text"),
         F.count("*").cast("bigint").alias("n_chunks"),
     )
 
 
-def prefix_scan_inputs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    order_col: str = "chunk_id",
-    text_col: str = "chunk_text",
-    sep: str = " ",
-) -> DataFrame:
-    """R2: stage n's input = concat of chunks 0..n (running prefix)."""
-    w = (
-        Window.partitionBy(id_col)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+def _prefix_window(upper: int) -> WindowSpec:
+    """doc_id's chunks in chunk_id order, from the first row to ``upper``."""
+    return (
+        Window.partitionBy("doc_id")
+        .orderBy("chunk_id")
+        .rowsBetween(Window.unboundedPreceding, upper)
     )
+
+
+def _prefix(col: str, w: WindowSpec):
+    """``col`` of the window's rows as an array in chunk_id order."""
+    return F.transform(
+        F.array_sort(F.collect_list(F.struct("chunk_id", col)).over(w)),
+        lambda s: s[col],
+    )
+
+
+def prefix_scan_inputs(df: DataFrame) -> DataFrame:
+    """R2: stage n's input = chunk_text of chunks 0..n, space-joined
+    (running prefix)."""
     return df.withColumn(
         "stage_input",
-        F.array_join(
-            F.transform(F.array_sort(F.collect_list(F.struct(order_col, text_col)).over(w)),
-                        lambda s: s[text_col]),
-            sep,
-        ),
+        F.array_join(_prefix("chunk_text", _prefix_window(Window.currentRow)), " "),
     )
 
 
-def prefix_scan_refeed(
-    chunks_df: DataFrame,
-    mapped_df: DataFrame,
-    id_col: str = "doc_id",
-    order_col: str = "chunk_id",
-    text_col: str = "chunk_text",
-    out_col: str = "out_text",
-    sep: str = " ",
-) -> DataFrame:
+def prefix_scan_refeed(chunks_df: DataFrame, mapped_df: DataFrame) -> DataFrame:
     """R2, the v2 re-feed variant (test_proactive_2.py:231): stage n's
     input = chunks 0..n PLUS the accumulated outputs of stages 0..n-1
     (``list(chain(doc_chunk_ids[:n+1])) + q_ids + total_res_toks``).
@@ -87,48 +78,27 @@ def prefix_scan_refeed(
     accumulator feeds each micro-batch. Stage 0 has no prior output and
     gets no trailing separator."""
     j = chunks_df.join(
-        mapped_df.select(id_col, order_col, out_col), [id_col, order_col]
+        mapped_df.select("doc_id", "chunk_id", "out_text"), ["doc_id", "chunk_id"]
     )
-    w_cur = (
-        Window.partitionBy(id_col)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    chunk_prefix = F.array_join(
+        _prefix("chunk_text", _prefix_window(Window.currentRow)), " "
     )
-    w_prev = (
-        Window.partitionBy(id_col)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-
-    def prefix(col, w):
-        return F.transform(
-            F.array_sort(F.collect_list(F.struct(order_col, col)).over(w)),
-            lambda s: s[col],
-        )
-
-    chunk_prefix = F.array_join(prefix(text_col, w_cur), sep)
-    outs = prefix(out_col, w_prev)
+    outs = _prefix("out_text", _prefix_window(-1))
     return j.withColumn(
         "stage_input",
         F.when(F.size(outs) == 0, chunk_prefix).otherwise(
-            F.concat(chunk_prefix, F.lit(sep), F.array_join(outs, sep))
+            F.concat(chunk_prefix, F.lit(" "), F.array_join(outs, " "))
         ),
     )
 
 
-def running_metric(
-    df: DataFrame,
-    id_col: str,
-    order_col: str,
-    value_col: str,
-    sum_col: str = "running_sum",
-    n_col: str = "running_n",
-) -> DataFrame:
+def running_metric(df: DataFrame, id_col: str, order_col: str, value_col: str) -> DataFrame:
     """W3: running metric in arrival order (pipeline_70b_samsum.py:312-323).
 
-    Emits the cumulative sum (rounded to the value's own 2-decimal
-    grain) and count — the mean's exact numerator/denominator — rather
-    than the mean quotient: ``round(avg, 6)`` lands on exact x.5
+    Emits the cumulative sum ``running_sum`` (rounded to the value's own
+    2-decimal grain) and count ``running_n`` — the mean's exact
+    numerator/denominator — rather than the mean quotient:
+    ``round(avg, 6)`` lands on exact x.5
     rounding boundaries where Spark's sequential and DuckDB's
     segment-tree float summation legitimately disagree in the last ulp
     (the family the sf0.1 deep gate caught; functions/numeric.py).
@@ -146,8 +116,8 @@ def running_metric(
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return df.withColumn(
-        sum_col,
+        "running_sum",
         F.round(F.sum(F.col(value_col).cast("decimal(38,6)")).over(w), 2).cast(
             "double"
         ),
-    ).withColumn(n_col, F.count("*").over(w).cast("bigint"))
+    ).withColumn("running_n", F.count("*").over(w).cast("bigint"))

@@ -80,7 +80,7 @@ EMBED_DIM = 64
 _CHUNK = 8
 
 
-def _dim_of(emb: DataFrame, vec_col: str) -> int:
+def _dim_of(emb: DataFrame) -> int:
     """Probe the (fixed) vector dimensionality — one 1-row job. Kept only
     as the fallback for callers with non-test data; every registry query
     passes ``dim=EMBED_DIM`` so no probe job runs on the bench path.
@@ -88,7 +88,7 @@ def _dim_of(emb: DataFrame, vec_col: str) -> int:
     A zero-row (or null-vector) input has no dimensionality; report 0 so
     the callers' empty-input paths produce their documented well-formed
     empty results instead of a TypeError on ``None["d"]``."""
-    row = emb.select(F.size(F.col(vec_col)).alias("d")).first()
+    row = emb.select(F.size(F.col("embedding")).alias("d")).first()
     return 0 if row is None or row["d"] is None else row["d"]
 
 
@@ -153,10 +153,10 @@ def unrolled_norm(a, dim: int):
 
 
 def brute_force_topk(
-    emb: DataFrame, n_queries: int = 8, k: int = 5, id_col: str = "vec_id",
-    vec_col: str = "embedding", dim: int | None = None,
+    emb: DataFrame, n_queries: int = 8, k: int = 5, dim: int | None = None
 ) -> DataFrame:
-    """Exact cosine top-k of every corpus vector for the first n query vecs.
+    """Exact cosine top-k over (vec_id, embedding) rows for the query
+    vectors vec_id < n_queries.
 
     Norms are computed ONCE per row (not per query×corpus pair), and
     dot/norm are dim-unrolled codegen expressions built through a single
@@ -175,13 +175,13 @@ def brute_force_topk(
     naming its id. NaN and ±Infinity components are spelled as SQL
     double casts and flow through the arithmetic like any double.
     """
-    dim = _dim_of(emb, vec_col) if dim is None else dim
+    dim = _dim_of(emb) if dim is None else dim
     base = emb.select(
-        F.col(id_col), _as_double(F.col(vec_col)).alias("v")
+        F.col("vec_id"), _as_double(F.col("embedding")).alias("v")
     ).withColumn("nv", unrolled_norm("v", dim))
     qrows = (
-        base.filter(F.col(id_col) < n_queries)
-        .select(id_col, "v", "nv")
+        base.filter(F.col("vec_id") < n_queries)
+        .select("vec_id", "v", "nv")
         .collect()
     )
     if not qrows:
@@ -211,7 +211,7 @@ def brute_force_topk(
 
         if x is None:
             raise ValueError(
-                f"brute_force_topk: query {id_col}={vec_id} has a NULL "
+                f"brute_force_topk: query vec_id={vec_id} has a NULL "
                 "vector component or norm; a query vector needs every "
                 "component"
             )
@@ -222,7 +222,7 @@ def brute_force_topk(
         return repr(float(x)) + "D"
 
     def _struct(r) -> str:
-        qid = int(r[id_col])
+        qid = int(r["vec_id"])
         nq = _d(r["nv"], qid)  # a NULL vector or component has a NULL norm
         v = r["v"]
         vec = ", ".join(_d(x, qid) for x in ([None] if v is None else v))
@@ -230,11 +230,11 @@ def brute_force_topk(
 
     structs = ", ".join(_struct(r) for r in qrows)
     scored = (
-        base.select(id_col, "v", "nv", F.expr(f"inline(array({structs}))"))
-        .filter(F.col(id_col) != F.col("query_id"))
+        base.select("vec_id", "v", "nv", F.expr(f"inline(array({structs}))"))
+        .filter(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
-            F.col(id_col).alias("neighbor_id"),
+            F.col("vec_id").alias("neighbor_id"),
             F.round(
                 cos_expr(unrolled_dot("qv", "v", dim), F.col("nq") * F.col("nv")),
                 6,
@@ -264,32 +264,31 @@ def sign_bucket(vec_col, n_bits: int = 8):
 
 
 def lsh_topk(
-    emb: DataFrame, n_queries: int = 8, k: int = 5, n_bits: int = 4,
-    id_col: str = "vec_id", vec_col: str = "embedding", dim: int | None = None,
+    emb: DataFrame, n_queries: int = 8, k: int = 5, n_bits: int = 4, dim: int | None = None
 ) -> DataFrame:
     """Approximate top-k: rank only candidates in the query's sign bucket.
 
     The trade, measured against ``brute_force_topk`` (8 queries, seeded
     Gaussian 64-dim vectors, 4 vCPU, n_bits=4): 1.6 s vs 3.8 s at 100k
     vectors and 3.3 s vs 14.0 s at 400k, at recall@5 0.25."""
-    dim = _dim_of(emb, vec_col) if dim is None else dim
+    dim = _dim_of(emb) if dim is None else dim
     base = (
-        emb.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
+        emb.select(F.col("vec_id"), _as_double(F.col("embedding")).alias("v"))
         .withColumn("bucket", sign_bucket(F.col("v"), n_bits))
         .withColumn("nv", unrolled_norm("v", dim))
     )
-    queries = base.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("query_id"),
+    queries = base.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
         F.col("bucket").alias("qb"),
         F.col("nv").alias("nq"),
     )
     scored = (
         base.join(F.broadcast(queries), F.col("bucket") == F.col("qb"))
-        .filter(F.col(id_col) != F.col("query_id"))
+        .filter(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
-            F.col(id_col).alias("neighbor_id"),
+            F.col("vec_id").alias("neighbor_id"),
             F.round(
                 cos_expr(unrolled_dot("qv", "v", dim), F.col("nq") * F.col("nv")),
                 6,
@@ -301,24 +300,23 @@ def lsh_topk(
 
 
 def embedding_near_dup_pairs(
-    emb: DataFrame, threshold: float = 0.95, id_col: str = "vec_id",
-    vec_col: str = "embedding", label_col: str = "label", dim: int | None = None,
+    emb: DataFrame, threshold: float = 0.95, dim: int | None = None
 ) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs, blocked by label.
+    """Embedding-cosine near-duplicate (vec_id) pairs, blocked by label.
 
     Blocking bounds the pair count (at scale: replace label with a coarse
     LSH bucket); exact cosine verifies each candidate pair.
     """
-    dim = _dim_of(emb, vec_col) if dim is None else dim
+    dim = _dim_of(emb) if dim is None else dim
     base = emb.select(
-        F.col(id_col), F.col(label_col).alias("blk"), _as_double(F.col(vec_col)).alias("v")
+        F.col("vec_id"), F.col("label").alias("blk"), _as_double(F.col("embedding")).alias("v")
     ).withColumn("nv", unrolled_norm("v", dim))
     a = base.select(
-        F.col(id_col).alias("vec_a"), F.col("blk"),
+        F.col("vec_id").alias("vec_a"), F.col("blk"),
         F.col("v").alias("va"), F.col("nv").alias("na"),
     )
     b = base.select(
-        F.col(id_col).alias("vec_b"), F.col("blk"),
+        F.col("vec_id").alias("vec_b"), F.col("blk"),
         F.col("v").alias("vb"), F.col("nv").alias("nb"),
     )
     return (

@@ -13,7 +13,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import portable_hash64
-from ..functions.numeric import round6_ratio
+from ..functions.numeric import round_ratio
 from ..functions.text import normalize_text
 
 # marker stopwords per language (deterministic heuristic, not a model)
@@ -31,13 +31,13 @@ def _count_in(ws: Column, vocab: list[str]) -> Column:
     return F.size(F.filter(ws, lambda w: w.isin(vocab)))
 
 
-def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
+def lang_id(df: DataFrame) -> DataFrame:
     """Marker-word language ID: argmax of per-language marker counts.
 
     Deterministic tie-break: higher count wins, then language code order —
     expressed as a sorted struct array (no UDF).
     """
-    ws = F.split(F.lower(F.col(text_col)), " ")
+    ws = F.split(F.lower(F.col("text")), " ")
     scores = F.array(
         *[
             F.struct(
@@ -51,7 +51,7 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     # the struct sort's winner is an ordering artifact — the engines
     # "agreed" on different arbitrary codes (nulls value gate find). An
     # unknown document has an unknown language: NULL out, row kept.
-    null_text = F.col(text_col).isNull()
+    null_text = F.col("text").isNull()
     return df.withColumn(
         "pred_lang", F.when(null_text, F.lit(None)).otherwise(best["code"])
     ).withColumn(
@@ -60,9 +60,7 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def quality_features(
-    df: DataFrame, text_col: str = "text", keep_cols: tuple = ("doc_id",)
-) -> DataFrame:
+def quality_features(df: DataFrame, keep_cols: tuple = ("doc_id",)) -> DataFrame:
     """Quality-scoring features + composite score in [0, 1].
 
     Features mirror standard corpus filters: document length, mean word
@@ -72,9 +70,9 @@ def quality_features(
     alongside the features so the gate can filter in the SAME narrow
     projection — no self-join of two scans on doc_id.
     """
-    ws = F.split(F.col(text_col), " ")
+    ws = F.split(F.col("text"), " ")
     n_words = F.size(ws)
-    n_chars = F.length(F.col(text_col)) - (n_words - 1)
+    n_chars = F.length(F.col("text")) - (n_words - 1)
     n_stop = _count_in(ws, STOPWORDS)
     n_distinct = F.size(F.array_distinct(ws))
     # composite = 0.4·min(n,100)/100 + 0.3·stop/n + 0.3·distinct/n, as the
@@ -91,25 +89,25 @@ def quality_features(
     return df.select(
         *keep_cols,
         nw.alias("n_words"),
-        round6_ratio(n_chars, n_words).alias("avg_word_len"),
-        round6_ratio(n_stop, n_words).alias("stopword_ratio"),
-        round6_ratio(n_distinct, n_words).alias("distinct_ratio"),
-        round6_ratio(score_num, 1000 * nw).alias("quality_score"),
+        round_ratio(n_chars, n_words).alias("avg_word_len"),
+        round_ratio(n_stop, n_words).alias("stopword_ratio"),
+        round_ratio(n_distinct, n_words).alias("distinct_ratio"),
+        round_ratio(score_num, 1000 * nw).alias("quality_score"),
     )
 
 
-def token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def token_stats(df: DataFrame) -> DataFrame:
     """Token counting: whitespace tokens plus a BPE-ish subword estimate
     (ceil(chars/4) — the standard bytes-per-token heuristic)."""
-    ws = F.split(F.col(text_col), " ")
+    ws = F.split(F.col("text"), " ")
     return df.select(
         "doc_id",
         F.size(ws).cast("bigint").alias("n_ws_tokens"),
-        F.ceil(F.length(F.col(text_col)) / 4.0).cast("bigint").alias("n_bpe_est"),
+        F.ceil(F.length(F.col("text")) / 4.0).cast("bigint").alias("n_bpe_est"),
     )
 
 
-def repetition_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
+def repetition_signals(df: DataFrame) -> DataFrame:
     """Within-document repetition filters (Gopher-style quality signals):
     fraction of bigrams taken by the single most frequent bigram, and
     fraction of trigrams that occur more than once.
@@ -129,7 +127,7 @@ def repetition_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
     signals, without a restore-join against the doc list.
     """
     words = df.select(
-        "doc_id", F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "w")
+        "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos", "w")
     )
     win = Window.partitionBy("doc_id").orderBy("pos")
     leads = words.select(
@@ -182,21 +180,19 @@ def repetition_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
         "n_trigrams",
         # exact-int half-up rounds (functions/numeric.py)
         F.when(
-            F.col("n_bigrams") > 0, round6_ratio(F.col("top2"), F.col("n_bigrams"))
+            F.col("n_bigrams") > 0, round_ratio(F.col("top2"), F.col("n_bigrams"))
         )
         .otherwise(F.lit(0.0))
         .alias("top_bigram_frac"),
         F.when(
-            F.col("n_trigrams") > 0, round6_ratio(F.col("dup3"), F.col("n_trigrams"))
+            F.col("n_trigrams") > 0, round_ratio(F.col("dup3"), F.col("n_trigrams"))
         )
         .otherwise(F.lit(0.0))
         .alias("dup_trigram_frac"),
     )
 
 
-def blocklist_filter(
-    df: DataFrame, blocklist: list[str], text_col: str = "text"
-) -> DataFrame:
+def blocklist_filter(df: DataFrame, blocklist: list[str]) -> DataFrame:
     """Blocklist filtering (the safety/PII gate of a curation pipeline):
     keep only documents containing NO blocklisted word.
 
@@ -206,25 +202,25 @@ def blocklist_filter(
     exploded word table would shuffle the whole corpus to remove a few
     rows. The blocklist is a literal in the plan (broadcast-free).
     """
-    ws = F.split(F.col(text_col), " ")
+    ws = F.split(F.col("text"), " ")
     hit = F.exists(ws, lambda w: w.isin(blocklist))
     return df.filter(~hit).select(
         "doc_id", "lang", F.size(ws).cast("bigint").alias("n_words")
     )
 
 
-def fingerprint(df: DataFrame, text_col: str = "text", gram: int = 5) -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """Document fingerprinting: full-content hash + winnowing-style minimum
     over rolling word 5-gram hashes (robust to local edits)."""
-    ws = F.split(F.col(text_col), " ")
+    ws = F.split(F.col("text"), " ")
     grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(ws) - gram, F.lit(0))),
-        lambda i: F.array_join(F.slice(ws, i + 1, gram), " "),
+        F.sequence(F.lit(0), F.greatest(F.size(ws) - 5, F.lit(0))),
+        lambda i: F.array_join(F.slice(ws, i + 1, 5), " "),
     )
     gram_hashes = F.transform(grams, lambda g: portable_hash64(g))
     return df.select(
         "doc_id",
-        F.md5(normalize_text(F.col(text_col))).alias("content_md5"),
+        F.md5(normalize_text(F.col("text"))).alias("content_md5"),
         F.array_min(gram_hashes).alias("winnow_min"),
         F.array_max(gram_hashes).alias("winnow_max"),
     )

@@ -11,7 +11,7 @@ from ..queries import (
     RATIO_TINC,
     RATIO_TLOW,
 )
-from ..functions.numeric import round6_ratio_sql  # noqa: E402
+from ..functions.numeric import round_ratio_sql  # noqa: E402
 from ..operators.dedup import MINHASH_A, MINHASH_B, MINHASH_PRIME  # noqa: E402
 from ..operators.dedup import LSH_MAX_BUCKET  # noqa: E402
 
@@ -144,7 +144,7 @@ def _set_f1_sql(p: str, g: str) -> str:
         f"CASE WHEN len({p}) = 0 OR len({g}) = 0 "
         f"THEN CAST(len({p}) = 0 AND len({g}) = 0 AS DOUBLE) "
         f"WHEN {inter} = 0 THEN 0.0 "
-        f"ELSE {round6_ratio_sql(f'2 * {inter}', f'len({p}) + len({g})')} END"
+        f"ELSE {round_ratio_sql(f'2 * {inter}', f'len({p}) + len({g})')} END"
     )
 
 
@@ -286,7 +286,7 @@ inter AS (
   GROUP BY 1, 2
 )
 SELECT c.doc_a, c.doc_b,
-       {round6_ratio_sql('coalesce(i.n_inter, 0)', 'sa.sz + sb.sz - coalesce(i.n_inter, 0)')}
+       {round_ratio_sql('coalesce(i.n_inter, 0)', 'sa.sz + sb.sz - coalesce(i.n_inter, 0)')}
          AS jaccard
 FROM {pairs} c
 LEFT JOIN inter i ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b

@@ -1,6 +1,6 @@
 """Corpus-curation oracles (dedup, text analysis, curation pipeline)."""
 
-from ..functions.numeric import round6_ratio_sql as _r6
+from ..functions.numeric import round_ratio_sql as _rr
 from ._base import *  # noqa: F401,F403
 from ._base import (  # noqa: F401
     ORACLES,
@@ -89,7 +89,7 @@ inter AS (
   GROUP BY 1, 2
 )
 SELECT c.doc_a, c.doc_b, c.n_sig_match,
-       {_r6('coalesce(i.n_inter, 0)', 'sa.sz + sb.sz - coalesce(i.n_inter, 0)')}
+       {_rr('coalesce(i.n_inter, 0)', 'sa.sz + sb.sz - coalesce(i.n_inter, 0)')}
          AS jaccard
 FROM conf c
 LEFT JOIN inter i ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b
@@ -207,7 +207,7 @@ FROM c
 
 
 # Integer numerators; the 6-dp display round happens in exact int64
-# (functions/numeric.py round6_ratio_sql) — float round(x, 6) splits
+# (functions/numeric.py round_ratio_sql) — float round(x, 6) splits
 # across engines on 7-decimal-exact quotients.
 ORACLES["q_quality_score"] = f"""
 WITH f AS (
@@ -224,10 +224,10 @@ r AS (
 )
 SELECT doc_id,
   CAST(n AS BIGINT) AS n_words,
-  {_r6('n_chars', 'n')} AS avg_word_len,
-  {_r6('n_stop', 'n')} AS stopword_ratio,
-  {_r6('n_distinct', 'n')} AS distinct_ratio,
-  {_r6('4 * least(n, 100) * n + 300 * n_stop + 300 * n_distinct', '1000 * n')}
+  {_rr('n_chars', 'n')} AS avg_word_len,
+  {_rr('n_stop', 'n')} AS stopword_ratio,
+  {_rr('n_distinct', 'n')} AS distinct_ratio,
+  {_rr('4 * least(n, 100) * n + 300 * n_stop + 300 * n_distinct', '1000 * n')}
     AS quality_score
 FROM r
 """
@@ -336,10 +336,10 @@ SELECT doc_id,
   CAST(len(g2) AS BIGINT) AS n_bigrams,
   CAST(len(g3) AS BIGINT) AS n_trigrams,
   CASE WHEN len(g2) > 0 THEN
-    {_r6('list_max(list_transform(list_distinct(g2), d -> len(list_filter(g2, x -> x = d))))', 'len(g2)')}
+    {_rr('list_max(list_transform(list_distinct(g2), d -> len(list_filter(g2, x -> x = d))))', 'len(g2)')}
     ELSE 0.0 END AS top_bigram_frac,
   CASE WHEN len(g3) > 0 THEN
-    {_r6('len(list_filter(g3, y -> len(list_filter(g3, x -> x = y)) > 1))', 'len(g3)')}
+    {_rr('len(list_filter(g3, y -> len(list_filter(g3, x -> x = y)) > 1))', 'len(g3)')}
     ELSE 0.0 END AS dup_trigram_frac
 FROM r
 """
@@ -436,7 +436,7 @@ f AS (
 )
 SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sents,
        CAST(sum(is_first) AS BIGINT) AS n_kept,
-       {_r6('sum(is_first)', 'count(*)')} AS keep_frac
+       {_rr('sum(is_first)', 'count(*)')} AS keep_frac
 FROM f GROUP BY doc_id
 """
 
@@ -535,7 +535,7 @@ ORACLES["q_curation_pipeline"] = f"""
 WITH gated AS (
   SELECT doc_id, lang, text FROM (
     SELECT doc_id, lang, text,
-      {_r6('4 * least(len(string_split(text, chr(32))), 100)'
+      {_rr('4 * least(len(string_split(text, chr(32))), 100)'
            '  * len(string_split(text, chr(32)))'
            '+ 300 * len(list_filter(string_split(text, chr(32)),'
            "      x -> list_contains(['the','a','an','of','to','and','in','is','it','for'], x)))"
@@ -555,7 +555,7 @@ inter AS (
 ),
 jacc AS (
   SELECT c.doc_a, c.doc_b,
-         {_r6('coalesce(i.n_inter, 0)', 'sa.sz + sb.sz - coalesce(i.n_inter, 0)')}
+         {_rr('coalesce(i.n_inter, 0)', 'sa.sz + sb.sz - coalesce(i.n_inter, 0)')}
            AS jaccard
   FROM cand c
   LEFT JOIN inter i ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b
@@ -679,7 +679,7 @@ WITH k AS (
 SELECT source, target_pct,
        CAST(count(*) AS BIGINT) AS n_total,
        CAST(sum(keep) AS BIGINT) AS n_kept,
-       {_r6('sum(keep)', 'count(*)')} AS realized_frac
+       {_rr('sum(keep)', 'count(*)')} AS realized_frac
 FROM k GROUP BY source, target_pct
 """
 
@@ -697,7 +697,7 @@ j AS (
 SELECT doc_id,
        CAST(count(*) AS BIGINT) AS n_words,
        CAST(sum(oov) AS BIGINT) AS n_oov,
-       {_r6('sum(oov)', 'count(*)')} AS oov_rate
+       {_rr('sum(oov)', 'count(*)')} AS oov_rate
 FROM j GROUP BY doc_id
 """
 
@@ -737,7 +737,7 @@ r AS (
 ),
 scored AS (
   SELECT doc_id, lang,
-    {_r6('4 * least(n, 100) * n + 300 * n_stop + 300 * n_distinct', '1000 * n')}
+    {_rr('4 * least(n, 100) * n + 300 * n_stop + 300 * n_distinct', '1000 * n')}
       AS quality_score
   FROM r
 ),

@@ -2,7 +2,7 @@
 scalar functions, BLEU/ROUGE, flagship)."""
 
 from ..functions.numeric import fixed_units_sql as _fu
-from ..functions.numeric import round6_ratio_sql as _r6
+from ..functions.numeric import round_ratio_sql as _rr
 from ..functions.numeric import mean_6dp_sql as _m6
 from ._base import *  # noqa: F401,F403
 from ._base import (  # noqa: F401
@@ -323,7 +323,7 @@ ORACLES["q_timing_arith"] = f"""
 SELECT doc_id,
        round(n_chars / CAST(100.0 AS DOUBLE), 6) AS decode_time,
        CASE WHEN n_chars > 0
-            THEN {_r6("100 * len(string_split(text, ' '))", 'n_chars')}
+            THEN {_rr("100 * len(string_split(text, ' '))", 'n_chars')}
        END AS decoding_speed
 FROM documents
 """
@@ -340,7 +340,7 @@ ORACLES["q_metrics_avg"] = f"""
 WITH {_FLAGSHIP_CTES}
 SELECT lang,
        {_m6('set_f1')} AS avg_f1,
-       {_r6('sum(em)', 'count(em)')} AS em_rate,
+       {_rr('sum(em)', 'count(em)')} AS em_rate,
        CAST(count(*) AS BIGINT) AS n_docs
 FROM flagship GROUP BY lang
 """
@@ -419,10 +419,10 @@ j AS (
   FROM tp JOIN tg USING (doc_id) LEFT JOIN ov USING (doc_id)
 )
 SELECT doc_id,
-       {_r6('n_same', 'n_pred')} AS precision,
-       {_r6('n_same', 'n_gold')} AS recall,
+       {_rr('n_same', 'n_pred')} AS precision,
+       {_rr('n_same', 'n_gold')} AS recall,
        CASE WHEN n_same = 0 THEN CAST(0.0 AS DOUBLE)
-            ELSE {_r6('2 * n_same', 'n_pred + n_gold')} END AS f1
+            ELSE {_rr('2 * n_same', 'n_pred + n_gold')} END AS f1
 FROM j
 """
 
@@ -464,7 +464,7 @@ WITH params AS (
 ),
 d AS (SELECT doc_id, len(string_split(text, ' ')) AS n_words FROM documents)
 SELECT p.ratio, p.check_layer,
-       {_r6('sum(CAST(round(p.ratio * d.n_words) AS BIGINT))', 'count(*)')}
+       {_rr('sum(CAST(round(p.ratio * d.n_words) AS BIGINT))', 'count(*)')}
          AS avg_selected,
        CAST(count(*) AS BIGINT) AS n_docs
 FROM params p CROSS JOIN d
@@ -658,7 +658,7 @@ lcs AS (
 )
 SELECT doc_id, lcs, len_p, len_g,
        CASE WHEN lcs = 0 THEN 0.0
-            ELSE {_r6('2 * lcs', 'len_p + len_g')} END AS rouge_l
+            ELSE {_rr('2 * lcs', 'len_p + len_g')} END AS rouge_l
 FROM lcs
 """
 

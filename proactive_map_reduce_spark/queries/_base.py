@@ -11,10 +11,9 @@ from ..functions.numeric import (
     money_sum_2dp,
     rescale_units,
     round_ratio,
-    round6_ratio,
 )
 from ..functions import scoring
-from ..functions.scoring import bleu_udf, rouge_l_udf, set_f1, subset_accuracy
+from ..functions.scoring import set_f1, subset_accuracy
 from ..functions.text import (
     any_answer_contained,
     exact_match,

@@ -598,7 +598,7 @@ def q_corpus_mix(spark, sf_dir):
         F.count("*").cast("bigint").alias("n_total"),
         F.sum("keep").cast("bigint").alias("n_kept"),
         # exact-int half-up round (functions/numeric.py)
-        round6_ratio(F.sum("keep"), F.count("*")).alias("realized_frac"),
+        round_ratio(F.sum("keep"), F.count("*")).alias("realized_frac"),
     )
 
 
@@ -631,7 +631,7 @@ def q_vocab_oov(spark, sf_dir):
         .cast("bigint")
         .alias("n_oov"),
         # exact-int half-up round (functions/numeric.py)
-        round6_ratio(
+        round_ratio(
             F.sum(F.when(F.col("in_v").isNull(), 1).otherwise(0)), F.count("*")
         ).alias("oov_rate"),
     )

@@ -307,7 +307,7 @@ def q_timing_arith(spark, sf_dir):
         # there; null-speed-for-empty is the deliberate deviation, the
         # oracle mirrors it).
         F.when(
-            F.col("n_chars") > 0, round6_ratio(100 * n_words, F.col("n_chars"))
+            F.col("n_chars") > 0, round_ratio(100 * n_words, F.col("n_chars"))
         ).alias("decoding_speed"),
     )
 
@@ -335,7 +335,7 @@ def q_metrics_avg(spark, sf_dir):
     # odd/2e6 — functions/numeric.py).
     return scored.groupBy("lang").agg(
         mean_6dp(F.col("set_f1")).alias("avg_f1"),
-        round6_ratio(F.sum("em"), F.count("em")).alias("em_rate"),
+        round_ratio(F.sum("em"), F.count("em")).alias("em_rate"),
         F.count("*").cast("bigint").alias("n_docs"),
     )
 
@@ -458,10 +458,10 @@ def q_token_counter_overlap(spark, sf_dir):
     # quotients (functions/numeric.py)
     return j.select(
         "doc_id",
-        round6_ratio(F.col("n_same"), F.col("n_pred")).alias("precision"),
-        round6_ratio(F.col("n_same"), F.col("n_gold")).alias("recall"),
+        round_ratio(F.col("n_same"), F.col("n_pred")).alias("precision"),
+        round_ratio(F.col("n_same"), F.col("n_gold")).alias("recall"),
         F.when(F.col("n_same") == 0, F.lit(0.0))
-        .otherwise(round6_ratio(2 * F.col("n_same"), F.col("n_pred") + F.col("n_gold")))
+        .otherwise(round_ratio(2 * F.col("n_same"), F.col("n_pred") + F.col("n_gold")))
         .alias("f1"),
     )
 
@@ -506,7 +506,7 @@ def q_grid_sweep(spark, sf_dir):
     # engines agree (half-up == half-away for positives); the MEAN is an
     # exact int ratio → int64 half-up (functions/numeric.py)
     return cells.groupBy("ratio", "check_layer").agg(
-        round6_ratio(
+        round_ratio(
             F.sum(F.round(F.col("ratio") * F.col("n_words")).cast("bigint")),
             F.count("*"),
         ).alias("avg_selected"),
@@ -640,7 +640,7 @@ def q_rouge(spark, sf_dir):
         # 2pr/(p+r) = 2·lcs/(len_p+len_g): exact int ratio, int64
         # half-up round (functions/numeric.py)
         F.when(F.col("lcs") == 0, F.lit(0.0))
-        .otherwise(round6_ratio(2 * F.col("lcs"), F.col("len_p") + F.col("len_g")))
+        .otherwise(round_ratio(2 * F.col("lcs"), F.col("len_p") + F.col("len_g")))
         .alias("rouge_l"),
     )
 

@@ -611,10 +611,25 @@ def q_event_interarrival_chunked(spark, sf_dir, slice_us=None):
     """Hot-key-parallel form of q_event_interarrival (round-6 verdict
     item): the plain form's per-user window serializes ALL of a user's
     events into one task, so a 50%-hot user bounds the stage at
-    O(hot-key rows) regardless of cluster size (measured 2.9× at 10×,
-    SKEW_SCALE.json). Interarrival gaps are computable over OVERLAPPING
-    per-user time slices carrying one row of boundary state, which
-    re-parallelizes the pathological user:
+    O(hot-key rows) regardless of cluster size. Medians of 7 interleaved
+    warm reps (11 for the last row), 4 vCPU, rows equal every rep:
+
+    ============================================  =======  =========
+    events fixture                                plain s  chunked s
+    ============================================  =======  =========
+    sf0.1 (100k rows)                              0.29     0.55
+    adversarial --skew (sf0.001, 50% on user 0)    0.22     0.40
+    sf0.1, 50% on user 0                           0.34     0.55
+    sf0.1 ×10 as the sf1 gate (1M rows)            0.84     1.35
+    sf0.1 ×10, 50% (500k rows) on user 0           1.62     1.30
+    ============================================  =======  =========
+
+    The plain form wins until one user's history reaches ~500k rows;
+    there the chunked form wins 10 of 11 reps.
+
+    Interarrival gaps are computable over OVERLAPPING per-user time
+    slices carrying one row of boundary state, which re-parallelizes the
+    pathological user:
 
       1. slice = ts div SLICE_US (any ts-monotone assignment yields the
          identical gap set — slicing merely partitions the ordered

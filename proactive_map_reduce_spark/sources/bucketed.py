@@ -23,7 +23,6 @@ def write_bucketed(
     table: str,
     key: str,
     buckets: int = 32,
-    sort: bool = True,
     path: str | None = None,
 ) -> None:
     """Persist `df` as a bucketed (and bucket-sorted) catalog table.
@@ -32,9 +31,7 @@ def write_bucketed(
     run outside a configured warehouse (the query registry) point the
     data at a scratch dir instead of littering ./spark-warehouse."""
     df.sparkSession.sql(f"DROP TABLE IF EXISTS {table}")
-    w = df.write.bucketBy(buckets, key)
-    if sort:
-        w = w.sortBy(key)
+    w = df.write.bucketBy(buckets, key).sortBy(key)
     if path is not None:
         w = w.option("path", path)
     w.mode("overwrite").saveAsTable(table)

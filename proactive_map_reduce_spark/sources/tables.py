@@ -81,8 +81,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def ensure_parallelism(df: DataFrame, min_fraction: float = 0.5) -> DataFrame:
-    """Round-robin repartition when the scan can't provide enough splits.
+def ensure_parallelism(df: DataFrame) -> DataFrame:
+    """Round-robin repartition when the scan has fewer splits than half
+    the cores.
 
     The local fixtures are single-file/single-row-group parquet, so Spark
     gets ONE input split and every pre-shuffle operator (explode, md5,
@@ -97,7 +98,7 @@ def ensure_parallelism(df: DataFrame, min_fraction: float = 0.5) -> DataFrame:
         from ..session import default_parallelism
 
         target = default_parallelism()
-        if df.rdd.getNumPartitions() < max(1, int(target * min_fraction)):
+        if df.rdd.getNumPartitions() < max(1, target // 2):
             return df.repartition(target)
     except Exception:
         pass
@@ -144,8 +145,9 @@ def duck_tune(con) -> None:
     con.execute(f"SET temp_directory='{tmp}'")
 
 
-def duck_views(con, sf_dir: str, names: list[str] | None = None) -> None:
-    """Register each fixture table as a DuckDB view over its parquet.
+def duck_views(con, sf_dir: str) -> None:
+    """Register each fixture table present in ``sf_dir`` as a DuckDB view
+    over its parquet.
 
     ONE registration loop for every tool that opens DuckDB next to the
     JVM (bench.py, tools/profile_floor.py, tools/bench_sf1.py via
@@ -157,7 +159,7 @@ def duck_views(con, sf_dir: str, names: list[str] | None = None) -> None:
     (ADVICE r8)."""
     import os as _os
 
-    for t in names or TABLES:
+    for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if _os.path.isdir(p):
             con.execute(

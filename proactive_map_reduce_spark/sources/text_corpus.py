@@ -39,7 +39,7 @@ def read_text_corpus(spark: SparkSession, corpus_dir: str) -> DataFrame:
     )
 
 
-def write_text_corpus(df: DataFrame, root: str, text_col: str = "text") -> str:
+def write_text_corpus(df: DataFrame, root: str) -> str:
     """Materialize (doc_id, text) rows as {doc_id}.txt files.
 
     Test/fixture helper mirroring the reference's corpus layout
@@ -48,7 +48,7 @@ def write_text_corpus(df: DataFrame, root: str, text_col: str = "text") -> str:
     as a data-plane operator.
     """
     os.makedirs(root, exist_ok=True)
-    for row in df.select("doc_id", text_col).collect():
+    for row in df.select("doc_id", "text").collect():
         # utf-8 explicitly: spark.read.text always decodes UTF-8, so the
         # round-trip must not depend on the host locale
         with open(
@@ -57,5 +57,5 @@ def write_text_corpus(df: DataFrame, root: str, text_col: str = "text") -> str:
             # a file has no null: a missing text writes an empty file,
             # mirroring how the reference's per-index layout would store
             # an empty document
-            fp.write(row[text_col] if row[text_col] is not None else "")
+            fp.write(row["text"] if row["text"] is not None else "")
     return root

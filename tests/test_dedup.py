@@ -149,15 +149,16 @@ def test_lsh_pairs_tolerate_duplicate_doc_ids(spark):
     }
 
 
-def test_lsh_cap_noop_for_small_buckets(spark):
+def test_lsh_cap_noop_for_small_buckets(spark, monkeypatch):
     """Buckets at exactly K members still get full i<j expansion —
-    the cap changes nothing until a bucket EXCEEDS max_bucket."""
+    the cap changes nothing until a bucket EXCEEDS LSH_MAX_BUCKET."""
     k = 8
+    monkeypatch.setattr(dedup, "LSH_MAX_BUCKET", k)
     sig = spark.range(k).select(
         F.col("id").alias("doc_id"),
         *[F.lit(3).alias(f"mh_{j}") for j in range(16)],
     )
-    pairs = dedup.lsh_candidate_pairs(sig, max_bucket=k)
+    pairs = dedup.lsh_candidate_pairs(sig)
     assert pairs.count() == k * (k - 1) // 2
 
 
@@ -214,13 +215,15 @@ def test_incremental_lsh_matches_semantics(spark):
     assert out == {10: (1, 2), 13: (1, 2)}
 
 
-def test_incremental_lsh_catalog_bucket_cap(spark):
-    """A boilerplate catalog bucket is capped at its max_bucket smallest
-    ids: matches count only the representatives, deterministically."""
+def test_incremental_lsh_catalog_bucket_cap(spark, monkeypatch):
+    """A boilerplate catalog bucket is capped at its LSH_MAX_BUCKET
+    smallest ids: matches count only the representatives,
+    deterministically."""
+    monkeypatch.setattr(dedup, "LSH_MAX_BUCKET", 3)
     A = tuple(range(16))
     catalog = _sig_df(spark, [(i, A) for i in range(1, 11)])
     new = _sig_df(spark, [(100, A)])
-    out = dedup.incremental_lsh_matches(new, catalog, max_bucket=3).collect()
+    out = dedup.incremental_lsh_matches(new, catalog).collect()
     assert len(out) == 1
     r = out[0]
     assert (r["new_id"], r["dup_of"], r["n_matches"]) == (100, 1, 3)
@@ -329,27 +332,28 @@ def test_oracle_whitespace_classes_carry_cr():
         assert all("\r" in c for c in classes), (q, classes)
 
 
-def test_connected_components_long_path_converges_logarithmically(spark):
+def test_connected_components_long_path_converges_logarithmically(spark, monkeypatch):
     """r8 pointer-doubling rewrite: a 120-node PATH graph (diameter 119)
     must fully converge well under the old O(diameter) round bound —
-    max_iter=12 ≈ log2(120)+margin rounds. The fixpoint is unchanged:
+    CC_MAX_ITER=12 ≈ log2(120)+margin rounds. The fixpoint is unchanged:
     every node labeled with the component min."""
     import warnings
 
     from pyspark.sql import functions as F
 
+    monkeypatch.setattr(dedup, "CC_MAX_ITER", 12)
     edges = [(i, i + 1) for i in range(119)]
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
     with warnings.catch_warnings():
         warnings.simplefilter("error")  # non-convergence warns → fail loudly
         got = {
             (r["doc_id"], r["cluster_rep"])
-            for r in dedup.connected_components(pairs, max_iter=12).collect()
+            for r in dedup.connected_components(pairs).collect()
         }
     assert got == {(i, 0) for i in range(120)}
 
 
-def test_connected_components_releases_round_storage(spark):
+def test_connected_components_releases_round_storage(spark, monkeypatch):
     """Each CC round localCheckpoints its labels; without an explicit
     unpersist the blocks of EVERY round linger until driver GC notices,
     growing executor storage linearly in rounds (ADVICE r8). After a
@@ -359,7 +363,8 @@ def test_connected_components_releases_round_storage(spark):
     before = len(sc._jsc.sc().getRDDStorageInfo())
     edges = [(i, i + 1) for i in range(119)]  # path graph → several rounds
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    dedup.connected_components(pairs, max_iter=12).collect()
+    monkeypatch.setattr(dedup, "CC_MAX_ITER", 12)
+    dedup.connected_components(pairs).collect()
     assert dedup.CC_STATS["rounds"] >= 3  # the loop actually iterated
     after = len(sc._jsc.sc().getRDDStorageInfo())
     # allowance: the final round's checkpoint (+ the initial one if the

@@ -71,12 +71,12 @@ def test_duck_views_binds_single_file_and_directory_layout(spark, tmp_path):
     )
 
     con = duckdb.connect()
-    duck_views(con, single, names=["region"])
+    # absent tables (every fixture table but the one written) are
+    # skipped, not errors
+    duck_views(con, single)
     assert con.execute("SELECT count(*) FROM region").fetchone()[0] == 5
-    duck_views(con, multi, names=["nation"])
+    duck_views(con, multi)
     assert con.execute("SELECT count(*) FROM nation").fetchone()[0] == 7
-    # absent tables are skipped, not errors
-    duck_views(con, single, names=["lineitem"])
     con.close()
 
 

@@ -64,7 +64,7 @@ def test_asof_join_matches_bruteforce(spark, left, right):
     rdf = spark.createDataFrame([(k, t, v) for k, t, v in right], _EV_SCHEMA)
     got = sorted(
         (r["k"], r["ts"], r["v"], r["r_v"])
-        for r in asof_join(ldf, rdf, on="k", left_ts="ts", right_ts="ts")
+        for r in asof_join(ldf, rdf, on="k")
         .select("k", "ts", "v", "r_v")
         .collect()
     )

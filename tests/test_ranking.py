@@ -23,7 +23,7 @@ def test_tfidf_matches_python_mirror(spark):
     from proactive_map_reduce_spark.operators.ranking import tfidf_top_terms
 
     df = spark.createDataFrame(CORPUS, "doc_id long, text string")
-    got = tfidf_top_terms(df, top_n=3).collect()
+    got = tfidf_top_terms(df).collect()
 
     n_docs = len(CORPUS)
     dfreq = Counter()

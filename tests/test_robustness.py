@@ -207,6 +207,13 @@ def _components(pairs, nodes):
     return {frozenset(v) for v in out.values()}
 
 
+def _capped_lsh_pairs(sig_df, cap):
+    """lsh_candidate_pairs with its bucket cap set to ``cap``."""
+    return dedup.capped_block_pairs(
+        dedup.band_rows(sig_df), ["band_id", "band_hash"], max_block=cap
+    )
+
+
 def _sig_df(spark, sigs):
     rows = [tuple([d] + mh) for d, mh in sigs.items()]
     return spark.createDataFrame(
@@ -224,13 +231,11 @@ def _sig_df(spark, sigs):
 )
 @settings(max_examples=12, deadline=None)
 def test_lsh_cap_equals_full_expansion_under_cap(spark, hyp_sigs):
-    """With max_bucket >= any bucket size, the capped operator's output is
+    """With a cap >= any bucket size, the capped banded expansion is
     exactly the reference full banded expansion."""
     got = {
         (r["doc_a"], r["doc_b"])
-        for r in dedup.lsh_candidate_pairs(
-            _sig_df(spark, hyp_sigs), max_bucket=1000
-        ).collect()
+        for r in _capped_lsh_pairs(_sig_df(spark, hyp_sigs), 1000).collect()
     }
     assert got == _ref_banded_pairs(hyp_sigs)
 
@@ -251,9 +256,7 @@ def test_lsh_cap_preserves_components(spark, hyp_sigs, max_bucket):
     every emitted pair is orientation-valid (doc_a < doc_b)."""
     got = {
         (r["doc_a"], r["doc_b"])
-        for r in dedup.lsh_candidate_pairs(
-            _sig_df(spark, hyp_sigs), max_bucket=max_bucket
-        ).collect()
+        for r in _capped_lsh_pairs(_sig_df(spark, hyp_sigs), max_bucket).collect()
     }
     full = _ref_banded_pairs(hyp_sigs)
     assert all(a < b for a, b in got)

@@ -84,7 +84,7 @@ def test_asof_join_semantics(spark):
     )
     out = {
         r["lv"]: r["r_rv"]
-        for r in asof_join(left, right, on="k", left_ts="ts", right_ts="ts").collect()
+        for r in asof_join(left, right, on="k").collect()
     }
     assert out[100] == "a"   # equality counts (<=)
     assert out[200] == "b"   # latest at-or-before 20
@@ -260,10 +260,8 @@ def test_brute_force_topk_empty_corpus_dim_probe(spark):
     operator returns its documented well-formed empty result."""
     from proactive_map_reduce_spark.operators import similarity
 
-    empty = spark.createDataFrame([], "vec_id long, emb array<double>")
-    out = similarity.brute_force_topk(
-        empty, id_col="vec_id", vec_col="emb", dim=None
-    )
+    empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    out = similarity.brute_force_topk(empty, dim=None)
     assert out.count() == 0
     assert set(out.columns) == {"query_id", "neighbor_id", "cos_sim", "rank"}
 
