@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import zipcache
 from .numeric import round_ratio
 
 
@@ -221,6 +222,7 @@ def rouge_l(pred: str, gold: str) -> float:
 
 @F.pandas_udf(T.DoubleType())
 def bleu_udf(pred: pd.Series, gold: pd.Series) -> pd.Series:
+    zipcache.install()
     return pd.Series([round(bleu_score(p or "", g or ""), 6) for p, g in zip(pred, gold)])
 
 
@@ -368,6 +370,7 @@ def lcs_udf(pred: pd.Series, gold: pd.Series) -> pd.Series:
     SQL layer on BOTH engines, so the whole ROUGE query hash-checks
     (the oracle computes the same integer via a recursive-CTE row DP
     over identically capped token lists)."""
+    zipcache.install()
     return pd.Series(
         [
             _lcs_len(

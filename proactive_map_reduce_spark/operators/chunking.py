@@ -34,6 +34,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import zipcache
+
 # Sentence boundary: terminator followed by whitespace. Implemented as
 # marker-insertion + split (not regex lookbehind) so the DuckDB oracle (RE2,
 # no lookbehind) computes byte-identical results.
@@ -242,6 +244,7 @@ def _middle_drop_surviving(chunk_lens: list, budget: int) -> list:
 
     Returns the surviving ORIGINAL chunk indices. Runs per document over a
     tiny array → a plain UDF is fine (not a hot path)."""
+    zipcache.install()
     idx = list(range(len(chunk_lens)))
     lens = list(chunk_lens)
     while lens and sum(lens) > budget:

@@ -17,6 +17,13 @@ Scale notes: mapInPandas keeps batches Arrow-encoded end-to-end (~10-100×
 over row-at-a-time UDFs); partitioning is inherited, so chunk rows of one
 document need NOT be co-located — the stage is embarrassingly parallel.
 ``maxRecordsPerBatch`` bounds executor memory for wide text columns.
+A task's fixed cost does not shrink with its rows: PySpark's worker
+calls ``importlib.invalidate_caches()`` before every Python task, which
+on Python < 3.13 re-read pyspark.zip's directory 16 times, 120-310 ms
+per task (4 vCPU, Python 3.11). ``run`` calls ``zipcache.install()`` so
+a reused worker re-reads only a changed archive (0.08-0.18 ms); that
+matters most where the seam runs as one small task per micro-batch
+(the W2 runner, ten per doc_staged op).
 """
 
 from __future__ import annotations
@@ -27,6 +34,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .. import zipcache
 
 # --- M1: pluggable model stage ----------------------------------------------
 
@@ -100,6 +109,7 @@ def llm_map(
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        zipcache.install()
         for batch in batches:
             out = fn(batch)
             if "n_out_tokens" not in out.columns:

@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import zipcache
+
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -75,6 +77,7 @@ def extract_features(
     _missing = {"width": None, "height": None, "n_frames": None}
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        zipcache.install()
         for batch in batches:
             # a NULL payload is a missing/corrupt asset: keep the row
             # (joins don't silently lose the doc) with null metadata —
@@ -146,6 +149,7 @@ def resize_media(
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        zipcache.install()
         for batch in batches:
             rows = {k: [] for k in RESIZE_SCHEMA.fieldNames()}
             for doc_id, p, m in zip(batch["doc_id"], batch["payload"], batch["media_type"]):

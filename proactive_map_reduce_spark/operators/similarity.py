@@ -52,9 +52,9 @@ def cosine(a, b):
     return cos_expr(dot, na * nb)
 
 
-# Test-data embedding dimensionality (embeddings.parquet, all SFs). Passed
-# as a constant so query construction never fires an eager probe job —
-# round 2's `_dim_of` first() probe cost one extra Spark job per plan build.
+# Test-data embedding dimensionality (embeddings.parquet, all SFs). Every
+# similarity operator takes ``dim`` as a required argument, so query
+# construction never fires an eager probe job for it.
 EMBED_DIM = 64
 
 # Accumulator-chunk width for the unrolled dot/norm sums. Chunked
@@ -78,18 +78,6 @@ EMBED_DIM = 64
 # for a trivial aggregation) plus one serial single-split scan task —
 # constants that vanish at real scale and with resident plans.
 _CHUNK = 8
-
-
-def _dim_of(emb: DataFrame) -> int:
-    """Probe the (fixed) vector dimensionality — one 1-row job. Kept only
-    as the fallback for callers with non-test data; every registry query
-    passes ``dim=EMBED_DIM`` so no probe job runs on the bench path.
-
-    A zero-row (or null-vector) input has no dimensionality; report 0 so
-    the callers' empty-input paths produce their documented well-formed
-    empty results instead of a TypeError on ``None["d"]``."""
-    row = emb.select(F.size(F.col("embedding")).alias("d")).first()
-    return 0 if row is None or row["d"] is None else row["d"]
 
 
 def _chunked_sum(terms):
@@ -134,8 +122,6 @@ def unrolled_dot(a, b, dim: int):
 
     Pass column NAMES (str) to build the tree through one F.expr parse
     (fast path); Column args take the py4j-per-term path."""
-    if dim <= 0:  # zero-row probe fallback: a well-typed degenerate sum
-        return F.lit(0.0)
     if isinstance(a, str) and isinstance(b, str):
         return F.expr(_chunked_sum_sql([f"{a}[{d}] * {b}[{d}]" for d in range(dim)]))
     return _chunked_sum([a[d] * b[d] for d in range(dim)])
@@ -143,8 +129,6 @@ def unrolled_dot(a, b, dim: int):
 
 def unrolled_norm(a, dim: int):
     """‖a‖ with the same chunked fold order as ``unrolled_dot``."""
-    if dim <= 0:
-        return F.lit(0.0)
     if isinstance(a, str):
         return F.sqrt(
             F.expr(_chunked_sum_sql([f"{a}[{d}] * {a}[{d}]" for d in range(dim)]))
@@ -153,7 +137,7 @@ def unrolled_norm(a, dim: int):
 
 
 def brute_force_topk(
-    emb: DataFrame, n_queries: int = 8, k: int = 5, dim: int | None = None
+    emb: DataFrame, n_queries: int = 8, k: int = 5, *, dim: int
 ) -> DataFrame:
     """Exact cosine top-k over (vec_id, embedding) rows for the query
     vectors vec_id < n_queries.
@@ -175,7 +159,6 @@ def brute_force_topk(
     naming its id. NaN and ±Infinity components are spelled as SQL
     double casts and flow through the arithmetic like any double.
     """
-    dim = _dim_of(emb) if dim is None else dim
     base = emb.select(
         F.col("vec_id"), _as_double(F.col("embedding")).alias("v")
     ).withColumn("nv", unrolled_norm("v", dim))
@@ -264,14 +247,13 @@ def sign_bucket(vec_col, n_bits: int = 8):
 
 
 def lsh_topk(
-    emb: DataFrame, n_queries: int = 8, k: int = 5, n_bits: int = 4, dim: int | None = None
+    emb: DataFrame, n_queries: int = 8, k: int = 5, n_bits: int = 4, *, dim: int
 ) -> DataFrame:
     """Approximate top-k: rank only candidates in the query's sign bucket.
 
     The trade, measured against ``brute_force_topk`` (8 queries, seeded
     Gaussian 64-dim vectors, 4 vCPU, n_bits=4): 1.6 s vs 3.8 s at 100k
     vectors and 3.3 s vs 14.0 s at 400k, at recall@5 0.25."""
-    dim = _dim_of(emb) if dim is None else dim
     base = (
         emb.select(F.col("vec_id"), _as_double(F.col("embedding")).alias("v"))
         .withColumn("bucket", sign_bucket(F.col("v"), n_bits))
@@ -300,14 +282,13 @@ def lsh_topk(
 
 
 def embedding_near_dup_pairs(
-    emb: DataFrame, threshold: float = 0.95, dim: int | None = None
+    emb: DataFrame, threshold: float = 0.95, *, dim: int
 ) -> DataFrame:
     """Embedding-cosine near-duplicate (vec_id) pairs, blocked by label.
 
     Blocking bounds the pair count (at scale: replace label with a coarse
     LSH bucket); exact cosine verifies each candidate pair.
     """
-    dim = _dim_of(emb) if dim is None else dim
     base = emb.select(
         F.col("vec_id"), F.col("label").alias("blk"), _as_double(F.col("embedding")).alias("v")
     ).withColumn("nv", unrolled_norm("v", dim))

@@ -27,7 +27,10 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(ROOT, "proactive_map_reduce_spark")
 
 #: Library code whose top-level defs must have an engine caller.
-LIBRARY = ["operators", "functions", "sources", "plans", "streaming", "pipeline.py", "session.py"]
+LIBRARY = [
+    "operators", "functions", "sources", "plans", "streaming",
+    "pipeline.py", "session.py", "zipcache.py",
+]
 
 #: Engine code: where a caller counts.
 ENGINE = ["proactive_map_reduce_spark", "perfbench", "examples", "__spark_entry__.py", "bench.py"]

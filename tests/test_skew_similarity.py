@@ -255,13 +255,13 @@ def test_salted_join_keeps_null_salt_source_rows(spark):
     assert len(got) == len(plain) == 3
 
 
-def test_brute_force_topk_empty_corpus_dim_probe(spark):
-    """dim=None on a zero-row corpus: the probe reports 0 and the
+def test_brute_force_topk_empty_corpus_embed_dim(spark):
+    """A zero-row corpus at the registry's ``dim=EMBED_DIM``: the
     operator returns its documented well-formed empty result."""
     from proactive_map_reduce_spark.operators import similarity
 
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    out = similarity.brute_force_topk(empty, dim=None)
+    out = similarity.brute_force_topk(empty, dim=similarity.EMBED_DIM)
     assert out.count() == 0
     assert set(out.columns) == {"query_id", "neighbor_id", "cos_sim", "rank"}
 
