@@ -14,7 +14,7 @@ Layout:
   functions  — scalar text/scoring/hash column functions (F1-F10 in SURVEY §2)
   operators  — chunking, map-stage, reduce, top-k, dedup, similarity,
                text-stats, sketches (KMV/quantiles), multimodal plumbing
-  plans      — composed pipelines, tiered cache (K1-K5), incremental views
+  plans      — incremental views (cached partial aggregates), plan audits
   streaming  — Structured Streaming proactive mode: W1 staged map, W2
                per-doc state on Spark's RocksDB state store, watermarks
   pipeline   — the user-facing ProactivePipeline API

@@ -31,6 +31,7 @@ def portable_hash64(col: Column | str, salt: str = "") -> Column:
     return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("bigint")
 
 
-def token_id(col: Column | str) -> Column:
-    """Deterministic stand-in token id for a word (C3 tokenizer stand-in)."""
-    return portable_hash64(col) % VOCAB_SIZE
+def token_id() -> Column:
+    """Deterministic stand-in token id of the ``word`` column (C3
+    tokenizer stand-in)."""
+    return portable_hash64("word") % VOCAB_SIZE

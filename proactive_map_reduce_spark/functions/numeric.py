@@ -10,8 +10,8 @@ instances (q_quality_score, q_event_interarrival).
 
 ``round_ratio`` (and its DuckDB mirror ``round_ratio_sql``) sidesteps
 float round() entirely for non-negative integer ratios: the half-up
-6-decimal rounding (``scale`` defaults to 6, the display grain of every
-ratio column) is done in exact int64 arithmetic —
+6-decimal rounding (the display grain of every ratio column) is done in
+exact int64 arithmetic —
 ``floor((2·num·10⁶ + den) / (2·den)) / 10⁶`` — where the
 floor division runs as Spark's integral ``div`` (bigint in, bigint
 out; DuckDB mirror ``//``), so every intermediate stays an exact
@@ -49,25 +49,23 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-def round_ratio(num: Column, den: Column, scale: int = 6) -> Column:
-    """Half-up ``round(num/den, scale)`` for non-negative integer
-    columns, computed exactly (see module docstring). Returns double;
-    nulls propagate. Domain: 2·num·10^scale + den < 2^63."""
-    s = 10 ** scale
-    a = num.cast("bigint") * (2 * s) + den.cast("bigint")
+def round_ratio(num: Column, den: Column) -> Column:
+    """Half-up ``round(num/den, 6)`` for non-negative integer columns,
+    computed exactly (see module docstring). Returns double; nulls
+    propagate. Domain: 2·num·10^6 + den < 2^63."""
+    a = num.cast("bigint") * 2_000_000 + den.cast("bigint")
     b = den.cast("bigint") * 2
     q = F.call_function("div", a, b)  # integral divide: exact int64
-    return q / F.lit(float(s))
+    return q / F.lit(1e6)
 
 
-def round_ratio_sql(num: str, den: str, scale: int = 6) -> str:
+def round_ratio_sql(num: str, den: str) -> str:
     """The DuckDB mirror of :func:`round_ratio` — integer floor division
     (``//``) keeps every step exact; operand SQL strings are substituted
     verbatim, so parenthesize compound expressions at the call site."""
-    s = 10 ** scale
     return (
-        f"(((2 * {s} * CAST(({num}) AS BIGINT) + CAST(({den}) AS BIGINT)) "
-        f"// (2 * CAST(({den}) AS BIGINT))) / {float(s)})"
+        f"(((2 * 1000000 * CAST(({num}) AS BIGINT) + CAST(({den}) AS BIGINT)) "
+        f"// (2 * CAST(({den}) AS BIGINT))) / 1000000.0)"
     )
 
 
@@ -92,28 +90,22 @@ def fixed_units_sql(value: str, scale: int) -> str:
     return f"CAST(floor(({value}) * {float(10 ** scale)} + 0.5) AS BIGINT)"
 
 
-def rescale_units(units: Column, from_scale: int, to_scale: int) -> Column:
-    """Half-up round of an exact integer units count (10^-from_scale
-    units, e.g. a revenue sum in 1e-4 units) DOWN to to_scale decimals,
-    as a double. Dividing down instead of multiplying up means the only
-    headroom needed over the units sum itself is +f/2, so magnitude-wise
-    the domain is the full NON-NEGATIVE int64 range (negatives are out
-    of domain module-wide — integral div truncates, see module
-    docstring); the integral ``div`` keeps the quotient exact (the
-    earlier ``(a - pmod) / b`` form went through double and drifted
-    off the SQL mirror above ~2^55 units)."""
-    f = 10 ** (from_scale - to_scale)
-    a = units.cast("bigint") + (f // 2)
-    q = F.call_function("div", a, F.lit(f))  # integral divide: exact int64
-    return q / F.lit(float(10 ** to_scale))
+def rescale_units(units: Column) -> Column:
+    """Half-up round of an exact integer count of 1e-4 units (a revenue
+    sum) DOWN to 2 decimals, as a double. Dividing down instead of
+    multiplying up means the only headroom needed over the units sum
+    itself is +50, so magnitude-wise the domain is the full NON-NEGATIVE
+    int64 range (negatives are out of domain module-wide — integral div
+    truncates, see module docstring); the integral ``div`` keeps the
+    quotient exact (the earlier ``(a - pmod) / b`` form went through
+    double and drifted off the SQL mirror above ~2^55 units)."""
+    a = units.cast("bigint") + 50
+    q = F.call_function("div", a, F.lit(100))  # integral divide: exact int64
+    return q / F.lit(100.0)
 
 
-def rescale_units_sql(units: str, from_scale: int, to_scale: int) -> str:
-    f = 10 ** (from_scale - to_scale)
-    return (
-        f"(((CAST(({units}) AS BIGINT) + {f // 2}) // {f}) "
-        f"/ {float(10 ** to_scale)})"
-    )
+def rescale_units_sql(units: str) -> str:
+    return f"(((CAST(({units}) AS BIGINT) + 50) // 100) / 100.0)"
 
 
 def money_sum_2dp(value: Column) -> Column:
@@ -122,30 +114,18 @@ def money_sum_2dp(value: Column) -> Column:
     × (1−discount) — exact at 4 decimals): accumulate exact 1e-4-unit
     int64s (associative, partitioning-independent), half-up to cents.
     This is THE revenue display aggregate; use it instead of re-spelling
-    ``rescale_units(F.sum(fixed_units(v, 4)), 4, 2)`` per query."""
-    return rescale_units(F.sum(fixed_units(value, 4)), 4, 2)
+    ``rescale_units(F.sum(fixed_units(v, 4)))`` per query."""
+    return rescale_units(F.sum(fixed_units(value, 4)))
 
 
 def money_sum_2dp_sql(value: str) -> str:
     """DuckDB mirror of :func:`money_sum_2dp` (same operand caveat as
     :func:`round_ratio_sql`: the SQL string is substituted verbatim)."""
-    return rescale_units_sql(f"sum({fixed_units_sql(value, 4)})", 4, 2)
+    return rescale_units_sql(f"sum({fixed_units_sql(value, 4)})")
 
 
-def money_sum_2dp_spark_sql(value: str) -> str:
-    """Spark-SQL-TEXT twin of :func:`money_sum_2dp` for ``spark.sql()``
-    queries (Spark dialect: ``DIV`` for integral division). Pinned equal
-    to the Column form and the DuckDB mirror by
-    tests/test_numeric.py::test_money_sum_2dp_three_forms_agree."""
-    return (
-        f"(CAST(sum(CAST(floor(({value}) * CAST(10000.0 AS DOUBLE) "
-        f"+ CAST(0.5 AS DOUBLE)) AS BIGINT)) AS BIGINT) + 50) DIV 100 "
-        f"/ CAST(100.0 AS DOUBLE)"
-    )
-
-
-def decimal_sum(value: Column, dp: int = 2) -> Column:
-    """Order- and engine-deterministic ``round(sum(value), dp)`` for an
+def decimal_sum(value: Column) -> Column:
+    """Order- and engine-deterministic ``round(sum(value), 2)`` for an
     UNBOUNDED-magnitude double measure (the events ``value`` class:
     user-supplied numbers with no schema-level cap), as a double.
 
@@ -177,21 +157,21 @@ def decimal_sum(value: Column, dp: int = 2) -> Column:
 
     Display bound: the final decimal→double conversion is only
     guaranteed engine-identical while the ROUNDED sum's scaled integer
-    |sum|·10^dp stays below 2^53 — DuckDB converts decimals through
-    int128→double→·10^−dp, which double-rounds one ulp off the
+    |sum|·10^2 stays below 2^53 — DuckDB converts decimals through
+    int128→double→·10^−2, which double-rounds one ulp off the
     correctly-rounded value beyond that (measured: a 4e12 sum displayed
-    at 6 dp split the engines; the same sum at 2 dp is exact). At the
-    default dp=2 the bound is |sum| < 9e13 — 5× the adversarial
-    fixture's worst group and far beyond any canonical one. Callers
-    wanting finer display grains must keep |sum|·10^dp < 2^53.
+    at 6 dp split the engines; the same sum at 2 dp is exact). So the
+    bound is |sum| < 9e13 — 5× the adversarial fixture's worst group and
+    far beyond any canonical one. A finer display grain would need
+    |sum|·10^dp < 2^53.
     """
-    return F.round(F.sum(value.cast("decimal(38,6)")), dp).cast("double")
+    return F.round(F.sum(value.cast("decimal(38,6)")), 2).cast("double")
 
 
-def decimal_sum_sql(value: str, dp: int = 2) -> str:
+def decimal_sum_sql(value: str) -> str:
     """DuckDB mirror of :func:`decimal_sum` (same operand caveat as
     :func:`round_ratio_sql`: the SQL string is substituted verbatim)."""
-    return f"CAST(round(sum(CAST(({value}) AS DECIMAL(38,6))), {dp}) AS DOUBLE)"
+    return f"CAST(round(sum(CAST(({value}) AS DECIMAL(38,6))), 2) AS DOUBLE)"
 
 
 def mean_6dp(value: Column) -> Column:

@@ -53,15 +53,9 @@ def set_f1(pred_words: Column, gold_words: Column) -> Column:
     )
 
 
-def pair_scores(
-    df,
-    pred_col: str,
-    gold_col: str,
-    f1_col: str = "set_f1",
-    em_col: str = "em",
-):
-    """All three answer metrics of a (pred, gold) text pair —
-    ``set_f1`` + exact match + ``subset_acc`` — with each side
+def pair_scores(df, f1_col: str = "set_f1", em_col: str = "em"):
+    """All three answer metrics of the (``final_text``, ``gt_text``)
+    pair — ``set_f1`` + exact match + ``subset_acc`` — with each side
     NORMALIZED ONCE (r12 flagship shave).
 
     Composing ``set_f1(norm_tokens(x), norm_tokens(y))`` + exact_match
@@ -89,8 +83,8 @@ def pair_scores(
         ).otherwise(F.split(c, " "))
 
     df = (
-        df.withColumn(nf, normalize_text(F.col(pred_col)))
-        .withColumn(ng, normalize_text(F.col(gold_col)))
+        df.withColumn(nf, normalize_text(F.col("final_text")))
+        .withColumn(ng, normalize_text(F.col("gt_text")))
         .withColumn(tf, F.array_distinct(toks(F.col(nf))))
         .withColumn(tg, F.array_distinct(toks(F.col(ng))))
     )

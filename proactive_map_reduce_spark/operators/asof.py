@@ -23,24 +23,25 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def asof_join(left: DataFrame, right: DataFrame, on: str) -> DataFrame:
-    """Backward as-of join on ``ts`` (latest right at-or-before each left row).
+def asof_join(left: DataFrame, right: DataFrame) -> DataFrame:
+    """Backward as-of join on ``ts`` per ``user_id`` (latest right row
+    at-or-before each left row).
 
-    Output: all left columns, plus every right column (except the key)
+    Output: all left columns, plus every right column (except ``user_id``)
     prefixed `r_` — null when no right row precedes the left row.
     """
-    l_cols = [c for c in left.columns if c != on]
-    r_cols = [c for c in right.columns if c != on]
+    l_cols = [c for c in left.columns if c != "user_id"]
+    r_cols = [c for c in right.columns if c != "user_id"]
 
     r_tagged = right.select(
-        F.col(on),
+        F.col("user_id"),
         F.col("ts").alias("_ts"),
         F.lit(0).alias("_side"),
         F.struct(*[F.col(c) for c in r_cols]).alias("_r"),
     )
     r_type = r_tagged.schema["_r"].dataType
     l_tagged = left.select(
-        F.col(on),
+        F.col("user_id"),
         F.col("ts").alias("_ts"),
         F.lit(1).alias("_side"),
         F.struct(*[F.col(c) for c in l_cols]).alias("_l"),
@@ -48,14 +49,14 @@ def asof_join(left: DataFrame, right: DataFrame, on: str) -> DataFrame:
     )
     r_full = r_tagged.withColumn(
         "_l", F.lit(None).cast(l_tagged.schema["_l"].dataType)
-    ).select(on, "_ts", "_side", "_l", "_r")
-    u = l_tagged.select(on, "_ts", "_side", "_l", "_r").unionByName(r_full)
+    ).select("user_id", "_ts", "_side", "_l", "_r")
+    u = l_tagged.select("user_id", "_ts", "_side", "_l", "_r").unionByName(r_full)
 
     # _r as final sort key: deterministic winner among right rows sharing
     # (key, ts) — struct ordering is lexicographic; left rows' null _r
     # sorts first and never competes.
     w = (
-        Window.partitionBy(on)
+        Window.partitionBy("user_id")
         .orderBy("_ts", "_side", "_r")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
@@ -63,7 +64,7 @@ def asof_join(left: DataFrame, right: DataFrame, on: str) -> DataFrame:
         u.withColumn("_rm", F.last("_r", ignorenulls=True).over(w))
         .filter(F.col("_side") == 1)
     )
-    out_cols = [F.col(on)] + [F.col("_l")[c].alias(c) for c in l_cols] + [
+    out_cols = [F.col("user_id")] + [F.col("_l")[c].alias(c) for c in l_cols] + [
         F.col("_rm")[c].alias(f"r_{c}") for c in r_cols
     ]
     return matched.select(*out_cols)

@@ -127,21 +127,23 @@ RESIZE_SCHEMA = T.StructType(
 )
 
 
-def fake_resize(payload: bytes, w: int, h: int, target_w: int) -> tuple[int, int, bytes]:
-    """Stand-in resize: scale-to-width with integer aspect math; the
-    'resized' payload is a deterministic tag (real codec would re-encode).
-    out_h = h * target_w // w — same integer division in the SQL oracle."""
+def fake_resize(payload: bytes, w: int, h: int) -> tuple[int, int, bytes]:
+    """Stand-in resize: scale to at most 512 wide with integer aspect
+    math; the 'resized' payload is a deterministic tag (real codec would
+    re-encode). out_h = h * out_w // w — same integer division in the SQL
+    oracle."""
     if w <= 0:
         return 0, 0, b""
-    out_w = min(w, target_w)
+    out_w = min(w, 512)
     out_h = h * out_w // w
     return out_w, out_h, b"resized:%d:%d" % (out_w, out_h)
 
 
 def resize_media(
-    df: DataFrame, target_w: int = 512, codec: Callable[[bytes, str], dict] = fake_decode
+    df: DataFrame, codec: Callable[[bytes, str], dict] = fake_decode
 ) -> DataFrame:
-    """Resize stage over (doc_id, payload, media_type) via mapInPandas.
+    """Resize stage over (doc_id, payload, media_type) via mapInPandas,
+    to a width of at most 512.
 
     Audio rows pass through with 0×0 dims. A real implementation swaps
     fake_decode/fake_resize for PIL/ffmpeg inside the same batch loop;
@@ -158,9 +160,7 @@ def resize_media(
                     ow = oh = op = None
                 else:
                     meta = codec(bytes(p), m)
-                    ow, oh, op = fake_resize(
-                        bytes(p), meta["width"], meta["height"], target_w
-                    )
+                    ow, oh, op = fake_resize(bytes(p), meta["width"], meta["height"])
                 rows["doc_id"].append(doc_id)
                 rows["media_type"].append(m)
                 rows["width"].append(meta["width"])
@@ -175,8 +175,8 @@ def resize_media(
     return df.mapInPandas(run, schema=RESIZE_SCHEMA)
 
 
-def sample_frames(features: DataFrame, every: int = 30) -> DataFrame:
-    """Frame sampling for video rows: one output row per every-th frame.
+def sample_frames(features: DataFrame) -> DataFrame:
+    """Frame sampling for video rows: one output row per 30th frame.
 
     Pure built-in explode over `sequence` — the frame *extraction* (the
     stubbed decode) happens downstream per sampled frame id, so at scale
@@ -189,6 +189,6 @@ def sample_frames(features: DataFrame, every: int = 30) -> DataFrame:
         "doc_id",
         F.col("n_frames"),
         F.explode(
-            F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every))
+            F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(30))
         ).alias("frame_id"),
     )

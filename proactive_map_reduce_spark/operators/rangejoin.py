@@ -25,33 +25,32 @@ from pyspark.sql import functions as F
 def interval_join(
     left: DataFrame,
     right: DataFrame,
-    on: str,
     within_us: int,
 ) -> DataFrame:
     """Inner join of rows whose ``ts`` lie within ±within_us microseconds,
-    per key.
+    per ``user_id``.
 
-    Left columns keep their names; right columns (except the key) get an
+    Left columns keep their names; right columns (except ``user_id``) get an
     `r_` prefix.
     """
     w = int(within_us)
     l_bucket = F.floor(F.unix_micros(F.col("ts")) / w)
     r_bucket = F.floor(F.unix_micros(F.col("ts")) / w)
 
-    l_cols = [c for c in left.columns if c != on]
-    r_cols = [c for c in right.columns if c != on]
+    l_cols = [c for c in left.columns if c != "user_id"]
+    r_cols = [c for c in right.columns if c != "user_id"]
 
     l_exp = left.select(
-        F.col(on),
+        F.col("user_id"),
         *[F.col(c) for c in l_cols],
         F.explode(F.array(l_bucket - 1, l_bucket, l_bucket + 1)).alias("_bucket"),
     )
     r_b = right.select(
-        F.col(on),
+        F.col("user_id"),
         *[F.col(c).alias(f"r_{c}") for c in r_cols],
         r_bucket.alias("_bucket"),
     )
-    joined = l_exp.join(r_b, [on, "_bucket"])
+    joined = l_exp.join(r_b, ["user_id", "_bucket"])
     exact = (
         F.abs(F.unix_micros(F.col("ts")) - F.unix_micros(F.col("r_ts")))
         <= F.lit(w)

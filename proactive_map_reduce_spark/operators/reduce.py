@@ -92,16 +92,17 @@ def prefix_scan_refeed(chunks_df: DataFrame, mapped_df: DataFrame) -> DataFrame:
     )
 
 
-def running_metric(df: DataFrame, id_col: str, order_col: str, value_col: str) -> DataFrame:
-    """W3: running metric in arrival order (pipeline_70b_samsum.py:312-323).
+def running_metric(df: DataFrame) -> DataFrame:
+    """W3: running metric per ``user_id`` in ``event_id`` order
+    (pipeline_70b_samsum.py:312-323).
 
-    Emits the cumulative sum ``running_sum`` (rounded to the value's own
-    2-decimal grain) and count ``running_n`` — the mean's exact
-    numerator/denominator — rather than the mean quotient:
-    ``round(avg, 6)`` lands on exact x.5
-    rounding boundaries where Spark's sequential and DuckDB's
-    segment-tree float summation legitimately disagree in the last ulp
-    (the family the sf0.1 deep gate caught; functions/numeric.py).
+    Emits the cumulative ``value`` sum ``running_sum`` (rounded to the
+    value's own 2-decimal grain) and count ``running_n`` — the mean's
+    exact numerator/denominator — rather than the mean quotient:
+    ``round(avg, 6)`` lands on exact x.5 rounding boundaries where
+    Spark's sequential and DuckDB's segment-tree float summation
+    legitimately disagree in the last ulp (the family the sf0.1 deep
+    gate caught; functions/numeric.py).
     The cumulative sum accumulates as exact DECIMAL(38,6)
     (functions/numeric.decimal_sum rationale): a prefix FLOAT sum is
     only boundary-free while the measure's magnitudes are homogeneous —
@@ -111,13 +112,13 @@ def running_metric(df: DataFrame, id_col: str, order_col: str, value_col: str) -
     prefix sum is exact in both engines at ANY magnitude mix, so the
     displayed 2-decimal totals cannot drift."""
     w = (
-        Window.partitionBy(id_col)
-        .orderBy(order_col)
+        Window.partitionBy("user_id")
+        .orderBy("event_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return df.withColumn(
         "running_sum",
-        F.round(F.sum(F.col(value_col).cast("decimal(38,6)")).over(w), 2).cast(
+        F.round(F.sum(F.col("value").cast("decimal(38,6)")).over(w), 2).cast(
             "double"
         ),
     ).withColumn("running_n", F.count("*").over(w).cast("bigint"))

@@ -11,8 +11,9 @@ Scale design:
 - The LSH variant buckets vectors by the sign pattern of their leading
   dimensions (a deterministic random-hyperplane sketch with axis-aligned
   planes): candidate generation becomes an equi-join on bucket id, so the
-  per-query work no longer scans the full corpus. Recall is tunable via
-  the number of sign bits (fewer bits → bigger buckets → higher recall).
+  per-query work no longer scans the full corpus. The bucket is the sign
+  pattern of the first 4 dimensions; fewer bits would mean bigger
+  buckets and higher recall.
 
 Floats are widened to double before any arithmetic; cosine is rounded to
 6 before ranking so both engines rank identical values (ties broken by
@@ -127,20 +128,15 @@ def unrolled_dot(a, b, dim: int):
     return _chunked_sum([a[d] * b[d] for d in range(dim)])
 
 
-def unrolled_norm(a, dim: int):
-    """‖a‖ with the same chunked fold order as ``unrolled_dot``."""
-    if isinstance(a, str):
-        return F.sqrt(
-            F.expr(_chunked_sum_sql([f"{a}[{d}] * {a}[{d}]" for d in range(dim)]))
-        )
-    return F.sqrt(_chunked_sum([a[d] * a[d] for d in range(dim)]))
+def unrolled_norm(dim: int):
+    """‖v‖ of the ``v`` column, with the same chunked fold order as
+    ``unrolled_dot``."""
+    return F.sqrt(F.expr(_chunked_sum_sql([f"v[{d}] * v[{d}]" for d in range(dim)])))
 
 
-def brute_force_topk(
-    emb: DataFrame, n_queries: int = 8, k: int = 5, *, dim: int
-) -> DataFrame:
-    """Exact cosine top-k over (vec_id, embedding) rows for the query
-    vectors vec_id < n_queries.
+def brute_force_topk(emb: DataFrame, *, dim: int) -> DataFrame:
+    """Exact cosine top-5 over (vec_id, embedding) rows for the 8 query
+    vectors vec_id < 8.
 
     Norms are computed ONCE per row (not per query×corpus pair), and
     dot/norm are dim-unrolled codegen expressions built through a single
@@ -148,7 +144,7 @@ def brute_force_topk(
     interpreted-eval, the |Q|× norm recomputation, and the per-term py4j
     construction cost.
 
-    The n query vectors are fetched at plan-build time (one pushed-filter
+    The query vectors are fetched at plan-build time (one pushed-filter
     job over |Q| rows) and ride into the plan as literals — exactly how a
     serving system receives query vectors as request parameters. The pair
     stage is then a single narrow projection over ONE corpus scan: no
@@ -161,9 +157,9 @@ def brute_force_topk(
     """
     base = emb.select(
         F.col("vec_id"), _as_double(F.col("embedding")).alias("v")
-    ).withColumn("nv", unrolled_norm("v", dim))
+    ).withColumn("nv", unrolled_norm(dim))
     qrows = (
-        base.filter(F.col("vec_id") < n_queries)
+        base.filter(F.col("vec_id") < 8)
         .select("vec_id", "v", "nv")
         .collect()
     )
@@ -229,16 +225,16 @@ def brute_force_topk(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
     )
 
 
-def sign_bucket(vec_col, n_bits: int = 8):
-    """Deterministic LSH bucket: sign pattern of the first n_bits dims."""
+def sign_bucket(vec_col):
+    """Deterministic LSH bucket: sign pattern of the first 4 dims."""
     return F.aggregate(
         F.zip_with(
-            F.slice(vec_col, 1, n_bits),
-            F.sequence(F.lit(0), F.lit(n_bits - 1)),
+            F.slice(vec_col, 1, 4),
+            F.sequence(F.lit(0), F.lit(3)),
             lambda x, i: F.when(x >= 0, F.pow(F.lit(2.0), i.cast("double"))).otherwise(F.lit(0.0)),
         ),
         F.lit(0.0),
@@ -246,20 +242,19 @@ def sign_bucket(vec_col, n_bits: int = 8):
     ).cast("bigint")
 
 
-def lsh_topk(
-    emb: DataFrame, n_queries: int = 8, k: int = 5, n_bits: int = 4, *, dim: int
-) -> DataFrame:
-    """Approximate top-k: rank only candidates in the query's sign bucket.
+def lsh_topk(emb: DataFrame, *, dim: int) -> DataFrame:
+    """Approximate top-5 for the 8 query vectors vec_id < 8: rank only
+    candidates in the query's 4-bit sign bucket.
 
-    The trade, measured against ``brute_force_topk`` (8 queries, seeded
-    Gaussian 64-dim vectors, 4 vCPU, n_bits=4): 1.6 s vs 3.8 s at 100k
+    The trade, measured against ``brute_force_topk`` (seeded Gaussian
+    64-dim vectors, 4 vCPU): 1.6 s vs 3.8 s at 100k
     vectors and 3.3 s vs 14.0 s at 400k, at recall@5 0.25."""
     base = (
         emb.select(F.col("vec_id"), _as_double(F.col("embedding")).alias("v"))
-        .withColumn("bucket", sign_bucket(F.col("v"), n_bits))
-        .withColumn("nv", unrolled_norm("v", dim))
+        .withColumn("bucket", sign_bucket(F.col("v")))
+        .withColumn("nv", unrolled_norm(dim))
     )
-    queries = base.filter(F.col("vec_id") < n_queries).select(
+    queries = base.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
         F.col("bucket").alias("qb"),
@@ -278,7 +273,7 @@ def lsh_topk(
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w).cast("int")).filter(F.col("rank") <= k)
+    return scored.withColumn("rank", F.row_number().over(w).cast("int")).filter(F.col("rank") <= 5)
 
 
 def embedding_near_dup_pairs(
@@ -291,7 +286,7 @@ def embedding_near_dup_pairs(
     """
     base = emb.select(
         F.col("vec_id"), F.col("label").alias("blk"), _as_double(F.col("embedding")).alias("v")
-    ).withColumn("nv", unrolled_norm("v", dim))
+    ).withColumn("nv", unrolled_norm(dim))
     a = base.select(
         F.col("vec_id").alias("vec_a"), F.col("blk"),
         F.col("v").alias("va"), F.col("nv").alias("na"),

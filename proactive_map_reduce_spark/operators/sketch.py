@@ -17,12 +17,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+#: (probability, output column) of each reported quantile.
+_QUARTILES = [(0.25, "p25"), (0.50, "p50"), (0.75, "p75")]
 
-def kmv_distinct(
-    hashed: DataFrame, group_col: str, hash_col: str, k: int,
-    out_col: str = "approx_distinct",
-) -> DataFrame:
-    """Approximate distinct count per group from uniform 32-bit hashes.
+
+def kmv_distinct(hashed: DataFrame, k: int) -> DataFrame:
+    """Approximate distinct count per ``lang`` from uniform 32-bit hashes
+    ``h``, as ``approx_distinct_words``.
 
     KMV estimator: with h uniform on [0, 2^32), E[k-th min] ≈ k/|S|·2^32
     → |S| ≈ (k-1)·2^32 / h_(k); groups with fewer than k distinct hashes
@@ -41,22 +42,22 @@ def kmv_distinct(
     (including AQE-coalesced) yields the same answer. At cluster scale,
     extend to a tree merge with a middle level keyed on pid % fan_in.
 
-    `hashed` must hold DISTINCT (group, hash) rows (apply .distinct()
+    `hashed` must hold DISTINCT (lang, h) rows (apply .distinct()
     upstream — that shuffle is uniform-keyed and scales).
     """
     loc = hashed.withColumn("pid", F.spark_partition_id())
     local_k = loc.withColumn(
         "lrn",
-        F.row_number().over(Window.partitionBy("pid", group_col).orderBy(hash_col)),
+        F.row_number().over(Window.partitionBy("pid", "lang").orderBy("h")),
     ).filter(F.col("lrn") <= k)
     cand = local_k.withColumn(
-        "rn", F.row_number().over(Window.partitionBy(group_col).orderBy(hash_col))
+        "rn", F.row_number().over(Window.partitionBy("lang").orderBy("h"))
     )
-    return cand.groupBy(group_col).agg(
+    return cand.groupBy("lang").agg(
         F.max("rn").alias("n_distinct"),
-        F.max(F.when(F.col("rn") == k, F.col(hash_col))).alias("kth"),
+        F.max(F.when(F.col("rn") == k, F.col("h"))).alias("kth"),
     ).select(
-        group_col,
+        "lang",
         F.when(F.col("n_distinct") < k, F.col("n_distinct"))
         .otherwise(
             # greatest(kth, 1): hash value 0 CAN be the k-th minimum
@@ -73,22 +74,20 @@ def kmv_distinct(
             )
         )
         .cast("bigint")
-        .alias(out_col),
+        .alias("approx_distinct_words"),
     )
 
 
-def histogram_quantiles(
-    df: DataFrame, group_col: str, value_col: str, bins: int,
-    probs: list[float] = (0.25, 0.50, 0.75),
-    out_cols: list[str] | None = None,
-) -> DataFrame:
-    """Approximate quantiles per group via equi-width integer histogram.
+def histogram_quantiles(df: DataFrame, bins: int) -> DataFrame:
+    """Approximate ``n_chars`` quartiles per ``lang`` via equi-width
+    integer histogram.
 
-    Reports the lower bound of the bin where the cumulative count
-    crosses p·n (bin width = range/bins). Exact integer bin counts →
-    cross-engine deterministic; the per-group state is `bins` counters
-    (mergeable by addition). The cumulative window runs over ≤ `bins`
-    rows per group — bounded regardless of data size.
+    Reports, as ``p25``/``p50``/``p75``, the lower bound of the bin
+    where the cumulative count crosses p·n (bin width = range/bins).
+    Exact integer bin counts → cross-engine deterministic; the
+    per-group state is `bins` counters (mergeable by addition). The
+    cumulative window runs over ≤ `bins` rows per group — bounded
+    regardless of data size.
 
     NULL values are excluded BEFORE counting: a null can't land in any
     bin, so counting it in n would shift every quantile, and the
@@ -97,27 +96,26 @@ def histogram_quantiles(
     LAST). A group whose values are all null has no quantiles and is
     absent from the output.
     """
-    out_cols = out_cols or [f"p{int(p * 100)}" for p in probs]
-    vals = df.select(group_col, value_col).filter(F.col(value_col).isNotNull())
-    bounds = vals.groupBy(group_col).agg(
-        F.min(value_col).alias("lo"), F.max(value_col).alias("hi"),
+    vals = df.select("lang", "n_chars").filter(F.col("n_chars").isNotNull())
+    bounds = vals.groupBy("lang").agg(
+        F.min("n_chars").alias("lo"), F.max("n_chars").alias("hi"),
         F.count("*").alias("n"),
     )
     binned = (
-        vals.join(bounds, group_col)
+        vals.join(bounds, "lang")
         .select(
-            group_col, "lo", "hi", "n",
+            "lang", "lo", "hi", "n",
             F.floor(
-                (F.col(value_col) - F.col("lo"))
+                (F.col("n_chars") - F.col("lo"))
                 * bins
                 / (F.col("hi") - F.col("lo") + 1)
             ).cast("int").alias("bin"),
         )
-        .groupBy(group_col, "lo", "hi", "n", "bin")
+        .groupBy("lang", "lo", "hi", "n", "bin")
         .agg(F.count("*").alias("c"))
     )
     cum = binned.withColumn(
-        "cum", F.sum("c").over(Window.partitionBy(group_col).orderBy("bin"))
+        "cum", F.sum("c").over(Window.partitionBy("lang").orderBy("bin"))
     )
 
     def quantile_bin(p: float):
@@ -127,8 +125,8 @@ def histogram_quantiles(
         )
         return F.max(hit)
 
-    quart = cum.groupBy(group_col, "lo", "hi").agg(
-        *[quantile_bin(p).alias(f"b_{c}") for p, c in zip(probs, out_cols)]
+    quart = cum.groupBy("lang", "lo", "hi").agg(
+        *[quantile_bin(p).alias(f"b_{c}") for p, c in _QUARTILES]
     )
 
     def bin_lo(b):
@@ -141,5 +139,5 @@ def histogram_quantiles(
         ).cast("bigint")
 
     return quart.select(
-        group_col, *[bin_lo(f"b_{c}").alias(c) for c in out_cols]
+        "lang", *[bin_lo(f"b_{c}").alias(c) for _, c in _QUARTILES]
     )

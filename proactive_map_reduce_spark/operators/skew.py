@@ -37,16 +37,11 @@ def salt_column(stable_col: Column | str, n_salts: int) -> Column:
     ).cast("int")
 
 
-def salted_agg(
-    df: DataFrame,
-    key_cols: list[str],
-    sum_col: str,
-    salt_source: str,
-    n_salts: int = 8,
-) -> DataFrame:
-    """Two-phase sum/count over (keys + salt), then combine partials.
+def salted_agg(df: DataFrame, n_salts: int = 8) -> DataFrame:
+    """Two-phase sum of ``value_dec`` and row count per ``event_type``
+    over (event_type, salt of ``event_id``), then combine partials.
 
-    Equivalent to df.groupBy(keys).agg(sum, count) with the hot-key
+    Equivalent to df.groupBy("event_type").agg(sum, count) with the hot-key
     reduce work spread across n_salts reducers. For FLOAT measures the
     equivalence is up to accumulation order (float + is non-associative;
     the salt changes the association) — boundary-stable when inputs are
@@ -54,32 +49,27 @@ def salted_agg(
     (the q_salted_agg shape: 2-dec values, round(sum, 2)); for exact
     cross-engine sums at finer display scales, feed fixed-point units
     (functions/numeric.fixed_units) instead of raw doubles."""
-    salted = df.withColumn("_salt", salt_column(salt_source, n_salts))
-    partial = salted.groupBy(*key_cols, "_salt").agg(
-        F.sum(sum_col).alias("_psum"), F.count("*").alias("_pcnt")
+    salted = df.withColumn("_salt", salt_column("event_id", n_salts))
+    partial = salted.groupBy("event_type", "_salt").agg(
+        F.sum("value_dec").alias("_psum"), F.count("*").alias("_pcnt")
     )
-    return partial.groupBy(*key_cols).agg(
+    return partial.groupBy("event_type").agg(
         F.sum("_psum").alias("sum_value"),
         F.sum("_pcnt").cast("bigint").alias("n_rows"),
     )
 
 
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    fact_key: str,
-    dim_key: str,
-    salt_source: str,
-    n_salts: int = 8,
-) -> DataFrame:
-    """Inner join with the dim side replicated across n_salts salt values.
+def salted_join(fact: DataFrame, dim: DataFrame, n_salts: int = 8) -> DataFrame:
+    """Inner join ``l_suppkey = s_suppkey`` with the dim side replicated
+    across n_salts salt values.
 
-    fact rows salt deterministically; dim rows explode to every salt, so
-    (key, salt) partitions each hot key's rows n_salts ways. Use when the
-    dim exceeds the broadcast budget but fits n_salts-fold replication."""
-    f = fact.withColumn("_salt", salt_column(salt_source, n_salts))
+    fact rows salt deterministically on ``l_orderkey``; dim rows explode
+    to every salt, so (key, salt) partitions each hot key's rows n_salts
+    ways. Use when the dim exceeds the broadcast budget but fits
+    n_salts-fold replication."""
+    f = fact.withColumn("_salt", salt_column("l_orderkey", n_salts))
     d = dim.withColumn(
         "_salt", F.explode(F.sequence(F.lit(0).cast("int"), F.lit(n_salts - 1).cast("int")))
     )
-    cond = (f[fact_key] == d[dim_key]) & (f["_salt"] == d["_salt"])
+    cond = (f["l_suppkey"] == d["s_suppkey"]) & (f["_salt"] == d["_salt"])
     return f.join(d, cond).drop("_salt")

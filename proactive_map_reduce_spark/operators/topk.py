@@ -18,15 +18,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def topk_importance(
-    df: DataFrame,
-    group_col: str,
-    pos_col: str,
-    score_col: str,
-    ratio: float,
-    last_len: int,
-) -> DataFrame:
-    """Select top-k scored positions per group plus the `last_len` tail.
+def topk_importance(df: DataFrame, ratio: float, last_len: int) -> DataFrame:
+    """Select the top-k positions ``pos`` by ``value`` per ``user_id``,
+    plus the `last_len` tail.
 
     k = clamp(int(ratio * n) - 1, 0, n - last_len) per group — int() is
     TRUNCATION (modeling_llama.py:860 `max(int(q_len*top_k_ratio)-1, 0)`,
@@ -36,12 +30,12 @@ def topk_importance(
     displace a non-tail candidate from the k slots. Output adds
     `selected` ∈ {'topk','tail'}.
     """
-    g = Window.partitionBy(group_col)
+    g = Window.partitionBy("user_id")
     n = F.count("*").over(g)
     scored = df.withColumn("_n", n)
-    tail = F.col(pos_col) >= (F.col("_n") - F.lit(last_len))
-    rank_w = Window.partitionBy(group_col).orderBy(
-        tail.cast("int").asc(), F.col(score_col).desc(), F.col(pos_col).asc()
+    tail = F.col("pos") >= (F.col("_n") - F.lit(last_len))
+    rank_w = Window.partitionBy("user_id").orderBy(
+        tail.cast("int").asc(), F.col("value").desc(), F.col("pos").asc()
     )
     k = F.greatest(
         F.lit(0),
@@ -59,8 +53,9 @@ def topk_importance(
     )
 
 
-def order_preserve(df: DataFrame, id_col: str, stage_col: str, pos_col: str) -> DataFrame:
-    """T2: assign the global consumption order (stage, pos) per key —
-    the ordering invariant of test_order.py / the decode loops."""
-    w = Window.partitionBy(id_col).orderBy(stage_col, pos_col)
+def order_preserve(df: DataFrame) -> DataFrame:
+    """T2: assign the global consumption order (stage ``ts``, position
+    ``event_id``) per ``user_id`` — the ordering invariant of
+    test_order.py / the decode loops."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return df.withColumn("global_order", F.row_number().over(w).cast("bigint"))

@@ -45,9 +45,9 @@ SELECT l_returnflag, l_linestatus,
        sum(CAST(l_quantity AS BIGINT)) / 1.0 AS sum_qty,
        sum({_fu('l_extendedprice', 2)}) / 100.0 AS sum_base_price,
        {_ms('l_extendedprice * (1 - l_discount)')} AS sum_disc_price,
-       {_rr('sum(CAST(l_quantity AS BIGINT))', 'count(*)', 6)} AS avg_qty,
+       {_rr('sum(CAST(l_quantity AS BIGINT))', 'count(*)')} AS avg_qty,
        sum({_fu('l_extendedprice', 2)}) / CAST(count(*) AS DOUBLE) / 100.0 AS avg_price,
-       {_rr(f"sum({_fu('l_discount', 2)})", '100 * count(*)', 6)} AS avg_disc,
+       {_rr(f"sum({_fu('l_discount', 2)})", '100 * count(*)')} AS avg_disc,
        CAST(count(*) AS BIGINT) AS count_order
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '2001-06-30'
@@ -420,7 +420,6 @@ FROM events GROUP BY user_id
 _v_expr = _rr(
     f"sum(greatest(least({_fu('value', 2)}, 100000000), -100000000))",
     "100 * count(*)",
-    6,
 )
 ORACLES["q_resample_ffill"] = f"""
 WITH b AS (

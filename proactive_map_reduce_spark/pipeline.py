@@ -60,9 +60,7 @@ class ProactivePipeline:
         over normalized word sets, each side normalized once
         (``scoring.pair_scores``), plus BLEU (F6)."""
         j = final_df.join(gt_df.select("doc_id", "gt_text"), "doc_id")
-        scored = pair_scores(
-            j, "final_text", "gt_text", f1_col="f1", em_col="exact_match"
-        )
+        scored = pair_scores(j, f1_col="f1", em_col="exact_match")
         return scored.select(
             "doc_id",
             "n_chunks",

@@ -103,8 +103,3 @@ class IncrementalAggregate:
         """The maintained view: one row per partition with final measures."""
         assert self.partials is not None, "initialize() first"
         return self.partials
-
-    def release(self) -> None:
-        if self.partials is not None:
-            self.partials.unpersist()
-            self.partials = None

@@ -9,7 +9,6 @@ from ..functions.numeric import (
     fixed_units,
     mean_6dp,
     money_sum_2dp,
-    rescale_units,
     round_ratio,
 )
 from ..functions import scoring

@@ -109,7 +109,7 @@ def q_prompt_assemble(spark, sf_dir):
 def q_tokenize(spark, sf_dir):
     """C3: stand-in tokenizer — portable md5-derived token ids per word."""
     return _words(spark, sf_dir).select(
-        "doc_id", F.col("pos").cast("int").alias("pos"), token_id("word").alias("token")
+        "doc_id", F.col("pos").cast("int").alias("pos"), token_id().alias("token")
     )
 
 
@@ -244,7 +244,7 @@ def q_flagship(spark, sf_dir):
     # (r12) evaluates the 3-regex normalization ONCE per side and feeds
     # all three metrics from it — value-identical to the inline
     # set_f1/exact_match/subset_accuracy composition, ~27% less wall.
-    return scoring.pair_scores(joined, "final_text", "gt_text").select(
+    return scoring.pair_scores(joined).select(
         "doc_id", "lang", "n_chunks", "set_f1", "em", "subset_acc"
     )
 
@@ -518,17 +518,14 @@ def q_topk_importance(spark, sf_dir):
     """T1: per-user top-k events by score plus always the positional tail
     (modeling_llama.py:860-869 selection semantics)."""
     ev = _events_with_pos(spark, sf_dir).select("user_id", "pos", "event_id", "value")
-    sel = topk_ops.topk_importance(
-        ev, group_col="user_id", pos_col="pos", score_col="value",
-        ratio=TOPK_RATIO, last_len=TOPK_LAST,
-    )
+    sel = topk_ops.topk_importance(ev, ratio=TOPK_RATIO, last_len=TOPK_LAST)
     return sel.select("user_id", "pos", "event_id", "selected")
 
 
 def q_order_preserve(spark, sf_dir):
     """T2: tokens consumed in (stage, pos) arrival order (test_order.py)."""
     ev = load_table(spark, sf_dir, "events")
-    out = topk_ops.order_preserve(ev, "user_id", "ts", "event_id")
+    out = topk_ops.order_preserve(ev)
     return out.select("event_id", "user_id", "global_order")
 
 
@@ -540,7 +537,7 @@ def q_running_metric(spark, sf_dir):
     Spark's sequential and DuckDB's segment-tree summation legitimately
     disagree in the last ulp; sum/count are boundary-free."""
     ev = load_table(spark, sf_dir, "events")
-    out = red.running_metric(ev, "user_id", "event_id", "value")
+    out = red.running_metric(ev)
     return out.select("event_id", "user_id", "running_sum", "running_n")
 
 
@@ -653,8 +650,8 @@ def q_decode_detok(spark, sf_dir):
     Scale: vocab is bounded by VOCAB_SIZE → broadcast join; the decode is
     one groupBy(doc_id) with sorted-struct reassembly."""
     words = _words(spark, sf_dir)
-    vocab = words.groupBy(token_id("word").alias("tok")).agg(F.min("word").alias("word"))
-    toks = words.select("doc_id", "pos", token_id("word").alias("tok"))
+    vocab = words.groupBy(token_id().alias("tok")).agg(F.min("word").alias("word"))
+    toks = words.select("doc_id", "pos", token_id().alias("tok"))
     return (
         toks.join(F.broadcast(vocab), "tok")
         .groupBy("doc_id")
@@ -702,7 +699,7 @@ def q_kv_concat(spark, sf_dir):
     with_chunk = words.withColumn(
         "chunk_id",
         chunking.equal_partition_chunk_id(F.col("pos"), F.col("n_words_doc"), NUM_STEPS),
-    ).withColumn("tok", token_id("word"))
+    ).withColumn("tok", token_id())
     per_chunk = with_chunk.groupBy("doc_id", "chunk_id").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("pos", "tok"))), lambda s: s["tok"]
@@ -894,26 +891,33 @@ def q_orc_roundtrip(spark, sf_dir):
 
 def q_cache_fetch_or_compute(spark, sf_dir):
     """K1-K5 query surface: fetch-or-compute of per-stage chunk
-    intermediates through the tiered CacheManager (the Spark analog of
-    kv_store/kv_loading_interface.py:28-126 add_kv/fetch_kv).
+    intermediates through a keyed cache of persisted DataFrames (the
+    Spark analog of kv_store/kv_loading_interface.py:28-126
+    add_kv/fetch_kv). Keys are sha256 hex of the stage name (K5); a
+    tier maps to a StorageLevel: the executor block manager's memory is
+    the reference's "gpu/cpu" and its local disk the "cpu_pin".
 
     Two passes over the NUM_STEPS stage keys: pass 1 misses every key,
-    computes the stage lineage and persists it at the tier chosen by the
-    size-aware policy (exact token counts as the size units; running
-    total <= budget -> memory, stage fits alone -> memory_disk, else
-    disk); pass 2 hits every key and reuses the persisted lineage. The
-    returned rows carry the manager's RECORDED decisions (tier per key,
-    hit/miss counts) plus a per-stage aggregate computed THROUGH the
-    cached lineages — the oracle recomputes the same policy relationally,
-    so a wrong tier choice, a double-compute, or a dropped hit all
-    hash-mismatch.
+    computes the stage lineage and persists it at the tier the policy
+    picks (exact token counts as the size units; running total <=
+    budget -> memory, stage fits alone -> memory_disk, else disk); pass
+    2 hits every key and reuses the persisted lineage. The returned rows
+    carry the RECORDED decisions (tier per key, hit/miss counts) plus a
+    per-stage aggregate computed THROUGH the cached lineages — the
+    oracle recomputes the same policy relationally, so a wrong tier
+    choice, a double-compute, or a dropped hit all hash-mismatch.
 
     Scale: stage sizing is one tiny aggregate (NUM_STEPS rows to the
     driver — model state, like any cache directory); the cached data
     itself shards across executor block managers via persist().
     """
-    from ..plans.cache import CacheManager, TIERS
+    from pyspark.storagelevel import StorageLevel
 
+    levels = {
+        "memory": StorageLevel.MEMORY_ONLY,
+        "memory_disk": StorageLevel.MEMORY_AND_DISK,
+        "disk": StorageLevel.DISK_ONLY,
+    }
     mapped = mapstage.llm_map(_chunks(spark, sf_dir))
     sizes = {
         r["chunk_id"]: r["toks"]
@@ -924,26 +928,26 @@ def q_cache_fetch_or_compute(spark, sf_dir):
     total = sum(sizes.values())
     budget = int(CACHE_BUDGET_FRAC * total)
 
-    mgr = CacheManager()
+    cache: dict[str, DataFrame] = {}
     stats: dict[int, dict] = {}
     cum = 0
     for _pass in range(2):
         for cid in sorted(sizes):
             key = _hashlib_sha256(f"stage:{cid}")
             rec = stats.setdefault(cid, {"key8": key[:8], "hit": 0, "miss": 0})
-            if mgr.fetch(key) is None:
-                rec["miss"] += 1
-                cum += sizes[cid]
-                tier = (
-                    "memory"
-                    if cum <= budget
-                    else ("memory_disk" if sizes[cid] <= budget else "disk")
-                )
-                assert tier in TIERS
-                mgr.add(key, mapped.filter(F.col("chunk_id") == cid), tier=tier)
-                rec["tier"] = tier
-            else:
+            if key in cache:
                 rec["hit"] += 1
+                continue
+            rec["miss"] += 1
+            cum += sizes[cid]
+            tier = (
+                "memory"
+                if cum <= budget
+                else ("memory_disk" if sizes[cid] <= budget else "disk")
+            )
+            stage = mapped.filter(F.col("chunk_id") == cid)
+            cache[key] = stage.persist(levels[tier])
+            rec["tier"] = tier
 
     if not sizes:  # empty corpus: no stages were cached — empty result
         return spark.createDataFrame(
@@ -953,7 +957,7 @@ def q_cache_fetch_or_compute(spark, sf_dir):
         )
 
     # data plane: aggregate THROUGH the cached lineages
-    cached = [mgr.fetch(_hashlib_sha256(f"stage:{cid}")) for cid in sorted(sizes)]
+    cached = [cache[_hashlib_sha256(f"stage:{cid}")] for cid in sorted(sizes)]
     union = cached[0]
     for c in cached[1:]:
         union = union.unionByName(c)

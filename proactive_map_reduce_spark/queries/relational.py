@@ -42,9 +42,9 @@ def q_pricing_summary(spark, sf_dir):
             # (~25 per row) reaches that only near sf 10⁵, but the CENTS
             # sum (~3.8e6 per row) hits it around sf 1 — so avg_price is
             # the unrounded quotient of identical exact operands instead
-            round_ratio(qty, n, 6).alias("avg_qty"),
+            round_ratio(qty, n).alias("avg_qty"),
             (price_c / n / F.lit(100.0)).alias("avg_price"),
-            round_ratio(disc_c, 100 * n, 6).alias("avg_disc"),
+            round_ratio(disc_c, 100 * n).alias("avg_disc"),
             n.cast("bigint").alias("count_order"),
         )
     )
@@ -121,7 +121,7 @@ def q_window_tumbling(spark, sf_dir):
             # events measure has no schema-level magnitude cap, so a
             # single huge value in a group makes a raw double sum
             # order-dependent (adversarial-gate find).
-            decimal_sum(F.col("value"), 2).alias("sum_value"),
+            decimal_sum(F.col("value")).alias("sum_value"),
             F.count("*").cast("bigint").alias("n_events"),
         )
         .select(
@@ -164,9 +164,7 @@ def q_salted_agg(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events").withColumn(
         "value_dec", F.col("value").cast("decimal(38,6)")
     )
-    out = skew_ops.salted_agg(
-        ev, ["event_type"], "value_dec", salt_source="event_id", n_salts=N_SALTS
-    )
+    out = skew_ops.salted_agg(ev, n_salts=N_SALTS)
     return out.select(
         "event_type",
         F.round("sum_value", 2).cast("double").alias("sum_value"),
@@ -221,8 +219,7 @@ def q_bucketed_join(spark, sf_dir):
     def _build(root):
         for df, short, key in specs:
             bkt.write_bucketed(
-                df, f"pmr_{short}_b_{tag}", key, buckets=8,
-                path=_os.path.join(root, short),
+                df, f"pmr_{short}_b_{tag}", key, path=_os.path.join(root, short)
             )
 
     base = materialize_once(("bucketed", tag), "pmr_bucketed_", _build)
@@ -237,9 +234,7 @@ def q_bucketed_join(spark, sf_dir):
                 f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO 8 BUCKETS "
                 f"LOCATION '{_os.path.join(base, short)}'"
             )
-    j = bkt.co_located_join(
-        spark, f"pmr_li_b_{tag}", f"pmr_ord_b_{tag}", "l_orderkey", "o_orderkey"
-    )
+    j = bkt.co_located_join(spark, f"pmr_li_b_{tag}", f"pmr_ord_b_{tag}")
     return j.groupBy("o_orderpriority").agg(
         F.count("*").cast("bigint").alias("n_items"),
         F.sum(F.col("l_quantity").cast("bigint")).alias("sum_qty"),
@@ -254,9 +249,7 @@ def q_salted_join(spark, sf_dir):
     broadcast: lineitem ⋈ supplier on (suppkey, salt)."""
     li = load_table(spark, sf_dir, "lineitem")
     sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    j = skew_ops.salted_join(
-        li, sup, "l_suppkey", "s_suppkey", salt_source="l_orderkey", n_salts=N_SALTS
-    )
+    j = skew_ops.salted_join(li, sup, n_salts=N_SALTS)
     return j.groupBy("s_nationkey").agg(
         money_sum_2dp(
             F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -276,7 +269,7 @@ def q_rollup_multi(spark, sf_dir):
         .rollup("event_type", "day")
         .agg(
             F.count("*").cast("bigint").alias("n_events"),
-            decimal_sum(F.col("value"), 2).alias("sum_value"),
+            decimal_sum(F.col("value")).alias("sum_value"),
         )
         .select(
             "event_type",
@@ -327,7 +320,7 @@ def q_asof_join(spark, sf_dir):
     views = ev.filter(F.col("event_type") == "view").select(
         "user_id", F.col("event_id").alias("view_id"), "ts"
     )
-    j = asof_ops.asof_join(clicks, views, on="user_id")
+    j = asof_ops.asof_join(clicks, views)
     return j.select(
         "user_id",
         "click_id",
@@ -348,7 +341,7 @@ def q_range_join(spark, sf_dir):
     views = ev.filter(F.col("event_type") == "view").select(
         "user_id", F.col("event_id").alias("r_id"), "ts"
     )
-    j = range_ops.interval_join(clicks, views, on="user_id", within_us=30 * 60 * 1_000_000)
+    j = range_ops.interval_join(clicks, views, within_us=30 * 60 * 1_000_000)
     return j.select(
         "user_id",
         "l_id",
@@ -378,13 +371,8 @@ def q_sketch_stats(spark, sf_dir):
     d = _docs(spark, sf_dir)
     words = _words(spark, sf_dir).join(d.select("doc_id", "lang"), "doc_id")
     wh = words.select("lang", portable_hash64("word").alias("h")).distinct()
-    kmv = sketch_ops.kmv_distinct(
-        wh, "lang", "h", SKETCH_KMV_K, out_col="approx_distinct_words"
-    )
-    q = sketch_ops.histogram_quantiles(
-        d, "lang", "n_chars", SKETCH_BINS, probs=[0.25, 0.50, 0.75],
-        out_cols=["p25", "p50", "p75"],
-    )
+    kmv = sketch_ops.kmv_distinct(wh, SKETCH_KMV_K)
+    q = sketch_ops.histogram_quantiles(d, SKETCH_BINS)
     return kmv.join(q, "lang")
 
 
@@ -398,7 +386,7 @@ def q_session_window(spark, sf_dir):
         ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(
             F.count("*").cast("bigint").alias("n_events"),
-            decimal_sum(F.col("value"), 2).alias("sum_value"),
+            decimal_sum(F.col("value")).alias("sum_value"),
         )
         .select(
             "user_id",
@@ -419,7 +407,7 @@ def q_window_sliding(spark, sf_dir):
         ev.groupBy(win.alias("w"), "event_type")
         .agg(
             F.count("*").cast("bigint").alias("n_events"),
-            decimal_sum(F.col("value"), 2).alias("sum_value"),
+            decimal_sum(F.col("value")).alias("sum_value"),
         )
         .select(
             F.unix_timestamp(F.col("w.start")).cast("bigint").alias("win_start_s"),
@@ -458,7 +446,7 @@ def q_cube_events(spark, sf_dir):
         .cube("event_type", "dow")
         .agg(
             F.count("*").cast("bigint").alias("n_events"),
-            decimal_sum(F.col("value"), 2).alias("sum_value"),
+            decimal_sum(F.col("value")).alias("sum_value"),
         )
     )
 
@@ -543,19 +531,16 @@ def q_local_supplier_volume(spark, sf_dir):
     under CBO/AQE, dims broadcast, date filter pushes to the orders
     scan). The c_nationkey = s_nationkey predicate makes it a genuine
     multi-way join, not a star lookup."""
-    from ..sources.tables import register_views
-
-    register_views(
-        spark, sf_dir,
-        ["customer", "orders", "lineitem", "supplier", "nation", "region"],
-    )
-    from ..functions.numeric import money_sum_2dp_spark_sql
-
+    for name in ("customer", "orders", "lineitem", "supplier", "nation", "region"):
+        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
     return spark.sql(
-        f"""
+        """
         SELECT n_name,
-               -- pinned Spark-SQL form of money_sum_2dp (numeric.py)
-               {money_sum_2dp_spark_sql('l_extendedprice * (1 - l_discount)')} AS revenue
+               -- money_sum_2dp (functions/numeric.py) as Spark SQL text,
+               -- pinned by tests/test_numeric.py
+               (CAST(sum(CAST(floor((l_extendedprice * (1 - l_discount))
+                 * CAST(10000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT))
+                 AS BIGINT) + 50) DIV 100 / CAST(100.0 AS DOUBLE) AS revenue
         FROM customer, orders, lineitem, supplier, nation, region
         WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
           AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
@@ -851,7 +836,6 @@ def q_resample_ffill(spark, sf_dir):
                 )
             ),
             100 * F.count("*"),
-            6,
         ).alias("v")
     )
     joined = grid.join(hourly, ["user_id", "hour"], "left")

@@ -22,13 +22,13 @@ def q_dedup_embedding(spark, sf_dir):
 def q_similarity_topk(spark, sf_dir):
     """Brute-force cosine top-5 neighbors for the first 8 query vectors."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return sim_ops.brute_force_topk(emb, n_queries=8, k=5, dim=sim_ops.EMBED_DIM)
+    return sim_ops.brute_force_topk(emb, dim=sim_ops.EMBED_DIM)
 
 
 def q_similarity_lsh(spark, sf_dir):
     """Sign-bucket LSH approximate top-5 (scale path: bucket equi-join)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return sim_ops.lsh_topk(emb, n_queries=8, k=5, n_bits=4, dim=sim_ops.EMBED_DIM)
+    return sim_ops.lsh_topk(emb, dim=sim_ops.EMBED_DIM)
 
 
 def q_multimodal_features(spark, sf_dir):
@@ -42,7 +42,7 @@ def q_multimodal_resize(spark, sf_dir):
     """Resize stage (stub codec, real mapInPandas plumbing): scale-to-width
     with integer aspect math, audio passes through 0x0."""
     payloads = mm_ops.attach_payload(_docs(spark, sf_dir))
-    out = mm_ops.resize_media(payloads, target_w=512)
+    out = mm_ops.resize_media(payloads)
     return out.select(
         "doc_id", "media_type", "width", "height", "out_width", "out_height",
         F.length("out_payload").cast("bigint").alias("out_payload_len"),
@@ -52,7 +52,7 @@ def q_multimodal_resize(spark, sf_dir):
 def q_multimodal_frames(spark, sf_dir):
     """Frame sampling: every 30th frame id of each video payload."""
     feats = mm_ops.extract_features(mm_ops.attach_payload(_docs(spark, sf_dir)))
-    return mm_ops.sample_frames(feats, every=30).select(
+    return mm_ops.sample_frames(feats).select(
         "doc_id", F.col("n_frames"), F.col("frame_id").cast("bigint").alias("frame_id")
     )
 

@@ -18,29 +18,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str,
-    buckets: int = 32,
-    path: str | None = None,
-) -> None:
-    """Persist `df` as a bucketed (and bucket-sorted) catalog table.
+def write_bucketed(df: DataFrame, table: str, key: str, path: str | None = None) -> None:
+    """Persist `df` as a catalog table in 8 buckets on `key`, each sorted
+    on `key`.
 
     ``path`` makes it an EXTERNAL table at that location — callers that
     run outside a configured warehouse (the query registry) point the
     data at a scratch dir instead of littering ./spark-warehouse."""
     df.sparkSession.sql(f"DROP TABLE IF EXISTS {table}")
-    w = df.write.bucketBy(buckets, key).sortBy(key)
+    w = df.write.bucketBy(8, key).sortBy(key)
     if path is not None:
         w = w.option("path", path)
     w.mode("overwrite").saveAsTable(table)
 
 
-def co_located_join(
-    spark: SparkSession, left_table: str, right_table: str, left_key: str, right_key: str
-) -> DataFrame:
-    """Join two same-bucket-count tables on their bucket keys — planner
-    sees matching output partitionings and emits NO exchange."""
+def co_located_join(spark: SparkSession, left_table: str, right_table: str) -> DataFrame:
+    """Join a lineitem and an orders table bucketed alike on their bucket
+    keys (``l_orderkey = o_orderkey``) — the planner sees matching output
+    partitionings and emits NO exchange."""
     lt, rt = spark.table(left_table), spark.table(right_table)
-    return lt.join(rt, lt[left_key] == rt[right_key])
+    return lt.join(rt, lt["l_orderkey"] == rt["o_orderkey"])

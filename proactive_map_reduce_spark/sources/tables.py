@@ -105,12 +105,6 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:
-    """Register each fixture table as a temp view for spark.sql() use."""
-    for name in names or TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def duck_tune(con) -> None:
     """Bound DuckDB's buffer pool when it co-tenants with a Spark JVM.
 

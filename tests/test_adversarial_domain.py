@@ -35,9 +35,9 @@ def test_decimal_sum_matches_duckdb_on_mixed_magnitudes(spark):
     1e12 element absorbs low bits); the decimal sum must land both
     engines on the IDENTICAL double, including the half-up tie rows."""
     df = spark.createDataFrame([(v,) for v in MIXED], "v double")
-    got = df.agg(decimal_sum(F.col("v"), 2).alias("s")).collect()[0].s
+    got = df.agg(decimal_sum(F.col("v")).alias("s")).collect()[0].s
     want = duckdb.sql(
-        "SELECT " + decimal_sum_sql("v", 2) + " FROM (VALUES "
+        "SELECT " + decimal_sum_sql("v") + " FROM (VALUES "
         + ",".join(f"({v!r})" for v in MIXED) + ") t(v)"
     ).fetchone()[0]
     assert got == want  # exact double equality, not approx
@@ -48,12 +48,12 @@ def test_decimal_sum_half_up_ties_cross_engine(spark):
     # tie that both engines must break half-up (float round() would see
     # 1.00499999… and never reach the boundary)
     df = spark.createDataFrame([(1.005,), (-1.005,)], "v double")
-    rows = df.groupBy("v").agg(decimal_sum(F.col("v"), 2).alias("s")).collect()
+    rows = df.groupBy("v").agg(decimal_sum(F.col("v")).alias("s")).collect()
     got = {r.v: r.s for r in rows}
     assert got[1.005] == 1.01 and got[-1.005] == -1.01
     duck = dict(
         duckdb.sql(
-            "SELECT v, " + decimal_sum_sql("v", 2)
+            "SELECT v, " + decimal_sum_sql("v")
             + " FROM (VALUES (1.005::DOUBLE), (-1.005::DOUBLE)) t(v) GROUP BY v"
         ).fetchall()
     )
@@ -66,9 +66,9 @@ def test_decimal_sum_display_bound_case(spark):
     integer exceeds 2^53 and DuckDB's conversion double-rounds)."""
     vals = [1.0e12] * 4 + [2184.93]
     df = spark.createDataFrame([(v,) for v in vals], "v double")
-    got = df.agg(decimal_sum(F.col("v"), 2).alias("s")).collect()[0].s
+    got = df.agg(decimal_sum(F.col("v")).alias("s")).collect()[0].s
     want = duckdb.sql(
-        "SELECT " + decimal_sum_sql("v", 2) + " FROM (VALUES "
+        "SELECT " + decimal_sum_sql("v") + " FROM (VALUES "
         + ",".join(f"({v!r})" for v in vals) + ") t(v)"
     ).fetchone()[0]
     assert got == want == 4000000002184.93
@@ -190,7 +190,7 @@ def test_running_metric_decimal_prefix_exact(spark):
     df = spark.createDataFrame(rows, "user_id bigint, event_id bigint, value double")
     out = {
         r.event_id: r.running_sum
-        for r in running_metric(df, "user_id", "event_id", "value").collect()
+        for r in running_metric(df).collect()
     }
     assert out[2] == 1000000000000.01 and out[3] == 1000000000000.03
 

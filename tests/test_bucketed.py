@@ -27,10 +27,10 @@ def test_bucketed_join_has_no_exchange_and_matches_plain_join(no_broadcast):
     spark = no_broadcast
     li = spark.read.parquet(f"{SF0001}/lineitem.parquet")
     orders = spark.read.parquet(f"{SF0001}/orders.parquet")
-    bucketed.write_bucketed(li, "li_b", "l_orderkey", buckets=4)
-    bucketed.write_bucketed(orders, "ord_b", "o_orderkey", buckets=4)
+    bucketed.write_bucketed(li, "li_b", "l_orderkey")
+    bucketed.write_bucketed(orders, "ord_b", "o_orderkey")
     try:
-        j = bucketed.co_located_join(spark, "li_b", "ord_b", "l_orderkey", "o_orderkey")
+        j = bucketed.co_located_join(spark, "li_b", "ord_b")
         assert audit.count_exchanges(j) == 0          # co-located: no shuffle
         plain = li.join(orders, li.l_orderkey == orders.o_orderkey)
         assert audit.count_exchanges(plain) >= 1      # unbucketed: shuffles

@@ -258,13 +258,11 @@ def test_topk_importance_matches_reference_selection(spark):
     for scores, ratio, last_len in cases:
         df = spark.createDataFrame(
             [(1, i, float(s)) for i, s in enumerate(scores)],
-            "g int, pos int, score double",
+            "user_id int, pos int, value double",
         )
         got = {
             (r["selected"], r["pos"])
-            for r in topk_ops.topk_importance(
-                df, "g", "pos", "score", ratio, last_len
-            ).collect()
+            for r in topk_ops.topk_importance(df, ratio, last_len).collect()
         }
         assert got == reference_select(scores, ratio, last_len), (scores, got)
 

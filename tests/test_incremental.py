@@ -46,7 +46,7 @@ def test_incremental_equals_full_recompute(spark):
     }
     want = _full(base.unionByName(delta1).unionByName(delta2))
     assert got == want
-    inc.release()
+    inc.result().unpersist()
 
 
 def test_incremental_untouched_partitions_stable(spark):
@@ -62,7 +62,7 @@ def test_incremental_untouched_partitions_stable(spark):
     for s in before:
         if s != 0:
             assert after[s] == before[s]
-    inc.release()
+    inc.result().unpersist()
 
 
 def _executed_metrics(df):
@@ -160,7 +160,7 @@ def test_delta_path_does_strictly_less_work_than_recompute(spark, tmp_path):
 
         got = {r["section"]: r["total"] for r in inc.result().collect()}
         assert got == full_rows         # ...and the answer is identical
-        inc.release()
+        inc.result().unpersist()
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
 
@@ -184,7 +184,7 @@ def test_incremental_preserves_int64_exactness(spark):
         r["section"]: (r["total"], r["lo"], r["hi"])
         for r in inc.result().collect()
     }
-    inc.release()
+    inc.result().unpersist()
     assert got == {0: (2 * big + 1, 1, big), 1: (big + 2, 2, big)}
     # and the values came back as Python ints (bigint schema), not floats
     assert all(isinstance(v, int) for t in got.values() for v in t)

@@ -1,18 +1,23 @@
-"""Every library def and every defaulted library parameter has an engine
-caller.
+"""Every library def and public method has an engine caller, and every
+library parameter takes more than one value in engine code.
 
 Each operator keeps one implementation, the library holds no code that
-only tests or tools call, and a value only one caller uses is a constant,
-not an option. These scans parse the engine code — the package,
-``__spark_entry__.py``, ``bench.py``, ``perfbench/`` and ``examples/`` —
-with ``ast`` and check the top-level defs of the library modules below:
+only tests or tools call, and a value the engine never varies is a
+constant, not an option. These scans parse the engine code — the
+package, ``__spark_entry__.py``, ``bench.py``, ``perfbench/`` and
+``examples/`` — with ``ast`` and check the top-level defs of the library
+modules below:
 
-- a def or class fails when its name is never referenced (a ``Name`` or
-  ``Attribute`` node, f-string expressions included) outside its own
-  definition. Imports, comments and strings do not count as callers;
-- a defaulted parameter of a top-level function fails when no engine
-  call of that function (by name or attribute) passes it by keyword or
-  by position, or passes ``*args`` / ``**kwargs``.
+- a def, class or public method of a class fails when its name is never
+  referenced (a ``Name`` or ``Attribute`` node, f-string expressions
+  included) outside its own definition. A method that shares its name
+  with another engine method (``add``, ``clear``) counts as called.
+  Imports, comments and strings do not count as callers;
+- a parameter of a top-level function fails when every engine call of
+  that function (by name or attribute) passes it the same literal,
+  counting a left-out argument as its default, or when no engine call
+  passes a defaulted parameter at all. A call that passes ``*args`` /
+  ``**kwargs`` or a non-literal expression varies the parameter.
 
 Pure Python: no Spark session.
 """
@@ -36,18 +41,19 @@ LIBRARY = [
 ENGINE = ["proactive_map_reduce_spark", "perfbench", "examples", "__spark_entry__.py", "bench.py"]
 
 #: Helpers that tests use as a reference, not the engine. A whole-module
-#: entry is a path; a single def is "path::name".
+#: entry is a path; a single def is "path::name", a method
+#: "path::Class.name".
 ALLOWED = {
     "plans/audit.py": "physical-plan assertions the plan and shuffle-budget tests run over queries",
     "functions/numeric.py::decimal_sum_sql": "DuckDB mirror of the exact decimal sum, checked against Spark by tests",
     "functions/scoring.py::rouge_l": "pure-Python ROUGE-L the property tests check lcs_udf and q_rouge against",
-    "plans/cache.py::cache_key": "K5 cache key; tests pin its injectivity and the tiered cache keys on it",
 }
 
 _DEPLOYMENT_PATH = "deployment path: where a stream's files live stays configurable"
 _SEAM = "black-box seam: the model or codec a deployment plugs in"
+_FOLD_SEED = "a property test seeds the private fold with another fold's final state"
 
-#: Defaulted parameters no engine caller sets, as "path::func(param)".
+#: Parameters every engine call passes one value, as "path::func(param)".
 ALLOWED_PARAMS = {
     "streaming/proactive.py::write_stage_files(root)": _DEPLOYMENT_PATH,
     "streaming/proactive.py::stage_pipeline(out_dir)": _DEPLOYMENT_PATH,
@@ -59,9 +65,9 @@ ALLOWED_PARAMS = {
     "streaming/proactive.py::refeed_chain(model_fn)": _SEAM,
     "operators/multimodal.py::extract_features(codec)": _SEAM,
     "operators/multimodal.py::resize_media(codec)": _SEAM,
-    "functions/numeric.py::decimal_sum_sql(dp)": "DuckDB mirror of decimal_sum's dp, which engine code sets",
-    "plans/cache.py::cache_key(layer)": "K5 cache key input; tests pin the key's injectivity over it",
     "streaming/proactive.py::_refeed_fold(finish)": "a property test seeds the private fold with a non-empty finish",
+    "streaming/proactive.py::_refeed_fold(chain0)": _FOLD_SEED,
+    "streaming/proactive.py::_refeed_fold(acc0)": _FOLD_SEED,
 }
 
 
@@ -130,38 +136,72 @@ def _uncalled() -> list[str]:
         refs[name].append((path, node))
     out, allowed_seen = [], set()
     for rel, d, path in _library_defs():
-        for key in (rel, f"{rel}::{d.name}"):
-            if key in ALLOWED:
-                allowed_seen.add(key)
-                break
-        else:
-            if not any(not _inside(n, f, d, path) for f, n in refs.get(d.name, [])):
-                out.append(f"{rel}::{d.name}")
+        named = [(d.name, d)]
+        if isinstance(d, ast.ClassDef):
+            named += [
+                (f"{d.name}.{m.name}", m)
+                for m in d.body
+                if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef))
+                and not m.name.startswith("_")
+            ]
+        for qual, node in named:
+            for key in (rel, f"{rel}::{qual}"):
+                if key in ALLOWED:
+                    allowed_seen.add(key)
+                    break
+            else:
+                if not any(not _inside(n, f, node, path) for f, n in refs.get(node.name, [])):
+                    out.append(f"{rel}::{qual}")
     # a stale allowlist entry (renamed or deleted def) is a failure too
     out += [f"stale ALLOWED entry {k}" for k in ALLOWED if k not in allowed_seen]
     return out
 
 
-def _defaulted_params(fn: ast.FunctionDef):
-    """(name, positional index or None) per parameter with a default."""
+def _params(fn: ast.FunctionDef):
+    """(name, positional index or None, default node or None) per
+    parameter."""
     a = fn.args
     pos = a.posonlyargs + a.args
-    for i in range(len(pos) - len(a.defaults), len(pos)):
-        yield pos[i].arg, i
+    defaults = [None] * (len(pos) - len(a.defaults)) + a.defaults
+    for i, (arg, default) in enumerate(zip(pos, defaults)):
+        yield arg.arg, i, default
     for arg, default in zip(a.kwonlyargs, a.kw_defaults):
-        if default is not None:
-            yield arg.arg, None
+        yield arg.arg, None, default
 
 
-def _sets(call: ast.Call, param: str, index: int | None) -> bool:
-    if any(k.arg is None or k.arg == param for k in call.keywords):
-        return True
-    if any(isinstance(a, ast.Starred) for a in call.args):
-        return True
-    return index is not None and len(call.args) > index
+def _passed(call: ast.Call, param: str, index: int | None, default):
+    """What ``call`` passes for the parameter: the argument node, the
+    default node when it leaves the parameter out, or None when it
+    cannot tell (``*args`` / ``**kwargs``)."""
+    for k in call.keywords:
+        if k.arg == param:
+            return k.value
+    if any(k.arg is None for k in call.keywords) or any(
+        isinstance(a, ast.Starred) for a in call.args
+    ):
+        return None
+    if index is not None and len(call.args) > index:
+        return call.args[index]
+    return default
 
 
-def _unset_params() -> list[str]:
+def _value(node, default):
+    """A hashable stand-in for a passed value: the literal itself, one
+    token for a non-literal default, and a token no other call shares
+    for anything else."""
+    if node is None:
+        return object()
+    try:
+        v = ast.literal_eval(node)
+        return ("literal", type(v).__name__, repr(v))
+    except ValueError:
+        return ("default",) if node is default else object()
+
+
+def _single_value_params() -> list[str]:
+    """Library parameters that every engine call passes one value: the
+    same literal, or the default by leaving the parameter out. A
+    defaulted parameter of a def no engine code calls counts too."""
     calls: dict[str, list] = defaultdict(list)
     for path, _, name, call in _engine_refs():
         if call is not None:
@@ -170,31 +210,36 @@ def _unset_params() -> list[str]:
     for rel, d, path in _library_defs():
         if isinstance(d, ast.ClassDef):
             continue
-        for param, index in _defaulted_params(d):
-            key = f"{rel}::{d.name}({param})"
-            if any(
-                _sets(c, param, index) and not _inside(c, f, d, path)
-                for f, c in calls.get(d.name, [])
-            ):
+        mine = [c for f, c in calls.get(d.name, []) if not _inside(c, f, d, path)]
+        for param, index, default in _params(d):
+            passed = [_passed(c, param, index, default) for c in mine]
+            if not passed:
+                passed = [default] if default is not None else []
+            values = {_value(n, default) for n in passed}
+            if len(values) != 1 or not isinstance(next(iter(values)), tuple):
                 continue
+            key = f"{rel}::{d.name}({param})"
             if key in ALLOWED_PARAMS:
                 allowed_seen.add(key)
             else:
-                out.append(key)
-    # an entry whose parameter is gone, or that engine code now sets
+                out.append(f"{key} = {ast.unparse(passed[0])}")
+    # an entry whose parameter is gone, or that engine code now varies
     out += [f"stale ALLOWED_PARAMS entry {k}" for k in ALLOWED_PARAMS if k not in allowed_seen]
     return out
 
 
 def test_every_library_def_has_an_engine_caller():
     assert _uncalled() == [], (
-        "library defs with no caller in engine code: delete them, or "
-        "add a reasoned ALLOWED entry if tests use them as a reference"
+        "library defs and public methods with no caller in engine code: "
+        "delete them, or add a reasoned ALLOWED entry if tests use them "
+        "as a reference"
     )
 
 
 def test_every_library_parameter_is_set_by_an_engine_caller():
-    assert _unset_params() == [], (
-        "defaulted library parameters no engine caller sets: inline the "
-        "default, or add a reasoned ALLOWED_PARAMS entry"
+    flagged = _single_value_params()
+    assert flagged == [], (
+        "library parameters every engine call passes one value (shown "
+        "after '='): inline it as a constant, or add a reasoned "
+        "ALLOWED_PARAMS entry:\n  " + "\n  ".join(flagged)
     )

@@ -60,8 +60,8 @@ def _exact_round(num: int, den: int, scale: int) -> float:
 def test_round_ratio_matches_duck_and_decimal_random(spark, num, den):
     from pyspark.sql import functions as F
 
-    got_spark = _spark_eval(spark, round_ratio(F.lit(num), F.lit(den), 6))
-    got_duck = _duck_eval(round_ratio_sql(str(num), str(den), 6))
+    got_spark = _spark_eval(spark, round_ratio(F.lit(num), F.lit(den)))
+    got_duck = _duck_eval(round_ratio_sql(str(num), str(den)))
     assert got_spark == got_duck  # bit-identical cross-engine, full domain
     # exact-decimal display additionally needs the scaled quotient to be
     # double-exact (num/den ≲ 9e9 at scale 6); above that the value is a
@@ -79,8 +79,8 @@ def test_round_ratio_on_exact_half_boundaries(spark, den):
 
     for k in (1, 3, den // 2 * 10 + 5):  # odd numerators → exact halves
         num = k  # k/den terminates at 7 decimals for odd k
-        got_spark = _spark_eval(spark, round_ratio(F.lit(num), F.lit(den), 6))
-        got_duck = _duck_eval(round_ratio_sql(str(num), str(den), 6))
+        got_spark = _spark_eval(spark, round_ratio(F.lit(num), F.lit(den)))
+        got_duck = _duck_eval(round_ratio_sql(str(num), str(den)))
         exact = _exact_round(num, den, 6)
         assert got_spark == got_duck == exact
 
@@ -90,9 +90,9 @@ def test_round_ratio_known_regression(spark):
     where Spark's float round said .429438 and DuckDB's said .429437."""
     from pyspark.sql import functions as F
 
-    got = _spark_eval(spark, round_ratio(F.lit(27484), F.lit(64000), 6))
+    got = _spark_eval(spark, round_ratio(F.lit(27484), F.lit(64000)))
     assert got == 0.429438
-    assert _duck_eval(round_ratio_sql("27484", "64000", 6)) == 0.429438
+    assert _duck_eval(round_ratio_sql("27484", "64000")) == 0.429438
 
 
 @settings(max_examples=40, deadline=None)
@@ -103,8 +103,8 @@ def test_rescale_units_matches_duck_and_decimal(spark, units):
     drifted off the SQL mirror above ~2^55 units)."""
     from pyspark.sql import functions as F
 
-    got_spark = _spark_eval(spark, rescale_units(F.lit(units), 4, 2))
-    got_duck = _duck_eval(rescale_units_sql(str(units), 4, 2))
+    got_spark = _spark_eval(spark, rescale_units(F.lit(units)))
+    got_duck = _duck_eval(rescale_units_sql(str(units)))
     assert got_spark == got_duck  # bit-identical cross-engine
     # semantic truth holds wherever cents/100 is still double-exact
     # enough to compare via Decimal; above 2^53 cents both engines make
@@ -125,8 +125,8 @@ def test_rescale_units_above_2pow55_regression(spark):
     from pyspark.sql import functions as F
 
     units = 40_000_000_000_000_123
-    got_spark = _spark_eval(spark, rescale_units(F.lit(units), 4, 2))
-    got_duck = _duck_eval(rescale_units_sql(str(units), 4, 2))
+    got_spark = _spark_eval(spark, rescale_units(F.lit(units)))
+    got_duck = _duck_eval(rescale_units_sql(str(units)))
     assert got_spark == got_duck == 4000000000000.01
 
 
@@ -225,15 +225,15 @@ def test_negative_numerators_agree_cross_engine_but_are_out_of_domain(spark):
     from pyspark.sql import functions as F
 
     for num, den in ((-7, 2_000_000), (-1, 2_000_000), (-27484, 64000)):
-        s = _spark_eval(spark, round_ratio(F.lit(num), F.lit(den), 6))
-        d = _duck_eval(round_ratio_sql(str(num), str(den), 6))
+        s = _spark_eval(spark, round_ratio(F.lit(num), F.lit(den)))
+        d = _duck_eval(round_ratio_sql(str(num), str(den)))
         assert s == d  # engines agree even out of domain
     # -1/2 units at to-scale: half-up would give -0.01 (away) or 0.0
     # (toward +inf); truncation gives 0.0 — whichever convention one
     # wanted, the point is the code does NOT implement decimal half-up
     # for negatives, hence the domain exclusion.
-    s = _spark_eval(spark, rescale_units(F.lit(-50), 4, 2))
-    d = _duck_eval(rescale_units_sql("-50", 4, 2))
+    s = _spark_eval(spark, rescale_units(F.lit(-50)))
+    d = _duck_eval(rescale_units_sql("-50"))
     assert s == d == 0.0
 
 
@@ -267,7 +267,7 @@ def test_zero_denominator_guard_on_timing_arith_shape(spark):
             F.when(
                 F.col("n_chars") > 0,
                 round_ratio(
-                    100 * F.size(F.split("text", " ")), F.col("n_chars"), 6
+                    100 * F.size(F.split("text", " ")), F.col("n_chars")
                 ),
             ).alias("s"),
         ).collect()

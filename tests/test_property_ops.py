@@ -47,7 +47,7 @@ _rows = st.lists(
 
 _EV_SCHEMA = StructType(
     [
-        StructField("k", IntegerType(), False),
+        StructField("user_id", IntegerType(), False),
         StructField("ts", LongType(), False),
         StructField("v", LongType(), False),
     ]
@@ -63,9 +63,9 @@ def test_asof_join_matches_bruteforce(spark, left, right):
     ldf = spark.createDataFrame([(k, t, v) for k, t, v in left], _EV_SCHEMA)
     rdf = spark.createDataFrame([(k, t, v) for k, t, v in right], _EV_SCHEMA)
     got = sorted(
-        (r["k"], r["ts"], r["v"], r["r_v"])
-        for r in asof_join(ldf, rdf, on="k")
-        .select("k", "ts", "v", "r_v")
+        (r["user_id"], r["ts"], r["v"], r["r_v"])
+        for r in asof_join(ldf, rdf)
+        .select("user_id", "ts", "v", "r_v")
         .collect()
     )
     exp = []
@@ -86,16 +86,16 @@ def test_interval_join_matches_bruteforce(spark, left, right, w):
     rdf = spark.createDataFrame(
         [(k, t, v) for k, t, v in right], _EV_SCHEMA
     ).withColumn("ts", F.timestamp_micros(F.col("ts")))
-    out = interval_join(ldf, rdf, on="k", within_us=w)
+    out = interval_join(ldf, rdf, within_us=w)
     got = sorted(
         (
-            r["k"],
+            r["user_id"],
             r["ts"].timestamp() * 1_000_000,
             r["v"],
             r["r_ts"].timestamp() * 1_000_000,
             r["r_v"],
         )
-        for r in out.select("k", "ts", "v", "r_ts", "r_v").collect()
+        for r in out.select("user_id", "ts", "v", "r_ts", "r_v").collect()
     )
     got = sorted((k, round(lt), lv, round(rt), rv) for k, lt, lv, rt, rv in got)
     exp = sorted(
@@ -132,11 +132,9 @@ def test_topk_importance_matches_bruteforce(spark, groups, ratio, last_len):
         for g, scores in groups.items()
         for pos, s in enumerate(scores)
     ]
-    df = spark.createDataFrame(rows, ["g", "pos", "score"])
-    out = topk_ops.topk_importance(
-        df, "g", "pos", "score", ratio=ratio, last_len=last_len
-    )
-    got = sorted((r["g"], r["pos"], r["selected"]) for r in out.collect())
+    df = spark.createDataFrame(rows, ["user_id", "pos", "value"])
+    out = topk_ops.topk_importance(df, ratio=ratio, last_len=last_len)
+    got = sorted((r["user_id"], r["pos"], r["selected"]) for r in out.collect())
 
     exp = []
     for g, scores in groups.items():
@@ -157,7 +155,7 @@ def test_asof_join_all_left_before_right(spark):
     """Every left row precedes every right row → all matches null."""
     ldf = spark.createDataFrame([(1, 1, 10), (1, 2, 20)], _EV_SCHEMA)
     rdf = spark.createDataFrame([(1, 5, 99)], _EV_SCHEMA)
-    rows = asof_join(ldf, rdf, on="k").select("r_v").collect()
+    rows = asof_join(ldf, rdf).select("r_v").collect()
     assert [r["r_v"] for r in rows] == [None, None]
 
 
@@ -167,7 +165,7 @@ def test_interval_join_exact_boundary_inclusive(spark):
     mk = lambda rows: spark.createDataFrame(rows, _EV_SCHEMA).withColumn(
         "ts", F.timestamp_micros(F.col("ts"))
     )
-    out = interval_join(mk([(1, 10, 1)]), mk([(1, 3, 2), (1, 17, 3)]), "k", 7)
+    out = interval_join(mk([(1, 10, 1)]), mk([(1, 3, 2), (1, 17, 3)]), 7)
     assert sorted(r["r_v"] for r in out.collect()) == [2, 3]
 
 
@@ -190,12 +188,12 @@ def test_kmv_exact_branch_and_partition_independence(spark, rows, k):
 
     if not rows:
         return
-    df = spark.createDataFrame(rows, ["g", "h"]).dropDuplicates(["g", "h"])
+    df = spark.createDataFrame(rows, ["lang", "h"]).dropDuplicates(["lang", "h"])
     got = {}
     for parts in (1, 7):
         got[parts] = {
-            r["g"]: r["approx_distinct"]
-            for r in sk.kmv_distinct(df.repartition(parts), "g", "h", k=k).collect()
+            r["lang"]: r["approx_distinct_words"]
+            for r in sk.kmv_distinct(df.repartition(parts), k=k).collect()
         }
     assert got[1] == got[7]
     from collections import defaultdict
@@ -220,8 +218,8 @@ def test_histogram_quantiles_bracket_and_convention(spark, rows, bins):
     pure Python over the same equi-width integer bins."""
     from proactive_map_reduce_spark.operators import sketch as sk
 
-    df = spark.createDataFrame([(1, v) for v in rows], ["g", "v"])
-    out = sk.histogram_quantiles(df, "g", "v", bins=bins).collect()[0]
+    df = spark.createDataFrame([(1, v) for v in rows], ["lang", "n_chars"])
+    out = sk.histogram_quantiles(df, bins=bins).collect()[0]
 
     lo, hi, n = min(rows), max(rows), len(rows)
     width = hi - lo + 1

@@ -184,14 +184,16 @@ def test_pair_scores_matches_inline_metrics(spark):
         (8, "a a a b", "b a"),                           # duplicates
         (9, "a the an", ""),                             # articles-only pred
     ]
-    df = spark.createDataFrame(rows, "doc_id long, pred string, gold string")
+    df = spark.createDataFrame(rows, "doc_id long, final_text string, gt_text string")
     inline = df.select(
         "doc_id",
-        set_f1(norm_tokens("pred"), norm_tokens("gold")).alias("set_f1"),
-        exact_match(F.col("pred"), F.col("gold")).alias("em"),
-        subset_accuracy(norm_tokens("pred"), norm_tokens("gold")).alias("subset_acc"),
+        set_f1(norm_tokens("final_text"), norm_tokens("gt_text")).alias("set_f1"),
+        exact_match(F.col("final_text"), F.col("gt_text")).alias("em"),
+        subset_accuracy(norm_tokens("final_text"), norm_tokens("gt_text")).alias(
+            "subset_acc"
+        ),
     )
-    fused = pair_scores(df, "pred", "gold").select(
+    fused = pair_scores(df).select(
         "doc_id", "set_f1", "em", "subset_acc"
     )
     a = {tuple(r) for r in inline.collect()}

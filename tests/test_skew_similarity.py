@@ -16,26 +16,31 @@ from tests.conftest import SF0001
 def test_salted_agg_equals_plain_groupby(spark):
     df = spark.createDataFrame(
         [(i, "hot" if i % 10 else "cold", float(i)) for i in range(1000)],
-        "id long, k string, v double",
+        "event_id long, event_type string, value_dec double",
     )
     got = {
-        r["k"]: (round(r["sum_value"], 6), r["n_rows"])
-        for r in skew.salted_agg(df, ["k"], "v", salt_source="id", n_salts=4).collect()
+        r["event_type"]: (round(r["sum_value"], 6), r["n_rows"])
+        for r in skew.salted_agg(df, n_salts=4).collect()
     }
     want = {
-        r["k"]: (round(r["s"], 6), r["c"])
-        for r in df.groupBy("k").agg(F.sum("v").alias("s"), F.count("*").alias("c")).collect()
+        r["event_type"]: (round(r["s"], 6), r["c"])
+        for r in df.groupBy("event_type")
+        .agg(F.sum("value_dec").alias("s"), F.count("*").alias("c"))
+        .collect()
     }
     assert got == want
 
 
 def test_salted_join_equals_plain_join(spark):
     fact = spark.createDataFrame(
-        [(i, i % 5, float(i)) for i in range(500)], "id long, fk int, v double"
+        [(i, i % 5, float(i)) for i in range(500)],
+        "l_orderkey long, l_suppkey int, v double",
     )
-    dim = spark.createDataFrame([(i, f"d{i}") for i in range(5)], "dk int, name string")
-    salted = skew.salted_join(fact, dim, "fk", "dk", salt_source="id", n_salts=4)
-    plain = fact.join(dim, fact.fk == dim.dk)
+    dim = spark.createDataFrame(
+        [(i, f"d{i}") for i in range(5)], "s_suppkey int, name string"
+    )
+    salted = skew.salted_join(fact, dim, n_salts=4)
+    plain = fact.join(dim, fact.l_suppkey == dim.s_suppkey)
     assert salted.count() == plain.count() == 500
     g = {
         r["name"]: round(r["s"], 6)
@@ -77,15 +82,13 @@ def test_asof_join_semantics(spark):
     from proactive_map_reduce_spark.operators.asof import asof_join
 
     left = spark.createDataFrame(
-        [(1, 10, 100), (1, 20, 200), (2, 5, 300)], "k int, ts int, lv int"
+        [(1, 10, 100), (1, 20, 200), (2, 5, 300)], "user_id int, ts int, lv int"
     )
     right = spark.createDataFrame(
-        [(1, 10, "a"), (1, 15, "b"), (1, 25, "c"), (3, 1, "z")], "k int, ts int, rv string"
+        [(1, 10, "a"), (1, 15, "b"), (1, 25, "c"), (3, 1, "z")],
+        "user_id int, ts int, rv string",
     )
-    out = {
-        r["lv"]: r["r_rv"]
-        for r in asof_join(left, right, on="k").collect()
-    }
+    out = {r["lv"]: r["r_rv"] for r in asof_join(left, right).collect()}
     assert out[100] == "a"   # equality counts (<=)
     assert out[200] == "b"   # latest at-or-before 20
     assert out[300] is None  # no right row for key 2
@@ -187,7 +190,7 @@ def test_brute_force_topk_null_query_component_names_vec_id(spark):
         "vec_id long, embedding array<double>",
     )
     with pytest.raises(ValueError, match=r"vec_id=1\b"):
-        sim.brute_force_topk(emb, n_queries=2, k=1, dim=dim)
+        sim.brute_force_topk(emb, dim=dim)
 
 
 def test_kmv_distinct_operator_branches(spark):
@@ -198,11 +201,11 @@ def test_kmv_distinct_operator_branches(spark):
 
     rows = [("small", f"s{i}") for i in range(10)]
     rows += [("big", f"b{i}") for i in range(5000)]
-    df = spark.createDataFrame(rows, "g string, v string").repartition(8)
-    hashed = df.select("g", portable_hash64("v").alias("h")).distinct()
+    df = spark.createDataFrame(rows, "lang string, v string").repartition(8)
+    hashed = df.select("lang", portable_hash64("v").alias("h")).distinct()
     got = {
-        r["g"]: r["approx_distinct"]
-        for r in sk.kmv_distinct(hashed, "g", "h", k=64).collect()
+        r["lang"]: r["approx_distinct_words"]
+        for r in sk.kmv_distinct(hashed, k=64).collect()
     }
     assert got["small"] == 10  # exact branch
     assert abs(got["big"] - 5000) / 5000 < 0.25  # estimate branch
@@ -214,9 +217,9 @@ def test_histogram_quantiles_operator(spark):
     from proactive_map_reduce_spark.operators import sketch as sk
 
     df = spark.createDataFrame(
-        [("g", i) for i in range(1000)], "g string, v long"
+        [("g", i) for i in range(1000)], "lang string, n_chars long"
     ).repartition(4)
-    out = sk.histogram_quantiles(df, "g", "v", bins=64).collect()[0]
+    out = sk.histogram_quantiles(df, bins=64).collect()[0]
     binw = 1000 / 64 + 1  # lower-bound semantics: up to one (integer) bin below
     assert abs(out["p25"] - 250) <= binw
     assert abs(out["p50"] - 500) <= binw
@@ -227,12 +230,12 @@ def test_topk_empty_corpus_returns_typed_empty(spark):
     """Both top-k paths must return a well-formed empty result (not crash)
     on an empty or fully-filtered embedding input."""
     empty = spark.createDataFrame([], "vec_id bigint, embedding array<float>")
-    bf = sim.brute_force_topk(empty, n_queries=4, k=3, dim=4)
+    bf = sim.brute_force_topk(empty, dim=4)
     assert bf.count() == 0
     assert [f.name for f in bf.schema.fields] == [
         "query_id", "neighbor_id", "cos_sim", "rank"
     ]
-    lsh = sim.lsh_topk(empty, n_queries=4, k=3, dim=4)
+    lsh = sim.lsh_topk(empty, dim=4)
     assert lsh.count() == 0
     assert [f.name for f in lsh.schema.fields] == [
         "query_id", "neighbor_id", "cos_sim", "rank"
@@ -240,18 +243,18 @@ def test_topk_empty_corpus_returns_typed_empty(spark):
 
 
 def test_salted_join_keeps_null_salt_source_rows(spark):
-    """A NULL salt_source column must not drop fact rows: the salted join
-    claims equivalence to the plain inner join (crc32(NULL) is NULL; a
-    NULL salt fails the equi-condition silently)."""
+    """A NULL salt source (``l_orderkey``) must not drop fact rows: the
+    salted join claims equivalence to the plain inner join (crc32(NULL)
+    is NULL; a NULL salt fails the equi-condition silently)."""
     from proactive_map_reduce_spark.operators import skew
 
     fact = spark.createDataFrame(
         [(1, None, 10.0), (1, 5, 20.0), (2, 7, 30.0)],
-        "k long, src int, v double",
+        "l_suppkey long, l_orderkey int, v double",
     )
-    dim = spark.createDataFrame([(1, "a"), (2, "b")], "dk long, name string")
-    got = skew.salted_join(fact, dim, "k", "dk", salt_source="src").collect()
-    plain = fact.join(dim, fact["k"] == dim["dk"]).collect()
+    dim = spark.createDataFrame([(1, "a"), (2, "b")], "s_suppkey long, name string")
+    got = skew.salted_join(fact, dim).collect()
+    plain = fact.join(dim, fact["l_suppkey"] == dim["s_suppkey"]).collect()
     assert len(got) == len(plain) == 3
 
 
