@@ -41,6 +41,13 @@ from .. import zipcache
 # no lookbehind) computes byte-identical results.
 _SENT_MARK = ""
 
+NUM_STEPS = 4       # C1 equal-partition chunk count
+CHUNK_LEN = 20      # C2 fixed rechunk length (words)
+TAIL_FRAC = 0.3     # C2 tail-merge threshold
+DROP_BUDGET = 60    # P5 middle-drop token budget
+# C4 reference parameterization (test_proactive.py:141-147): target mean
+# ratio + low bound; the increment is derived (``derived_increment``).
+RATIO_TLOW, RATIO_TARGET = 0.1, 0.45
 
 
 def gen_barrier(arr: Column, elem_type: str) -> Column:
@@ -113,13 +120,14 @@ def split_words(df: DataFrame) -> DataFrame:
     )
 
 
-def equal_partition_chunk_id(pos: Column, n: Column, num_steps: int) -> Column:
+def equal_partition_chunk_id(pos: Column, n: Column) -> Column:
     """C1 closed form: chunk of item `pos` out of `n`, last takes remainder.
 
-    partition_size = n // num_steps; ps == 0 → everything lands in the last
+    partition_size = n // NUM_STEPS; ps == 0 → everything lands in the last
     chunk (mirrors the reference loop where only the final slice is
     non-empty).
     """
+    num_steps = NUM_STEPS
     ps = F.floor(n / num_steps)
     return (
         F.when(ps <= 0, F.lit(num_steps - 1))
@@ -189,11 +197,12 @@ def partition_equal_arrays(df: DataFrame, num_steps: int) -> DataFrame:
     )
 
 
-def rechunk_chunk_id(pos: Column, n: Column, chunk_len: int, tail_frac: float = 0.3) -> Column:
-    """C2 closed form. Fixed windows of `chunk_len`; short tail merges back.
+def rechunk_chunk_id(pos: Column, n: Column) -> Column:
+    """C2 closed form. Fixed windows of ``CHUNK_LEN``; short tail merges back.
 
     n_chunks = ceil(n/chunk_len); tail = n - (n_chunks-1)*chunk_len;
-    merge iff n_chunks > 1 and tail < tail_frac*chunk_len.
+    merge iff n_chunks > 1 and tail < tail_frac*chunk_len, with chunk_len
+    = ``CHUNK_LEN`` and tail_frac = ``TAIL_FRAC``.
 
     Deliberate deviation: the reference loop (test_proactive.py:152-165)
     raises IndexError on any input shorter than ``tail_frac*chunk_len``
@@ -202,6 +211,7 @@ def rechunk_chunk_id(pos: Column, n: Column, chunk_len: int, tail_frac: float = 
     ``n_chunks > 1`` guard — since crashing the 100 TB job on its
     shortest document is not a semantics worth preserving.
     """
+    chunk_len, tail_frac = CHUNK_LEN, TAIL_FRAC
     n_chunks = F.ceil(n / chunk_len)
     tail = n - (n_chunks - 1) * chunk_len
     merged_last = F.when(
@@ -210,13 +220,13 @@ def rechunk_chunk_id(pos: Column, n: Column, chunk_len: int, tail_frac: float = 
     return F.least(F.floor(pos / chunk_len), merged_last).cast("int")
 
 
-def rechunk_fixed(words_df: DataFrame, chunk_len: int, tail_frac: float = 0.3) -> DataFrame:
+def rechunk_fixed(words_df: DataFrame) -> DataFrame:
     """C2: re-chunk word rows into fixed-size windows with tail-merge."""
     if "n_words_doc" not in words_df.columns:
         n = Window.partitionBy("doc_id")
         words_df = words_df.withColumn("n_words_doc", F.count("*").over(n))
     with_chunk = words_df.withColumn(
-        "chunk_id", rechunk_chunk_id(F.col("pos"), F.col("n_words_doc"), chunk_len, tail_frac)
+        "chunk_id", rechunk_chunk_id(F.col("pos"), F.col("n_words_doc"))
     )
     return with_chunk.groupBy("doc_id", "chunk_id").agg(
         F.count("*").cast("bigint").alias("n_tokens"),
@@ -224,15 +234,16 @@ def rechunk_fixed(words_df: DataFrame, chunk_len: int, tail_frac: float = 0.3) -
     )
 
 
-def derived_increment(num_steps: int, low: float, target_ratio: float) -> float:
+def derived_increment() -> float:
     """C4, the reference's parameterization (test_proactive.py:141-147
-    ``split_ratio``): the caller gives a TARGET mean ratio and the
-    increment is derived as ``(2*target_ratio - low)/num_steps`` — the
-    uncapped ramp low, low+inc, … then averages ≈ target_ratio
+    ``split_ratio``): from the TARGET mean ratio ``RATIO_TARGET``, the
+    low bound ``RATIO_TLOW`` and ``NUM_STEPS``, the increment is derived
+    as ``(2*target_ratio - low)/num_steps`` — the uncapped ramp low,
+    low+inc, … then averages ≈ target_ratio
     (arithmetic-series mean (low + last)/2 → target as num_steps grows).
     Computed in plain Python floats, exactly the reference expression,
     so schedules built from it are bit-equal to the reference list."""
-    return (2.0 * target_ratio - low) / num_steps
+    return (2.0 * RATIO_TARGET - RATIO_TLOW) / NUM_STEPS
 
 
 @F.udf(returnType=T.ArrayType(T.IntegerType()))
@@ -254,8 +265,8 @@ def _middle_drop_surviving(chunk_lens: list, budget: int) -> list:
     return idx
 
 
-def middle_drop(chunks_df: DataFrame, budget: int) -> DataFrame:
-    """P5: drop middle chunks per doc until total n_tokens <= budget.
+def middle_drop(chunks_df: DataFrame) -> DataFrame:
+    """P5: drop middle chunks per doc until total n_tokens <= DROP_BUDGET.
 
     Input: (doc_id, chunk_id, n_tokens). Output: surviving rows only.
     The per-doc fixpoint runs inside an array UDF over the (ordered) chunk
@@ -268,7 +279,7 @@ def middle_drop(chunks_df: DataFrame, budget: int) -> DataFrame:
         "doc_id",
         F.explode(
             _middle_drop_surviving(
-                F.transform("cl", lambda s: s["n_tokens"].cast("int")), F.lit(budget)
+                F.transform("cl", lambda s: s["n_tokens"].cast("int")), F.lit(DROP_BUDGET)
             )
         ).alias("surv_idx"),
         F.col("cl"),

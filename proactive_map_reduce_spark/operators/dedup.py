@@ -7,7 +7,7 @@ for 100 TB corpus curation, built shuffle-consciously:
 - Exact: one groupBy on a 256-bit content hash — the only full shuffle,
   keyed uniformly (no skew: hash keys are uniform by construction).
 - MinHash: signatures are array higher-order expressions over each
-  document's shingle array (one md5 per shingle, then `n_hashes` affine
+  document's shingle array (one md5 per shingle, then `MINHASH_N` affine
   mins) in one narrow projection — no explode, no shuffle; LSH banding
   turns all-pairs comparison (O(n²), impossible at 100 TB) into an
   equi-join on (band_id, band_hash) — each bucket is tiny, and the join
@@ -47,6 +47,11 @@ MINHASH_B = [
     135792468, 864209753, 975318642, 159263487, 951357852, 753159852,
     258741369, 369852147, 147258369,
 ]
+#: Signature components per document, and the LSH bands they split into.
+MINHASH_N = 16
+MINHASH_BANDS = 4
+#: Confirmation gate: est-Jaccard >= 8/16 = 0.5.
+MINHASH_MIN_AGREEMENT = 8
 
 
 def exact_dedup(df: DataFrame) -> DataFrame:
@@ -108,12 +113,12 @@ def shingle_arrays(df: DataFrame, n: int = 3) -> DataFrame:
     return base.select(F.col("doc_id"), F.array_distinct(grams).alias("shingles"))
 
 
-def minhash_arrays(df: DataFrame, n_hashes: int = 16, with_sets: bool = False) -> DataFrame:
+def minhash_arrays(df: DataFrame, with_sets: bool = False) -> DataFrame:
     """MinHash signatures straight from per-document word-3-gram shingle
     ARRAYS — a zero-shuffle signature builder.
 
     Universal hashing: ONE portable md5 per shingle (the expensive part)
-    gives h0 = h(shingle) mod p, then ``n_hashes`` cheap affine functions
+    gives h0 = h(shingle) mod p, then ``MINHASH_N`` cheap affine functions
     h_j = min((a_j·h0 + b_j) mod p) (2^62 overflow bound documented at
     MINHASH_PRIME). Both steps are array higher-order expressions in one
     narrow projection — no explode, no shuffle, no aggregation. Min over
@@ -147,7 +152,7 @@ def minhash_arrays(df: DataFrame, n_hashes: int = 16, with_sets: bool = False) -
                 % MINHASH_PRIME,
             )
         ).alias(f"mh_{j}")
-        for j in range(n_hashes)
+        for j in range(MINHASH_N)
     ]
     extra = [F.array_distinct("__h0s").alias("shingles")] if with_sets else []
     return base.select(F.col("doc_id"), *cols, *extra)
@@ -156,16 +161,16 @@ def minhash_arrays(df: DataFrame, n_hashes: int = 16, with_sets: bool = False) -
 LSH_MAX_BUCKET = 256  # representatives per bucket; >K members star-link to rep
 
 
-def band_rows(sig_df: DataFrame, n_hashes: int = 16, bands: int = 4) -> DataFrame:
+def band_rows(sig_df: DataFrame) -> DataFrame:
     """(doc_id, band_id, band_hash) — one row per doc per LSH band.
 
     band_hash = h(mh_a || '|' || mh_b || ...) over the band's signature
     components; a narrow projection + posexplode, no shuffle. Shared by
     the self-join pair path (``lsh_candidate_pairs``) and the asymmetric
     new-batch-vs-catalog path (``incremental_lsh_matches``)."""
-    rows_per_band = n_hashes // bands
+    rows_per_band = MINHASH_N // MINHASH_BANDS
     band_exprs = []
-    for b in range(bands):
+    for b in range(MINHASH_BANDS):
         cols = [F.col(f"mh_{b * rows_per_band + r}").cast("string") for r in range(rows_per_band)]
         band_exprs.append(
             portable_hash64(reduce(lambda x, y: F.concat(x, F.lit("|"), y), cols))
@@ -175,13 +180,7 @@ def band_rows(sig_df: DataFrame, n_hashes: int = 16, bands: int = 4) -> DataFram
     )
 
 
-def incremental_lsh_matches(
-    new_sigs: DataFrame,
-    catalog_sigs: DataFrame,
-    n_hashes: int = 16,
-    bands: int = 4,
-    min_agreement: int = 8,
-) -> DataFrame:
+def incremental_lsh_matches(new_sigs: DataFrame, catalog_sigs: DataFrame) -> DataFrame:
     """Dedup a NEW batch against an EXISTING signature catalog:
     (new_id, dup_of, n_matches) for every new doc with a confirmed match.
 
@@ -194,7 +193,7 @@ def incremental_lsh_matches(
     candidate volume is driven by the batch, not the corpus².
 
     Candidates are confirmed by signature agreement (n_sig_match ≥
-    min_agreement ⇒ estimated Jaccard ≥ min_agreement/n_hashes) — 16
+    MINHASH_MIN_AGREEMENT ⇒ estimated Jaccard ≥ 8/16) — 16
     ints per side, no shingle-set traffic at all on this path.
 
     Mega-bucket guard: a boilerplate band bucket on the catalog side is
@@ -204,10 +203,10 @@ def incremental_lsh_matches(
     O(|batch| · |catalog_bucket|). ``n_matches`` counts confirmed
     catalog docs among those representatives.
     """
-    nb = band_rows(new_sigs, n_hashes, bands).select(
+    nb = band_rows(new_sigs).select(
         F.col("doc_id").alias("new_id"), "band_id", "band_hash"
     )
-    cb = band_rows(catalog_sigs, n_hashes, bands)
+    cb = band_rows(catalog_sigs)
     w = Window.partitionBy("band_id", "band_hash").orderBy("doc_id")
     cbr = (
         cb.withColumn("rk", F.row_number().over(w))
@@ -215,13 +214,13 @@ def incremental_lsh_matches(
         .select(F.col("doc_id").alias("cat_id"), "band_id", "band_hash")
     )
     cand = nb.join(cbr, ["band_id", "band_hash"]).select("new_id", "cat_id").distinct()
-    a = _aliased_sigs(new_sigs, "new_id", "_a", n_hashes)
-    b = _aliased_sigs(catalog_sigs, "cat_id", "_b", n_hashes)
+    a = _aliased_sigs(new_sigs, "new_id", "_a")
+    b = _aliased_sigs(catalog_sigs, "cat_id", "_b")
     return (
         cand.join(a, "new_id")
         .join(b, "cat_id")
-        .withColumn("n_sig_match", _agreement_expr(n_hashes))
-        .filter(F.col("n_sig_match") >= min_agreement)
+        .withColumn("n_sig_match", _agreement_expr())
+        .filter(F.col("n_sig_match") >= MINHASH_MIN_AGREEMENT)
         .groupBy("new_id")
         .agg(
             F.min("cat_id").alias("dup_of"),
@@ -230,7 +229,7 @@ def incremental_lsh_matches(
     )
 
 
-def lsh_candidate_pairs(sig_df: DataFrame, n_hashes: int = 16, bands: int = 4) -> DataFrame:
+def lsh_candidate_pairs(sig_df: DataFrame) -> DataFrame:
     """LSH banding: docs sharing any band's full sub-signature are candidates.
 
     band_hash = h(mh_a || '|' || mh_b || ...) over the band's rows. Docs
@@ -257,7 +256,7 @@ def lsh_candidate_pairs(sig_df: DataFrame, n_hashes: int = 16, bands: int = 4) -
     Only pairwise Jaccard scores for non-representative × non-representative
     pairs are skipped, which is the intended cap.
     """
-    banded = band_rows(sig_df, n_hashes, bands)
+    banded = band_rows(sig_df)
     return capped_block_pairs(banded, ["band_id", "band_hash"], max_block=LSH_MAX_BUCKET)
 
 
@@ -311,30 +310,30 @@ def capped_block_pairs(
     )
 
 
-def _agreement_expr(n_hashes: int):
+def _agreement_expr():
     """Σ_j [mh_j_a == mh_j_b] — the shared Jaccard-estimate sum over the
     aliased signature-join columns. ONE definition serves the symmetric
     pair guard and the incremental batch path, so a change to the
     estimate (or its oracle-mirroring contract) cannot silently diverge
     between them."""
     agree = None
-    for j in range(n_hashes):
+    for j in range(MINHASH_N):
         t = (F.col(f"mh_{j}_a") == F.col(f"mh_{j}_b")).cast("int")
         agree = t if agree is None else agree + t
     return agree
 
 
-def _aliased_sigs(sig_df: DataFrame, out_id: str, suffix: str, n_hashes: int) -> DataFrame:
+def _aliased_sigs(sig_df: DataFrame, out_id: str, suffix: str) -> DataFrame:
     """Signature columns renamed for one side of an agreement join."""
     return sig_df.select(
         F.col("doc_id").alias(out_id),
-        *[F.col(f"mh_{j}").alias(f"mh_{j}{suffix}") for j in range(n_hashes)],
+        *[F.col(f"mh_{j}").alias(f"mh_{j}{suffix}") for j in range(MINHASH_N)],
     )
 
 
-def signature_agreement(pairs: DataFrame, sig_df: DataFrame, n_hashes: int = 16) -> DataFrame:
+def signature_agreement(pairs: DataFrame, sig_df: DataFrame) -> DataFrame:
     """Annotate candidate pairs with ``n_sig_match`` — how many of the
-    n_hashes MinHash components the two docs share. agreement/n_hashes is
+    MINHASH_N MinHash components the two docs share. agreement/MINHASH_N is
     the standard unbiased estimate of Jaccard similarity, computed from
     16 ints per doc instead of the full shingle sets.
 
@@ -342,16 +341,16 @@ def signature_agreement(pairs: DataFrame, sig_df: DataFrame, n_hashes: int = 16)
     high-dup round, LSH can emit pairs whose exact-Jaccard confirmation
     would shuffle |pairs| × (|A|+|B|) hashed shingles through the set
     join. Filtering on ``n_sig_match`` first costs only the signature
-    join (n_hashes ints per side), so the heavy shingle traffic tracks
+    join (MINHASH_N ints per side), so the heavy shingle traffic tracks
     CONFIRMED near-dups, not raw candidates. Deterministic given the
     signatures, so the DuckDB oracle mirrors it exactly.
     """
-    a = _aliased_sigs(sig_df, "doc_a", "_a", n_hashes)
-    b = _aliased_sigs(sig_df, "doc_b", "_b", n_hashes)
+    a = _aliased_sigs(sig_df, "doc_a", "_a")
+    b = _aliased_sigs(sig_df, "doc_b", "_b")
     return (
         pairs.join(a, "doc_a")
         .join(b, "doc_b")
-        .select("doc_a", "doc_b", _agreement_expr(n_hashes).alias("n_sig_match"))
+        .select("doc_a", "doc_b", _agreement_expr().alias("n_sig_match"))
     )
 
 

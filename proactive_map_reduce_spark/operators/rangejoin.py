@@ -21,19 +21,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: Join window: rows within ±30 minutes, in microseconds; also the bucket width.
+WITHIN_US = 30 * 60 * 1_000_000
 
-def interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    within_us: int,
-) -> DataFrame:
-    """Inner join of rows whose ``ts`` lie within ±within_us microseconds,
-    per ``user_id``.
+
+def interval_join(left: DataFrame, right: DataFrame) -> DataFrame:
+    """Inner join of rows whose ``ts`` lie within ±``WITHIN_US``
+    microseconds, per ``user_id``.
 
     Left columns keep their names; right columns (except ``user_id``) get an
     `r_` prefix.
     """
-    w = int(within_us)
+    w = WITHIN_US
     l_bucket = F.floor(F.unix_micros(F.col("ts")) / w)
     r_bucket = F.floor(F.unix_micros(F.col("ts")) / w)
 

@@ -30,6 +30,9 @@ from pyspark.sql.window import Window
 K1 = 1.2
 B = 0.75
 
+#: The fixed retrieval query ``bm25_search`` ranks documents against.
+BM25_QUERY_TERMS = ["join", "hash", "stream"]
+
 
 def term_counts(docs: DataFrame) -> DataFrame:
     """(doc_id, term, tf) — one row per distinct space-split term of
@@ -92,8 +95,8 @@ def tfidf_top_terms(docs: DataFrame) -> DataFrame:
     )
 
 
-def bm25_search(docs: DataFrame, query_terms: list[str], top_n: int = 10) -> DataFrame:
-    """BM25 ranking of documents against a fixed query-term set.
+def bm25_search(docs: DataFrame, top_n: int = 10) -> DataFrame:
+    """BM25 ranking of documents against the ``BM25_QUERY_TERMS`` query.
 
     score(d) = sum over q of idf(q) * tf * (k1+1) / (tf + k1*(1 - b + b*dl/avgdl))
     with the classic Robertson idf = ln(1 + (N - df + 0.5)/(df + 0.5)).
@@ -114,7 +117,7 @@ def bm25_search(docs: DataFrame, query_terms: list[str], top_n: int = 10) -> Dat
     )
     hits = (
         docs.select("doc_id", F.explode(ws).alias("term"))
-        .filter(F.col("term").isin(query_terms))
+        .filter(F.col("term").isin(BM25_QUERY_TERMS))
         .groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
     )

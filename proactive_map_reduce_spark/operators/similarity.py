@@ -54,9 +54,14 @@ def cosine(a, b):
 
 
 # Test-data embedding dimensionality (embeddings.parquet, all SFs). Every
-# similarity operator takes ``dim`` as a required argument, so query
-# construction never fires an eager probe job for it.
+# similarity operator unrolls its dot and norm over it, so query
+# construction never fires an eager probe job for the width.
 EMBED_DIM = 64
+
+# Near-duplicate cosine threshold. The fixture embeddings are random (max
+# cos ~0.48); at this threshold ``embedding_near_dup_pairs`` returns a
+# small nonzero pair set.
+NEAR_DUP_COS = 0.4
 
 # Accumulator-chunk width for the unrolled dot/norm sums. Chunked
 # accumulation (8 sums of 8, then one 8-term combine) keeps the identical
@@ -114,8 +119,8 @@ def _chunked_sum_sql(terms: list[str]) -> str:
     return "(" + " + ".join(chunks) + ")"
 
 
-def unrolled_dot(a, b, dim: int):
-    """Σ a[d]·b[d] unrolled over a statically-known dim, chunk-accumulated
+def unrolled_dot(a, b):
+    """Σ a[d]·b[d] unrolled over the ``EMBED_DIM`` dims, chunk-accumulated
     (see ``_CHUNK``). The whole expression stays inside whole-stage
     codegen — Spark's array higher-order functions are interpreted, which
     made the HOF cosine the hot-path cost of every similarity query —
@@ -124,17 +129,17 @@ def unrolled_dot(a, b, dim: int):
     Pass column NAMES (str) to build the tree through one F.expr parse
     (fast path); Column args take the py4j-per-term path."""
     if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_chunked_sum_sql([f"{a}[{d}] * {b}[{d}]" for d in range(dim)]))
-    return _chunked_sum([a[d] * b[d] for d in range(dim)])
+        return F.expr(_chunked_sum_sql([f"{a}[{d}] * {b}[{d}]" for d in range(EMBED_DIM)]))
+    return _chunked_sum([a[d] * b[d] for d in range(EMBED_DIM)])
 
 
-def unrolled_norm(dim: int):
+def unrolled_norm():
     """‖v‖ of the ``v`` column, with the same chunked fold order as
     ``unrolled_dot``."""
-    return F.sqrt(F.expr(_chunked_sum_sql([f"v[{d}] * v[{d}]" for d in range(dim)])))
+    return F.sqrt(F.expr(_chunked_sum_sql([f"v[{d}] * v[{d}]" for d in range(EMBED_DIM)])))
 
 
-def brute_force_topk(emb: DataFrame, *, dim: int) -> DataFrame:
+def brute_force_topk(emb: DataFrame) -> DataFrame:
     """Exact cosine top-5 over (vec_id, embedding) rows for the 8 query
     vectors vec_id < 8.
 
@@ -157,7 +162,7 @@ def brute_force_topk(emb: DataFrame, *, dim: int) -> DataFrame:
     """
     base = emb.select(
         F.col("vec_id"), _as_double(F.col("embedding")).alias("v")
-    ).withColumn("nv", unrolled_norm(dim))
+    ).withColumn("nv", unrolled_norm())
     qrows = (
         base.filter(F.col("vec_id") < 8)
         .select("vec_id", "v", "nv")
@@ -215,7 +220,7 @@ def brute_force_topk(emb: DataFrame, *, dim: int) -> DataFrame:
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
             F.round(
-                cos_expr(unrolled_dot("qv", "v", dim), F.col("nq") * F.col("nv")),
+                cos_expr(unrolled_dot("qv", "v"), F.col("nq") * F.col("nv")),
                 6,
             ).alias("cos_sim"),
         )
@@ -242,7 +247,7 @@ def sign_bucket(vec_col):
     ).cast("bigint")
 
 
-def lsh_topk(emb: DataFrame, *, dim: int) -> DataFrame:
+def lsh_topk(emb: DataFrame) -> DataFrame:
     """Approximate top-5 for the 8 query vectors vec_id < 8: rank only
     candidates in the query's 4-bit sign bucket.
 
@@ -252,7 +257,7 @@ def lsh_topk(emb: DataFrame, *, dim: int) -> DataFrame:
     base = (
         emb.select(F.col("vec_id"), _as_double(F.col("embedding")).alias("v"))
         .withColumn("bucket", sign_bucket(F.col("v")))
-        .withColumn("nv", unrolled_norm(dim))
+        .withColumn("nv", unrolled_norm())
     )
     queries = base.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"),
@@ -267,7 +272,7 @@ def lsh_topk(emb: DataFrame, *, dim: int) -> DataFrame:
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
             F.round(
-                cos_expr(unrolled_dot("qv", "v", dim), F.col("nq") * F.col("nv")),
+                cos_expr(unrolled_dot("qv", "v"), F.col("nq") * F.col("nv")),
                 6,
             ).alias("cos_sim"),
         )
@@ -276,17 +281,16 @@ def lsh_topk(emb: DataFrame, *, dim: int) -> DataFrame:
     return scored.withColumn("rank", F.row_number().over(w).cast("int")).filter(F.col("rank") <= 5)
 
 
-def embedding_near_dup_pairs(
-    emb: DataFrame, threshold: float = 0.95, *, dim: int
-) -> DataFrame:
-    """Embedding-cosine near-duplicate (vec_id) pairs, blocked by label.
+def embedding_near_dup_pairs(emb: DataFrame) -> DataFrame:
+    """Embedding-cosine near-duplicate (vec_id) pairs at cosine ≥
+    ``NEAR_DUP_COS``, blocked by label.
 
     Blocking bounds the pair count (at scale: replace label with a coarse
     LSH bucket); exact cosine verifies each candidate pair.
     """
     base = emb.select(
         F.col("vec_id"), F.col("label").alias("blk"), _as_double(F.col("embedding")).alias("v")
-    ).withColumn("nv", unrolled_norm(dim))
+    ).withColumn("nv", unrolled_norm())
     a = base.select(
         F.col("vec_id").alias("vec_a"), F.col("blk"),
         F.col("v").alias("va"), F.col("nv").alias("na"),
@@ -303,11 +307,11 @@ def embedding_near_dup_pairs(
             "vec_b",
             F.round(
                 cos_expr(
-                    unrolled_dot(F.col("va"), F.col("vb"), dim),
+                    unrolled_dot(F.col("va"), F.col("vb")),
                     F.col("na") * F.col("nb"),
                 ),
                 6,
             ).alias("cos_sim"),
         )
-        .filter(F.col("cos_sim") >= threshold)
+        .filter(F.col("cos_sim") >= NEAR_DUP_COS)
     )

@@ -20,14 +20,20 @@ from pyspark.sql import functions as F
 #: (probability, output column) of each reported quantile.
 _QUARTILES = [(0.25, "p25"), (0.50, "p50"), (0.75, "p75")]
 
+#: KMV sketch size: stderr ≈ 1/sqrt(k-2) ≈ 3%.
+SKETCH_KMV_K = 1024
 
-def kmv_distinct(hashed: DataFrame, k: int) -> DataFrame:
+#: Equi-width histogram bins per group (quantile resolution).
+SKETCH_BINS = 64
+
+
+def kmv_distinct(hashed: DataFrame) -> DataFrame:
     """Approximate distinct count per ``lang`` from uniform 32-bit hashes
     ``h``, as ``approx_distinct_words``.
 
-    KMV estimator: with h uniform on [0, 2^32), E[k-th min] ≈ k/|S|·2^32
-    → |S| ≈ (k-1)·2^32 / h_(k); groups with fewer than k distinct hashes
-    answer exactly.
+    KMV estimator with k = ``SKETCH_KMV_K``: with h uniform on [0, 2^32),
+    E[k-th min] ≈ k/|S|·2^32 → |S| ≈ (k-1)·2^32 / h_(k); groups with
+    fewer than k distinct hashes answer exactly.
 
     Two-level min-k (the actual KMV merge shape): rank hashes within
     each (physical partition, group) and keep the k smallest, so no task
@@ -45,6 +51,7 @@ def kmv_distinct(hashed: DataFrame, k: int) -> DataFrame:
     `hashed` must hold DISTINCT (lang, h) rows (apply .distinct()
     upstream — that shuffle is uniform-keyed and scales).
     """
+    k = SKETCH_KMV_K
     loc = hashed.withColumn("pid", F.spark_partition_id())
     local_k = loc.withColumn(
         "lrn",
@@ -78,12 +85,13 @@ def kmv_distinct(hashed: DataFrame, k: int) -> DataFrame:
     )
 
 
-def histogram_quantiles(df: DataFrame, bins: int) -> DataFrame:
+def histogram_quantiles(df: DataFrame) -> DataFrame:
     """Approximate ``n_chars`` quartiles per ``lang`` via equi-width
     integer histogram.
 
     Reports, as ``p25``/``p50``/``p75``, the lower bound of the bin
-    where the cumulative count crosses p·n (bin width = range/bins).
+    where the cumulative count crosses p·n (bin width = range/bins, with
+    bins = ``SKETCH_BINS``).
     Exact integer bin counts → cross-engine deterministic; the
     per-group state is `bins` counters (mergeable by addition). The
     cumulative window runs over ≤ `bins` rows per group — bounded
@@ -96,6 +104,7 @@ def histogram_quantiles(df: DataFrame, bins: int) -> DataFrame:
     LAST). A group whose values are all null has no quantiles and is
     absent from the output.
     """
+    bins = SKETCH_BINS
     vals = df.select("lang", "n_chars").filter(F.col("n_chars").isNotNull())
     bounds = vals.groupBy("lang").agg(
         F.min("n_chars").alias("lo"), F.max("n_chars").alias("hi"),

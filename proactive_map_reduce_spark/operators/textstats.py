@@ -26,6 +26,9 @@ LANG_MARKERS: dict[str, list[str]] = {
 
 STOPWORDS = ["the", "a", "an", "of", "to", "and", "in", "is", "it", "for"]
 
+#: Words that drop a document in ``blocklist_filter`` (curation blocklist).
+BLOCKLIST = ["error", "slow"]
+
 
 def _count_in(ws: Column, vocab: list[str]) -> Column:
     return F.size(F.filter(ws, lambda w: w.isin(vocab)))
@@ -192,9 +195,9 @@ def repetition_signals(df: DataFrame) -> DataFrame:
     )
 
 
-def blocklist_filter(df: DataFrame, blocklist: list[str]) -> DataFrame:
+def blocklist_filter(df: DataFrame) -> DataFrame:
     """Blocklist filtering (the safety/PII gate of a curation pipeline):
-    keep only documents containing NO blocklisted word.
+    keep only documents containing NO ``BLOCKLIST`` word.
 
     Array-local `exists` over the word array — a pure narrow filter
     fused into the scan (no explode, no join, zero shuffles), which is
@@ -203,7 +206,7 @@ def blocklist_filter(df: DataFrame, blocklist: list[str]) -> DataFrame:
     rows. The blocklist is a literal in the plan (broadcast-free).
     """
     ws = F.split(F.col("text"), " ")
-    hit = F.exists(ws, lambda w: w.isin(blocklist))
+    hit = F.exists(ws, lambda w: w.isin(BLOCKLIST))
     return df.filter(~hit).select(
         "doc_id", "lang", F.size(ws).cast("bigint").alias("n_words")
     )

@@ -3,8 +3,8 @@
 Replicates the reference's partial-recompute position selection
 (modeling_llama.py:860-869): per group, score every position, keep the
 top-k by score (descending, index tiebreak — torch.topk is value-then-
-index) PLUS always the last `last_len` positions; k is clamped to
-[0, n - last_len].
+index) PLUS always the last ``TOPK_LAST`` positions; k is clamped to
+[0, n - TOPK_LAST].
 
 Expressed as window row_number + positional tail union — pure relational
 top-k, no UDF. Scale: rank-within-group via one shuffle on the group key;
@@ -17,12 +17,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+#: T1 selection: the share of positions ranked, and the tail always kept.
+TOPK_RATIO, TOPK_LAST = 0.3, 2
 
-def topk_importance(df: DataFrame, ratio: float, last_len: int) -> DataFrame:
+
+def topk_importance(df: DataFrame) -> DataFrame:
     """Select the top-k positions ``pos`` by ``value`` per ``user_id``,
-    plus the `last_len` tail.
+    plus the ``TOPK_LAST`` tail.
 
-    k = clamp(int(ratio * n) - 1, 0, n - last_len) per group — int() is
+    k = clamp(int(TOPK_RATIO * n) - 1, 0, n - TOPK_LAST) per group — int() is
     TRUNCATION (modeling_llama.py:860 `max(int(q_len*top_k_ratio)-1, 0)`,
     861 `min(q_len-last_len, k)`), not round(). The rank pool EXCLUDES
     the tail (modeling_llama.py:863 scores `diff[:-last_len]`): tail rows
@@ -30,6 +33,7 @@ def topk_importance(df: DataFrame, ratio: float, last_len: int) -> DataFrame:
     displace a non-tail candidate from the k slots. Output adds
     `selected` ∈ {'topk','tail'}.
     """
+    ratio, last_len = TOPK_RATIO, TOPK_LAST
     g = Window.partitionBy("user_id")
     n = F.count("*").over(g)
     scored = df.withColumn("_n", n)

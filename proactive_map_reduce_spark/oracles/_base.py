@@ -1,16 +1,9 @@
 """Shared SQL helpers and CTE fragments for the DuckDB oracle registry."""
 
 from __future__ import annotations
-from ..queries import (
-    CHUNK_LEN,
-    DROP_BUDGET,
-    NEAR_DUP_COS,
-    NUM_STEPS,
-    RATIO_INC,
-    RATIO_LOW,
-    RATIO_TINC,
-    RATIO_TLOW,
-)
+from ..operators.chunking import CHUNK_LEN, DROP_BUDGET, NUM_STEPS, RATIO_TLOW
+from ..operators.similarity import NEAR_DUP_COS
+from ..queries import RATIO_INC, RATIO_LOW, RATIO_TINC
 from ..functions.numeric import round_ratio_sql  # noqa: E402
 from ..operators.dedup import MINHASH_A, MINHASH_B, MINHASH_PRIME  # noqa: E402
 from ..operators.dedup import LSH_MAX_BUCKET  # noqa: E402

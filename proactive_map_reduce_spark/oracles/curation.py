@@ -39,11 +39,11 @@ from ._base import (  # noqa: F401
 )
 
 from ..operators.dedup import LSH_MAX_BUCKET as _K  # noqa: E402
+from ..operators.dedup import MINHASH_MIN_AGREEMENT as _MIN_AGREE  # noqa: E402
 from ..queries._base import (  # noqa: E402
     CURATION_JACCARD_MIN as _J_MIN,
     NGRAM_BLOCK_CAP as _NGRAM_K,
     CURATION_QUALITY_MIN as _Q_MIN,
-    MINHASH_MIN_AGREEMENT as _MIN_AGREE,
     PACK_BUDGET as _PACK,
     QUALITY_QUOTA as _QUOTA,
 )

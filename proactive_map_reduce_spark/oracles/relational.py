@@ -4,8 +4,8 @@ from ..functions.numeric import fixed_units_sql as _fu
 from ..functions.numeric import money_sum_2dp_sql as _ms
 from ..functions.numeric import round_ratio_sql as _rr
 from ..queries._base import EVENT_TYPES as _EVT  # noqa: E402
-from ..queries._base import SKETCH_BINS as _BINS  # noqa: E402
-from ..queries._base import SKETCH_KMV_K as _KMV  # noqa: E402
+from ..operators.sketch import SKETCH_BINS as _BINS  # noqa: E402
+from ..operators.sketch import SKETCH_KMV_K as _KMV  # noqa: E402
 from ._base import *  # noqa: F401,F403
 from ._base import (  # noqa: F401
     ORACLES,

@@ -23,6 +23,7 @@ from ..functions.text import (
     substring_match,
 )
 from ..operators import chunking, mapstage
+from ..operators.chunking import NUM_STEPS, RATIO_TLOW
 from ..operators import reduce as red
 from ..operators import topk as topk_ops
 from ..sources.tables import load_table
@@ -38,28 +39,11 @@ from ..operators import rangejoin as range_ops          # noqa: E402
 from ..operators import ranking as rank_ops             # noqa: E402
 
 
-NUM_STEPS = 4          # C1 equal-partition chunk count
-
-
-CHUNK_LEN = 20         # C2 fixed rechunk length (words)
-
-
-TAIL_FRAC = 0.3        # C2 tail-merge threshold
-
-
-DROP_BUDGET = 60       # P5 middle-drop token budget
-
-
 RATIO_LOW, RATIO_INC = 0.2, 0.1   # C4 schedule (explicit-increment form)
-# C4 reference parameterization (test_proactive.py:141-147): target mean
-# ratio + low bound; the increment is derived. Computed ONCE here in
-# Python and interpolated into both engines' plans by repr, so the
-# literal the two parse is the identical IEEE double.
-RATIO_TLOW, RATIO_TARGET = 0.1, 0.45
-RATIO_TINC = chunking.derived_increment(NUM_STEPS, RATIO_TLOW, RATIO_TARGET)
-
-
-TOPK_RATIO, TOPK_LAST = 0.3, 2    # T1 selection knobs
+# C4 reference parameterization: the derived increment is computed ONCE
+# here in Python and interpolated into both engines' plans by repr, so
+# the literal the two parse is the identical IEEE double.
+RATIO_TINC = chunking.derived_increment()
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -89,19 +73,6 @@ def _events_with_pos(spark, sf_dir):
     return ev.withColumn("pos", (F.row_number().over(w) - 1).cast("int"))
 
 
-MINHASH_N = 16
-
-
-MINHASH_BANDS = 4
-
-
-NEAR_DUP_COS = 0.4   # fixture embeddings are random (max cos ~0.48); at this
-                     # threshold the operator returns a small nonzero pair set
-
-
-MINHASH_MIN_AGREEMENT = 8  # confirmation gate: est-Jaccard >= 8/16 = 0.5
-
-
 # Star-cap for the blocked n-gram Jaccard BASELINE (q_dedup_ngram_jaccard):
 # full i<j expansion among the 64 smallest ids per (lang, length-bucket)
 # block, one star link per member beyond — O(K²+B) pairs per block instead
@@ -114,15 +85,6 @@ MINHASH_MIN_AGREEMENT = 8  # confirmation gate: est-Jaccard >= 8/16 = 0.5
 NGRAM_BLOCK_CAP = 64
 
 
-N_SALTS = 8
-
-
-SKETCH_KMV_K = 1024   # KMV size: stderr ≈ 1/sqrt(k-2) ≈ 3%
-
-
-SKETCH_BINS = 64      # histogram sketch resolution
-
-
 EMBED_DIM = 8
 
 
@@ -130,12 +92,6 @@ EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
 
 SAMPLE_RATES = {"de": 100, "en": 25, "es": 50, "fr": 75}  # percent per stratum
-
-
-BM25_QUERY_TERMS = ["join", "hash", "stream"]          # fixed retrieval query
-
-
-BLOCKLIST = ["error", "slow"]                          # curation blocklist
 
 
 HYBRID_QUERY_TEXT = "join hash stream"

@@ -23,7 +23,7 @@ def q_dedup_exact(spark, sf_dir):
 def q_minhash_signatures(spark, sf_dir):
     """MinHash signatures (16 portable hash functions over 3-gram shingles),
     computed as a narrow array projection — zero shuffles."""
-    return dedup_ops.minhash_arrays(_docs(spark, sf_dir), MINHASH_N)
+    return dedup_ops.minhash_arrays(_docs(spark, sf_dir))
 
 
 def q_dedup_minhash_pairs(spark, sf_dir):
@@ -33,10 +33,8 @@ def q_dedup_minhash_pairs(spark, sf_dir):
     the zero-shuffle array-HOF builder — one md5 pass, no word
     explosion — and the banding self-join and the candidate Jaccard both
     reuse it instead of re-deriving the corpus pipeline."""
-    combined = dedup_ops.minhash_arrays(
-        _docs(spark, sf_dir), MINHASH_N, with_sets=True
-    ).persist()
-    pairs = dedup_ops.lsh_candidate_pairs(combined, MINHASH_N, MINHASH_BANDS)
+    combined = dedup_ops.minhash_arrays(_docs(spark, sf_dir), with_sets=True).persist()
+    pairs = dedup_ops.lsh_candidate_pairs(combined)
     return dedup_ops.jaccard_pairs(
         combined.select("doc_id", "shingles"), pairs
     )
@@ -53,12 +51,10 @@ def q_dedup_minhash_confirmed(spark, sf_dir):
     tracks confirmed near-dups instead of raw band candidates. Output
     carries both the estimate (n_sig_match) and the exact jaccard of the
     survivors."""
-    combined = dedup_ops.minhash_arrays(
-        _docs(spark, sf_dir), MINHASH_N, with_sets=True
-    ).persist()
-    pairs = dedup_ops.lsh_candidate_pairs(combined, MINHASH_N, MINHASH_BANDS)
-    confirmed = dedup_ops.signature_agreement(pairs, combined, MINHASH_N).filter(
-        F.col("n_sig_match") >= MINHASH_MIN_AGREEMENT
+    combined = dedup_ops.minhash_arrays(_docs(spark, sf_dir), with_sets=True).persist()
+    pairs = dedup_ops.lsh_candidate_pairs(combined)
+    confirmed = dedup_ops.signature_agreement(pairs, combined).filter(
+        F.col("n_sig_match") >= dedup_ops.MINHASH_MIN_AGREEMENT
     )
     # one spelling of exact Jaccard — n_sig_match rides through as an
     # extra pair column
@@ -80,15 +76,9 @@ def q_dedup_incremental(spark, sf_dir):
     confirmed by 16-int signature agreement — no shingle-set traffic.
     Output: every new doc with is_dup, its earliest confirmed catalog
     match, and the confirmed-match count."""
-    sigs = dedup_ops.minhash_arrays(_docs(spark, sf_dir), MINHASH_N).persist()
+    sigs = dedup_ops.minhash_arrays(_docs(spark, sf_dir)).persist()
     is_new = F.col("doc_id") % 5 == 0
-    matches = dedup_ops.incremental_lsh_matches(
-        sigs.filter(is_new),
-        sigs.filter(~is_new),
-        MINHASH_N,
-        MINHASH_BANDS,
-        min_agreement=MINHASH_MIN_AGREEMENT,
-    )
+    matches = dedup_ops.incremental_lsh_matches(sigs.filter(is_new), sigs.filter(~is_new))
     new_docs = _docs(spark, sf_dir).filter(is_new).select("doc_id")
     return (
         new_docs.join(matches, new_docs.doc_id == matches.new_id, "left")
@@ -186,8 +176,8 @@ def q_dedup_clusters(spark, sf_dir):
     own representative trivially)."""
     # signatures only — this query never computes exact Jaccard, so the
     # shingle-set payload of the array builder has no consumer
-    sigs = dedup_ops.minhash_arrays(_docs(spark, sf_dir), MINHASH_N)
-    pairs = dedup_ops.lsh_candidate_pairs(sigs, MINHASH_N, MINHASH_BANDS).persist()
+    sigs = dedup_ops.minhash_arrays(_docs(spark, sf_dir))
+    pairs = dedup_ops.lsh_candidate_pairs(sigs).persist()
     return dedup_ops.connected_components(pairs)
 
 
@@ -235,13 +225,13 @@ def q_bm25_search(spark, sf_dir):
     shuffle — exchanged volume is proportional to query hits, not
     corpus size; dl/avgdl ride along as broadcast joins; final top-k is
     TakeOrderedAndProject (no global sort)."""
-    return rank_ops.bm25_search(_docs(spark, sf_dir), BM25_QUERY_TERMS)
+    return rank_ops.bm25_search(_docs(spark, sf_dir))
 
 
 def q_blocklist_filter(spark, sf_dir):
     """Blocklist gate: drop documents containing any blocklisted word —
     array-local `exists`, fused into the scan, zero shuffles."""
-    return ts_ops.blocklist_filter(_docs(spark, sf_dir), BLOCKLIST)
+    return ts_ops.blocklist_filter(_docs(spark, sf_dir))
 
 
 def q_sentence_dedup(spark, sf_dir):
@@ -314,7 +304,7 @@ def q_hybrid_search(spark, sf_dir):
     from ..operators.similarity import cosine
 
     docs = _docs(spark, sf_dir)
-    cand = rank_ops.bm25_search(docs, BM25_QUERY_TERMS, top_n=20)
+    cand = rank_ops.bm25_search(docs, top_n=20)
     qv = _standin_embed(F.lit(HYBRID_QUERY_TEXT))
     scored = (
         docs.join(F.broadcast(cand), "doc_id")
@@ -408,10 +398,8 @@ def q_curation_pipeline(spark, sf_dir):
         .persist()
     )
 
-    combined = dedup_ops.minhash_arrays(
-        gated, MINHASH_N, with_sets=True
-    ).persist()
-    pairs = dedup_ops.lsh_candidate_pairs(combined, MINHASH_N, MINHASH_BANDS)
+    combined = dedup_ops.minhash_arrays(gated, with_sets=True).persist()
+    pairs = dedup_ops.lsh_candidate_pairs(combined)
     jacc = dedup_ops.jaccard_pairs(combined.select("doc_id", "shingles"), pairs)
     drop = (
         jacc.filter(F.col("jaccard") >= CURATION_JACCARD_MIN)

@@ -120,7 +120,7 @@ def q_partition_equal(spark, sf_dir):
 
 def q_rechunk_fixed(spark, sf_dir):
     """C2: fixed-size rechunk with tail-merge."""
-    return chunking.rechunk_fixed(_words(spark, sf_dir), CHUNK_LEN, tail_frac=TAIL_FRAC).select(
+    return chunking.rechunk_fixed(_words(spark, sf_dir)).select(
         "doc_id", "chunk_id", "n_tokens", "start_pos"
     )
 
@@ -141,7 +141,7 @@ def q_ratio_schedule_target(spark, sf_dir):
     """C4, the reference's own parameterization (test_proactive.py:141-147
     ``split_ratio(low, num_doc, ratio)``): the increment is DERIVED from a
     target mean ratio, (2*ratio - low)/num_steps, computed once in Python
-    (queries/_base.RATIO_TINC) and interpolated into both engines'
+    (``chunking.derived_increment``) and interpolated into both engines'
     literals — the ramp values are bit-equal to the reference list."""
     d = _chunks(spark, sf_dir)
     return d.select(
@@ -159,13 +159,13 @@ def q_ratio_schedule_target(spark, sf_dir):
 
 def q_middle_drop_truncate(spark, sf_dir):
     """P5: middle-drop until total tokens <= budget (order-dependent loop)."""
-    chunks = chunking.rechunk_fixed(_words(spark, sf_dir), CHUNK_LEN, tail_frac=TAIL_FRAC)
-    return chunking.middle_drop(chunks, DROP_BUDGET).select("doc_id", "chunk_id", "n_tokens")
+    chunks = chunking.rechunk_fixed(_words(spark, sf_dir))
+    return chunking.middle_drop(chunks).select("doc_id", "chunk_id", "n_tokens")
 
 
 def q_positional_shift(spark, sf_dir):
     """W4: per-chunk position offset = cumsum of previous chunk lengths."""
-    chunks = chunking.rechunk_fixed(_words(spark, sf_dir), CHUNK_LEN, tail_frac=TAIL_FRAC)
+    chunks = chunking.rechunk_fixed(_words(spark, sf_dir))
     return chunking.positional_shift(chunks).select("doc_id", "chunk_id", "n_tokens", "shift")
 
 
@@ -518,7 +518,7 @@ def q_topk_importance(spark, sf_dir):
     """T1: per-user top-k events by score plus always the positional tail
     (modeling_llama.py:860-869 selection semantics)."""
     ev = _events_with_pos(spark, sf_dir).select("user_id", "pos", "event_id", "value")
-    sel = topk_ops.topk_importance(ev, ratio=TOPK_RATIO, last_len=TOPK_LAST)
+    sel = topk_ops.topk_importance(ev)
     return sel.select("user_id", "pos", "event_id", "selected")
 
 
@@ -698,7 +698,7 @@ def q_kv_concat(spark, sf_dir):
     words = _words(spark, sf_dir)
     with_chunk = words.withColumn(
         "chunk_id",
-        chunking.equal_partition_chunk_id(F.col("pos"), F.col("n_words_doc"), NUM_STEPS),
+        chunking.equal_partition_chunk_id(F.col("pos"), F.col("n_words_doc")),
     ).withColumn("tok", token_id())
     per_chunk = with_chunk.groupBy("doc_id", "chunk_id").agg(
         F.transform(
@@ -794,11 +794,9 @@ def q_qa_pipeline(spark, sf_dir):
     words = _words(spark, sf_dir)
     wc = words.withColumn(
         "chunk_id",
-        chunking.rechunk_chunk_id(F.col("pos"), F.col("n_words_doc"), CHUNK_LEN, TAIL_FRAC),
+        chunking.rechunk_chunk_id(F.col("pos"), F.col("n_words_doc")),
     )
-    surv = chunking.middle_drop(
-        chunking.rechunk_fixed(words, CHUNK_LEN, tail_frac=TAIL_FRAC), DROP_BUDGET
-    ).select("doc_id", "chunk_id", F.lit(1).alias("_keep"))
+    surv = chunking.middle_drop(chunking.rechunk_fixed(words)).select("doc_id", "chunk_id", F.lit(1).alias("_keep"))
     j = wc.join(surv, ["doc_id", "chunk_id"], "left")
     mx = Window.partitionBy("doc_id")
     j = j.withColumn("_mc", F.max("chunk_id").over(mx))

@@ -154,7 +154,7 @@ def q_sessionize(spark, sf_dir):
 
 def q_salted_agg(spark, sf_dir):
     """Skew-safe two-phase aggregation: per-event_type value sum/count via
-    a deterministic salt (hot keys spread across N_SALTS reducers).
+    a deterministic salt (hot keys spread across ``skew.N_SALTS`` reducers).
     Value-identical to the plain groupBy — the oracle IS the plain SQL.
     The measure is pre-cast to DECIMAL(38,6) (functions/numeric.py):
     exact partials compose exactly under the salt's re-association, so
@@ -164,7 +164,7 @@ def q_salted_agg(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events").withColumn(
         "value_dec", F.col("value").cast("decimal(38,6)")
     )
-    out = skew_ops.salted_agg(ev, n_salts=N_SALTS)
+    out = skew_ops.salted_agg(ev)
     return out.select(
         "event_type",
         F.round("sum_value", 2).cast("double").alias("sum_value"),
@@ -245,11 +245,11 @@ def q_bucketed_join(spark, sf_dir):
 
 
 def q_salted_join(spark, sf_dir):
-    """Skew-safe fact⋈dim join with N_SALTS-fold dim replication instead of
-    broadcast: lineitem ⋈ supplier on (suppkey, salt)."""
+    """Skew-safe fact⋈dim join with ``skew.N_SALTS``-fold dim replication
+    instead of broadcast: lineitem ⋈ supplier on (suppkey, salt)."""
     li = load_table(spark, sf_dir, "lineitem")
     sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    j = skew_ops.salted_join(li, sup, n_salts=N_SALTS)
+    j = skew_ops.salted_join(li, sup)
     return j.groupBy("s_nationkey").agg(
         money_sum_2dp(
             F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -341,7 +341,7 @@ def q_range_join(spark, sf_dir):
     views = ev.filter(F.col("event_type") == "view").select(
         "user_id", F.col("event_id").alias("r_id"), "ts"
     )
-    j = range_ops.interval_join(clicks, views, within_us=30 * 60 * 1_000_000)
+    j = range_ops.interval_join(clicks, views)
     return j.select(
         "user_id",
         "l_id",
@@ -371,8 +371,8 @@ def q_sketch_stats(spark, sf_dir):
     d = _docs(spark, sf_dir)
     words = _words(spark, sf_dir).join(d.select("doc_id", "lang"), "doc_id")
     wh = words.select("lang", portable_hash64("word").alias("h")).distinct()
-    kmv = sketch_ops.kmv_distinct(wh, SKETCH_KMV_K)
-    q = sketch_ops.histogram_quantiles(d, SKETCH_BINS)
+    kmv = sketch_ops.kmv_distinct(wh)
+    q = sketch_ops.histogram_quantiles(d)
     return kmv.join(q, "lang")
 
 

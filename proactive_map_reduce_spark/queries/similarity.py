@@ -16,19 +16,19 @@ from ._base import (  # noqa: F401
 def q_dedup_embedding(spark, sf_dir):
     """Embedding-cosine near-duplicate pairs (label-blocked)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return sim_ops.embedding_near_dup_pairs(emb, NEAR_DUP_COS, dim=sim_ops.EMBED_DIM)
+    return sim_ops.embedding_near_dup_pairs(emb)
 
 
 def q_similarity_topk(spark, sf_dir):
     """Brute-force cosine top-5 neighbors for the first 8 query vectors."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return sim_ops.brute_force_topk(emb, dim=sim_ops.EMBED_DIM)
+    return sim_ops.brute_force_topk(emb)
 
 
 def q_similarity_lsh(spark, sf_dir):
     """Sign-bucket LSH approximate top-5 (scale path: bucket equi-join)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return sim_ops.lsh_topk(emb, dim=sim_ops.EMBED_DIM)
+    return sim_ops.lsh_topk(emb)
 
 
 def q_multimodal_features(spark, sf_dir):

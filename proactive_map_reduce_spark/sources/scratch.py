@@ -2,10 +2,12 @@
 
 Files that must outlive the call that wrote them (a sink round-trip's
 read-back, the text-corpus and bucketed materializations, streaming stage
-files and emissions) live under one per-process root,
-``<tempdir>/pmr_proc_<pid>``, which one ``atexit`` hook removes when the
-process exits. No process deletes another process's files; a process
-killed with SIGKILL leaves its root behind, named by the owner's pid.
+files, emissions and temp checkpoints) live under a per-process root,
+``<base>/pmr_proc_<pid>`` (``base`` is the temp dir, or ``/dev/shm`` for
+streaming checkpoints), and one ``atexit`` hook removes every such root
+when the process exits. No process deletes another process's files; a
+process killed with SIGKILL leaves its root behind, named by the owner's
+pid.
 """
 
 from __future__ import annotations
@@ -26,15 +28,16 @@ def _remove_roots(pid: int) -> None:
             shutil.rmtree(root, ignore_errors=True)
 
 
-def scratch_dir(prefix: str) -> str:
-    """A fresh dir under this process's root, removed at exit."""
+def scratch_dir(prefix: str, base: str | None = None) -> str:
+    """A fresh dir under this process's root in ``base`` (default: the
+    temp dir), removed at exit."""
     global _owner
     if _owner != os.getpid():
         _owner = os.getpid()
         _roots.clear()
         atexit.register(_remove_roots, _owner)
     # re-created on demand: a caller may have deleted the root meanwhile
-    root = os.path.join(tempfile.gettempdir(), f"pmr_proc_{_owner}")
+    root = os.path.join(base or tempfile.gettempdir(), f"pmr_proc_{_owner}")
     os.makedirs(root, exist_ok=True)
     _roots.add(root)
     return tempfile.mkdtemp(prefix=prefix, dir=root)

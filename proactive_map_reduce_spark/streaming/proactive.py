@@ -42,7 +42,6 @@ import contextlib
 import os
 import re
 import shutil
-import tempfile
 import time
 
 import pandas as pd
@@ -156,13 +155,15 @@ def _stage_stream(spark: SparkSession, chunks_df: DataFrame):
 
 
 def _ckpt_dir() -> str:
-    """Checkpoint + state-store dir: tmpfs when available. The HDFS-backed
-    state store fsyncs a delta file per partition per commit — on
-    memory-backed fs that is free, on disk it dominates small micro-batch
-    latency (measured ~5 s across a 5-batch join). Production would point
-    this at durable storage; the knob is the location, not the code."""
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    return tempfile.mkdtemp(prefix="pmr_ckpt_", dir=base)
+    """Temp checkpoint + state-store dir: tmpfs when available, under this
+    process's scratch root there, so a run that dies before its own
+    cleanup leaves nothing past process exit. The HDFS-backed state store
+    fsyncs a delta file per partition per commit — on memory-backed fs
+    that is free, on disk it dominates small micro-batch latency
+    (measured ~5 s across a 5-batch join). A durable run passes its own
+    location instead."""
+    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
+    return scratch_dir("pmr_ckpt_", shm)
 
 
 @contextlib.contextmanager
@@ -317,6 +318,15 @@ def _run_to_parquet(
             os.path.join(out_dir, f"batch-{batch_id:09d}")
         )
 
+    confs = {"spark.sql.shuffle.partitions": str(_STREAM_PARTITIONS)}
+    if checkpoint_dir is None:
+        # A temp checkpoint is never resumed, so its state stores take no
+        # snapshot. A due snapshot is uploaded by the store's background
+        # maintenance up to one maintenanceInterval (60 s) later, which
+        # re-created ``state/<op>/<part>/<version>.zip`` in the removed
+        # checkpoint, even after the process's exit hook had run.
+        # Closing the stores instead costs ~0.4 s per partition.
+        confs["spark.sql.streaming.stateStore.minDeltasForSnapshot"] = str(2**31 - 1)
     try:
         # Reusing an out_dir with a FRESH checkpoint restarts batch ids at
         # 0: stale higher-numbered batch dirs from an earlier run would
@@ -331,9 +341,7 @@ def _run_to_parquet(
         done = max(_last_batch(ckpt, "commits"), planned - 1)
         _guard_stale_batches(out_dir, done, planned)
         _guard_resume_outputs(out_dir, done)
-        with _session_confs(
-            spark, {"spark.sql.shuffle.partitions": str(_STREAM_PARTITIONS)}
-        ):
+        with _session_confs(spark, confs):
             out = transform(stream_df)
             schema = out.schema
             q = (
@@ -416,25 +424,22 @@ def _w2_run(
     model_fn=None,
     out_dir: str | None = None,
     state_dir: str | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Run ``emit(_w2_history(stream))`` through the durable parquet sink
     (``_run_to_parquet``: ``out_dir/batch-<id>`` with per-batch overwrite
     and the stale/resume guards) on the RocksDB state store.
 
-    The state store lives in the checkpoint. Without a ``checkpoint_dir``
-    it goes under ``state_dir/checkpoint`` when a ``state_dir`` is given
-    (kept, like a caller's checkpoint), else in a temp dir removed after
-    the run."""
+    The state store lives in the checkpoint: ``state_dir/checkpoint``
+    when a ``state_dir`` is given (kept, so the run resumes from it),
+    else a temp dir removed after the run."""
     spark = stream_df.sparkSession
-    if checkpoint_dir is None and state_dir is not None:
-        checkpoint_dir = os.path.join(state_dir, "checkpoint")
+    ckpt = None if state_dir is None else os.path.join(state_dir, "checkpoint")
     with _session_confs(spark, _W2_STATE_STORE):
         return _run_to_parquet(
             stream_df,
             lambda s: emit(_w2_history(s, model_fn)),
             out_dir=out_dir,
-            checkpoint_dir=checkpoint_dir,
+            checkpoint_dir=ckpt,
             output_mode="update",
         )
 
@@ -461,7 +466,6 @@ def stateful_accumulate(
     model_fn=None,
     out_dir: str | None = None,
     state_dir: str | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """W2: cross-stage accumulator over staged micro-batch arrival (the
     ``total_res_toks`` analog, ``test_proactive.py:327-328``).
@@ -476,7 +480,7 @@ def stateful_accumulate(
     with _stage_stream(spark, chunks_df) as stream:
         return _w2_run(
             stream, _acc_emit, model_fn,
-            out_dir=out_dir, state_dir=state_dir, checkpoint_dir=checkpoint_dir,
+            out_dir=out_dir, state_dir=state_dir,
         )
 
 
@@ -548,7 +552,6 @@ def refeed_chain(
     chunks_df: DataFrame,
     model_fn=None,
     out_dir: str | None = None,
-    checkpoint_dir: str | None = None,
     state_dir: str | None = None,
 ) -> DataFrame:
     """W2 v2: the sequential re-feed loop (``test_proactive_2.py:228-233``)
@@ -565,7 +568,7 @@ def refeed_chain(
     with _stage_stream(spark, chunks_df) as stream:
         return _w2_run(
             stream, _refeed_emit, model_fn,
-            out_dir=out_dir, state_dir=state_dir, checkpoint_dir=checkpoint_dir,
+            out_dir=out_dir, state_dir=state_dir,
         )
 
 

@@ -2,10 +2,14 @@
 
 Each closed-form Column expression is checked against a pure-Python mirror
 of the reference's imperative loop, over an exhaustive grid of sizes —
-one Spark job per operator, not one per example.
+one Spark job per operator, not one per example. Operators read their
+sizes from module constants; a test that needs another size patches the
+constant.
 """
 
 from __future__ import annotations
+
+from unittest import mock
 
 from pyspark.sql import functions as F
 
@@ -56,10 +60,10 @@ def ref_middle_drop(lens: list[int], budget: int) -> list[int]:
 
 
 def test_equal_partition_closed_form_matches_reference(spark):
-    num_steps = 4
+    num_steps = chunking.NUM_STEPS
     rows = [(n, pos) for n in range(0, 61) for pos in range(n)]
     df = spark.createDataFrame(rows, "n int, pos int").withColumn(
-        "cid", chunking.equal_partition_chunk_id(F.col("pos"), F.col("n"), num_steps)
+        "cid", chunking.equal_partition_chunk_id(F.col("pos"), F.col("n"))
     )
     got = {(r["n"], r["pos"]): r["cid"] for r in df.collect()}
     for n in range(1, 61):
@@ -77,11 +81,12 @@ def test_equal_partition_covers_all_and_contiguous(spark):
         assert ids[-1] == 3 or n < 4
 
 
-def test_rechunk_closed_form_matches_reference(spark):
+def test_rechunk_closed_form_matches_reference(spark, monkeypatch):
     chunk_len = 7
+    monkeypatch.setattr(chunking, "CHUNK_LEN", chunk_len)
     rows = [(n, pos) for n in range(0, 61) for pos in range(n)]
     df = spark.createDataFrame(rows, "n int, pos int").withColumn(
-        "cid", chunking.rechunk_chunk_id(F.col("pos"), F.col("n"), chunk_len)
+        "cid", chunking.rechunk_chunk_id(F.col("pos"), F.col("n"))
     )
     got = {(r["n"], r["pos"]): r["cid"] for r in df.collect()}
     for n in range(1, 61):
@@ -206,8 +211,6 @@ def test_ratio_schedule_from_target_matches_reference_loop(spark):
     reference loop re-derived here in pure Python."""
     from pyspark.sql import functions as F
 
-    from proactive_map_reduce_spark.operators.chunking import derived_increment
-
     def reference_split_ratio(low, num_doc, ratio):
         out, increment = [], (2 * ratio - low) / num_doc
         for i in range(num_doc):
@@ -215,7 +218,10 @@ def test_ratio_schedule_from_target_matches_reference_loop(spark):
         return out
 
     for low, n, target in ((0.1, 4, 0.45), (0.2, 6, 0.6), (0.0, 3, 0.9), (0.3, 5, 0.8)):
-        inc = derived_increment(n, low, target)
+        with mock.patch.multiple(
+            chunking, RATIO_TLOW=low, NUM_STEPS=n, RATIO_TARGET=target
+        ):
+            inc = chunking.derived_increment()
         rows = spark.range(n).select(
             "id",
             F.round(
@@ -227,7 +233,7 @@ def test_ratio_schedule_from_target_matches_reference_loop(spark):
         assert got == exp, (low, n, target)
 
 
-def test_rechunk_short_doc_is_single_chunk(spark):
+def test_rechunk_short_doc_is_single_chunk(spark, monkeypatch):
     """Deliberate deviation from the reference (test_proactive.py:152-165
     raises IndexError when the whole input is shorter than
     0.3*chunk_len): a short document is its own single chunk."""
@@ -235,10 +241,9 @@ def test_rechunk_short_doc_is_single_chunk(spark):
 
     from proactive_map_reduce_spark.operators import chunking
 
+    monkeypatch.setattr(chunking, "CHUNK_LEN", 100)
     docs = spark.createDataFrame([(1, "just two")], ["doc_id", "text"])
-    out = chunking.rechunk_fixed(
-        chunking.split_words(docs), chunk_len=100
-    ).collect()
+    out = chunking.rechunk_fixed(chunking.split_words(docs)).collect()
     assert [(r["doc_id"], r["chunk_id"], r["n_tokens"]) for r in out] == [(1, 0, 2)]
 
 

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from unittest import mock
+
 from pyspark.sql import functions as F
 
 from proactive_map_reduce_spark.operators import dedup
@@ -260,10 +262,11 @@ def test_topk_importance_matches_reference_selection(spark):
             [(1, i, float(s)) for i, s in enumerate(scores)],
             "user_id int, pos int, value double",
         )
-        got = {
-            (r["selected"], r["pos"])
-            for r in topk_ops.topk_importance(df, ratio, last_len).collect()
-        }
+        with mock.patch.object(topk_ops, "TOPK_RATIO", ratio), mock.patch.object(
+            topk_ops, "TOPK_LAST", last_len
+        ):
+            out = topk_ops.topk_importance(df)
+        got = {(r["selected"], r["pos"]) for r in out.collect()}
         assert got == reference_select(scores, ratio, last_len), (scores, got)
 
 
@@ -425,7 +428,7 @@ def test_minhash_arrays_matches_window_form(spark):
             tuple(r[f"mh_{j}"] for j in range(16)),
             frozenset(r["shingles"]),
         )
-        for r in dedup.minhash_arrays(docs, 16, with_sets=True).collect()
+        for r in dedup.minhash_arrays(docs, with_sets=True).collect()
     }
     assert {i: g[0] for i, g in got.items()} == want_sig
     assert {i: g[1] for i, g in got.items()} == want_sets

@@ -1,12 +1,13 @@
-"""Every library def and public method has an engine caller, and every
-library parameter takes more than one value in engine code.
+"""Every library def and public method has an engine caller, every
+library parameter takes more than one value in engine code, and every
+tool has a caller.
 
 Each operator keeps one implementation, the library holds no code that
-only tests or tools call, and a value the engine never varies is a
-constant, not an option. These scans parse the engine code — the
-package, ``__spark_entry__.py``, ``bench.py``, ``perfbench/`` and
-``examples/`` — with ``ast`` and check the top-level defs of the library
-modules below:
+only tests or tools call, a value the engine never varies is a constant
+the operator reads itself, not an option, and no tool sits in the tree
+that nothing runs. These scans parse the engine code — the package,
+``__spark_entry__.py``, ``bench.py``, ``perfbench/`` and ``examples/`` —
+with ``ast`` and check the top-level defs of the library modules below:
 
 - a def, class or public method of a class fails when its name is never
   referenced (a ``Name`` or ``Attribute`` node, f-string expressions
@@ -14,10 +15,17 @@ modules below:
   with another engine method (``add``, ``clear``) counts as called.
   Imports, comments and strings do not count as callers;
 - a parameter of a top-level function fails when every engine call of
-  that function (by name or attribute) passes it the same literal,
-  counting a left-out argument as its default, or when no engine call
-  passes a defaulted parameter at all. A call that passes ``*args`` /
-  ``**kwargs`` or a non-literal expression varies the parameter.
+  that function (by name or attribute) passes it the same constant
+  expression, counting a left-out argument as its default, or when no
+  engine call passes a defaulted parameter at all. A constant
+  expression is a literal, an UPPER_CASE module constant (``N_SALTS``,
+  ``sim_ops.EMBED_DIM``) or arithmetic over those, compared by
+  ``ast.dump``. A call that passes ``*args`` / ``**kwargs`` or any other
+  expression (a call, a lower-case name, a column) varies the parameter.
+
+A tool (``tools/*.py``) fails when no other tool or test imports it or
+runs it by file name, and no line of README.md or the verify skill
+names it as ``tools/<name>.py``.
 
 Pure Python: no Spark session.
 """
@@ -26,6 +34,7 @@ from __future__ import annotations
 
 import ast
 import os
+import re
 from collections import defaultdict
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -39,6 +48,11 @@ LIBRARY = [
 
 #: Engine code: where a caller counts.
 ENGINE = ["proactive_map_reduce_spark", "perfbench", "examples", "__spark_entry__.py", "bench.py"]
+
+#: Where a tool's caller counts: code that imports or runs it, and docs
+#: whose lines name its usage.
+TOOL_CALLERS = ["tools", "tests"]
+TOOL_DOCS = ["README.md", ".claude/skills/verify/SKILL.md"]
 
 #: Helpers that tests use as a reference, not the engine. A whole-module
 #: entry is a path; a single def is "path::name", a method
@@ -58,10 +72,8 @@ ALLOWED_PARAMS = {
     "streaming/proactive.py::write_stage_files(root)": _DEPLOYMENT_PATH,
     "streaming/proactive.py::stage_pipeline(out_dir)": _DEPLOYMENT_PATH,
     "streaming/proactive.py::stage_pipeline(checkpoint_dir)": _DEPLOYMENT_PATH,
-    "streaming/proactive.py::stateful_accumulate(checkpoint_dir)": _DEPLOYMENT_PATH,
     "streaming/proactive.py::refeed_chain(out_dir)": _DEPLOYMENT_PATH,
     "streaming/proactive.py::refeed_chain(state_dir)": _DEPLOYMENT_PATH,
-    "streaming/proactive.py::refeed_chain(checkpoint_dir)": _DEPLOYMENT_PATH,
     "streaming/proactive.py::refeed_chain(model_fn)": _SEAM,
     "operators/multimodal.py::extract_features(codec)": _SEAM,
     "operators/multimodal.py::resize_media(codec)": _SEAM,
@@ -185,17 +197,39 @@ def _passed(call: ast.Call, param: str, index: int | None, default):
     return default
 
 
+def _is_constant(node: ast.AST) -> bool:
+    """True for a constant expression: a literal, an UPPER_CASE module
+    constant (``N_SALTS``, ``sim_ops.EMBED_DIM``), or arithmetic and
+    containers over those. A call, a lower-case name or a column
+    expression is data, so a one-call data argument never counts."""
+    if isinstance(node, ast.Constant):
+        return True
+    if isinstance(node, ast.Name):
+        return node.id.isupper()
+    if isinstance(node, ast.Attribute):
+        return node.attr.isupper()
+    if isinstance(node, ast.BinOp):
+        return _is_constant(node.left) and _is_constant(node.right)
+    if isinstance(node, ast.UnaryOp):
+        return _is_constant(node.operand)
+    if isinstance(node, (ast.Tuple, ast.List, ast.Set)):
+        return all(_is_constant(e) for e in node.elts)
+    if isinstance(node, ast.Dict):
+        return all(k is not None and _is_constant(k) for k in node.keys) and all(
+            _is_constant(v) for v in node.values
+        )
+    return False
+
+
 def _value(node, default):
-    """A hashable stand-in for a passed value: the literal itself, one
-    token for a non-literal default, and a token no other call shares
-    for anything else."""
+    """A hashable stand-in for a passed value: the ``ast.dump`` of a
+    constant expression, one token for a non-constant default, and a
+    token no other call shares for anything else."""
     if node is None:
         return object()
-    try:
-        v = ast.literal_eval(node)
-        return ("literal", type(v).__name__, repr(v))
-    except ValueError:
-        return ("default",) if node is default else object()
+    if _is_constant(node):
+        return ("constant", ast.dump(node))
+    return ("default",) if node is default else object()
 
 
 def _single_value_params() -> list[str]:
@@ -226,6 +260,54 @@ def _single_value_params() -> list[str]:
     # an entry whose parameter is gone, or that engine code now varies
     out += [f"stale ALLOWED_PARAMS entry {k}" for k in ALLOWED_PARAMS if k not in allowed_seen]
     return out
+
+
+def _tool_refs(path: str) -> set[str]:
+    """Module stems ``path`` imports, and ``.py`` files it names in a
+    path-like string (how a tool or test runs another as a script)."""
+    out = set()
+    for n in ast.walk(_parse(path)):
+        if isinstance(n, ast.Import):
+            out.update(a.name.split(".")[-1] for a in n.names)
+        elif isinstance(n, ast.ImportFrom) and n.module:
+            out.add(n.module.split(".")[-1])
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+            if re.fullmatch(r"[\w./-]+\.py", n.value):
+                out.add(os.path.basename(n.value)[:-3])
+    return out
+
+
+def _uncalled_tools() -> list[str]:
+    tools = {f[:-3] for f in os.listdir(os.path.join(ROOT, "tools")) if f.endswith(".py")}
+    used = set()
+    for rel in TOOL_CALLERS:
+        for path in _py_files(rel):
+            me = os.path.basename(path)[:-3] if rel == "tools" else None
+            used |= _tool_refs(path) - {me}
+    for doc in TOOL_DOCS:
+        with open(os.path.join(ROOT, doc), encoding="utf-8") as f:
+            used.update(re.findall(r"tools/(\w+)\.py", f.read()))
+    return sorted(f"tools/{t}.py" for t in tools - used)
+
+
+def test_constant_expression_classifier():
+    """The rule that keeps one-call data arguments out of the parameter
+    scan: only literals, UPPER_CASE constants and arithmetic over them
+    count as constant."""
+    def const(src):
+        return _is_constant(ast.parse(src, mode="eval").body)
+
+    for src in ("3", "CONST", "mod.CONST", "30 * 60 * CONST", "-1", '["a", B]'):
+        assert const(src), src
+    for src in ("f(x)", "df", "F.col('pos')", "mod.value", "n * CONST"):
+        assert not const(src), src
+
+
+def test_every_tool_has_a_caller():
+    assert _uncalled_tools() == [], (
+        "tools that no tool or test imports or runs and no README/verify "
+        "skill line names: delete them, or document their usage"
+    )
 
 
 def test_every_library_def_has_an_engine_caller():

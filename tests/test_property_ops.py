@@ -7,10 +7,14 @@ CONTRACT itself on the adversarial shapes fixtures rarely contain —
 duplicate timestamps, exact window boundaries, keys with one empty
 side, tail-vs-k collisions. One Spark job covers many random groups per
 example (per-example Spark overhead dominates, so examples are few and
-wide rather than many and narrow).
+wide rather than many and narrow). An operator that reads a module
+constant (the join window, the top-k ratio, the sketch sizes) gets the
+drawn value patched into that constant for the call.
 """
 
 from __future__ import annotations
+
+from unittest import mock
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -24,7 +28,7 @@ from pyspark.sql.types import (
 )
 
 from proactive_map_reduce_spark.operators.asof import asof_join
-from proactive_map_reduce_spark.operators.rangejoin import interval_join
+from proactive_map_reduce_spark.operators import rangejoin
 from proactive_map_reduce_spark.operators import topk as topk_ops
 
 SLOW = settings(
@@ -86,7 +90,8 @@ def test_interval_join_matches_bruteforce(spark, left, right, w):
     rdf = spark.createDataFrame(
         [(k, t, v) for k, t, v in right], _EV_SCHEMA
     ).withColumn("ts", F.timestamp_micros(F.col("ts")))
-    out = interval_join(ldf, rdf, within_us=w)
+    with mock.patch.object(rangejoin, "WITHIN_US", w):
+        out = rangejoin.interval_join(ldf, rdf)
     got = sorted(
         (
             r["user_id"],
@@ -133,7 +138,10 @@ def test_topk_importance_matches_bruteforce(spark, groups, ratio, last_len):
         for pos, s in enumerate(scores)
     ]
     df = spark.createDataFrame(rows, ["user_id", "pos", "value"])
-    out = topk_ops.topk_importance(df, ratio=ratio, last_len=last_len)
+    with mock.patch.object(topk_ops, "TOPK_RATIO", ratio), mock.patch.object(
+        topk_ops, "TOPK_LAST", last_len
+    ):
+        out = topk_ops.topk_importance(df)
     got = sorted((r["user_id"], r["pos"], r["selected"]) for r in out.collect())
 
     exp = []
@@ -165,7 +173,8 @@ def test_interval_join_exact_boundary_inclusive(spark):
     mk = lambda rows: spark.createDataFrame(rows, _EV_SCHEMA).withColumn(
         "ts", F.timestamp_micros(F.col("ts"))
     )
-    out = interval_join(mk([(1, 10, 1)]), mk([(1, 3, 2), (1, 17, 3)]), 7)
+    with mock.patch.object(rangejoin, "WITHIN_US", 7):
+        out = rangejoin.interval_join(mk([(1, 10, 1)]), mk([(1, 3, 2), (1, 17, 3)]))
     assert sorted(r["r_v"] for r in out.collect()) == [2, 3]
 
 
@@ -190,11 +199,12 @@ def test_kmv_exact_branch_and_partition_independence(spark, rows, k):
         return
     df = spark.createDataFrame(rows, ["lang", "h"]).dropDuplicates(["lang", "h"])
     got = {}
-    for parts in (1, 7):
-        got[parts] = {
-            r["lang"]: r["approx_distinct_words"]
-            for r in sk.kmv_distinct(df.repartition(parts), k=k).collect()
-        }
+    with mock.patch.object(sk, "SKETCH_KMV_K", k):
+        for parts in (1, 7):
+            got[parts] = {
+                r["lang"]: r["approx_distinct_words"]
+                for r in sk.kmv_distinct(df.repartition(parts)).collect()
+            }
     assert got[1] == got[7]
     from collections import defaultdict
 
@@ -219,7 +229,8 @@ def test_histogram_quantiles_bracket_and_convention(spark, rows, bins):
     from proactive_map_reduce_spark.operators import sketch as sk
 
     df = spark.createDataFrame([(1, v) for v in rows], ["lang", "n_chars"])
-    out = sk.histogram_quantiles(df, bins=bins).collect()[0]
+    with mock.patch.object(sk, "SKETCH_BINS", bins):
+        out = sk.histogram_quantiles(df).collect()[0]
 
     lo, hi, n = min(rows), max(rows), len(rows)
     width = hi - lo + 1

@@ -46,11 +46,12 @@ def test_tfidf_matches_python_mirror(spark):
         assert next(x for x in rows if x["rnk"] == 1)["tfidf"] == top["tfidf"]
 
 
-def test_bm25_ranks_term_dense_docs_first(spark):
-    from proactive_map_reduce_spark.operators.ranking import bm25_search
+def test_bm25_ranks_term_dense_docs_first(spark, monkeypatch):
+    from proactive_map_reduce_spark.operators import ranking
 
+    monkeypatch.setattr(ranking, "BM25_QUERY_TERMS", ["spark", "duckdb"])
     df = spark.createDataFrame(CORPUS, "doc_id long, text string")
-    got = bm25_search(df, ["spark", "duckdb"], top_n=10).collect()
+    got = ranking.bm25_search(df, top_n=10).collect()
     ids = [r["doc_id"] for r in got]
     # doc 2 has no query term: absent; doc 3 hits both terms once
     assert 2 not in ids
@@ -62,8 +63,10 @@ def test_bm25_ranks_term_dense_docs_first(spark):
     assert scores == sorted(scores, reverse=True)
 
 
-def test_blocklist_filter_drops_hits(spark):
-    from proactive_map_reduce_spark.operators.textstats import blocklist_filter
+def test_blocklist_filter_drops_hits(spark, monkeypatch):
+    from proactive_map_reduce_spark.operators import textstats
+
+    monkeypatch.setattr(textstats, "BLOCKLIST", ["bad"])
 
     rows = [
         (0, "en", "clean text here"),
@@ -72,7 +75,7 @@ def test_blocklist_filter_drops_hits(spark):
         (3, "de", "all clear"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
-    kept = sorted(r["doc_id"] for r in blocklist_filter(df, ["bad"]).collect())
+    kept = sorted(r["doc_id"] for r in textstats.blocklist_filter(df).collect())
     assert kept == [0, 3]
 
 

@@ -1,6 +1,5 @@
-"""Fixture-scale pins of the star-cap closed-form bounds (r10 — the
-scale-probe's bound checks promoted into pytest, so a future cap
-regression fails fast here instead of only in the 30×/100× probe runs).
+"""Fixture-scale pins of the star-cap closed-form bounds, so a cap
+regression fails fast here at fixture scale.
 
 The claim (``operators/dedup.capped_block_pairs``, SCALING.md): pairs
 emitted per block of size s are EXACTLY C(min(s,K),2) + max(0, s−K) —
@@ -14,7 +13,7 @@ O(K²+B) total, never O(B²). Two surfaces consume it:
 Both checked here at sf0.001 against the actual emitted pair counts,
 plus a synthetic over-cap block proving the cap itself engages (the
 fixture's natural blocks sit under K, so without this the equality
-would be vacuously cap-free — the same reason the 100× probe exists).
+would be vacuously cap-free).
 """
 
 from __future__ import annotations
@@ -22,11 +21,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from proactive_map_reduce_spark.operators import dedup
-from proactive_map_reduce_spark.queries._base import (
-    MINHASH_BANDS,
-    MINHASH_N,
-    NGRAM_BLOCK_CAP,
-)
+from proactive_map_reduce_spark.queries._base import NGRAM_BLOCK_CAP
 
 SF0001 = "/root/testdata/sf0.001"
 
@@ -59,12 +54,12 @@ def test_ngram_block_pairs_match_closed_form_exactly(spark):
 
 def test_lsh_band_pairs_bounded_by_closed_form(spark):
     docs = spark.read.parquet(f"{SF0001}/documents.parquet")
-    sigs = dedup.minhash_arrays(docs, MINHASH_N)
-    banded = dedup.band_rows(sigs, MINHASH_N, MINHASH_BANDS)
+    sigs = dedup.minhash_arrays(docs)
+    banded = dedup.band_rows(sigs)
     pred, _ = _closed_form(
         banded, ["band_id", "band_hash"], dedup.LSH_MAX_BUCKET
     )
-    actual = dedup.lsh_candidate_pairs(sigs, MINHASH_N, MINHASH_BANDS).count()
+    actual = dedup.lsh_candidate_pairs(sigs).count()
     assert actual <= pred
 
 

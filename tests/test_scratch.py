@@ -1,5 +1,6 @@
 """Per-process scratch root (sources/scratch.py): removed when its owner
-exits, never by another process, and one memoized build per key."""
+exits, never by another process, and one memoized build per key; the
+streaming runners' temp checkpoints on /dev/shm go the same way."""
 
 from __future__ import annotations
 
@@ -7,6 +8,7 @@ import os
 import subprocess
 import sys
 import textwrap
+import time
 
 import pytest
 
@@ -84,3 +86,44 @@ def test_materialize_once_memoizes_rebuilds_and_forgets_failures():
         with pytest.raises(RuntimeError):
             scratch.materialize_once(bad, "pmr_memo_", broken)
     assert len(made) == 2 and not any(os.path.exists(p) for p in made)
+
+
+@pytest.mark.skipif(not os.path.isdir("/dev/shm"), reason="no /dev/shm")
+def test_w2_temp_checkpoint_leaves_nothing_in_dev_shm(tmp_path):
+    """A process that runs one ``stateful_accumulate`` on a temp checkpoint
+    leaves nothing under ``/dev/shm`` once it exits. Ten stages would make
+    a state-store snapshot (every ``minDeltasForSnapshot`` = 10 versions
+    by default) due at the last commit, still unuploaded when the run
+    removes its checkpoint, and a 3 s maintenance interval lets the
+    store's background maintenance run while the process sleeps: it must
+    not re-create the checkpoint, during the process or after its exit."""
+    body = """
+        import glob, time
+        from pyspark.sql import SparkSession
+        from proactive_map_reduce_spark.streaming import proactive
+
+        spark = (
+            SparkSession.builder.master("local[2]")
+            .config("spark.ui.enabled", "false")
+            .config("spark.driver.memory", "1g")
+            .config("spark.sql.streaming.stateStore.maintenanceInterval", "3s")
+            .getOrCreate()
+        )
+        chunks = spark.createDataFrame(
+            [(d, c, f"d{d} c{c} w") for d in range(3) for c in range(10)],
+            "doc_id long, chunk_id int, chunk_text string",
+        )
+        assert proactive.stateful_accumulate(spark, chunks).count() == 30
+        time.sleep(5)
+        print(os.getpid(), len(glob.glob(f"/dev/shm/pmr_proc_{os.getpid()}/*")), flush=True)
+    """
+    script = "import os\n" + textwrap.dedent(body)
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        env={**os.environ, "TMPDIR": str(tmp_path), "PYTHONPATH": REPO},
+        capture_output=True, text=True, timeout=240, check=True,
+    )
+    pid, left_in_run = out.stdout.split()[-2:]
+    assert left_in_run == "0"  # nothing re-created while the process lived
+    time.sleep(3)
+    assert not os.path.exists(f"/dev/shm/pmr_proc_{pid}")

@@ -13,14 +13,15 @@ from proactive_map_reduce_spark.sources import text_corpus
 from tests.conftest import SF0001
 
 
-def test_salted_agg_equals_plain_groupby(spark):
+def test_salted_agg_equals_plain_groupby(spark, monkeypatch):
+    monkeypatch.setattr(skew, "N_SALTS", 4)
     df = spark.createDataFrame(
         [(i, "hot" if i % 10 else "cold", float(i)) for i in range(1000)],
         "event_id long, event_type string, value_dec double",
     )
     got = {
         r["event_type"]: (round(r["sum_value"], 6), r["n_rows"])
-        for r in skew.salted_agg(df, n_salts=4).collect()
+        for r in skew.salted_agg(df).collect()
     }
     want = {
         r["event_type"]: (round(r["s"], 6), r["c"])
@@ -31,7 +32,8 @@ def test_salted_agg_equals_plain_groupby(spark):
     assert got == want
 
 
-def test_salted_join_equals_plain_join(spark):
+def test_salted_join_equals_plain_join(spark, monkeypatch):
+    monkeypatch.setattr(skew, "N_SALTS", 4)
     fact = spark.createDataFrame(
         [(i, i % 5, float(i)) for i in range(500)],
         "l_orderkey long, l_suppkey int, v double",
@@ -39,7 +41,7 @@ def test_salted_join_equals_plain_join(spark):
     dim = spark.createDataFrame(
         [(i, f"d{i}") for i in range(5)], "s_suppkey int, name string"
     )
-    salted = skew.salted_join(fact, dim, n_salts=4)
+    salted = skew.salted_join(fact, dim)
     plain = fact.join(dim, fact.l_suppkey == dim.s_suppkey)
     assert salted.count() == plain.count() == 500
     g = {
@@ -55,10 +57,10 @@ def test_salted_join_equals_plain_join(spark):
 
 def test_salt_is_deterministic(spark):
     df = spark.createDataFrame([(i,) for i in range(100)], "id long")
-    a = [r[0] for r in df.select(skew.salt_column("id", 8)).collect()]
-    b = [r[0] for r in df.select(skew.salt_column("id", 8)).collect()]
+    a = [r[0] for r in df.select(skew.salt_column("id")).collect()]
+    b = [r[0] for r in df.select(skew.salt_column("id")).collect()]
     assert a == b
-    assert all(0 <= s < 8 for s in a)
+    assert all(0 <= s < skew.N_SALTS for s in a)
     assert len(set(a)) > 1  # actually spreads
 
 
@@ -143,7 +145,7 @@ def test_brute_force_param_equals_broadcast(spark):
     tie-breaks)."""
     path = f"{SF0001}/embeddings.parquet"
     emb = spark.read.parquet(path)
-    got = sim.brute_force_topk(emb, dim=sim.EMBED_DIM)
+    got = sim.brute_force_topk(emb)
     spark_side = _canon_rows(got.columns, [tuple(r) for r in got.collect()])
     assert spark_side == _duck_similarity_topk(path)
     assert len(spark_side[1]) == 40
@@ -171,7 +173,7 @@ def test_brute_force_topk_nonfinite_query_components(spark, tmp_path):
     spark.createDataFrame(
         rows, "vec_id long, label int, embedding array<float>"
     ).write.parquet(path)
-    got = sim.brute_force_topk(spark.read.parquet(path), dim=dim)
+    got = sim.brute_force_topk(spark.read.parquet(path))
     out = [tuple(r) for r in got.collect()]
     assert _canon_rows(got.columns, out) == _duck_similarity_topk(f"{path}/*.parquet")
     for q in (1, 2, 3):
@@ -179,23 +181,23 @@ def test_brute_force_topk_nonfinite_query_components(spark, tmp_path):
         assert len(cos) == 5 and all(c != c for c in cos), (q, cos)  # NaN
 
 
-def test_brute_force_topk_null_query_component_names_vec_id(spark):
+def test_brute_force_topk_null_query_component_names_vec_id(spark, monkeypatch):
     """A NULL component in a query vector has no literal spelling and no
     cosine: the operator raises ValueError naming the query's vec_id."""
     import pytest
 
-    dim = 4
+    monkeypatch.setattr(sim, "EMBED_DIM", 4)
     emb = spark.createDataFrame(
         [(0, [1.0, 0.0, 0.0, 0.0]), (1, [1.0, None, 0.0, 0.0]), (9, [0.0, 1.0, 0.0, 0.0])],
         "vec_id long, embedding array<double>",
     )
     with pytest.raises(ValueError, match=r"vec_id=1\b"):
-        sim.brute_force_topk(emb, dim=dim)
+        sim.brute_force_topk(emb)
 
 
 def test_kmv_distinct_operator_branches(spark):
-    """kmv_distinct: groups under k answer EXACTLY; groups over k
-    estimate within KMV's expected error (~1/sqrt(k))."""
+    """kmv_distinct: groups under k = SKETCH_KMV_K (1024) answer EXACTLY;
+    groups over k estimate within KMV's expected error (~1/sqrt(k))."""
     from proactive_map_reduce_spark.functions.hashing import portable_hash64
     from proactive_map_reduce_spark.operators import sketch as sk
 
@@ -205,8 +207,9 @@ def test_kmv_distinct_operator_branches(spark):
     hashed = df.select("lang", portable_hash64("v").alias("h")).distinct()
     got = {
         r["lang"]: r["approx_distinct_words"]
-        for r in sk.kmv_distinct(hashed, k=64).collect()
+        for r in sk.kmv_distinct(hashed).collect()
     }
+    assert 10 < sk.SKETCH_KMV_K < 5000
     assert got["small"] == 10  # exact branch
     assert abs(got["big"] - 5000) / 5000 < 0.25  # estimate branch
 
@@ -219,23 +222,24 @@ def test_histogram_quantiles_operator(spark):
     df = spark.createDataFrame(
         [("g", i) for i in range(1000)], "lang string, n_chars long"
     ).repartition(4)
-    out = sk.histogram_quantiles(df, bins=64).collect()[0]
-    binw = 1000 / 64 + 1  # lower-bound semantics: up to one (integer) bin below
+    out = sk.histogram_quantiles(df).collect()[0]
+    binw = 1000 / sk.SKETCH_BINS + 1  # lower-bound semantics: up to one (integer) bin below
     assert abs(out["p25"] - 250) <= binw
     assert abs(out["p50"] - 500) <= binw
     assert abs(out["p75"] - 750) <= binw
 
 
-def test_topk_empty_corpus_returns_typed_empty(spark):
+def test_topk_empty_corpus_returns_typed_empty(spark, monkeypatch):
     """Both top-k paths must return a well-formed empty result (not crash)
     on an empty or fully-filtered embedding input."""
+    monkeypatch.setattr(sim, "EMBED_DIM", 4)
     empty = spark.createDataFrame([], "vec_id bigint, embedding array<float>")
-    bf = sim.brute_force_topk(empty, dim=4)
+    bf = sim.brute_force_topk(empty)
     assert bf.count() == 0
     assert [f.name for f in bf.schema.fields] == [
         "query_id", "neighbor_id", "cos_sim", "rank"
     ]
-    lsh = sim.lsh_topk(empty, dim=4)
+    lsh = sim.lsh_topk(empty)
     assert lsh.count() == 0
     assert [f.name for f in lsh.schema.fields] == [
         "query_id", "neighbor_id", "cos_sim", "rank"
@@ -259,12 +263,12 @@ def test_salted_join_keeps_null_salt_source_rows(spark):
 
 
 def test_brute_force_topk_empty_corpus_embed_dim(spark):
-    """A zero-row corpus at the registry's ``dim=EMBED_DIM``: the
+    """A zero-row corpus at the registry's ``EMBED_DIM``: the
     operator returns its documented well-formed empty result."""
     from proactive_map_reduce_spark.operators import similarity
 
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    out = similarity.brute_force_topk(empty, dim=similarity.EMBED_DIM)
+    out = similarity.brute_force_topk(empty)
     assert out.count() == 0
     assert set(out.columns) == {"query_id", "neighbor_id", "cos_sim", "rank"}
 

@@ -72,7 +72,7 @@ def test_stateful_accumulate_restart_restores_state(spark, tmp_path):
     live = str(tmp_path / "live")
     os.makedirs(live)
     out_dir = str(tmp_path / "out")
-    kw = dict(out_dir=out_dir, checkpoint_dir=str(tmp_path / "ckpt"))
+    kw = dict(out_dir=out_dir, state_dir=str(tmp_path / "state"))
     files = sorted(f for f in os.listdir(src_root) if f.endswith(".parquet"))
     assert len(files) == 4  # 4 chunk stages, one file each
 
@@ -249,7 +249,7 @@ def test_refeed_chain_restart_preserves_chain_at_depth(spark, tmp_path):
     live = str(tmp_path / "live")
     os.makedirs(live)
     out_dir = str(tmp_path / "out")
-    kw = dict(out_dir=out_dir, checkpoint_dir=str(tmp_path / "ckpt"))
+    kw = dict(out_dir=out_dir, state_dir=str(tmp_path / "state"))
     files = sorted(f for f in os.listdir(src_root) if f.endswith(".parquet"))
     assert len(files) == depth  # one stage file per chunk_id
     expect = _refeed_reference_fold(chunks)
@@ -298,7 +298,7 @@ def test_durable_sink_restart_idempotent_no_dup_no_loss(spark, tmp_path):
     live = str(tmp_path / "live")
     os.makedirs(live)
     out_dir = str(tmp_path / "out")
-    kw = dict(out_dir=out_dir, checkpoint_dir=str(tmp_path / "ckpt"))
+    kw = dict(out_dir=out_dir, state_dir=str(tmp_path / "state"))
     files = sorted(f for f in os.listdir(src_root) if f.endswith(".parquet"))
 
     try:
@@ -482,17 +482,17 @@ def test_batched_runner_fresh_checkpoint_refuses_existing_state(
     src_root = stream_ops.write_stage_files(chunks)
     out_dir = str(tmp_path / "out")
 
-    def run(ckpt):
+    def run(state):
         return _w2(
             spark, src_root, stream_ops._acc_emit, out_dir=out_dir,
-            checkpoint_dir=ckpt,
+            state_dir=state,
         )
 
     try:
-        assert run(str(tmp_path / "ckpt_a")).count() == 2
+        assert run(str(tmp_path / "state_a")).count() == 2
         before = stream_ops._batch_dirs(out_dir)
         with pytest.raises(ValueError, match="fresh"):
-            run(str(tmp_path / "ckpt_b"))
+            run(str(tmp_path / "state_b"))
         assert stream_ops._batch_dirs(out_dir) == before
     finally:
         shutil.rmtree(src_root, ignore_errors=True)
@@ -510,8 +510,8 @@ def test_batched_runner_resumes_first_batch_window_kill(spark, tmp_path):
     )
     chunks = chunking.partition_equal_arrays(docs, 2)
     src_root = stream_ops.write_stage_files(chunks)
-    ckpt = str(tmp_path / "ckpt")
-    kw = dict(out_dir=str(tmp_path / "out"), checkpoint_dir=ckpt)
+    ckpt = str(tmp_path / "state" / "checkpoint")
+    kw = dict(out_dir=str(tmp_path / "out"), state_dir=str(tmp_path / "state"))
 
     try:
         r1 = sorted(map(tuple, _w2(spark, src_root, stream_ops._refeed_emit, **kw).collect()))
@@ -560,8 +560,8 @@ def test_w2_kill_between_emission_and_commit_replays_same_rows(spark, tmp_path):
 
             live = str(base / "live")
             os.makedirs(live)
-            out_dir, ckpt = str(base / "out"), str(base / "ckpt")
-            kw = dict(out_dir=out_dir, checkpoint_dir=ckpt)
+            out_dir, ckpt = str(base / "out"), str(base / "state" / "checkpoint")
+            kw = dict(out_dir=out_dir, state_dir=str(base / "state"))
             _copy_stages(src_root, live, files[:3])
             _w2(spark, live, emit, **kw)
             n = stream_ops._last_batch(ckpt, "commits")

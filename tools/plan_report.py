@@ -52,57 +52,24 @@ QUERIES = [
 ]
 
 
-def _measured_shapes() -> list[str]:
-    """Fold the committed scale measurements into the plan doc (r8
-    verdict polish item): the star-cap pair counts, CC round counts and
-    the sf1 long-pole seconds are the plans' MEASURED shapes — without
-    them the audit is static structure only."""
+def _long_poles() -> list[str]:
+    """The sf1 gate's long-pole seconds per engine (SF1_GATE.json): the
+    plans' measured cost next to their static structure."""
     import json
 
-    root = os.path.join(os.path.dirname(__file__), "..")
-    out: list[str] = []
     try:
-        with open(os.path.join(root, "SCALE_PROBE.json")) as f:
-            sp = json.load(f)
-        out += ["## Measured shapes (tools/scale_probe.py)", ""]
-        for key, r in sp.get("rows", {}).items():
-            lsh, ng, cc = r.get("lsh", {}), r.get("ngram", {}), r.get("cc")
-            out.append(
-                f"- **{key}** ({r['docs']:,} docs): LSH pairs "
-                f"{lsh.get('pairs_actual'):,} ≤ closed form "
-                f"{lsh.get('pairs_closed_form_upper'):,} (uncapped would be "
-                f"{lsh.get('pairs_uncapped_form'):,}; max bucket "
-                f"{lsh.get('max_bucket')}, K={lsh.get('K')}); n-gram pairs "
-                f"{ng.get('pairs_actual'):,} == closed form exactly "
-                f"(max block {ng.get('max_block')}, K={ng.get('K')})"
-                + (
-                    f"; CC converged in {cc['rounds']} rounds over "
-                    f"{cc['edges']:,} edges / {cc['components']:,} components"
-                    if cc
-                    else ""
-                )
-            )
-        out.append("")
-    except Exception:
-        pass
-    try:
-        with open(os.path.join(root, "SF1_GATE.json")) as f:
-            g = json.load(f)
-        poles = g.get("long_poles_sec") or {}
-        if poles:
-            out += [
-                "## sf1 gate long poles (seconds per engine, SF1_GATE.json)",
-                "",
-            ]
-            for q, t in poles.items():
-                out.append(
-                    f"- `{q}`: total {t['total']} (spark {t.get('spark')}, "
-                    f"duck {t.get('duck')})"
-                )
-            out.append("")
-    except Exception:
-        pass
-    return out
+        with open(os.path.join(ROOT, "SF1_GATE.json")) as f:
+            poles = json.load(f).get("long_poles_sec") or {}
+    except OSError:
+        return []
+    if not poles:
+        return []
+    out = ["## sf1 gate long poles (seconds per engine, SF1_GATE.json)", ""]
+    out += [
+        f"- `{q}`: total {t['total']} (spark {t.get('spark')}, duck {t.get('duck')})"
+        for q, t in poles.items()
+    ]
+    return out + [""]
 
 
 def main() -> None:
@@ -125,7 +92,7 @@ def main() -> None:
         "`tests/test_plans.py`; this file is the human-readable dump.",
         "",
     ]
-    out += _measured_shapes()
+    out += _long_poles()
     for name in QUERIES:
         try:
             df = REGISTRY[name](spark, sf_dir)
